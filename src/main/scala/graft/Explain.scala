@@ -1,29 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan and cold/warm timings for
-  * one cataloged query. Usage: runMain graft.Explain <query> [sfDir] [reps]. */
+  * one cataloged query, timed with graft.Bench's recipe (noop-sink write,
+  * cache cleared after each rep). Usage: runMain graft.Explain <query> [sfDir] [reps]. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val q = SparkEntry.catalog.find(_.name == name)
       .getOrElse(sys.error(s"unknown query '$name'; known: " +
         SparkEntry.catalog.map(_.name).sorted.mkString(", ")))
     q.run(spark, sfDir).explain("formatted")
+    spark.catalog.clearCache()
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()
-      val n = q.run(spark, sfDir).count()
-      println(f"[explain] rep=$r rows=$n time=${(System.nanoTime() - t0) / 1e9}%.3fs")
+      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      println(f"[explain] rep=$r time=${(System.nanoTime() - t0) / 1e9}%.3fs")
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

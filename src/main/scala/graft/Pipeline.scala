@@ -131,13 +131,7 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, lake) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     runAll(spark, sfDir, lake)
     println(s"[pipeline] lake refreshed at $lake")
     spark.stop()

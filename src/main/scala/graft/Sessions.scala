@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** The ONE home for session-level SQL conf every graft entry point shares
   * (Verify, Bench, Pipeline, dev tools, and the test session). Keeping
   * these in a single map means a conf added for correctness (e.g. the
@@ -7,7 +9,7 @@ package graft
   * another — the r7 fixture incident started exactly that way.
   */
 object Sessions {
-  /** Session defaults, applied via `SparkSession.builder().config(defaults)`:
+  /** Session defaults, applied by [[local]], Bench, Verify and the test session:
     *  - UTC session timezone: the events loader's TIMESTAMP_NTZ
     *    normalization is timezone-sensitive; every engine entry point must
     *    see the same wall-clock values the DuckDB oracle sees.
@@ -38,4 +40,21 @@ object Sessions {
     "spark.ui.enabled" -> "false",
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "1000",
     "spark.sql.extensions" -> "graft.GraftExtensions")
+
+  /** The local-mode session every dev main shares (Explain, Pipeline,
+    * graft.tools): `local[N]` with N shuffle partitions, [[defaults]],
+    * WARN logging. N is `SPARK_GRAFT_CPUS` when set, else every core this
+    * JVM sees — never a hardcoded count, which would silently
+    * oversubscribe (or starve) the host it runs on. */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config(defaults)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   *
   *  - `spark.graft.checkpoint.mode=local` (default): `localCheckpoint` —
   *    executor-local block storage, no reliable-FS write, fastest. The
-  *    right dev/local[32] mode, but NOT replicated: on a real cluster an
+  *    right dev/local-mode choice, but NOT replicated: on a real cluster an
   *    executor loss discards the blocks and kills the job mid-iteration.
   *  - `spark.graft.checkpoint.mode=reliable`: `Dataset.checkpoint()` into
   *    `spark.graft.checkpoint.dir` (set it to a durable FS path — HDFS/

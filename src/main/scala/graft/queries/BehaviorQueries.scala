@@ -642,7 +642,7 @@ object BehaviorQueries {
       val supp = baskets.select(explode(col("ps")).as("part"))
         .groupBy("part").agg(count(lit(1)).as("supp"))
       // direction expansion IN-ROW: a self-union would re-run the pair
-      // aggregation once per direction (ProbePlan showed two independent
+      // aggregation once per direction (PlanDump showed two independent
       // (pa, pb) exchanges); the 2-element explode reuses one
       val directed = pairs.select(explode(array(
           struct(col("pa").as("item"), col("pb").as("neighbor"), col("co")),
@@ -770,7 +770,7 @@ object BehaviorQueries {
           max(unix_micros(col("ts"))).as("e_us"))
       // emit both boundaries IN-ROW (explode of a 2-element array) — a
       // self-union here re-runs the whole sessionize pipeline once per
-      // branch (two window stacks over raw events; caught by ProbePlan)
+      // branch (two window stacks over raw events; caught by PlanDump)
       val bounds = sess.select(explode(array(
           struct(col("s_us").as("us"), lit(1L).as("delta")),
           struct(col("e_us").as("us"), lit(-1L).as("delta")))).as("b"))

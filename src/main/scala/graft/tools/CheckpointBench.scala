@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{Sessions, SparkEntry}
 import graft.ops.Checkpoints
-import org.apache.spark.sql.SparkSession
 
 /** Measures the RELIABLE-checkpoint overhead on the deepest iterative
   * lineage users (the CheckpointModeSpec set): each query runs warm in
@@ -23,13 +22,7 @@ object CheckpointBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_bench").toString
 
     // Between-rep cleanup happens OUTSIDE the measured region: timing

@@ -1,26 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named catalog queries to files —
   * the committed per-round plan artifacts (plans/rNN/query_before.txt,
   * query_after.txt).
   *
   * Usage: runMain graft.tools.PlanDump sfDir outDir suffix query...
   * Writes outDir/query_suffix.txt. Session shape mirrors graft.Bench
-  * (local[SPARK_GRAFT_CPUS], shuffle partitions = cpus) so the plans are
-  * the ones the bench actually runs.
+  * ([[graft.Sessions.local]]: one shuffle partition per core) so the plans
+  * are the ones the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, suffix, names @ _*) = args.toSeq.toArray: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.SparkEntry.queries
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Quantifies the sampled-recall estimator's SPREAD: runs both sampled
   * gates ([[graft.queries.DedupQueries.qLshRecallSampled]] /
   * [[graft.queries.VectorQueries.qEmbeddingLshRecallSampled]]) at several
@@ -20,13 +18,7 @@ object SampledGateVariance {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val salts = if (args.length > 1) args.drop(1).toSeq else Seq("rcl", "rclB", "rclC")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     def audit(gate: String, salt: String,
               df: org.apache.spark.sql.DataFrame): Long = {

@@ -57,23 +57,11 @@ object ScaleProbe {
       "q_zorder_layout", "pq_codes", "q_ewma_revenue", "q_incremental_agg")
     val base = "/root/testdata/sf0.1"
     val scaled = s"/tmp/graft_scale/x$replicas"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     buildScaled(spark, base, scaled, replicas)
 
-    val qs = graft.SparkEntry.queries
-    println(f"${"query"}%-24s ${"t1x_warm"}%10s ${"tNx_warm"}%10s  ratio (replicas=$replicas)")
-    names.foreach { name =>
-      val t1 = warm(spark, qs(name), base)
-      val tN = warm(spark, qs(name), scaled)
-      println(f"$name%-24s $t1%9.2fs $tN%9.2fs  ${tN / t1}%5.1fx")
-    }
-    spark.stop()
+    report(spark, names, base, scaled, s"replicas=$replicas")
   }
 
   /** User-dimension arm: events ×N with user_id AND event_id shifted per
@@ -90,12 +78,7 @@ object ScaleProbe {
       "q_sessionize", "user_home_city")
     val base = "/root/testdata/sf0.1"
     val scaled = s"/tmp/graft_scale/users_x$replicas"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     if (!new java.io.File(s"$scaled/_done").exists()) {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
@@ -110,14 +93,7 @@ object ScaleProbe {
         .write.mode(SaveMode.Overwrite).parquet(s"$scaled/events.parquet")
       new java.io.File(s"$scaled/_done").createNewFile()
     }
-    val qs = graft.SparkEntry.queries
-    println(f"${"query"}%-28s ${"t1x_warm"}%10s ${"tNx_warm"}%10s  ratio (users x$replicas, facts proportional)")
-    names.foreach { name =>
-      val t1 = warm(spark, qs(name), base)
-      val tN = warm(spark, qs(name), scaled)
-      println(f"$name%-28s $t1%9.2fs $tN%9.2fs  ${tN / t1}%5.1fx")
-    }
-    spark.stop()
+    report(spark, names, base, scaled, s"users x$replicas, facts proportional")
   }
 
   /** Dims arm: part/customer/supplier dims ×N with all fact foreign keys
@@ -136,12 +112,7 @@ object ScaleProbe {
       "q_assoc_rules", "q_item_cf")
     val base = "/root/testdata/sf0.1"
     val scaled = s"/tmp/graft_scale/dims_x$replicas"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     if (!new java.io.File(s"$scaled/_done").exists()) {
       def reps(df: DataFrame, shifted: Seq[String]): DataFrame =
         (0 until replicas).map { i =>
@@ -171,19 +142,26 @@ object ScaleProbe {
         .write.mode(SaveMode.Overwrite).parquet(s"$scaled/lineitem.parquet")
       new java.io.File(s"$scaled/_done").createNewFile()
     }
+    report(spark, names, base, scaled, s"dims+facts x$replicas, disjoint worlds")
+  }
+
+  /** Warm 1× vs N× seconds and their ratio, one line per query; then
+    * stops the session. */
+  private def report(spark: SparkSession, names: Seq[String], base: String,
+                     scaled: String, label: String): Unit = {
     val qs = graft.SparkEntry.queries
-    println(f"${"query"}%-24s ${"t1x_warm"}%10s ${"tNx_warm"}%10s  ratio (dims+facts x$replicas, disjoint worlds)")
+    println(f"${"query"}%-28s ${"t1x_warm"}%10s ${"tNx_warm"}%10s  ratio ($label)")
     names.foreach { name =>
       val t1 = warm(spark, qs(name), base)
       val tN = warm(spark, qs(name), scaled)
-      println(f"$name%-24s $t1%9.2fs $tN%9.2fs  ${tN / t1}%5.1fx")
+      println(f"$name%-28s $t1%9.2fs $tN%9.2fs  ${tN / t1}%5.1fx")
     }
     spark.stop()
   }
 
   // measurement recipe mirrors graft.Bench.pass (noop sink + clearCache,
   // min over passes) so probe numbers stay comparable to BENCH — change both
-  // together (same note in QBench)
+  // together
   private def warm(spark: SparkSession,
                    fn: (SparkSession, String) => DataFrame, dir: String): Double = {
     var best = Double.MaxValue

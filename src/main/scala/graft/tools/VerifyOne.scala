@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only subset of [[graft.Verify]]: dump ONLY the named queries (plus
   * their oracle SQL) so tools/check.py can gate a work-in-progress query
   * without re-running the whole catalog.
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config(graft.Sessions.defaults)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     new java.io.File(outDir).mkdirs()
     val qs = graft.SparkEntry.queries
     names.foreach { name =>

@@ -2,7 +2,7 @@
 """Cross-round bench comparison under the controlled protocol (r9 verdict
 item 2): compare per-query min over THIS round's two uncontended
 `graft.Bench` artifacts against the previous round's artifact, and report
-the shared-query median ratio plus the tails.
+the shared-query total and median ratios plus the tails and top movers.
 
 Usage: bench_compare.py <prev.json> <cur_a.json> [cur_b.json]
 
@@ -30,6 +30,8 @@ def main(prev_path, *cur_paths):
     vals = [r for r, _ in shared]
     med = statistics.median(vals)
     print(f"shared queries: {len(shared)} (prev has {len(prev)}, cur has {len(cur)})")
+    tp, tc = sum(prev[k] for _, k in shared), sum(cur[k] for _, k in shared)
+    print(f"total {tp:.1f} s -> {tc:.1f} s (ratio {tc / tp:.3f})")
     print(f"cur/prev median {med:.3f}  p10 {vals[len(vals)//10]:.3f}  "
           f"p90 {vals[9*len(vals)//10]:.3f}")
     print("worst 5:", [(k, round(r, 2)) for r, k in shared[-5:]])
