@@ -1,8 +1,8 @@
 package graft
 
 /** Dev utility: print the formatted physical plan and cold/warm timings for
-  * one cataloged query, timed with graft.Bench's recipe (noop-sink write,
-  * cache cleared after each rep). Usage: runMain graft.Explain <query> [sfDir] [reps]. */
+  * one cataloged query, timed with graft.Bench's recipe ([[NoopRun]]), with
+  * each rep's Janino compilations. Usage: runMain graft.Explain <query> [sfDir] [reps]. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -15,10 +15,8 @@ object Explain {
     q.run(spark, sfDir).explain("formatted")
     spark.catalog.clearCache()
     (1 to reps).foreach { r =>
-      val t0 = System.nanoTime()
-      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[explain] rep=$r time=${(System.nanoTime() - t0) / 1e9}%.3fs")
-      spark.catalog.clearCache()
+      val t = NoopRun(spark)(q.run(spark, sfDir))
+      println(f"[explain] rep=$r time=${t.seconds}%.3fs compiles=${t.compiles}")
     }
     spark.stop()
   }

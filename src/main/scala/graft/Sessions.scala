@@ -33,12 +33,37 @@ object Sessions {
     *    and TPC-H families carry single-digit lists), but a workload
     *    with huge unselective isin filters over bloom-less tables should
     *    scope the conf to its probe reads instead.
+    *  - compile once per session: repeated ops (the streaming twins'
+    *    micro-batches, a refreshed lake) re-plan and regenerate the same
+    *    whole-stage source, and Spark reuses the Janino compile of
+    *    byte-identical source from its compiled-class cache. Plans and
+    *    results are never cached; only compiled classes are.
+    *    `spark.sql.codegen.useIdInClassName=false` names every generated
+    *    pipeline `GeneratedIterator`: AQE numbers codegen stages in the
+    *    order they materialize, so with the id in the name the same
+    *    pipeline was `…Stage3` in one run and `…Stage1` in the next and
+    *    missed the cache. The id stays in the plan and in the source's
+    *    forced `codegenStageId` comment, which is not part of the cache
+    *    key. `spark.sql.codegen.cache.maxEntries` (default 100) is sized
+    *    from the measured working set: one lake cycle (`Pipeline` stages
+    *    1–4 plus a store churn: ingest, two forgets, compaction) generates
+    *    about 240 distinct classes and a catalog pass of cheap queries
+    *    about 70, so a session running both needs about 310, and the
+    *    default cache evicted and recompiled about 316 classes in every
+    *    steady-state lake cycle. 1000 is about 3× that working set.
+    *    COST: a cached class keeps its class loader and metaspace, about
+    *    7 KB per entry (dropping the 238 entries of one lake cycle freed
+    *    1.6 MB of metaspace), so a full cache holds about 7 MB per JVM. It
+    *    is a static conf, read once per JVM at the first codegen, so it
+    *    must be set here, at session build.
     */
   val defaults: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false",
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "1000",
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.extensions" -> "graft.GraftExtensions")
 
   /** The local-mode session every dev main shares (Explain, Pipeline,

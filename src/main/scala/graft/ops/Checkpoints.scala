@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.graftshim.RddShim
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one lineage-cut primitive for every iterative / reused-frame plan
   * (Pregel-via-joins graph queries, union-find doubling, greedy sketch
@@ -24,6 +26,16 @@ import org.apache.spark.sql.DataFrame
 object Checkpoints {
   val ModeKey = "spark.graft.checkpoint.mode"
   val DirKey = "spark.graft.checkpoint.dir"
+
+  /** Releases a frame settled by `localCheckpoint`/`checkpoint` once its
+    * consumer is done with it. `Dataset.unpersist` only drops CacheManager
+    * entries; the checkpointed RDD stays in `getPersistentRDDs`, holding
+    * its blocks until the JVM happens to collect it, so the RDD itself is
+    * dropped here. The frame cannot be read afterwards. */
+  def release(settled: DataFrame): Unit = settled.queryExecution.logical match {
+    case r: LogicalRDD => RddShim.drop(r.rdd)
+    case _ => settled.unpersist(blocking = false): Unit
+  }
 
   implicit class LineageCut(private val df: DataFrame) extends AnyVal {
     /** Eagerly materialize `df` and truncate its lineage, honoring the

@@ -185,11 +185,11 @@ object DedupOps {
     "doc_id BIGINT, hs ARRAY<BIGINT>, doc_pt INT")
 
   /** Index-level parameters, stamped once at bootstrap
-    * ([[writeSignatureIndex]] overwrite) and validated by every later
-    * append, forget, and pruned probe: band keys and shard assignments
-    * are deterministic functions of these four values, so an op run with
-    * DIFFERENT values computes a wrong band_pt/doc_pt set and silently
-    * misses rows — e.g. a forget whose recomputed band keys don't match
+    * ([[writeSignatureIndex]] overwrite or [[createSignatureIndex]]) and
+    * validated by every later append, forget, and pruned probe: band keys
+    * and shard assignments are deterministic functions of these four
+    * values, so an op run with DIFFERENT values computes a wrong
+    * band_pt/doc_pt set and silently misses rows — e.g. a forget whose recomputed band keys don't match
     * the stored ones leaves the forgotten doc matchable, defeating the
     * right-to-be-forgotten guarantee with no error. */
   final case class IndexManifest(nPerm: Int, nBands: Int,
@@ -318,6 +318,22 @@ object DedupOps {
     if (mode != "append") writeManifest(spark, path, m)
   }
 
+  /** Creates an EMPTY [[writeSignatureIndex]] layout: the two table
+    * directories, then `_manifest.json` — written LAST, as in the
+    * bootstrap write, so a readable manifest still implies a complete
+    * index and a crash before it leaves a manifest-less dir that every
+    * later op refuses loudly. No Spark job runs. The streaming ingest
+    * twin bootstraps through this, so its first micro-batch runs the
+    * same pruned probe and [[appendNewToSignatureIndex]] as every later
+    * one (one plan family, compiled once per session). */
+  def createSignatureIndex(spark: org.apache.spark.sql.SparkSession,
+                           indexPath: String, nPerm: Int, nBands: Int,
+                           rowsPerBand: Int, nParts: Int = IndexParts): Unit = {
+    val fs = hadoopFs(spark, indexPath)
+    sigTables(indexPath).foreach(t => fs.mkdirs(ShardedStore.hp(t.dir)))
+    writeManifest(spark, indexPath, IndexManifest(nPerm, nBands, rowsPerBand, nParts))
+  }
+
   /** Appends `sigs` rows ([[signatureIndex]] schema) to a persisted index,
     * SKIPPING docs already present — the idempotence guard an
     * at-least-once replayed micro-batch needs: a plain append would add
@@ -349,7 +365,7 @@ object DedupOps {
     val ids = sigs.select(col("doc_id")).localCheckpoint(true)
     val dpts = ids.select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    if (dpts.isEmpty) return
+    if (dpts.isEmpty) { release(ids); return }
     // RE-INGEST of a logically-forgotten id (tombstoned, purge pending):
     // without this, the tombstone-blind presence probe below would skip
     // the doc's new rows — it would stay unmatchable and the next
@@ -371,6 +387,7 @@ object DedupOps {
         tombVector(indexPath).remove(tombed,
           tombstoneBroadcastLimit(spark, indexPath))
       }
+      release(tombed)
     }
     val present = spark.read.schema(sigsSchema).parquet(s"$indexPath/sigs")
       .where(col("doc_pt").isin(dpts: _*))
@@ -380,6 +397,7 @@ object DedupOps {
     if (!fresh.isEmpty)
       writeSignatureIndex(fresh, indexPath, nPerm, nBands, rowsPerBand,
         mode = "append", nParts = nParts)
+    release(fresh); release(ids)
   }
 
   /** Removes documents from a persisted [[writeSignatureIndex]] layout —
@@ -589,6 +607,7 @@ object DedupOps {
         removeFromSignatureIndex(ids, indexPath,
           m.nPerm, m.nBands, m.rowsPerBand, m.nParts)
       }
+      release(ids)
       tombVector(indexPath).drop(spark)
     }
     // stage every crowded shard of BOTH tables first, then one commit

@@ -128,12 +128,13 @@ object StreamingOps {
     * ([[graft.ops.DedupOps.dedupDeltaBatchPruned]]), so recall/precision
     * match the batch pipeline instead of trading refinement away.
     *
-    * Per micro-batch: (1) signatures for the batch only; (2) first batch
-    * bootstraps the index, later batches probe it with shard-pruned
-    * band-key equi-joins; (3) verdicts per doc (drop iff it near-dups an
-    * indexed doc or a smaller-id doc of the same batch); (4) KEPT docs'
-    * signatures are appended to the index so dropped near-dups never
-    * poison future batches. State lives in the lake (parquet, joinable,
+    * Per micro-batch: (1) signatures for the batch only; (2) the first
+    * batch creates an EMPTY index, and every batch (the first included)
+    * probes it with shard-pruned band-key equi-joins — one plan family,
+    * so its compiled code is reused from batch to batch; (3) verdicts
+    * per doc (drop iff it near-dups an indexed doc or a smaller-id doc of
+    * the same batch); (4) KEPT docs' signatures are appended to the index
+    * so dropped near-dups never poison future batches. State lives in the lake (parquet, joinable,
     * compactable, restart-safe), never in executor memory — the only
     * shape that survives a 100 TB corpus. Returns the batch's verdict
     * rows (doc_id, verdict, matched_id, matched_jac_e4, matched_in).
@@ -157,22 +158,21 @@ object StreamingOps {
     // self-heal at open: a forget/compaction that died mid-rewrite leaves
     // staging/backup dirs behind; rolling them to a rewrite boundary here
     // (no-op when clean — one listStatus per table) means at-least-once
-    // batch processing never probes a half-swapped index
+    // batch processing never probes a half-swapped index. A missing index
+    // is created empty (manifest last), so the first batch runs the same
+    // probe and append as every later one
     if (storeExists) DedupOps.recoverSignatureIndex(spark, indexPath)
-    // eager localCheckpoint, not persist+count: verdicts must be SETTLED
-    // before the index mutates below — a cache entry can be recomputed
-    // later against the grown index (observed on the IVF sibling:
-    // search-before-insert silently became search-after-insert), and the
-    // checkpoint truncates lineage so re-evaluation is impossible
-    val verdicts = (if (storeExists)
-      DedupOps.dedupDeltaBatchPruned(
-        batch.select("doc_id"), sigs, indexPath, minJac, nParts,
-        excludeOwnIds = true) // replay-safe: a retried batch never sees
-                              // its own failed attempt's index rows
-    else // bootstrap: within-batch arm only, against an empty index
-      DedupOps.dedupDeltaBatch(
-        batch.select("doc_id"), sigs, sigs.where(lit(false)), minJac)
-    ).localCheckpoint(true)
+    else DedupOps.createSignatureIndex(spark, indexPath,
+      nPerm, nBands, nPerm / nBands, nParts)
+    // verdicts must be SETTLED before the index mutates below — a cache
+    // entry can be recomputed later against the grown index (observed on
+    // the IVF sibling: search-before-insert silently became
+    // search-after-insert); the pruned probe returns an eagerly
+    // checkpointed frame, whose truncated lineage cannot re-evaluate
+    val verdicts = DedupOps.dedupDeltaBatchPruned(
+      batch.select("doc_id"), sigs, indexPath, minJac, nParts,
+      excludeOwnIds = true) // replay-safe: a retried batch never sees
+                            // its own failed attempt's index rows
     val kept = verdicts.where(col("verdict") === "keep").select("doc_id")
     val keptSigs = sigs.join(kept, Seq("doc_id"), "left_semi")
     // replay-safe append: a RETRIED batch's kept signatures are already in
@@ -180,12 +180,8 @@ object StreamingOps {
     // own doc_pt shards, so at-least-once retries never duplicate index
     // rows (plain append would, unboundedly, and nothing downstream dedups
     // them — the parity battery pins index row counts across a replay)
-    if (storeExists)
-      DedupOps.appendNewToSignatureIndex(keptSigs, indexPath,
-        nPerm, nBands, nPerm / nBands, nParts = nParts)
-    else
-      DedupOps.writeSignatureIndex(keptSigs, indexPath,
-        nPerm, nBands, nPerm / nBands, nParts = nParts)
+    DedupOps.appendNewToSignatureIndex(keptSigs, indexPath,
+      nPerm, nBands, nPerm / nBands, nParts = nParts)
     sigs.unpersist()
     verdicts
   }

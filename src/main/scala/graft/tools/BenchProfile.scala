@@ -10,6 +10,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *   jobs / stages / tasks launched,
   *   summed executor run time (the "real work"),
   *   shuffle bytes written,
+  *   Janino compilations (compiled-class cache misses),
   * so wall − maxTaskTime-ish gaps expose scheduling/planning overhead and
   * task counts expose over-partitioned stages. Output: one TSV line per
   * query on stdout (grep for ^[profile]).
@@ -49,23 +50,21 @@ object BenchProfile {
                 else qs.keys.toSeq.sorted
     // one warmup like Bench
     try { graft.SparkEntry.entry(spark).count() } catch { case _: Throwable => }
-    println("[profile]\tquery\twall_s\tjobs\tstages\ttasks\ttask_time_s\tshuffle_mb\tinput_mb")
+    println("[profile]\tquery\twall_s\tcompiles\tjobs\tstages\ttasks\ttask_time_s\tshuffle_mb\tinput_mb")
     for (name <- names) {
       jobs.set(0); stages.set(0); tasks.set(0)
       taskTimeMs.set(0); shuffleWrite.set(0); inputBytes.set(0)
-      val t0 = System.nanoTime()
-      try qs(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      try {
+        val t = graft.NoopRun(spark)(qs(name)(spark, dir))
+        // listener bus is async; drain it deterministically so no event
+        // lands after the read or bleeds into the next query's counters
+        // (a fixed sleep raced the bus under load)
+        org.apache.spark.graftshim.ListenerShim
+          .waitUntilListenerBusEmpty(spark.sparkContext)
+        println(f"[profile]\t$name\t${t.seconds}%.3f\t${t.compiles}\t${jobs.get}\t${stages.get}\t${tasks.get}\t${taskTimeMs.get / 1000.0}%.2f\t${shuffleWrite.get / 1e6}%.2f\t${inputBytes.get / 1e6}%.2f")
+      } catch { case e: Throwable =>
         System.err.println(s"[profile] $name FAILED: ${String.valueOf(e.getMessage).take(160)}")
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // listener bus is async; drain it deterministically so no event
-      // lands after the read or bleeds into the next query's counters
-      // (ADVICE r18 low — the old fixed sleep(60) raced the bus under load)
-      org.apache.spark.graftshim.ListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      println(f"[profile]\t$name\t$wall%.3f\t${jobs.get}\t${stages.get}\t${tasks.get}\t${taskTimeMs.get / 1000.0}%.2f\t${shuffleWrite.get / 1e6}%.2f\t${inputBytes.get / 1e6}%.2f")
     }
     spark.stop()
   }

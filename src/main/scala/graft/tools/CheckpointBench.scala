@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{NoopRun, Sessions, SparkEntry}
 import graft.ops.Checkpoints
 
 /** Measures the RELIABLE-checkpoint overhead on the deepest iterative
@@ -45,11 +45,7 @@ object CheckpointBench {
         spark.sparkContext.setCheckpointDir(ckptDir)
     }
     def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      val dt = NoopRun(spark)(SparkEntry.queries(name)(spark, sfDir)).seconds
       wipeCheckpoints()
       dt
     }

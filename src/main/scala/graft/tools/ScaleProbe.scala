@@ -159,20 +159,11 @@ object ScaleProbe {
     spark.stop()
   }
 
-  // measurement recipe mirrors graft.Bench.pass (noop sink + clearCache,
-  // min over passes) so probe numbers stay comparable to BENCH — change both
-  // together
+  // measurement recipe mirrors graft.Bench.pass (NoopRun, min over passes)
+  // so probe numbers stay comparable to BENCH — change both together
   private def warm(spark: SparkSession,
-                   fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-    var best = Double.MaxValue
-    (1 to 2).foreach { _ =>
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      spark.catalog.clearCache()
-    }
-    best
-  }
+                   fn: (SparkSession, String) => DataFrame, dir: String): Double =
+    (1 to 2).map(_ => graft.NoopRun(spark)(fn(spark, dir)).seconds).min
 
   private def buildScaled(spark: SparkSession, base: String, out: String,
                           replicas: Int): Unit = {
