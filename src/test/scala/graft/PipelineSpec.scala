@@ -1,20 +1,33 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.queries.GeoPipeline
 
 /** End-to-end lake-flow test (SURVEY.md §5.4): full 4-stage refresh at
   * sf0.001 into a temp lake, then structural + referential assertions on
-  * the materialized interim and marts. */
+  * the materialized interim and marts, their parity with the catalog
+  * entries, and what the refresh leaves cached or hinted. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
   private lazy val lake = {
     val dir = Files.createTempDirectory("graft-lake").toString
+    spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     Pipeline.runAll(spark, sf, dir)
+    cacheEmptyAfterRefresh = spark.sharedState.cacheManager.isEmpty
+    newPersistentRdds = (spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds).size
     dir
   }
+  // what the refresh above left behind, from an empty cache
+  private var cacheEmptyAfterRefresh = false
+  private var newPersistentRdds = -1
 
   test("driver entry smoke: flagship query returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -99,4 +112,67 @@ class PipelineSpec extends SparkSpec {
     assert(i2.count() === 4) // ids 3,4,5,6 — day 1 never loaded
   }
   private var currentRun: Int = 0
+
+  test("runAll leaves no new cache entry and no new persistent RDD") {
+    assert(lake.nonEmpty)
+    assert(cacheEmptyAfterRefresh)
+    assert(newPersistentRdds === 0)
+  }
+
+  // Lake ↔ catalog parity: each mart read back and put through its catalog
+  // projection equals the oracle-checked entry row for row.
+  private def assertSameRows(lakeMart: DataFrame, catalog: DataFrame): Unit = {
+    try {
+      def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      assert(shape(lakeMart) === shape(catalog))
+      val rows = lakeMart.collect().toSeq
+      assert(rows.nonEmpty)
+      assert(rows === catalog.collect().toSeq)
+    } finally spark.catalog.clearCache()
+  }
+
+  test("analytics/user_city through its projection equals user_city_mart") {
+    assertSameRows(
+      GeoPipeline.userCityExport(spark.read.parquet(s"$lake/analytics/user_city")),
+      GeoPipeline.userCityMart.run(spark, sf))
+  }
+
+  test("analytics/zone_report through its projection equals zone_report") {
+    // partition discovery reads the `week=` directory values back as int;
+    // the mart wrote them as long
+    val mart = spark.read.parquet(s"$lake/analytics/zone_report")
+      .withColumn("week", col("week").cast("long"))
+    assertSameRows(GeoPipeline.zoneReportExport(mart), GeoPipeline.zoneReport.run(spark, sf))
+  }
+
+  test("analytics/recommendations through its projection equals recommendations") {
+    assertSameRows(
+      GeoPipeline.recommendationsExport(spark.read.parquet(s"$lake/analytics/recommendations")),
+      GeoPipeline.recommendations.run(spark, sf))
+  }
+
+  test("stage 4 writes recommendations with no strategy hint on a user-grain join") {
+    // PlanSpec pins the r8 rule on the catalog entry; stage 4 returns no
+    // DataFrame, so its written plan is captured with a listener
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        captured.add(qe.optimizedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    val written = s"$lake/analytics/recommendations"
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.runStage4Recommendations(spark, lake)
+      org.apache.spark.graftshim.ListenerShim.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = captured.asScala.toSeq.filter(_.toString.contains(written))
+    assert(plans.nonEmpty, "stage 4's write was not captured")
+    assert(plans.flatMap(_.collect { case j: Join => j }).nonEmpty)
+    val hinted = plans.flatMap(PlanSpec.hintedUserJoins)
+    assert(hinted.isEmpty, s"broadcast hint on a user-grain join: ${hinted.mkString("\n")}")
+  }
 }

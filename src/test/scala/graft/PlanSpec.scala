@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import graft.queries.{GeoPipeline, MixQueries, Relational, TextQueries}
 
 /** Physical-plan regression tests: the properties that matter at scale —
@@ -247,18 +248,11 @@ class PlanSpec extends SparkSpec {
     // at real user cardinality, and AQE cannot override an explicit hint.
     // Runtime size-based broadcast conversion remains allowed — the pin is
     // on the optimized LOGICAL plan's hints, not the adaptive physical plan.
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    val df = graft.queries.GeoPipeline.recommendations.run(spark, sf)
-    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
-    assert(joins.nonEmpty)
-    joins.foreach { j =>
-      val userGrain = j.condition.exists(_.references.exists(a =>
-        a.name == "user_id" || a.name == "user_left" || a.name == "user_right"))
-      if (userGrain)
-        assert(j.hint.leftHint.flatMap(_.strategy).isEmpty &&
-          j.hint.rightHint.flatMap(_.strategy).isEmpty,
-          s"broadcast hint on a user-grain join: $j")
-    }
+    val plan = graft.queries.GeoPipeline.recommendations.run(spark, sf)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.nonEmpty)
+    val hinted = PlanSpec.hintedUserJoins(plan)
+    assert(hinted.isEmpty, s"broadcast hint on a user-grain join: ${hinted.mkString("\n")}")
   }
 
   test("recommendations_grid_full: equi-join on cell keys, no nested-loop/cartesian") {
@@ -473,5 +467,16 @@ class PlanSpec extends SparkSpec {
     assert(nBroadcast >= 2, s"counts/min must broadcast, not shuffle the facts:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"fact side must not sort-merge against the tiny source counts:\n$plan")
+  }
+}
+
+object PlanSpec {
+  /** Joins keyed on a user column (user_id / user_left / user_right) that
+    * carry a strategy hint — r8 verdict 2 wants none. */
+  def hintedUserJoins(plan: LogicalPlan): Seq[Join] = plan.collect {
+    case j: Join if j.condition.exists(_.references.exists(a =>
+        a.name == "user_id" || a.name == "user_left" || a.name == "user_right")) &&
+      (j.hint.leftHint.flatMap(_.strategy).nonEmpty ||
+        j.hint.rightHint.flatMap(_.strategy).nonEmpty) => j
   }
 }
