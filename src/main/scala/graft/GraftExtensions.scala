@@ -41,11 +41,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     ext.injectResolutionRule(spark => graft.plans.ResolveGraftAsOf(spark))
 
-    // columnar-domain instrumentation: wraps vectorized scans with a
-    // zero-copy batch/row counter when spark.graft.columnar.metrics=true
-    // (plans unchanged otherwise) — see graft.plans.ColumnarMetrics
-    ext.injectColumnar(session => new graft.plans.GraftColumnarRule(session))
-
     def reg(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),

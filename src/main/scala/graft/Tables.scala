@@ -22,19 +22,17 @@ object Tables {
     * parallelism 2.6 on 32 cores across the catalog. When (and only when)
     * the scan's achievable parallelism is far below the session's cores,
     * re-hash the table across the cores on its natural high-cardinality
-    * key. The guard is scale-adaptive, not a local[32] constant: at
-    * production scale a table is thousands of splittable files, the
-    * estimated scan-task count exceeds the core count, and this is a
+    * key. The guard is scale-adaptive, not a constant tuned to one core
+    * count: at production scale a table is thousands of splittable files,
+    * the estimated scan-task count exceeds the core count, and this is a
     * no-op — exactly the "derive partitioning from input size" rule.
     * Hash (not round-robin) partitioning: deterministic row→partition
     * mapping is retry-safe (SPARK-38388) and skips round-robin's
     * sort-before-repartition; the keys below are near-unique so the hash
     * spreads evenly. OPT-IN per call site (`fanned = true` on the
-    * loaders) — see the policy note on [[table]]; global override
-    * spark.graft.scan.fanout (both directions), size floor
-    * spark.graft.scan.fanout.minBytes (default 512 KiB — below that the
-    * scan is dimension-sized and the exchange would cost more than the
-    * serial scan).
+    * loaders) — see the policy note on [[table]]; below
+    * [[FanoutMinBytes]] the scan is dimension-sized and the exchange
+    * would cost more than the serial scan.
     */
   private val FanoutKeys = Map(
     "lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
@@ -42,10 +40,11 @@ object Tables {
     "events" -> "event_id", "documents" -> "doc_id",
     "embeddings" -> "vec_id")
 
+  private val FanoutMinBytes = 512L * 1024
+
   private def fanOut(spark: SparkSession, df: DataFrame, path: String,
-                     key: Option[String], byDefault: Boolean): DataFrame = key match {
-    case Some(k) if spark.conf
-        .get("spark.graft.scan.fanout", byDefault.toString).toBoolean =>
+                     key: Option[String]): DataFrame = key match {
+    case Some(k) =>
       val par = spark.sparkContext.defaultParallelism
       // A table path may be a single parquet FILE (the driver's testdata
       // layout) or a directory of part files (Spark-written layout).
@@ -61,18 +60,16 @@ object Tables {
             !f.getName.startsWith(".")))
           .getOrElse(Seq.empty)
       val bytes = files.map(_.length()).sum
-      val minBytes = spark.conf
-        .get("spark.graft.scan.fanout.minBytes", (512L * 1024).toString).toLong
       val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes.max(1L)
       // estimated scan tasks from FS metadata only (driver-side, no job):
       // files are at best one task per maxPartitionBytes-sized split;
       // ceiling division — floor under-counted near the boundary (a file
       // of 2.3 splits is 3 tasks, not 2; ADVICE r18 low)
       val estTasks = files.map(f => (f.length() + maxSplit - 1) / maxSplit).sum
-      if (bytes >= minBytes && estTasks * 2 <= par)
+      if (bytes >= FanoutMinBytes && estTasks * 2 <= par)
         df.repartition(par, org.apache.spark.sql.functions.col(k))
       else df
-    case _ => df
+    case None => df
   }
 
   /** Load a table; `fanned = true` opts the scan into the fan-out above.
@@ -84,13 +81,12 @@ object Tables {
     * every cheap query by ~0.2–0.5 s, while only kernel-heavy consumers
     * (per-token scoring, frame explodes, window argmin over a wide
     * cross join) amortize it. The queries that measurably win pass
-    * `fanned = true`; `spark.graft.scan.fanout` remains a global
-    * override in BOTH directions (true = fan out every mapped table,
-    * false = kill switch; unset = per-call-site policy). */
+    * `fanned = true` (re-measured at 4 cores: ROADMAP item 6). */
   def table(spark: SparkSession, dir: String, name: String,
             fanned: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    fanOut(spark, spark.read.parquet(path), path, FanoutKeys.get(name), fanned)
+    val df = spark.read.parquet(path)
+    if (fanned) fanOut(spark, df, path, FanoutKeys.get(name)) else df
   }
 
   def lineitem(spark: SparkSession, dir: String, fanned: Boolean = false): DataFrame =

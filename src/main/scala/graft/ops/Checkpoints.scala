@@ -1,13 +1,23 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.graftshim.RddShim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one lineage-cut primitive for every iterative / reused-frame plan
-  * (Pregel-via-joins graph queries, union-find doubling, greedy sketch
-  * loops). Mode is a session switch so the SAME query code runs in both
-  * deployment shapes:
+/** The one place that cuts lineage. Every frame the engine settles — an
+  * iterative round (Pregel-via-joins graph queries, union-find doubling,
+  * greedy sketch loops), a receipt or verdict handed to a caller, or a
+  * store read settled before the store mutates — goes through one of two
+  * forms:
+  *
+  *  - [[LineageCut.cutLineage]] (hand-off): the settled frame outlives the
+  *    call that made it — it is returned, or replaced round by round.
+  *  - [[settled]] (scoped): the settled frame lives for one lexical block
+  *    and is released when the block exits.
+  *
+  * Mode is a session switch so the SAME code runs in both deployment
+  * shapes:
   *
   *  - `spark.graft.checkpoint.mode=local` (default): `localCheckpoint` —
   *    executor-local block storage, no reliable-FS write, fastest. The
@@ -16,25 +26,41 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - `spark.graft.checkpoint.mode=reliable`: `Dataset.checkpoint()` into
   *    `spark.graft.checkpoint.dir` (set it to a durable FS path — HDFS/
   *    object store on a cluster). Survives executor loss; the production
-  *    mode for multi-hour 100 TB iterative jobs.
+  *    mode for multi-hour 100 TB iterative jobs and for store mutations
+  *    that must not lose a settled frame half way.
   *
   * Both modes are EAGER (materialize now, truncate lineage now) — the
-  * doubling self-joins and per-round cuts rely on that. Results are
-  * mode-independent by construction (`CheckpointModeSpec` pins it on the
-  * iterative graph family).
+  * doubling self-joins, per-round cuts and settle-before-mutate steps rely
+  * on that. Results are mode-independent by construction
+  * (`CheckpointModeSpec` pins it on the iterative graph family and on
+  * every store op).
   */
 object Checkpoints {
   val ModeKey = "spark.graft.checkpoint.mode"
   val DirKey = "spark.graft.checkpoint.dir"
 
-  /** Releases a frame settled by `localCheckpoint`/`checkpoint` once its
-    * consumer is done with it. `Dataset.unpersist` only drops CacheManager
-    * entries; the checkpointed RDD stays in `getPersistentRDDs`, holding
-    * its blocks until the JVM happens to collect it, so the RDD itself is
-    * dropped here. The frame cannot be read afterwards. */
-  def release(settled: DataFrame): Unit = settled.queryExecution.logical match {
-    case r: LogicalRDD => RddShim.drop(r.rdd)
-    case _ => settled.unpersist(blocking = false): Unit
+  /** Settles `df` ([[LineageCut.cutLineage]]), runs `body` on the settled
+    * frame and releases it when `body` exits, normally or not. `body` must
+    * not return the settled frame or a lazy frame that reads it. */
+  def settled[A](df: DataFrame)(body: DataFrame => A): A = {
+    val s = df.cutLineage()
+    try body(s) finally release(s)
+  }
+
+  /** Drops a frame settled by [[LineageCut.cutLineage]], whose plan is a
+    * `LogicalRDD` over the checkpointed RDD. `Dataset.unpersist` only drops
+    * CacheManager entries; a locally checkpointed RDD stays in
+    * `getPersistentRDDs`, holding its blocks until the JVM happens to
+    * collect it, so the RDD itself is dropped. A reliable checkpoint's
+    * files are deleted too: Spark's cleaner keeps them by default
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints=false`). */
+  private def release(settled: DataFrame): Unit = {
+    val rdd = settled.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    RddShim.drop(rdd)
+    rdd.getCheckpointFile.foreach { f =>
+      val p = new Path(f)
+      p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   implicit class LineageCut(private val df: DataFrame) extends AnyVal {

@@ -106,22 +106,28 @@ object DedupOps {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 20,
-                          driverEdgeLimit: Long = 1000000L): DataFrame = {
-    val p = pairs.select(col("id_l").cast("long").as("src"),
-      col("id_r").cast("long").as("dst")).cutLineage()
-    val nPairs = p.count()
-    // Adaptive plan choice, AQE-style: the near-dup pair graph is usually
-    // orders of magnitude smaller than the corpus (it exists only where
-    // near-dups exist), so below `driverEdgeLimit` pairs the component
-    // labeling runs as driver-side union-find (exact min-root invariant) in
-    // one pass, and only the label map — ≤ 2·pairs entries — is broadcast
-    // back. Above the limit, the distributed pointer-doubling loop below
-    // takes over; both paths produce identical min-reachable-id labels
-    // (equality is pinned by a spec).
-    if (nPairs <= driverEdgeLimit) return ccViaDriver(nodes, p)
+                          driverEdgeLimit: Long = 1000000L): DataFrame =
+    // neither path's result reads the settled pairs: the driver path
+    // collects them, the doubling loop settles its own edge copy
+    settled(pairs.select(col("id_l").cast("long").as("src"),
+        col("id_r").cast("long").as("dst"))) { p =>
+      // Adaptive plan choice, AQE-style: the near-dup pair graph is usually
+      // orders of magnitude smaller than the corpus (it exists only where
+      // near-dups exist), so below `driverEdgeLimit` pairs the component
+      // labeling runs as driver-side union-find (exact min-root invariant)
+      // in one pass, and only the label map — ≤ 2·pairs entries — is
+      // broadcast back. Above the limit, the distributed pointer-doubling
+      // loop takes over; both paths produce identical min-reachable-id
+      // labels (equality is pinned by a spec).
+      if (p.count() <= driverEdgeLimit) ccViaDriver(nodes, p)
+      else ccByDoubling(nodes, p, maxIter)
+    }
+
+  /** [[connectedComponents]]' distributed path over settled `p` (src, dst). */
+  private def ccByDoubling(nodes: DataFrame, p: DataFrame, maxIter: Int): DataFrame = {
     val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
       .cutLineage()
-    // localCheckpoint (not persist): the doubling self-join would otherwise
+    // cut (not persist): the doubling self-join would otherwise
     // triple the logical plan every round — lineage must be cut, not cached.
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label")).cutLineage()
@@ -362,42 +368,42 @@ object DedupOps {
     val spark = sigs.sparkSession
     validateManifest(spark, indexPath,
       IndexManifest(nPerm, nBands, rowsPerBand, nParts))
-    val ids = sigs.select(col("doc_id")).localCheckpoint(true)
-    val dpts = ids.select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (dpts.isEmpty) { release(ids); return }
-    // RE-INGEST of a logically-forgotten id (tombstoned, purge pending):
-    // without this, the tombstone-blind presence probe below would skip
-    // the doc's new rows — it would stay unmatchable and the next
-    // compaction would purge it entirely (a permanent recall hole). So:
-    // purge its stale physical rows (shard-pruned, re-ingest-set-sized),
-    // clear its tombstone rows, and let the probe re-admit it fresh —
-    // logical forget ≡ physical forget at the id level, including
-    // forget → re-ingest → match (parity-pinned). Crash between the two
-    // steps leaves the id purged AND tombstoned — the same consistent
-    // forgotten state compaction's purge window documents; the batch's
-    // replay converges it.
-    if (tombVector(indexPath).exists(spark)) {
-      val tombed = tombVector(indexPath).ids(spark)
-        .join(broadcast(ids), Seq("doc_id"), "left_semi")
-        .distinct().localCheckpoint(true)
-      if (!tombed.isEmpty) {
-        removeFromSignatureIndex(tombed, indexPath,
-          nPerm, nBands, rowsPerBand, nParts)
-        tombVector(indexPath).remove(tombed,
-          tombstoneBroadcastLimit(spark, indexPath))
+    settled(sigs.select(col("doc_id"))) { ids =>
+      val dpts = ids.select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      if (dpts.nonEmpty) {
+        // RE-INGEST of a logically-forgotten id (tombstoned, purge pending):
+        // without this, the tombstone-blind presence probe below would skip
+        // the doc's new rows — it would stay unmatchable and the next
+        // compaction would purge it entirely (a permanent recall hole). So:
+        // purge its stale physical rows (shard-pruned, re-ingest-set-sized),
+        // clear its tombstone rows, and let the probe re-admit it fresh —
+        // logical forget ≡ physical forget at the id level, including
+        // forget → re-ingest → match (parity-pinned). Crash between the two
+        // steps leaves the id purged AND tombstoned — the same consistent
+        // forgotten state compaction's purge window documents; the batch's
+        // replay converges it.
+        if (tombVector(indexPath).exists(spark))
+          settled(tombVector(indexPath).ids(spark)
+              .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct()) { tombed =>
+            if (!tombed.isEmpty) {
+              removeFromSignatureIndex(tombed, indexPath,
+                nPerm, nBands, rowsPerBand, nParts)
+              tombVector(indexPath).remove(tombed,
+                tombstoneBroadcastLimit(spark, indexPath))
+            }
+          }
+        val present = spark.read.schema(sigsSchema).parquet(s"$indexPath/sigs")
+          .where(col("doc_pt").isin(dpts: _*))
+          .join(broadcast(ids), Seq("doc_id"), "left_semi")
+          .select("doc_id")
+        settled(sigs.join(present, Seq("doc_id"), "left_anti")) { fresh =>
+          if (!fresh.isEmpty)
+            writeSignatureIndex(fresh, indexPath, nPerm, nBands, rowsPerBand,
+              mode = "append", nParts = nParts)
+        }
       }
-      release(tombed)
     }
-    val present = spark.read.schema(sigsSchema).parquet(s"$indexPath/sigs")
-      .where(col("doc_pt").isin(dpts: _*))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select("doc_id")
-    val fresh = sigs.join(present, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    if (!fresh.isEmpty)
-      writeSignatureIndex(fresh, indexPath, nPerm, nBands, rowsPerBand,
-        mode = "append", nParts = nParts)
-    release(fresh); release(ids)
   }
 
   /** Removes documents from a persisted [[writeSignatureIndex]] layout —
@@ -600,14 +606,14 @@ object DedupOps {
     // drop (idempotent). Single maintenance writer assumed, as for every
     // index-mutating op here (the foreachBatch serial contract).
     if (tombVector(indexPath).exists(spark)) {
-      val ids = tombVector(indexPath).ids(spark)
-        .distinct().localCheckpoint(true) // settled: the purge outlives the table
-      if (!ids.isEmpty) {
-        val m = readManifest(spark, indexPath)
-        removeFromSignatureIndex(ids, indexPath,
-          m.nPerm, m.nBands, m.rowsPerBand, m.nParts)
+      // settled: the purge outlives the table
+      settled(tombVector(indexPath).ids(spark).distinct()) { ids =>
+        if (!ids.isEmpty) {
+          val m = readManifest(spark, indexPath)
+          removeFromSignatureIndex(ids, indexPath,
+            m.nPerm, m.nBands, m.rowsPerBand, m.nParts)
+        }
       }
-      release(ids)
       tombVector(indexPath).drop(spark)
     }
     // stage every crowded shard of BOTH tables first, then one commit
@@ -665,7 +671,7 @@ object DedupOps {
     * them from the probe is lossless (equality vs the flat-index pass is
     * pinned by IncrementalDedupSpec).
     *
-    * The returned frame is SETTLED (eager localCheckpoint) and the
+    * The returned frame is SETTLED (eager `cutLineage`) and the
     * intermediates this function persists are released before it returns
     * — per-micro-batch callers accumulate no CacheManager entries.
     * `batchSigs` feeds two candidate arms and a verification join; the
@@ -677,7 +683,7 @@ object DedupOps {
                             excludeOwnIds: Boolean = false): DataFrame = {
     val (verdicts, cached) = dedupDeltaBatchPrunedPlan(
       batchIds, batchSigs, indexPath, minJac, nParts, excludeOwnIds)
-    val out = verdicts.localCheckpoint(true)
+    val out = verdicts.cutLineage()
     cached.foreach(_.unpersist(): Unit)
     out
   }
@@ -1000,18 +1006,19 @@ object DedupOps {
         !fs.exists(ShardedStore.hp(clusterManifestFile(storePath)))) {
       val allNodes = ns.union(ps.select(col("id_l").as("id")))
         .union(ps.select(col("id_r").as("id"))).distinct()
-      val cc = connectedComponents(allNodes, ps)
-        .select(col("node").as("doc_id"), col("cluster_id"))
-        .localCheckpoint(true)
-      // pair evidence in canonical lo<hi orientation — label-free (fmt 2:
-      // keyed by min endpoint, so later relabels never move a row)
-      val canon = ps.where(col("id_l") =!= col("id_r"))
-        .select(least(col("id_l"), col("id_r")).as("id_l"),
-          greatest(col("id_l"), col("id_r")).as("id_r")).distinct()
-      val receipt0 = cc
-        .join(ns.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      writeClusterStore(cc, canon, storePath, nParts, allocEpoch)
+      val receipt0 = settled(connectedComponents(allNodes, ps)
+          .select(col("node").as("doc_id"), col("cluster_id"))) { cc =>
+        // pair evidence in canonical lo<hi orientation — label-free (fmt 2:
+        // keyed by min endpoint, so later relabels never move a row)
+        val canon = ps.where(col("id_l") =!= col("id_r"))
+          .select(least(col("id_l"), col("id_r")).as("id_l"),
+            greatest(col("id_l"), col("id_r")).as("id_r")).distinct()
+        val receipt = cc
+          .join(ns.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
+          .cutLineage()
+        writeClusterStore(cc, canon, storePath, nParts, allocEpoch)
+        receipt
+      }
       ps.unpersist(); ns.unpersist()
       return receipt0
     }
@@ -1109,17 +1116,15 @@ object DedupOps {
     // the by_doc rewrite's shard list — are read from live dirs and
     // settled BEFORE any staging/swap touches the store
     val loserPts = losers.map(ptOf).toSeq.distinct
-    val loserMembers = if (losers.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"))
-    else spark.read.schema(byClusterSchema).parquet(s"$storePath/by_cluster")
-      .where(col("cluster_pt").isin(loserPts: _*))
-      .join(broadcast(losers.toSeq.toDF("cluster_id")), Seq("cluster_id"), "left_semi")
-      .select("doc_id").localCheckpoint(true)
-    val docPts = (loserMembers.select(
-        pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
-      .distinct().collect().map(_.getInt(0)) ++ newDocs.map(d => ptOf(d._1)))
-      .distinct.toSeq
+    val loserDocPts = if (losers.isEmpty) Seq.empty[Int]
+      else settled(spark.read.schema(byClusterSchema).parquet(s"$storePath/by_cluster")
+          .where(col("cluster_pt").isin(loserPts: _*))
+          .join(broadcast(losers.toSeq.toDF("cluster_id")), Seq("cluster_id"), "left_semi")
+          .select("doc_id")) { loserMembers =>
+        loserMembers.select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
+          .distinct().collect().map(_.getInt(0)).toSeq
+      }
+    val docPts = (loserDocPts ++ newDocs.map(d => ptOf(d._1))).distinct
     val Seq(byDocT, byClusterT, edgesT, allocT, _) = clusterTables(storePath)
     val relabel = losers.nonEmpty || newDocs.nonEmpty
     // phase 1 (stage EVERY affected table completely, live dirs untouched)
@@ -1280,189 +1285,189 @@ object DedupOps {
     require(mParts == nParts,
       s"cluster store at $storePath has nParts=$mParts, caller supplied $nParts" +
         " — partition pruning would miss shards")
-    val ids = removeIds.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint(true)
-    val nIds = ids.count()
-    require(nIds <= driverPairLimit,
-      s"forgetFromClusterStore: $nIds ids exceeds driverPairLimit=" +
-        s"$driverPairLimit — split the batch")
-    val idRows = ids.collect().map(_.getLong(0))
-    def ptOf(id: Long) = (((id % nParts) + nParts) % nParts).toInt
-    if (idRows.isEmpty)
-      return Seq.empty[(Long, Boolean)].toDF("doc_id", "was_clustered")
-    val dpts = idRows.map(ptOf).distinct.toSeq
-    val stored: Map[Long, Long] = spark.read.schema(byDocSchema)
-      .parquet(s"$storePath/by_doc")
-      .where(col("doc_pt").isin(dpts: _*))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select("doc_id", "cluster_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val receipt = idRows.map(id => (id, stored.contains(id))).toSeq
-      .toDF("doc_id", "was_clustered")
-    if (stored.isEmpty) return receipt
-    val affected = stored.values.toSeq.distinct
-    val apts = affected.map(ptOf).distinct
-    val affDf = affected.toDF("cluster_id")
-    // settled reads of the affected components (live dirs untouched until
-    // every staging below completes)
-    val members = spark.read.schema(byClusterSchema)
-      .parquet(s"$storePath/by_cluster")
-      .where(col("cluster_pt").isin(apts: _*))
-      .join(broadcast(affDf), Seq("cluster_id"), "left_semi")
-      .select("cluster_id", "doc_id").localCheckpoint(true)
-    val memberPts = members
-      .select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    // fmt 2 edges are keyed by canonical min endpoint: an affected
-    // component's evidence always has id_l ∈ its members, so the member
-    // shard list (already needed for the by_doc rewrite) prunes the read
-    // exactly; the semi-join restricts shared shards to affected rows
-    val edgesA = spark.read.schema(edgesSchema).parquet(s"$storePath/edges")
-      .where(col("edge_pt").isin(memberPts: _*))
-      .join(members.select(col("doc_id").as("id_l")), Seq("id_l"), "left_semi")
-      .select("id_l", "id_r").localCheckpoint(true)
-    val survNodes = members.select(col("doc_id").as("id"))
-      .join(broadcast(ids.select(col("doc_id").as("id"))), Seq("id"), "left_anti")
-    val survEdges = edgesA
-      .join(broadcast(ids.select(col("doc_id").as("id_l"))), Seq("id_l"), "left_anti")
-      .join(broadcast(ids.select(col("doc_id").as("id_r"))), Seq("id_r"), "left_anti")
-    val newLabels = connectedComponents(survNodes, survEdges,
-        driverEdgeLimit = driverPairLimit)
-      .select(col("node").as("doc_id"), col("cluster_id"))
-      .localCheckpoint(true)
-    val newLabelPts = newLabels
-      .select(pmod(col("cluster_id"), lit(nParts.toLong)).cast("int").as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val cPts = (apts ++ newLabelPts).distinct
-    val Seq(byDocT, byClusterT, edgesT, allocT, retiredT) =
-      clusterTables(storePath)
-    // stage every affected table, then one commit boundary
-    val byDocKept = spark.read.schema(byDocSchema).parquet(s"$storePath/by_doc")
-      .where(col("doc_pt").isin(memberPts: _*))
-      .join(members.select("doc_id"), Seq("doc_id"), "left_anti") // affected rows out
-      .select("doc_id", "cluster_id")
-      .unionByName(newLabels)                    // survivors back, relabeled
-      .withColumn("doc_pt", pmod(col("doc_id"), lit(nParts.toLong)).cast("int"))
-    ShardedStore.stage(byDocKept, byDocT, math.min(nParts, memberPts.size),
-      memberPts)
-    val byClusterKept = spark.read.schema(byClusterSchema)
-      .parquet(s"$storePath/by_cluster")
-      .where(col("cluster_pt").isin(cPts: _*))
-      .join(broadcast(affDf), Seq("cluster_id"), "left_anti")
-      .select("cluster_id", "doc_id")
-      .unionByName(newLabels.select(col("cluster_id"), col("doc_id")))
-      .withColumn("cluster_pt", pmod(col("cluster_id"), lit(nParts.toLong)).cast("int"))
-    ShardedStore.stage(byClusterKept, byClusterT, math.min(nParts, cPts.size), cPts)
-    // fmt 2 edges never re-key: the rewrite only REMOVES rows incident to
-    // a forgotten id — both removal classes live in the member shards
-    // (id_l forgotten ⇒ a member's shard; id_r forgotten ⇒ id_l is a
-    // surviving member of the same component), so memberPts is exact
-    val edgesKept = spark.read.schema(edgesSchema).parquet(s"$storePath/edges")
-      .where(col("edge_pt").isin(memberPts: _*))
-      .join(broadcast(ids.select(col("doc_id").as("id_l"))), Seq("id_l"), "left_anti")
-      .join(broadcast(ids.select(col("doc_id").as("id_r"))), Seq("id_r"), "left_anti")
-      .select("id_l", "id_r")
-      .withColumn("edge_pt", pmod(col("id_l"), lit(nParts.toLong)).cast("int"))
-    ShardedStore.stage(edgesKept, edgesT, math.min(nParts, memberPts.size),
-      memberPts)
-    // alloc repair (stable stores only), staged under the SAME commit
-    // boundary: every affected old label's row is dropped; each surviving
-    // sub-component either INHERITS the old component's (ext_id, ep) or
-    // allocates fresh at `allocEpoch`; a vanished component's row simply
-    // drops. Inheritance FOLLOWS THE HOLDER: the sub-component still
-    // containing the allocation's ext_id doc wins (ext ids are
-    // allocation-time min-member DOC ids). Inheriting by min-new-label
-    // alone — the pre-r17 rule — could hand the ext to one sub-component
-    // while another freshly mints ITS min label, which can BE that same
-    // ext id (allocated older-but-larger under first-allocated-wins):
-    // two live rows, one ext, silently. When the holder doc is itself
-    // forgotten, the min-new-label sub-component inherits and the ext is
-    // RECORDED in the ext-retired table, so a later merge re-minting it
-    // (the holder doc re-ingested as a new component seed) fails loudly.
-    val allocPtsOpt: Option[(Seq[Int], Option[Seq[Int]])] =
-      if (!allocExists) None else {
-      val oldToNew = members
-        .join(newLabels.withColumnRenamed("cluster_id", "new_label"), Seq("doc_id"))
-        .select(col("cluster_id"), col("new_label")).distinct()
-        .localCheckpoint(true)
-      val nMap = oldToNew.count()
-      require(nMap <= driverPairLimit,
-        s"forgetFromClusterStore: $nMap (old,new) label pairs exceeds " +
-          s"driverPairLimit=$driverPairLimit — split the forget batch")
-      val mapping = oldToNew.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val existing: Map[Long, (Long, Long)] = spark.read.schema(allocSchema)
-        .parquet(s"$storePath/alloc")
-        .where(col("alloc_pt").isin(apts: _*))
-        .join(broadcast(affDf), Seq("cluster_id"), "left_semi")
-        .select("cluster_id", "ext_id", "ep")
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      // which surviving sub-component holds each allocation's ext doc
-      val extDocs = existing.values.map(_._1).toSeq.distinct
-      val holderSub: Map[Long, Long] = if (extDocs.isEmpty) Map.empty
-        else newLabels
-          .join(broadcast(extDocs.toDF("doc_id")), Seq("doc_id"), "left_semi")
+    settled(removeIds.select(col("doc_id").cast("long").as("doc_id")).distinct()) { ids =>
+      val nIds = ids.count()
+      require(nIds <= driverPairLimit,
+        s"forgetFromClusterStore: $nIds ids exceeds driverPairLimit=" +
+          s"$driverPairLimit — split the batch")
+      val idRows = ids.collect().map(_.getLong(0))
+      def ptOf(id: Long) = (((id % nParts) + nParts) % nParts).toInt
+      val stored: Map[Long, Long] = if (idRows.isEmpty) Map.empty
+        else spark.read.schema(byDocSchema)
+          .parquet(s"$storePath/by_doc")
+          .where(col("doc_pt").isin(idRows.map(ptOf).distinct.toSeq: _*))
+          .join(broadcast(ids), Seq("doc_id"), "left_semi")
+          .select("doc_id", "cluster_id")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val newRowsF = mapping.groupBy(_._1).toSeq.flatMap { case (old, subs) =>
-        val labels = subs.map(_._2).distinct
-        val winner: Option[Long] = existing.get(old).map { case (ext, _) =>
-          holderSub.get(ext).filter(labels.contains).getOrElse(labels.min) }
-        labels.map { nl =>
-          if (winner.contains(nl)) {
-            val (ext, ep) = existing(old); (nl, ext, ep, false)
-          } else (nl, nl, allocEpoch.get, true) // fresh mint — guarded below
+      val receipt = idRows.map(id => (id, stored.contains(id))).toSeq
+        .toDF("doc_id", "was_clustered")
+      if (stored.nonEmpty) {
+        val affected = stored.values.toSeq.distinct
+        val apts = affected.map(ptOf).distinct
+        val affDf = affected.toDF("cluster_id")
+        // settled reads of the affected components (live dirs untouched until
+        // every staging below completes)
+        settled(spark.read.schema(byClusterSchema)
+            .parquet(s"$storePath/by_cluster")
+            .where(col("cluster_pt").isin(apts: _*))
+            .join(broadcast(affDf), Seq("cluster_id"), "left_semi")
+            .select("cluster_id", "doc_id")) { members =>
+          val memberPts = members
+            .select(pmod(col("doc_id"), lit(nParts.toLong)).cast("int").as("pt"))
+            .distinct().collect().map(_.getInt(0)).toSeq
+          // fmt 2 edges are keyed by canonical min endpoint: an affected
+          // component's evidence always has id_l ∈ its members, so the member
+          // shard list (already needed for the by_doc rewrite) prunes the read
+          // exactly; the semi-join restricts shared shards to affected rows
+          settled(spark.read.schema(edgesSchema).parquet(s"$storePath/edges")
+              .where(col("edge_pt").isin(memberPts: _*))
+              .join(members.select(col("doc_id").as("id_l")), Seq("id_l"), "left_semi")
+              .select("id_l", "id_r")) { edgesA =>
+            val survNodes = members.select(col("doc_id").as("id"))
+              .join(broadcast(ids.select(col("doc_id").as("id"))), Seq("id"), "left_anti")
+            val survEdges = edgesA
+              .join(broadcast(ids.select(col("doc_id").as("id_l"))), Seq("id_l"), "left_anti")
+              .join(broadcast(ids.select(col("doc_id").as("id_r"))), Seq("id_r"), "left_anti")
+            settled(connectedComponents(survNodes, survEdges,
+                driverEdgeLimit = driverPairLimit)
+              .select(col("node").as("doc_id"), col("cluster_id"))) { newLabels =>
+              val newLabelPts = newLabels
+                .select(pmod(col("cluster_id"), lit(nParts.toLong)).cast("int").as("pt"))
+                .distinct().collect().map(_.getInt(0)).toSeq
+              val cPts = (apts ++ newLabelPts).distinct
+              val Seq(byDocT, byClusterT, edgesT, allocT, retiredT) =
+                clusterTables(storePath)
+              // stage every affected table, then one commit boundary
+              val byDocKept = spark.read.schema(byDocSchema).parquet(s"$storePath/by_doc")
+                .where(col("doc_pt").isin(memberPts: _*))
+                .join(members.select("doc_id"), Seq("doc_id"), "left_anti") // affected rows out
+                .select("doc_id", "cluster_id")
+                .unionByName(newLabels)                    // survivors back, relabeled
+                .withColumn("doc_pt", pmod(col("doc_id"), lit(nParts.toLong)).cast("int"))
+              ShardedStore.stage(byDocKept, byDocT, math.min(nParts, memberPts.size),
+                memberPts)
+              val byClusterKept = spark.read.schema(byClusterSchema)
+                .parquet(s"$storePath/by_cluster")
+                .where(col("cluster_pt").isin(cPts: _*))
+                .join(broadcast(affDf), Seq("cluster_id"), "left_anti")
+                .select("cluster_id", "doc_id")
+                .unionByName(newLabels.select(col("cluster_id"), col("doc_id")))
+                .withColumn("cluster_pt", pmod(col("cluster_id"), lit(nParts.toLong)).cast("int"))
+              ShardedStore.stage(byClusterKept, byClusterT, math.min(nParts, cPts.size), cPts)
+              // fmt 2 edges never re-key: the rewrite only REMOVES rows incident to
+              // a forgotten id — both removal classes live in the member shards
+              // (id_l forgotten ⇒ a member's shard; id_r forgotten ⇒ id_l is a
+              // surviving member of the same component), so memberPts is exact
+              val edgesKept = spark.read.schema(edgesSchema).parquet(s"$storePath/edges")
+                .where(col("edge_pt").isin(memberPts: _*))
+                .join(broadcast(ids.select(col("doc_id").as("id_l"))), Seq("id_l"), "left_anti")
+                .join(broadcast(ids.select(col("doc_id").as("id_r"))), Seq("id_r"), "left_anti")
+                .select("id_l", "id_r")
+                .withColumn("edge_pt", pmod(col("id_l"), lit(nParts.toLong)).cast("int"))
+              ShardedStore.stage(edgesKept, edgesT, math.min(nParts, memberPts.size),
+                memberPts)
+              // alloc repair (stable stores only), staged under the SAME commit
+              // boundary: every affected old label's row is dropped; each surviving
+              // sub-component either INHERITS the old component's (ext_id, ep) or
+              // allocates fresh at `allocEpoch`; a vanished component's row simply
+              // drops. Inheritance FOLLOWS THE HOLDER: the sub-component still
+              // containing the allocation's ext_id doc wins (ext ids are
+              // allocation-time min-member DOC ids). Inheriting by min-new-label
+              // alone — the pre-r17 rule — could hand the ext to one sub-component
+              // while another freshly mints ITS min label, which can BE that same
+              // ext id (allocated older-but-larger under first-allocated-wins):
+              // two live rows, one ext, silently. When the holder doc is itself
+              // forgotten, the min-new-label sub-component inherits and the ext is
+              // RECORDED in the ext-retired table, so a later merge re-minting it
+              // (the holder doc re-ingested as a new component seed) fails loudly.
+              val allocPtsOpt: Option[(Seq[Int], Option[Seq[Int]])] =
+                if (!allocExists) None
+                else settled(members
+                    .join(newLabels.withColumnRenamed("cluster_id", "new_label"), Seq("doc_id"))
+                    .select(col("cluster_id"), col("new_label")).distinct()) { oldToNew =>
+                val nMap = oldToNew.count()
+                require(nMap <= driverPairLimit,
+                  s"forgetFromClusterStore: $nMap (old,new) label pairs exceeds " +
+                    s"driverPairLimit=$driverPairLimit — split the forget batch")
+                val mapping = oldToNew.collect().map(r => (r.getLong(0), r.getLong(1)))
+                val existing: Map[Long, (Long, Long)] = spark.read.schema(allocSchema)
+                  .parquet(s"$storePath/alloc")
+                  .where(col("alloc_pt").isin(apts: _*))
+                  .join(broadcast(affDf), Seq("cluster_id"), "left_semi")
+                  .select("cluster_id", "ext_id", "ep")
+                  .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+                // which surviving sub-component holds each allocation's ext doc
+                val extDocs = existing.values.map(_._1).toSeq.distinct
+                val holderSub: Map[Long, Long] = if (extDocs.isEmpty) Map.empty
+                  else newLabels
+                    .join(broadcast(extDocs.toDF("doc_id")), Seq("doc_id"), "left_semi")
+                    .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+                val newRowsF = mapping.groupBy(_._1).toSeq.flatMap { case (old, subs) =>
+                  val labels = subs.map(_._2).distinct
+                  val winner: Option[Long] = existing.get(old).map { case (ext, _) =>
+                    holderSub.get(ext).filter(labels.contains).getOrElse(labels.min) }
+                  labels.map { nl =>
+                    if (winner.contains(nl)) {
+                      val (ext, ep) = existing(old); (nl, ext, ep, false)
+                    } else (nl, nl, allocEpoch.get, true) // fresh mint — guarded below
+                  }
+                }
+                requireExtNotRetired(spark, storePath,
+                  newRowsF.collect { case (_, e, _, true) => e }, nParts)
+                val newRows = newRowsF.map(t => (t._1, t._2, t._3))
+                val aPts = (apts ++ newRows.map(r => ptOf(r._1))).distinct
+                val allocKept = spark.read.schema(allocSchema).parquet(s"$storePath/alloc")
+                  .where(col("alloc_pt").isin(aPts: _*))
+                  .join(broadcast(affDf), Seq("cluster_id"), "left_anti")
+                  .select("cluster_id", "ext_id", "ep")
+                  .unionByName(newRows.toDF("cluster_id", "ext_id", "ep"))
+                  .withColumn("alloc_pt", pmod(col("cluster_id"), lit(nParts.toLong)).cast("int"))
+                ShardedStore.stage(allocKept, allocT, math.min(nParts, aPts.size), aPts)
+                // retire exts whose holder doc is forgotten while the allocation
+                // survives (inherited above) — staged in the SAME boundary: losing
+                // the record would silently re-open the reuse hole. Records persist
+                // even if the holding component later vanishes — harmless, because
+                // the mint guard re-checks LIVENESS against the alloc table on
+                // every hit (r18: a stale record no longer blocks a legitimate
+                // re-ingest — see [[requireExtNotRetired]]).
+                val forgottenSet = idRows.toSet
+                val retiredNow = existing.toSeq.collect {
+                  case (old, (ext, _))
+                    if mapping.exists(_._1 == old) && !holderSub.contains(ext) &&
+                      forgottenSet.contains(ext) => ext
+                }.distinct
+                val retiredPts = if (retiredNow.isEmpty) None else {
+                  val rPts = retiredNow.map(ptOf).distinct
+                  val retiredDir = s"$storePath/ext_retired"
+                  val base =
+                    if (!hadoopFs(spark, storePath).exists(ShardedStore.hp(retiredDir)))
+                      spark.createDataFrame(
+                        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                        org.apache.spark.sql.types.StructType.fromDDL("ext_id BIGINT"))
+                    else spark.read.schema(retiredSchema).parquet(retiredDir)
+                      .where(col("ext_pt").isin(rPts: _*)).select("ext_id")
+                  val kept = base.unionByName(retiredNow.toDF("ext_id")).distinct()
+                    .withColumn("ext_pt", pmod(col("ext_id"), lit(nParts.toLong)).cast("int"))
+                  ShardedStore.stage(kept, retiredT, math.min(nParts, rPts.size), rPts)
+                  Some(rPts)
+                }
+                Some((aPts, retiredPts))
+              }
+              ShardedStore.commit(spark, storePath)
+              ShardedStore.swap(spark, byDocT, memberPts)
+              ShardedStore.swap(spark, byClusterT, cPts)
+              ShardedStore.swap(spark, edgesT, memberPts)
+              allocPtsOpt.foreach { case (aPts, retiredPts) =>
+                ShardedStore.swap(spark, allocT, aPts)
+                retiredPts.foreach(rPts => ShardedStore.swap(spark, retiredT, rPts))
+              }
+              ShardedStore.clearCommit(spark, storePath)
+            }
+          }
         }
       }
-      requireExtNotRetired(spark, storePath,
-        newRowsF.collect { case (_, e, _, true) => e }, nParts)
-      val newRows = newRowsF.map(t => (t._1, t._2, t._3))
-      val aPts = (apts ++ newRows.map(r => ptOf(r._1))).distinct
-      val allocKept = spark.read.schema(allocSchema).parquet(s"$storePath/alloc")
-        .where(col("alloc_pt").isin(aPts: _*))
-        .join(broadcast(affDf), Seq("cluster_id"), "left_anti")
-        .select("cluster_id", "ext_id", "ep")
-        .unionByName(newRows.toDF("cluster_id", "ext_id", "ep"))
-        .withColumn("alloc_pt", pmod(col("cluster_id"), lit(nParts.toLong)).cast("int"))
-      ShardedStore.stage(allocKept, allocT, math.min(nParts, aPts.size), aPts)
-      // retire exts whose holder doc is forgotten while the allocation
-      // survives (inherited above) — staged in the SAME boundary: losing
-      // the record would silently re-open the reuse hole. Records persist
-      // even if the holding component later vanishes — harmless, because
-      // the mint guard re-checks LIVENESS against the alloc table on
-      // every hit (r18: a stale record no longer blocks a legitimate
-      // re-ingest — see [[requireExtNotRetired]]).
-      val forgottenSet = idRows.toSet
-      val retiredNow = existing.toSeq.collect {
-        case (old, (ext, _))
-          if mapping.exists(_._1 == old) && !holderSub.contains(ext) &&
-            forgottenSet.contains(ext) => ext
-      }.distinct
-      val retiredPts = if (retiredNow.isEmpty) None else {
-        val rPts = retiredNow.map(ptOf).distinct
-        val retiredDir = s"$storePath/ext_retired"
-        val base =
-          if (!hadoopFs(spark, storePath).exists(ShardedStore.hp(retiredDir)))
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType.fromDDL("ext_id BIGINT"))
-          else spark.read.schema(retiredSchema).parquet(retiredDir)
-            .where(col("ext_pt").isin(rPts: _*)).select("ext_id")
-        val kept = base.unionByName(retiredNow.toDF("ext_id")).distinct()
-          .withColumn("ext_pt", pmod(col("ext_id"), lit(nParts.toLong)).cast("int"))
-        ShardedStore.stage(kept, retiredT, math.min(nParts, rPts.size), rPts)
-        Some(rPts)
-      }
-      Some((aPts, retiredPts))
+      receipt
     }
-    ShardedStore.commit(spark, storePath)
-    ShardedStore.swap(spark, byDocT, memberPts)
-    ShardedStore.swap(spark, byClusterT, cPts)
-    ShardedStore.swap(spark, edgesT, memberPts)
-    allocPtsOpt.foreach { case (aPts, retiredPts) =>
-      ShardedStore.swap(spark, allocT, aPts)
-      retiredPts.foreach(rPts => ShardedStore.swap(spark, retiredT, rPts))
-    }
-    ShardedStore.clearCommit(spark, storePath)
-    receipt
   }
 
   // ----- stable external cluster ids ----------------------------------------
@@ -1576,32 +1581,36 @@ object DedupOps {
     val fs = hadoopFs(spark, storePath)
     val retiredDir = s"$storePath/ext_retired"
     if (!fs.exists(ShardedStore.hp(retiredDir))) return 0L
-    val retired = spark.read.schema(retiredSchema).parquet(retiredDir)
-      .select("ext_id", "ext_pt").localCheckpoint(true)
-    val allocDir = s"$storePath/alloc"
-    val liveExts =
-      if (!fs.exists(ShardedStore.hp(allocDir)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("ext_id BIGINT"))
-      else spark.read.schema(allocSchema).parquet(allocDir).select("ext_id")
-    val kept = retired.join(liveExts, Seq("ext_id"), "left_semi")
-      .localCheckpoint(true) // settled BEFORE the rewrite mutates its source
-    val dropped = retired.count() - kept.count()
-    if (dropped == 0L) return 0L
-    // only shards holding a stale record rewrite (stage installs ALL of
-    // kept, so kept is filtered to the touched shards — untouched dirs
-    // stay put); shards emptied entirely are retired via EMPTY markers
-    val pts = retired.join(kept, Seq("ext_id"), "left_anti")
-      .select("ext_pt").distinct().collect().map(_.getInt(0)).toSeq
-    val Seq(_, _, _, _, retiredT) = clusterTables(storePath)
-    ShardedStore.stage(
-      kept.where(col("ext_pt").isin(pts: _*)).select(col("ext_id"), col("ext_pt")),
-      retiredT, math.min(nParts, pts.size), pts)
-    ShardedStore.commit(spark, storePath)
-    ShardedStore.swap(spark, retiredT, pts)
-    ShardedStore.clearCommit(spark, storePath)
-    dropped
+    settled(spark.read.schema(retiredSchema).parquet(retiredDir)
+        .select("ext_id", "ext_pt")) { retired =>
+      val allocDir = s"$storePath/alloc"
+      val liveExts =
+        if (!fs.exists(ShardedStore.hp(allocDir)))
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType.fromDDL("ext_id BIGINT"))
+        else spark.read.schema(allocSchema).parquet(allocDir).select("ext_id")
+      // settled BEFORE the rewrite mutates its source
+      settled(retired.join(liveExts, Seq("ext_id"), "left_semi")) { kept =>
+        val dropped = retired.count() - kept.count()
+        if (dropped != 0L) {
+          // only shards holding a stale record rewrite (stage installs ALL
+          // of kept, so kept is filtered to the touched shards — untouched
+          // dirs stay put); shards emptied entirely are retired via EMPTY
+          // markers
+          val pts = retired.join(kept, Seq("ext_id"), "left_anti")
+            .select("ext_pt").distinct().collect().map(_.getInt(0)).toSeq
+          val Seq(_, _, _, _, retiredT) = clusterTables(storePath)
+          ShardedStore.stage(
+            kept.where(col("ext_pt").isin(pts: _*)).select(col("ext_id"), col("ext_pt")),
+            retiredT, math.min(nParts, pts.size), pts)
+          ShardedStore.commit(spark, storePath)
+          ShardedStore.swap(spark, retiredT, pts)
+          ShardedStore.clearCommit(spark, storePath)
+        }
+        dropped
+      }
+    }
   }
 
   /** [[mergeClustersBatch]] plus stable-external-id maintenance. `epoch`
@@ -1631,7 +1640,7 @@ object DedupOps {
     import spark.implicits._
     val receipt = mergeClustersBatch(nodes, pairs, storePath, nParts,
       driverPairLimit, driverNodeLimit, allocEpoch = Some(epoch))
-      .localCheckpoint(true)
+      .cutLineage()
     // batch-grain: the receipt covers the batch's nodes only
     val labels = receipt.select(col("cluster_id")).distinct()
       .collect().map(_.getLong(0)).toSeq

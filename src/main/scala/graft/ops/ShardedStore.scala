@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -279,8 +280,7 @@ object ShardedStore {
       if (files.size >= foldMinFiles) {
         // settle first (the fold reads the table it appends to), write
         // the consolidated file, THEN drop exactly the pre-fold files
-        val folded = ids(spark).distinct().localCheckpoint(true)
-        folded.coalesce(1).write.mode("append").parquet(dir)
+        settled(ids(spark).distinct())(_.coalesce(1).write.mode("append").parquet(dir))
         files.foreach(p => fs(spark, dir).delete(p, false): Unit)
       }
     }
@@ -312,15 +312,15 @@ object ShardedStore {
       val spark = dropIds.sparkSession
       if (!exists(spark)) return
       val before = parquetFiles(spark)
-      val drops = dropIds.select(col(idCol)).localCheckpoint(true)
-      // ~24 bytes per broadcast-hash-table long row, conservatively
-      val build =
-        if (drops.count() * 24L <= maxBroadcastBytes) broadcast(drops)
-        else drops.hint("shuffle_hash")
-      val kept = ids(spark)
-        .join(build, Seq(idCol), "left_anti")
-        .distinct().localCheckpoint(true)
-      if (!kept.isEmpty) kept.coalesce(1).write.mode("append").parquet(dir)
+      settled(dropIds.select(col(idCol))) { drops =>
+        // ~24 bytes per broadcast-hash-table long row, conservatively
+        val build =
+          if (drops.count() * 24L <= maxBroadcastBytes) broadcast(drops)
+          else drops.hint("shuffle_hash")
+        settled(ids(spark).join(build, Seq(idCol), "left_anti").distinct()) { kept =>
+          if (!kept.isEmpty) kept.coalesce(1).write.mode("append").parquet(dir)
+        }
+      }
       before.foreach(p => fs(spark, dir).delete(p, false): Unit)
     }
 

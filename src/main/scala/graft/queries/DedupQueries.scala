@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{DedupOps, HashOps, TextOps}
+import graft.ops.Checkpoints._
 
 /** Deduplication extension queries over `documents`: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash. Candidate generation is always bucket-equi-join
@@ -2263,7 +2264,7 @@ object DedupQueries {
             expr("CAST((tp * 10000) DIV n_candidates AS BIGINT)"))
             .otherwise(lit(-1L)).as("precision_e4"))
         .orderBy("epoch")
-        .localCheckpoint(true)
+        .cutLineage()
       collided.unpersist()
       qSigs.unpersist()
       out
@@ -2439,14 +2440,14 @@ object DedupQueries {
             when(coalesce(col("n_candidates"), lit(0L)) > 0,
               expr("CAST((tp * 10000) DIV n_candidates AS BIGINT)"))
               .otherwise(lit(-1L)).as("precision_e4"))
-          .localCheckpoint(true)
+          .cutLineage()
         collided.unpersist()
         out
       }
       val out = metrics(baselinePath, "baseline")
         .unionByName(metrics(lifecyclePath, "lifecycle"))
         .where(col("n_indexed") > 0) // empty corpus → no gate rows
-        .orderBy("arm").localCheckpoint(true)
+        .orderBy("arm").cutLineage()
       qSigs.unpersist()
       out
     }

@@ -293,10 +293,13 @@ object GeoPipeline {
          |ORDER BY a.user_id""".stripMargin)
   }
 
-  /** Stage-3 input: enriched events with their week and month. */
+  /** Stage-3 input: enriched events with their week and month. `week` stays
+    * int, the type partition discovery reads back from the mart's `week=`
+    * directories, so the lake and the mart agree; the catalog projection
+    * widens it. */
   def zoneEventsFrom(enriched: DataFrame): DataFrame =
     enriched
-      .withColumn("week", weekofyear(col("ts")).cast("long"))
+      .withColumn("week", weekofyear(col("ts")))
       .withColumn("month", month(col("ts")).cast("long"))
       .select("user_id", "event_id", "ts", "event_type", "zone_id", "week", "month")
 
@@ -322,7 +325,8 @@ object GeoPipeline {
   /** zone_report's projection of a `zoneReportFrom` mart. */
   def zoneReportExport(zoneReport: DataFrame): DataFrame =
     zoneReport
-      .select(Seq(col("week"), col("month"), col("zone_id").cast("long").as("zone_id")) ++
+      .select(Seq(col("week").cast("long").as("week"), col("month"),
+          col("zone_id").cast("long").as("zone_id")) ++
         EventTypes.map(t => col(s"week_$t")) ++ Seq(col("week_user")) ++
         EventTypes.map(t => col(s"month_$t")) ++ Seq(col("month_user")): _*)
       .orderBy("week", "month", "zone_id")

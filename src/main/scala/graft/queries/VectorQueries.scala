@@ -1479,7 +1479,7 @@ object VectorQueries {
             .as("mean_recall_e4"),
           (col("mn") * lit(10000 / RrTopK)).cast("long").as("min_recall_e4"))
         .orderBy("arm", "cohort")
-        .localCheckpoint(true)
+        .cutLineage()
       scored.unpersist(); v.unpersist()
       out
     }
@@ -1734,12 +1734,12 @@ object VectorQueries {
             expr("hit_ivf * 100 div n_brute").as("recall_ivf_pct"),
             expr("hit_mp * 100 div n_brute").as("recall_mp_pct"))
           .orderBy("q_id")
-          // |queries| x 6 longs — bounded by the fixed query batch. Eager
-          // localCheckpoint materializes the result so `ranked` can be
+          // |queries| x 6 longs — bounded by the fixed query batch. The
+          // eager cut materializes the result so `ranked` can be
           // unpersisted HERE rather than leaking until the caller's
           // clearCache (round-5 advice: long-lived sessions kept the
           // N x nlist assignment pinned after the query completed).
-          .localCheckpoint(true)
+          .cutLineage()
       } finally ranked.unpersist(): Unit
     }
     val oracle = Some(
@@ -1826,7 +1826,7 @@ object VectorQueries {
             expr("CASE WHEN n_truth = 0 THEN -1 " +
               "ELSE coalesce(n_hits, 0) * 10000 div n_truth END").as("recall_e4"),
             col("cands_scored"))
-          .orderBy("nprobe").localCheckpoint(true)
+          .orderBy("nprobe").cutLineage()
       } finally { ranked.unpersist(); brute.unpersist(): Unit }
     }
     val oracle = {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -107,12 +108,12 @@ object StreamingOps {
       .select("doc_id")
       .union(banded.join(seen, Seq("__band")).select("doc_id"))
       .distinct()
-    // eager localCheckpoint before the store append (settle-before-mutate,
+    // eager cut before the store append (settle-before-mutate,
     // see the verified twins): the returned frame's lineage reads `seen`,
     // and a re-evaluation after the append would find the kept docs' own
     // bands in the store and drop them against themselves
     val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .cutLineage()
     val newBands = banded.join(kept.select("doc_id"), Seq("doc_id"))
       .select("__band").distinct()
     newBands.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(storePath)
@@ -219,7 +220,7 @@ object StreamingOps {
     val receipt = ids.join(present, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-      .localCheckpoint(true)
+      .cutLineage()
     DedupOps.removeFromSignatureIndex(ids, indexPath,
       nPerm, nBands, nPerm / nBands, nParts = nParts)
     receipt
@@ -250,7 +251,7 @@ object StreamingOps {
     val receipt = ids.join(present, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-      .localCheckpoint(true)
+      .cutLineage()
     DedupOps.tombstoneInSignatureIndex(ids, indexPath)
     receipt
   }
@@ -541,7 +542,7 @@ object StreamingOps {
     }
 
   /** The probe set as driver rows when it is small enough to push down —
-    * `ids` must be settled (both callers localCheckpoint first). */
+    * `ids` must be settled (both callers settle them first). */
   private def probeRows(ids: DataFrame): Option[Seq[Long]] =
     if (ids.count() <= PresencePushdownLimit)
       Some(ids.collect().map(_.getLong(0)).toSeq)
@@ -631,25 +632,25 @@ object StreamingOps {
   def forgetVectorsBatch(batch: DataFrame, indexPath: String): DataFrame = {
     val spark = batch.sparkSession
     recoverIndex(spark, indexPath)
-    val ids = batch.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct().localCheckpoint(true)
-    val genDirOpt = currentGeneration(spark, indexPath)
-      .map(g => generationDir(indexPath, g))
-      .filter(gd => fsOf(spark, indexPath).exists(hPath(s"$gd/postings")))
-    val present = genDirOpt match {
-      case Some(gd) => antiVecTombs(indexPath, gd,
-          presenceProbe(spark.read.schema(ivfPostingsSchema)
-              .parquet(s"$gd/postings").select("vec_id"),
-            probeRows(ids), ids))
-        .distinct().withColumn("was_indexed", lit(true))
-      case None => ids.where(lit(false)).withColumn("was_indexed", lit(true))
+    settled(batch.select(col("vec_id").cast("long").as("vec_id")).distinct()) { ids =>
+      val genDirOpt = currentGeneration(spark, indexPath)
+        .map(g => generationDir(indexPath, g))
+        .filter(gd => fsOf(spark, indexPath).exists(hPath(s"$gd/postings")))
+      val present = genDirOpt match {
+        case Some(gd) => antiVecTombs(indexPath, gd,
+            presenceProbe(spark.read.schema(ivfPostingsSchema)
+                .parquet(s"$gd/postings").select("vec_id"),
+              probeRows(ids), ids))
+          .distinct().withColumn("was_indexed", lit(true))
+        case None => ids.where(lit(false)).withColumn("was_indexed", lit(true))
+      }
+      val receipt = ids.join(present, Seq("vec_id"), "left")
+        .select(col("vec_id"),
+          coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
+        .cutLineage()
+      vecTombs(indexPath).append(ids)
+      receipt
     }
-    val receipt = ids.join(present, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-      .localCheckpoint(true)
-    vecTombs(indexPath).append(ids)
-    receipt
   }
 
   /** Physically removes `ids`' posting rows from one generation — the
@@ -677,24 +678,25 @@ object StreamingOps {
     // analyzer/codegen blowup on a large re-ingest batch)
     import spark.implicits._
     val touchedDf = touched.toSeq.toDF("centroid_id", "batch_id")
-    val kept = posts
-      .where(col("centroid_id").isin(touched.map(_._1).distinct.toSeq: _*) &&
-        col("batch_id").isin(touched.map(_._2).distinct.toSeq: _*))
-      .join(broadcast(touchedDf), Seq("centroid_id", "batch_id"), "left_semi")
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .select("centroid_id", "vec_id", "embedding", "batch_id")
-      .localCheckpoint(true) // settled BEFORE the overwrite mutates its source
-    postingsWrite(kept.repartition(col("centroid_id")))
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("centroid_id", "batch_id")
-      .parquet(postingsPath)
-    // a touched dir whose kept content is EMPTY was not rewritten by the
-    // dynamic overwrite — retire it explicitly
-    val keptDirs = kept.select("centroid_id", "batch_id").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fs = fsOf(spark, genDir)
-    touched.filterNot(keptDirs).foreach { case (c, b) =>
-      fs.delete(hPath(s"$postingsPath/centroid_id=$c/batch_id=$b"), true): Unit }
+    // settled BEFORE the overwrite mutates its source
+    settled(posts
+        .where(col("centroid_id").isin(touched.map(_._1).distinct.toSeq: _*) &&
+          col("batch_id").isin(touched.map(_._2).distinct.toSeq: _*))
+        .join(broadcast(touchedDf), Seq("centroid_id", "batch_id"), "left_semi")
+        .join(broadcast(ids), Seq("vec_id"), "left_anti")
+        .select("centroid_id", "vec_id", "embedding", "batch_id")) { kept =>
+      postingsWrite(kept.repartition(col("centroid_id")))
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").partitionBy("centroid_id", "batch_id")
+        .parquet(postingsPath)
+      // a touched dir whose kept content is EMPTY was not rewritten by the
+      // dynamic overwrite — retire it explicitly
+      val keptDirs = kept.select("centroid_id", "batch_id").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val fs = fsOf(spark, genDir)
+      touched.filterNot(keptDirs).foreach { case (c, b) =>
+        fs.delete(hPath(s"$postingsPath/centroid_id=$c/batch_id=$b"), true): Unit }
+    }
   }
 
   /** Streaming IVF search-then-insert via foreachBatch against a
@@ -759,20 +761,20 @@ object StreamingOps {
     }
     val dim = storedDim.orElse(batchDim).getOrElse(0)
     if (currentGeneration(spark, indexPath).isEmpty) {
-      val strided = batch
-        .where(col("vec_id") % centStride === 0 && col("vec_id") < centCap)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-        .localCheckpoint(true)
-      // a NON-EMPTY bootstrap batch that misses the stride rule entirely
-      // would otherwise write an empty centroid set and permanently dead
-      // index (every later search and insert silently empty) — fall back
-      // to the batch's lowest-id vector as the single seed centroid
-      val cents0 = if (strided.isEmpty)
-        batch.orderBy("vec_id").limit(1)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      else strided
       val g0 = generationDir(indexPath, 0L)
-      cents0.write.mode("overwrite").parquet(s"$g0/centroids")
+      settled(batch
+          .where(col("vec_id") % centStride === 0 && col("vec_id") < centCap)
+          .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))) { strided =>
+        // a NON-EMPTY bootstrap batch that misses the stride rule entirely
+        // would otherwise write an empty centroid set and permanently dead
+        // index (every later search and insert silently empty) — fall back
+        // to the batch's lowest-id vector as the single seed centroid
+        val cents0 = if (strided.isEmpty)
+          batch.orderBy("vec_id").limit(1)
+            .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+        else strided
+        cents0.write.mode("overwrite").parquet(s"$g0/centroids")
+      }
       touch(fs, s"$g0/_GEN_OK")
       writeGenPointer(spark, indexPath, 0L)
     }
@@ -784,21 +786,21 @@ object StreamingOps {
     // one would resurface beside it afterwards (the mirror of the
     // signature index's append-path fix; crash between the two steps
     // leaves the id purged AND tombstoned — consistent, replay converges)
-    if (vecTombs(indexPath).exists(spark)) {
-      val reIngest = vecTombs(indexPath).ids(spark)
-        .join(broadcast(batch.select(col("vec_id").cast("long").as("vec_id"))),
-          Seq("vec_id"), "left_semi")
-        .distinct().localCheckpoint(true)
-      if (!reIngest.isEmpty) {
-        // the tombstone clear below is the one mutation a stale
-        // current-generation snapshot cannot survive (it would keep
-        // filtering the re-admitted id) — clear crash litter first
-        clearSnapshotLitter(spark, genDir)
-        purgeVectors(spark, genDir, reIngest)
-        vecTombs(indexPath).remove(reIngest,
-          graft.ops.DedupOps.DefaultTombstoneBroadcastBytes)
+    if (vecTombs(indexPath).exists(spark))
+      settled(vecTombs(indexPath).ids(spark)
+          .join(broadcast(batch.select(col("vec_id").cast("long").as("vec_id"))),
+            Seq("vec_id"), "left_semi")
+          .distinct()) { reIngest =>
+        if (!reIngest.isEmpty) {
+          // the tombstone clear below is the one mutation a stale
+          // current-generation snapshot cannot survive (it would keep
+          // filtering the re-admitted id) — clear crash litter first
+          clearSnapshotLitter(spark, genDir)
+          purgeVectors(spark, genDir, reIngest)
+          vecTombs(indexPath).remove(reIngest,
+            graft.ops.DedupOps.DefaultTombstoneBroadcastBytes)
+        }
       }
-    }
     val cents = spark.read.parquet(s"$genDir/centroids")
     val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
     val ranked = batch.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -831,12 +833,12 @@ object StreamingOps {
         .select(col("q_id"), col("vec_id").as("c_id"),
           col("rank").cast("long").as("rank"),
           round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
-        // eager localCheckpoint, not persist+count: the hits must be
-        // SETTLED before the postings append below — a cache entry can
-        // be recomputed later against the mutated directory, silently
+        // an eager cut, not persist+count: the hits must be SETTLED
+        // before the postings append below — a cache entry can be
+        // recomputed later against the mutated directory, silently
         // turning search-before-insert into search-after-insert; the
         // checkpoint truncates lineage so re-evaluation is impossible
-        .localCheckpoint(true)
+        .cutLineage()
     } else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(
@@ -931,7 +933,7 @@ object StreamingOps {
         col("rank").cast("long").as("rank"),
         round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
       // settled: the caller may hold these hits across later maintenance
-      .localCheckpoint(true)
+      .cutLineage()
     ranked.unpersist()
     hits
   }

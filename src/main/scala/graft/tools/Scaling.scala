@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.{Sessions, Tables}
 import graft.ops.{DedupOps, Staging, VectorOps}
+import graft.ops.Checkpoints.settled
 import graft.queries.DedupQueries.{JaccardThreshold, NumBands, NumPerms, RowsPerBand, ShingleK}
 import graft.streaming.StreamingOps
 
@@ -480,15 +481,10 @@ object Scaling {
       val root = staged("/tmp/graft_sig_probe", s"x$replicas")
       // plain write (today's layout) vs bloom writes of the SAME rows —
       // all timed for the write-tax side of the adjudication
-      val sigRows = sigs.select(col("doc_id"), col("hs"))
-        .withColumn("doc_pt", pmod(col("doc_id"), lit(NParts.toLong)).cast("int"))
-        .repartition(NParts, col("doc_pt"))
-        .localCheckpoint(true)
-      sigs.unpersist()
       // `ndv` None = plain; 4096 is the right-sized control (ndv matched
       // to per-shard row counts) — rules out "the blooms only lost
       // because they were oversized"
-      def write(table: String, ndv: Option[Int]): (Double, Double) = {
+      def write(sigRows: DataFrame, table: String, ndv: Option[Int]): (Double, Double) = {
         val w = ndv.fold(sigRows.write)(n => sigRows.write
           .option("parquet.bloom.filter.enabled#doc_id", "true")
           .option("parquet.bloom.filter.adaptive.enabled", "true")
@@ -498,9 +494,14 @@ object Scaling {
         }
         (sec, dirBytes(s"$root/$table") / 1e6)
       }
-      val (plainWriteSec, plainMb) = write("sigs_plain", None)
-      val (bloomWriteSec, bloomMb) = write("sigs_bloom", Some(200000))
-      val (bloom4kWriteSec, bloom4kMb) = write("sigs_bloom4k", Some(4096))
+      val ((plainWriteSec, plainMb), (bloomWriteSec, bloomMb), (bloom4kWriteSec, bloom4kMb)) =
+        settled(sigs.select(col("doc_id"), col("hs"))
+            .withColumn("doc_pt", pmod(col("doc_id"), lit(NParts.toLong)).cast("int"))
+            .repartition(NParts, col("doc_pt"))) { sigRows =>
+          sigs.unpersist()
+          (write(sigRows, "sigs_plain", None), write(sigRows, "sigs_bloom", Some(200000)),
+            write(sigRows, "sigs_bloom4k", Some(4096)))
+        }
 
       // 10 PRESENT ids, interleaved across the whole corpus (stride over
       // base ids × replica offsets) — scattered, so [min,max] cannot
@@ -563,9 +564,10 @@ object Scaling {
     // (the measurement wants big POSTINGS, not a big probe)
     def bootstrap(n: Long, leaf: String): (String, Long) = {
       val path = staged("/tmp/graft_vforget_scaling", leaf)
-      val c = corpus(n).localCheckpoint(true)
-      StreamingOps.ivfSearchInsertBatch(c.where(col("vec_id") < n - 128), path, batchId = 0L)
-      StreamingOps.ivfSearchInsertBatch(c.where(col("vec_id") >= n - 128), path, batchId = 1L)
+      settled(corpus(n)) { c =>
+        StreamingOps.ivfSearchInsertBatch(c.where(col("vec_id") < n - 128), path, batchId = 0L)
+        StreamingOps.ivfSearchInsertBatch(c.where(col("vec_id") >= n - 128), path, batchId = 1L)
+      }
       spark.catalog.clearCache()
       (path, dirBytes(path))
     }

@@ -10,7 +10,9 @@ import graft.ops.Checkpoints
   * must not kill a multi-hour job). The switch is data-independent by
   * construction — `cutLineage` only changes WHERE the materialized blocks
   * live — and this spec proves it empirically on the queries with the
-  * deepest iterative lineage.
+  * deepest iterative lineage, and on every mutating op of the three
+  * persisted stores ([[StoreCycle]]), whose settle-before-mutate steps
+  * must survive an executor loss in the cluster mode too.
   */
 class CheckpointModeSpec extends SparkSpec {
 
@@ -46,5 +48,37 @@ class CheckpointModeSpec extends SparkSpec {
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
       .count() > 1
     assert(wrote, "reliable mode never wrote to the checkpoint dir")
+  }
+
+  test("store ops give identical results in local and reliable checkpoint modes") {
+    def tmp(tag: String) =
+      java.nio.file.Files.createTempDirectory(s"graft_ckpt_store_$tag").toString
+    spark.conf.unset(Checkpoints.ModeKey)
+    val local = StoreCycle.run(spark, tmp("local"))
+    val reliable =
+      try {
+        spark.conf.set(Checkpoints.ModeKey, "reliable")
+        spark.conf.set(Checkpoints.DirKey, tmp("dir"))
+        StoreCycle.run(spark, tmp("reliable"))
+      } finally {
+        spark.conf.unset(Checkpoints.ModeKey)
+        spark.conf.unset(Checkpoints.DirKey)
+      }
+    def outcome(steps: Seq[StoreCycle.Step]) = steps.map(s => (s.op, s.rows, s.counts))
+    assert(outcome(reliable) === outcome(local))
+    // not vacuous: verdicts came back and every store holds rows
+    assert(local.head.rows.nonEmpty)
+    assert(local.flatMap(_.counts).filter(_._2 > 0).map(_._1).toSet ===
+      Set("sigs", "bands", "tombstones", "by_doc", "by_cluster", "edges", "postings"))
+    // reliable mode settles into checkpoint files: each settled result has
+    // its own directory, and an op leaves no other one behind
+    val settled = reliable.filter(_.returned.isDefined)
+    assert(settled.nonEmpty)
+    for (s <- settled) assert(s.checkpoint.exists(d =>
+      new org.apache.hadoop.fs.Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new org.apache.hadoop.fs.Path(d))), s"${s.op} result has no checkpoint files")
+    for (s <- reliable)
+      assert(s.strayCheckpoints.isEmpty, s"${s.op} left checkpoint files ${s.strayCheckpoints}")
+    assert(local.forall(_.checkpoint.isEmpty))
   }
 }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Scan fan-out regression gate (ADVICE r18): the r18 fan-out was dead code
   * on the layout it targeted because `File.listFiles()` returns null for a
-  * regular file. These specs pin the fixed contract on BOTH layouts:
+  * regular file. These specs pin the fixed contract on BOTH layouts, each
+  * through a loader called with `fanned = true` on a table above the
+  * 512 KiB size floor:
   *  1. single-FILE table (the driver's testdata layout) → fan-out fires
   *     (hashpartitioning exchange on the natural key) and the rows are
   *     unchanged;
@@ -26,15 +28,24 @@ class FanoutSpec extends SparkSpec {
     }
   }
 
-  private def writeDocs(dir: String, n: Int, files: Int): Unit =
-    spark.range(n).select(
+  // 10,000 rows of 128 hex chars of text: about 1.3 MB of parquet, above
+  // the fan-out's 512 KiB floor even when split across two files
+  private def writeDocs(dir: String, files: Int): Unit =
+    spark.range(10000).select(
         col("id").as("doc_id"),
-        concat(lit("body of document number "), col("id")).as("text"),
+        sha2(col("id").cast("string"), 512).as("text"),
         lit("en").as("lang"), lit("web").as("source"),
-        (length(concat(lit("body of document number "), col("id")))
-          .cast("long")).as("n_chars"))
+        lit(128L).as("n_chars"))
       .repartition(files)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+
+  private def parquetBytes(path: String): Seq[Long] = {
+    val f = new java.io.File(path)
+    if (f.isFile) Seq(f.length())
+    else f.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length()).toSeq
+  }
+
+  private val FloorBytes = 512L * 1024
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select("doc_id", "text", "lang", "source", "n_chars")
@@ -45,7 +56,7 @@ class FanoutSpec extends SparkSpec {
 
   test("fan-out fires on a single-FILE table and preserves rows") {
     val base = Files.createTempDirectory("graft-fanout-file").toString
-    writeDocs(s"$base/staging", 1000, 1)
+    writeDocs(s"$base/staging", 1)
     // flatten the Spark-written directory into the driver's single-file layout
     val part = new java.io.File(s"$base/staging/documents.parquet").listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -53,48 +64,41 @@ class FanoutSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base/flat"))
     Files.copy(part.toPath, Paths.get(s"$base/flat/documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
+    assert(parquetBytes(s"$base/flat/documents.parquet").sum >= FloorBytes)
 
-    withConf("spark.graft.scan.fanout" -> "true",
-        "spark.graft.scan.fanout.minBytes" -> "1") {
-      val viaTable = Tables.table(spark, s"$base/flat", "documents")
-      assert(hasFanoutExchange(viaTable),
-        "single-file layout (the driver's) must fan out — r18 regression: " +
-          "listFiles() on a regular file is null and the guard never fired")
-      assert(viaTable.rdd.getNumPartitions ==
-        spark.sparkContext.defaultParallelism)
-      val plain = spark.read.parquet(s"$base/flat/documents.parquet")
-      assert(sortedRows(viaTable) == sortedRows(plain))
-    }
+    val viaTable = Tables.documents(spark, s"$base/flat", fanned = true)
+    assert(hasFanoutExchange(viaTable),
+      "single-file layout (the driver's) must fan out — r18 regression: " +
+        "listFiles() on a regular file is null and the guard never fired")
+    assert(viaTable.rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    val plain = spark.read.parquet(s"$base/flat/documents.parquet")
+    assert(sortedRows(viaTable) == sortedRows(plain))
   }
 
   test("fan-out on a directory-layout table preserves rows") {
     val base = Files.createTempDirectory("graft-fanout-dir").toString
-    writeDocs(base, 1000, 2)
-    withConf("spark.graft.scan.fanout" -> "true",
-        "spark.graft.scan.fanout.minBytes" -> "1") {
-      val viaTable = Tables.table(spark, base, "documents")
-      assert(hasFanoutExchange(viaTable),
-        "two small part files estimate 2 tasks on 4 cores — should fan out")
-      val plain = spark.read.parquet(s"$base/documents.parquet")
-      assert(sortedRows(viaTable) == sortedRows(plain))
-    }
+    writeDocs(base, 2)
+    assert(parquetBytes(s"$base/documents.parquet").sum >= FloorBytes)
+    val viaTable = Tables.documents(spark, base, fanned = true)
+    assert(hasFanoutExchange(viaTable),
+      "two part files estimate 2 tasks on 4 cores — should fan out")
+    val plain = spark.read.parquet(s"$base/documents.parquet")
+    assert(sortedRows(viaTable) == sortedRows(plain))
   }
 
   test("ceiling task estimate does not over-trigger near the split boundary") {
     val base = Files.createTempDirectory("graft-fanout-ceil").toString
-    writeDocs(base, 2000, 2) // two part files, a few tens of KB each
-    val sizes = new java.io.File(s"$base/documents.parquet").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length())
+    writeDocs(base, 2)
+    val sizes = parquetBytes(s"$base/documents.parquet")
     assert(sizes.length == 2)
+    assert(sizes.sum >= FloorBytes) // the size floor is not what holds it back
     // pick maxPartitionBytes so each file is ~1.5 splits: floor would say
     // 1 task each (2 estimated, fires on 4 cores); ceiling says 2 each
     // (4 estimated, 4*2 > 4 — must NOT fire)
     val maxSplit = (sizes.min * 2) / 3
-    withConf(
-      "spark.graft.scan.fanout" -> "true",
-      "spark.graft.scan.fanout.minBytes" -> "1",
-      "spark.sql.files.maxPartitionBytes" -> maxSplit.toString) {
-      val viaTable = Tables.table(spark, base, "documents")
+    withConf("spark.sql.files.maxPartitionBytes" -> maxSplit.toString) {
+      val viaTable = Tables.documents(spark, base, fanned = true)
       assert(!hasFanoutExchange(viaTable),
         s"files of ~1.5 splits (sizes=${sizes.mkString(",")}, " +
           s"maxSplit=$maxSplit) estimate 4 tasks on 4 cores; the floor " +

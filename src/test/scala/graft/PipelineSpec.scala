@@ -138,10 +138,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("analytics/zone_report through its projection equals zone_report") {
-    // partition discovery reads the `week=` directory values back as int;
-    // the mart wrote them as long
     val mart = spark.read.parquet(s"$lake/analytics/zone_report")
-      .withColumn("week", col("week").cast("long"))
     assertSameRows(GeoPipeline.zoneReportExport(mart), GeoPipeline.zoneReport.run(spark, sf))
   }
 

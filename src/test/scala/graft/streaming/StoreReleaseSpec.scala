@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.{SparkSpec, StoreCycle}
 import graft.ops.DedupOps
 
 /** Store ops leave persisted only what they return: a steady-state ingest
@@ -35,5 +35,16 @@ class StoreReleaseSpec extends SparkSpec {
     StreamingOps.forgetBatchLogical(d1.take(5).map(_._1).toDF("doc_id"), index).count()
     val (_, compactLeft) = newPersisted(DedupOps.compactSignatureIndex(spark, index))
     assert(compactLeft === 0)
+  }
+
+  test("every store op leaves persisted only the settled frame it returns") {
+    val root = java.nio.file.Files.createTempDirectory("p_release_cycle").toString
+    val steps = StoreCycle.run(spark, root)
+    for (s <- steps)
+      assert(s.persisted === s.returned.toSet,
+        s"${s.op} left persisted RDDs ${s.persisted} besides its result ${s.returned}")
+    // every op that hands back a receipt, verdicts or hits returns it settled
+    assert(steps.filter(_.returned.isEmpty).map(_.op) ===
+      Seq("compact", "cluster merge", "cluster forget", "ivf bootstrap"))
   }
 }
