@@ -70,8 +70,13 @@ object Checkpoints {
       val spark = df.sparkSession
       if (spark.conf.get(ModeKey, "local") == "reliable") {
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(spark.conf.get(DirKey, "/tmp/graft_checkpoint"))
+        // Spark checkpoints into a UUID dir it makes under the configured
+        // one, so re-point the context whenever the configured dir is not
+        // that dir's parent: a session that changes the dir must write there
+        val dir = new Path(spark.conf.get(DirKey, "/tmp/graft_checkpoint"))
+        val want = dir.getFileSystem(sc.hadoopConfiguration).makeQualified(dir)
+        if (!sc.getCheckpointDir.map(d => new Path(d).getParent).contains(want))
+          sc.setCheckpointDir(want.toString)
         df.checkpoint()
       } else df.localCheckpoint()
     }

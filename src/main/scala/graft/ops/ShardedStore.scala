@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.ops.Checkpoints._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The ONE lifecycle for persisted sharded parquet stores (signature
@@ -87,9 +87,75 @@ object ShardedStore {
 
   /** Extract an integer field from a one-line JSON manifest; None when
     * absent (regex extraction — manifests here are flat int maps written
-    * by [[writeTextFile]], never nested). */
+    * by [[writeManifest]], never nested). */
   def jsonField(s: String, k: String): Option[Long] =
     ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
+
+  // ----- the store manifest ---------------------------------------------------
+
+  private def manifestFile(root: String) = s"$root/_manifest.json"
+
+  def hasManifest(spark: org.apache.spark.sql.SparkSession, root: String): Boolean =
+    fs(spark, root).exists(hp(manifestFile(root)))
+
+  /** Writes a store's `_manifest.json`: one line of flat int fields, in the
+    * given order. Stores write it LAST at bootstrap, so a readable manifest
+    * implies a complete store. */
+  def writeManifest(spark: org.apache.spark.sql.SparkSession, root: String,
+                    fields: (String, Long)*): Unit =
+    writeTextFile(spark, manifestFile(root),
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+
+  /** A read manifest; [[apply]] throws on a missing field. */
+  final case class Manifest(root: String, text: String) {
+    def get(k: String): Option[Long] = jsonField(text, k)
+    def apply(k: String): Long = get(k).getOrElse(throw new IllegalArgumentException(
+      s"manifest at $root missing '$k': $text"))
+  }
+
+  /** The layout version a store's code reads: its manifest's `fmt` must be
+    * `want`; a manifest without the field reads as `absent` (None: the
+    * store predates versioning and is refused). */
+  final case class Fmt(want: Long, absent: Option[Long])
+
+  /** Reads the `_manifest.json` of `store` at `root`. Throws when there is
+    * none (not this store's layout, or a bootstrap that died before its
+    * manifest) and, for a versioned store, when the layout is foreign —
+    * mutating a foreign layout in place would corrupt it. */
+  def readManifest(spark: org.apache.spark.sql.SparkSession, root: String,
+                   store: String, fmt: Option[Fmt] = None): Manifest = {
+    require(hasManifest(spark, root),
+      s"$store at $root has no manifest — not a $store layout (or an incomplete bootstrap)")
+    val m = Manifest(root, readTextFile(spark, manifestFile(root)))
+    fmt.foreach { case Fmt(want, absent) =>
+      val got = m.get("fmt").orElse(absent)
+      require(got.contains(want),
+        s"$store at $root has layout fmt=${got.getOrElse("none (pre-r17)")} but " +
+          s"this build reads fmt=$want — rebuild it from its sources or migrate it " +
+          "offline; mutating it in place would corrupt the foreign layout")
+    }
+    m
+  }
+
+  // ----- shards and frames ------------------------------------------------------
+
+  /** The shard of a key: `pmod(key, nParts)` as INT — the one shard
+    * function of every sharded table (band keys shard by their
+    * `xxhash64`). */
+  def shard(key: Column, nParts: Int): Column = pmod(key, lit(nParts.toLong)).cast("int")
+
+  /** [[shard]] on the driver, for a long key. */
+  def shardOf(key: Long, nParts: Int): Int = (((key % nParts) + nParts) % nParts).toInt
+
+  /** The distinct shards of `key` over `df`, collected (at most nParts
+    * values — never data-sized). */
+  def shardsOf(df: DataFrame, key: Column, nParts: Int): Seq[Int] =
+    df.select(shard(key, nParts).as("pt")).distinct().collect().map(_.getInt(0)).toSeq
+
+  /** An empty frame of the given DDL schema. */
+  def empty(spark: org.apache.spark.sql.SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Pointer rewrite: staged to a temp file, then delete+rename. The
     * window between delete and rename leaves NO pointer — the CALLER's
@@ -108,14 +174,15 @@ object ShardedStore {
   // ----- the staged-shard-swap lifecycle ------------------------------------
 
   /** Phase 1: write `kept` (the full replacement content for the shards
-    * being rewritten) under the table's staging dir. `maxParts` bounds the
-    * shuffle width; rows are repartitioned BY THE SHARD KEY so each shard
-    * dir receives one file. `pts` is the FULL affected-shard list: shards
-    * in it with no rows in `kept` get an EMPTY marker dir (they are being
-    * RETIRED — see the object comment), and the `_pts` manifest is written
-    * LAST, so its presence implies a complete staging. */
-  def stage(kept: DataFrame, table: Table, maxParts: Int, pts: Seq[Int]): Unit = {
-    kept.repartition(math.max(maxParts, 1), col(table.ptCol))
+    * being rewritten) under the table's staging dir, repartitioned BY THE
+    * SHARD KEY into one task per affected shard, so each shard dir
+    * receives one file. `pts` is the FULL affected-shard list: shards in it
+    * with no rows in `kept` get an EMPTY marker dir (they are being RETIRED
+    * — see the object comment), and the `_pts` manifest is written LAST, so
+    * its presence implies a complete staging. Returns the table and its
+    * shards for [[install]]. */
+  def stage(kept: DataFrame, table: Table, pts: Seq[Int]): (Table, Seq[Int]) = {
+    kept.repartition(math.max(pts.size, 1), col(table.ptCol))
       .write.mode("overwrite").partitionBy(table.ptCol)
       .parquet(s"${table.dir}/.staging")
     val spark = kept.sparkSession
@@ -125,6 +192,7 @@ object ShardedStore {
       if (!f.exists(staged)) f.mkdirs(staged): Unit
     }
     writeTextFile(spark, s"${table.dir}/.staging/_pts", pts.mkString(","))
+    (table, pts)
   }
 
   /** Idempotent single-shard swap (phase 3 step). States it handles:
@@ -170,6 +238,18 @@ object ShardedStore {
   }
 
   private def commitMarker(storeRoot: String) = s"$storeRoot/_commit"
+
+  /** Phases 2–4 for every table one mutation staged ([[stage]]'s results):
+    * write the commit marker, swap each table in the given order, clear
+    * the marker. No-op when nothing was staged. The three steps stay
+    * public so crash specs can stop between them. */
+  def install(spark: org.apache.spark.sql.SparkSession, storeRoot: String,
+              staged: Seq[(Table, Seq[Int])]): Unit =
+    if (staged.nonEmpty) {
+      commit(spark, storeRoot)
+      staged.foreach { case (t, pts) => swap(spark, t, pts) }
+      clearCommit(spark, storeRoot)
+    }
 
   /** Phase 2: the point of no return. Call AFTER every table of the
     * store has staged completely; from here recovery rolls the WHOLE

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{DedupOps, HashOps, TextOps}
+import graft.ops.{ClusterStore, DedupOps, HashOps, SignatureIndex, TextOps}
 import graft.ops.Checkpoints._
 
 /** Deduplication extension queries over `documents`: exact, n-gram Jaccard,
@@ -25,7 +25,7 @@ object DedupQueries {
     * sized to the TEST corpus (5k docs at sf0.1), where the per-shard
     * fixed cost (one file + one write task + one listing entry per shard
     * per write) dominates the data; a production corpus sizes this up
-    * with the data (DedupOps.IndexParts default, or thousands at 100 TB)
+    * with the data (SignatureIndex.IndexParts default, or thousands at 100 TB)
     * so that a shard stays around a parquet row group. */
   val TestIndexParts = 8
 
@@ -243,7 +243,7 @@ object DedupQueries {
   }
 
   /** INCREMENTAL cluster maintenance, end-to-end through the persisted
-    * cluster store ([[graft.ops.DedupOps.mergeClustersBatch]]) — the
+    * cluster store ([[graft.ops.ClusterStore.merge]]) — the
     * stateful sibling of [[dedupClusters]], and the piece that completes
     * the incremental-dedup story: verdicts (dedup_delta_batch*), index
     * lifecycle (append/forget/compact), and now CLUSTER LABELS all evolve
@@ -278,20 +278,16 @@ object DedupQueries {
       val storePath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "cluster_store") { p =>
         val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        DedupOps.mergeClustersBatch(nodesOf(0), pairsOf(all, 0), p,
+        ClusterStore.merge(nodesOf(0), pairsOf(all, 0), p,
           nParts = TestIndexParts)
-        DedupOps.mergeClustersBatch(nodesOf(1), pairsOf(all, 1), p,
+        ClusterStore.merge(nodesOf(1), pairsOf(all, 1), p,
           nParts = TestIndexParts)
         all.unpersist(): Unit
       }
       val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      DedupOps.mergeClustersBatch(nodesOf(2), pairsOf(all2, 2), storePath,
+      ClusterStore.merge(nodesOf(2), pairsOf(all2, 2), storePath,
         nParts = TestIndexParts)
-      val labels = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, cluster_id BIGINT, doc_pt INT"))
-        .parquet(s"$storePath/by_doc")
-        .select("doc_id", "cluster_id")
+      val labels = ClusterStore.labels(spark, storePath)
       val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
@@ -306,7 +302,7 @@ object DedupQueries {
     * persisted store — the retraction sibling of [[dedupClustersDelta]]
     * and the round-16 capstone: the store folds epochs 0 and 1 in, a
     * forget batch RETRACTS every stored doc with doc_id % 7 == 1
-    * ([[graft.ops.DedupOps.forgetFromClusterStore]]), epoch 2 merges on
+    * ([[graft.ops.ClusterStore.forget]]), epoch 2 merges on
     * top, and the final labels must equal a from-scratch
     * connected-components recompute over SURVIVING docs and
     * surviving-endpoint pairs — the recursive-CTE oracle with the
@@ -337,11 +333,11 @@ object DedupQueries {
       val storePath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "cluster_store_forget") { p =>
         val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        DedupOps.mergeClustersBatch(nodesOf(0), pairsOf(all, 0), p,
+        ClusterStore.merge(nodesOf(0), pairsOf(all, 0), p,
           nParts = TestIndexParts)
-        DedupOps.mergeClustersBatch(nodesOf(1), pairsOf(all, 1), p,
+        ClusterStore.merge(nodesOf(1), pairsOf(all, 1), p,
           nParts = TestIndexParts)
-        DedupOps.forgetFromClusterStore(
+        ClusterStore.forget(
           docs.where(col("doc_id") % 7 === 1 && col("doc_id") % 3 < 2), p,
           nParts = TestIndexParts)
         all.unpersist(): Unit
@@ -350,14 +346,10 @@ object DedupQueries {
       // surviving partners (the signature-index forget guarantees no
       // verdict against forgotten content)
       val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      DedupOps.mergeClustersBatch(nodesOf(2),
+      ClusterStore.merge(nodesOf(2),
         pairsOf(all2, 2).where(surv(col("id_l")) && surv(col("id_r"))),
         storePath, nParts = TestIndexParts)
-      val labels = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, cluster_id BIGINT, doc_pt INT"))
-        .parquet(s"$storePath/by_doc")
-        .select("doc_id", "cluster_id")
+      val labels = ClusterStore.labels(spark, storePath)
       val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
@@ -388,7 +380,7 @@ object DedupQueries {
   }
 
   /** STABLE EXTERNAL cluster ids over the incremental store
-    * ([[graft.ops.DedupOps.mergeClustersStable]]) — min-member labels are
+    * ([[graft.ops.ClusterStore.mergeStable]]) — min-member labels are
     * deterministic but RELABEL whenever a smaller id joins, so they make
     * poor external keys; the allocation table gives every component an
     * ext_id fixed at first allocation, surviving label churn, with
@@ -412,24 +404,17 @@ object DedupQueries {
           "/tmp/graft_dedup_index", dir, "cluster_store_stable") { p =>
         val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
         for (m <- 0 to 1)
-          DedupOps.mergeClustersStable(nodesOf(m), pairsOf(all, m), p,
+          ClusterStore.mergeStable(nodesOf(m), pairsOf(all, m), p,
             epoch = m.toLong, nParts = TestIndexParts)
         all.unpersist(): Unit
       }
       // per-invocation: epoch 2's merge — its replay recomputes identical
       // allocations and writes nothing (the op's idempotence path)
       val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      DedupOps.mergeClustersStable(nodesOf(2), pairsOf(all2, 2), storePath,
+      ClusterStore.mergeStable(nodesOf(2), pairsOf(all2, 2), storePath,
         epoch = 2L, nParts = TestIndexParts)
-      val labels = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, cluster_id BIGINT, doc_pt INT"))
-        .parquet(s"$storePath/by_doc")
-        .select("doc_id", "cluster_id")
-      val alloc = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "cluster_id BIGINT, ext_id BIGINT, ep BIGINT, alloc_pt INT"))
-        .parquet(s"$storePath/alloc")
+      val labels = ClusterStore.labels(spark, storePath)
+      val alloc = ClusterStore.allocations(spark, storePath)
         .select(col("cluster_id"), col("ext_id"), col("ep").as("ext_epoch"))
       labels.join(alloc, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("ext_id"), col("ext_epoch"))
@@ -511,26 +496,19 @@ object DedupQueries {
           "/tmp/graft_dedup_index", dir, "cluster_store_stable_fgt") { p =>
         val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
         for (m <- 0 to 1)
-          DedupOps.mergeClustersStable(nodesOf(m), pairsOf(all, m), p,
+          ClusterStore.mergeStable(nodesOf(m), pairsOf(all, m), p,
             epoch = m.toLong, nParts = TestIndexParts)
-        DedupOps.forgetFromClusterStore(
+        ClusterStore.forget(
           docs.where(col("doc_id") % 7 === 1 && col("doc_id") % 3 < 2), p,
           nParts = TestIndexParts, allocEpoch = Some(2L))
         all.unpersist(): Unit
       }
       val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      DedupOps.mergeClustersStable(nodesOf(2),
+      ClusterStore.mergeStable(nodesOf(2),
         pairsOf(all2, 2).where(surv(col("id_l")) && surv(col("id_r"))),
         storePath, epoch = 3L, nParts = TestIndexParts)
-      val labels = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, cluster_id BIGINT, doc_pt INT"))
-        .parquet(s"$storePath/by_doc")
-        .select("doc_id", "cluster_id")
-      val alloc = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "cluster_id BIGINT, ext_id BIGINT, ep BIGINT, alloc_pt INT"))
-        .parquet(s"$storePath/alloc")
+      val labels = ClusterStore.labels(spark, storePath)
+      val alloc = ClusterStore.allocations(spark, storePath)
         .select(col("cluster_id"), col("ext_id"), col("ep").as("ext_epoch"))
       labels.join(alloc, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("ext_id"), col("ext_epoch"))
@@ -1843,7 +1821,7 @@ object DedupQueries {
     *  1. BOOTSTRAP (once per corpus, not per batch): MinHash signatures,
     *     band keys, and shingle-hash sets for the ingested corpus are
     *     materialized to the PARTITIONED two-table parquet index
-    *     ([[graft.ops.DedupOps.writeSignatureIndex]]: band rows sharded by
+    *     ([[graft.ops.SignatureIndex.write]]: band rows sharded by
     *     band-key hash, verification payloads sharded by doc-id hash —
     *     real files, read back). Signatures are per-document, so ingesting
     *     more data APPENDS index rows and never invalidates existing ones.
@@ -1851,7 +1829,7 @@ object DedupQueries {
     *     from band-key equi-joins (batch×index, batch×batch) with the
     *     index scan PRUNED to collided shards — a `band_pt IN` partition
     *     filter from the batch's own band keys plus a broadcast left-semi
-    *     on those keys ([[graft.ops.DedupOps.dedupDeltaBatchPruned]]);
+    *     on those keys ([[graft.ops.SignatureIndex.probe]]);
     *     exact-Jaccard verification against the index's STORED shingle
     *     sets — the corpus text is never re-read. Verdict per batch doc:
     *     drop iff it near-dups an indexed doc or a smaller-id batch doc;
@@ -1880,7 +1858,7 @@ object DedupQueries {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     graft.ops.Staging.once("/tmp/graft_dedup_index", dir, "sig_index") { p =>
-      DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+      SignatureIndex.write(DedupOps.signatureIndex(
         docs.where(col("doc_id") % 5 =!= 0), ShingleK, NumPerms, NumBands, RowsPerBand),
         p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
     }
@@ -1897,7 +1875,7 @@ object DedupQueries {
       // safe to release immediately — the probe returns a SETTLED frame
       val batchSigs = DedupOps.signatureIndex(
         docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = DedupOps.dedupDeltaBatchPruned(
+      val out = SignatureIndex.probe(
         docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
         JaccardThreshold, nParts = TestIndexParts)
       batchSigs.unpersist()
@@ -1963,25 +1941,25 @@ object DedupQueries {
       // the staged index hash-fails the oracle below.
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_evo") { p =>
-        DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+        SignatureIndex.write(DedupOps.signatureIndex(
           part(0), ShingleK, NumPerms, NumBands, RowsPerBand), p,
           NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
         val b1 = DedupOps.signatureIndex(
           part(1), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-        // dedupDeltaBatchPruned returns a SETTLED frame, so kept1 cannot
+        // SignatureIndex.probe returns a SETTLED frame, so kept1 cannot
         // re-evaluate mid-append against a half-mutated index
-        val kept1 = DedupOps.dedupDeltaBatchPruned(
+        val kept1 = SignatureIndex.probe(
             part(1).select("doc_id"), b1, p, JaccardThreshold,
             nParts = TestIndexParts)
           .where(col("verdict") === "keep").select("doc_id")
-        DedupOps.writeSignatureIndex(
+        SignatureIndex.write(
           b1.join(kept1, Seq("doc_id"), "left_semi"), p,
           NumPerms, NumBands, RowsPerBand, mode = "append", nParts = TestIndexParts)
         b1.unpersist(): Unit
       }
       val b2 = DedupOps.signatureIndex(
         part(2), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = DedupOps.dedupDeltaBatchPruned(
+      val out = SignatureIndex.probe(
         part(2).select("doc_id"), b2, indexPath, JaccardThreshold,
         nParts = TestIndexParts)
       b2.unpersist()
@@ -2021,7 +1999,7 @@ object DedupQueries {
 
   /** Right-to-be-forgotten in the incremental-dedup protocol: bootstrap
     * the partitioned index from the corpus, REMOVE a forget set from it
-    * ([[graft.ops.DedupOps.removeFromSignatureIndex]] — affected shards
+    * ([[graft.ops.SignatureIndex.remove]] — affected shards
     * only, band keys recomputed from the stored shingle sets), then
     * delta-dedup the batch against the shrunken index. A batch doc whose
     * only qualifying partner was forgotten must now KEEP (or report its
@@ -2047,10 +2025,10 @@ object DedupQueries {
       // the oracle below.
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_forget") { p =>
-        DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+        SignatureIndex.write(DedupOps.signatureIndex(
           docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
-        DedupOps.removeFromSignatureIndex(
+        SignatureIndex.remove(
           docs.where(!isBatch && col("doc_id") % 7 === 1).select("doc_id"),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
       }
@@ -2058,7 +2036,7 @@ object DedupQueries {
       // safe to release immediately — the probe returns a SETTLED frame
       val batchSigs = DedupOps.signatureIndex(
         docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = DedupOps.dedupDeltaBatchPruned(
+      val out = SignatureIndex.probe(
         docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
         JaccardThreshold, nParts = TestIndexParts)
       batchSigs.unpersist()
@@ -2092,7 +2070,7 @@ object DedupQueries {
     * path: same protocol and oracle as [[dedupDeltaForget]], but the
     * forget set is appended to the index's tombstone table — O(|F|)
     * write I/O, corpus-independent
-    * ([[graft.ops.DedupOps.tombstoneInSignatureIndex]]) — and the probe's
+    * ([[graft.ops.SignatureIndex.tombstone]]) — and the probe's
     * broadcast anti-join makes the tombstoned docs unmatchable. Verdicts
     * must be BYTE-IDENTICAL to the physical rewrite's (one shared oracle
     * SQL), which is the cross-engine proof that the deletion-vector path
@@ -2115,15 +2093,15 @@ object DedupQueries {
       // per-invocation cost is the per-batch probe with the anti-join
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_forget_logical") { p =>
-        DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+        SignatureIndex.write(DedupOps.signatureIndex(
           docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
-        DedupOps.tombstoneInSignatureIndex(
+        SignatureIndex.tombstone(
           docs.where(!isBatch && col("doc_id") % 7 === 1).select("doc_id"), p)
       }
       val batchSigs = DedupOps.signatureIndex(
         docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = DedupOps.dedupDeltaBatchPruned(
+      val out = SignatureIndex.probe(
         docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
         JaccardThreshold, nParts = TestIndexParts)
       batchSigs.unpersist()
@@ -2134,12 +2112,42 @@ object DedupQueries {
     val oracle = dedupDeltaForget.oracle
   }
 
+  /** The stored arms of a banded-recall gate over one signature index, for
+    * a query sample `qs` (q_id, q_hs) and its band keys `qBands` (q_id, bk):
+    * the stored payloads (p_id, p_hs); the TRUE near-dup partners (exact
+    * Jaccard ≥ θ over stored shingle sets — the lossless truth, a
+    * sample × corpus broadcast join); and the partners the STORED band
+    * table surfaces (persisted — the caller unpersists it). Both are
+    * (q_id, p_id) with self-pairs excluded. The index reads carry explicit
+    * schemas, so an empty-corpus index (shard dirs with no files) reads as
+    * empty instead of failing schema inference. */
+  private def bandRecallArms(spark: SparkSession, indexPath: String, qs: DataFrame,
+                             qBands: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val pHs = SignatureIndex.sigs(spark, indexPath)
+      .select(col("doc_id").as("p_id"), col("hs").as("p_hs"))
+    val truth = pHs.crossJoin(broadcast(qs))
+      .where(col("q_id") =!= col("p_id"))
+      .withColumn("inter",
+        DedupOps.intersectSizeSorted(col("q_hs"), col("p_hs")))
+      .withColumn("jac", col("inter").cast("double") /
+        (size(col("q_hs")) + size(col("p_hs")) - col("inter")))
+      .where(col("jac") >= JaccardThreshold)
+      .select("q_id", "p_id")
+    val collided = SignatureIndex.bands(spark, indexPath)
+      .select(col("doc_id").as("p_id"), col("bk"))
+      .join(broadcast(qBands), Seq("bk"))
+      .where(col("q_id") =!= col("p_id"))
+      .select("q_id", "p_id").distinct()
+      .persist()
+    (pHs, truth, collided)
+  }
+
   /** Per-epoch BANDED-RECALL gate over the persisted signature index —
     * the text-dedup mirror of q_ann_recall_evolution (r14 verdict #6):
     * the ANN side measures IVF recall decay as batches accrete; this
     * entry measures what the LSH index's band stage LOSES, per epoch, as
     * the corpus mix evolves. The index is built through the REAL
-    * lifecycle (bootstrap → two [[graft.ops.DedupOps.appendNewToSignatureIndex]]
+    * lifecycle (bootstrap → two [[graft.ops.SignatureIndex.appendNew]]
     * appends of whole batches), and for a fixed query sample the entry
     * reports, per epoch (0 = corpus, 1, 2 = after each append), the
     * fraction of TRUE near-dup partners (exact Jaccard ≥ θ over stored
@@ -2181,11 +2189,11 @@ object DedupQueries {
       // read-only, so sharing the staged lifecycle output is safe
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_recall_evo") { p =>
-        DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+        SignatureIndex.write(DedupOps.signatureIndex(
           part(0), ShingleK, NumPerms, EvoBands, EvoRows), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
         for (m <- Seq(1, 2))
-          DedupOps.appendNewToSignatureIndex(DedupOps.signatureIndex(
+          SignatureIndex.appendNew(DedupOps.signatureIndex(
             part(m), ShingleK, NumPerms, EvoBands, EvoRows), p,
             NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
@@ -2209,32 +2217,7 @@ object DedupQueries {
       val qBands = qSigs
         .select(col("doc_id").as("q_id"), explode(col("bands")).as("bk"))
         .distinct()
-      // explicit schemas: an empty-corpus index has shard dirs with no
-      // files, and schema inference would fail instead of returning empty
-      val pHs = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, hs ARRAY<BIGINT>, doc_pt INT"))
-        .parquet(s"$indexPath/sigs")
-        .select(col("doc_id").as("p_id"), col("hs").as("p_hs"))
-      // lossless truth: exact Jaccard from STORED partner shingle sets
-      val truth = pHs.crossJoin(broadcast(qs))
-        .where(col("q_id") =!= col("p_id"))
-        .withColumn("inter",
-          DedupOps.intersectSizeSorted(col("q_hs"), col("p_hs")))
-        .withColumn("jac", col("inter").cast("double") /
-          (size(col("q_hs")) + size(col("p_hs")) - col("inter")))
-        .where(col("jac") >= JaccardThreshold)
-        .select("q_id", "p_id")
-      // banded arm: does the index's STORED band table surface the pair?
-      val collided = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, bk STRING, band_pt INT"))
-        .parquet(s"$indexPath/bands")
-        .select(col("doc_id").as("p_id"), col("bk"))
-        .join(broadcast(qBands), Seq("bk"))
-        .where(col("q_id") =!= col("p_id"))
-        .select("q_id", "p_id").distinct()
-        .persist()
+      val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qs, qBands)
       val epochOf = explode(sequence(pmod(col("p_id"), lit(3L)), lit(2L)))
       val perEpoch = truth
         .join(collided.withColumn("hit", lit(1L)), Seq("q_id", "p_id"), "left")
@@ -2332,8 +2315,8 @@ object DedupQueries {
   /** BANDED-RECALL gate across a FORGET + PURGE cycle — the retraction
     * sibling of [[dedupRecallEvolution]] (which gates appends) and the
     * round-16 closing gate: the lifecycle arm drives the index through
-    * bootstrap → append → logical forget ([[graft.ops.DedupOps.tombstoneInSignatureIndex]])
-    * → physical purge ([[graft.ops.DedupOps.compactSignatureIndex]]) →
+    * bootstrap → append → logical forget ([[graft.ops.SignatureIndex.tombstone]])
+    * → physical purge ([[graft.ops.SignatureIndex.compact]]) →
     * another append; the baseline arm NEVER INSERTED the forgotten docs.
     * Both arms then answer the same question from their STORED state —
     * what fraction of true near-dup partners (exact Jaccard ≥ θ over
@@ -2361,20 +2344,20 @@ object DedupQueries {
       // lifecycle arm: the REAL ops, forget + purge mid-stream
       val lifecyclePath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_recall_fgt_life") { p =>
-        DedupOps.writeSignatureIndex(sigsOf(part(0)), p,
+        SignatureIndex.write(sigsOf(part(0)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
-        DedupOps.appendNewToSignatureIndex(sigsOf(part(1)), p,
+        SignatureIndex.appendNew(sigsOf(part(1)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
-        DedupOps.tombstoneInSignatureIndex(
+        SignatureIndex.tombstone(
           docs.where(isForgot).select("doc_id"), p)
-        DedupOps.compactSignatureIndex(spark, p) // physical purge
-        DedupOps.appendNewToSignatureIndex(sigsOf(part(2)), p,
+        SignatureIndex.compact(spark, p) // physical purge
+        SignatureIndex.appendNew(sigsOf(part(2)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
       // baseline arm: the forgotten docs never existed
       val baselinePath = graft.ops.Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_recall_fgt_base") { p =>
-        DedupOps.writeSignatureIndex(sigsOf(docs.where(!isForgot)), p,
+        SignatureIndex.write(sigsOf(docs.where(!isForgot)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
       // fixed-size query sample over SURVIVORS (the sampled-gate idiom)
@@ -2398,28 +2381,7 @@ object DedupQueries {
         .distinct()
       // each arm answers from ITS OWN stored files
       def metrics(indexPath: String, arm: String): DataFrame = {
-        val pHs = spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, hs ARRAY<BIGINT>, doc_pt INT"))
-          .parquet(s"$indexPath/sigs")
-          .select(col("doc_id").as("p_id"), col("hs").as("p_hs"))
-        val truth = pHs.crossJoin(broadcast(qs))
-          .where(col("q_id") =!= col("p_id"))
-          .withColumn("inter",
-            DedupOps.intersectSizeSorted(col("q_hs"), col("p_hs")))
-          .withColumn("jac", col("inter").cast("double") /
-            (size(col("q_hs")) + size(col("p_hs")) - col("inter")))
-          .where(col("jac") >= JaccardThreshold)
-          .select("q_id", "p_id")
-        val collided = spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, bk STRING, band_pt INT"))
-          .parquet(s"$indexPath/bands")
-          .select(col("doc_id").as("p_id"), col("bk"))
-          .join(broadcast(qBands), Seq("bk"))
-          .where(col("q_id") =!= col("p_id"))
-          .select("q_id", "p_id").distinct()
-          .persist()
+        val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qs, qBands)
         val per = truth
           .join(collided.withColumn("hit", lit(1L)), Seq("q_id", "p_id"), "left")
           .agg(count(lit(1)).as("n_true_pairs"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -940,7 +941,7 @@ object VectorQueries {
 
   /** Incremental ANN over a PERSISTED, cell-partitioned IVF index — the
     * vector-search mirror of the delta-dedup protocol (same layout idea
-    * as [[graft.ops.DedupOps.writeSignatureIndex]]): "search new arrivals
+    * as [[graft.ops.SignatureIndex.write]]): "search new arrivals
     * against an already-indexed corpus without scanning it".
     *
     * Protocol (corpus = vec_id % 5 != 0, batch = the rest, capped):
@@ -1230,7 +1231,7 @@ object VectorQueries {
     * after each insert), recall@k of the frozen-centroid IVF probe
     * against brute-force truth over everything indexed at that epoch,
     * for a fixed query sample — the number an operator watches to decide
-    * when [[graft.streaming.StreamingOps.refreshCentroids]] is due.
+    * when [[graft.ops.IvfIndex.refreshCentroids]] is due.
     *
     * Scale shape: the brute arm is deliberate ground truth (bounded
     * query sample broadcast, postings stream map-side — the ann_brute
@@ -1256,12 +1257,9 @@ object VectorQueries {
       }
       // readers resolve the index to its CURRENT generation dir once at
       // open and read only that pair — the zero-downtime contract
-      val genDir = graft.streaming.StreamingOps.resolveIndex(spark, indexPath)
-      val cents = spark.read.parquet(s"$genDir/centroids")
-      val postings = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT"))
-        .parquet(s"$genDir/postings")
+      val genDir = IvfIndex.resolve(spark, indexPath)
+      val cents = IvfIndex.centroids(spark, genDir)
+      val postings = IvfIndex.postings(spark, genDir)
       // fixed query sample (corpus members, never % 5 == 0; self-matches
       // excluded in both arms) — recall comparable across epochs
       val queries = emb.where(col("vec_id") % 50 === 1)
@@ -1379,7 +1377,7 @@ object VectorQueries {
     * clusters 4–5 on coordinate blocks the frozen stride-drawn centroids
     * never saw. The index is built through the REAL streaming ops
     * (bootstrap + two ivfSearchInsertBatch epochs), then
-    * [[graft.streaming.StreamingOps.refreshCentroids]] re-clusters it
+    * [[graft.ops.IvfIndex.refreshCentroids]] re-clusters it
     * into a new GENERATION — and the entry reports recall@k of the IVF
     * probe per (arm, cohort): `frozen` reads the retained lookback
     * generation g=0, `refreshed` resolves the current one. The DuckDB
@@ -1428,10 +1426,10 @@ object VectorQueries {
           vecs.where(col("vec_id") >= NCorpus && col("vec_id") < 450), p, batchId = 1L)
         StreamingOps.ivfSearchInsertBatch(
           vecs.where(col("vec_id") >= 450), p, batchId = 2L)
-        StreamingOps.refreshCentroids(spark, p)
+        IvfIndex.refreshCentroids(spark, p)
       }
-      val refreshedDir = StreamingOps.resolveIndex(spark, indexPath) // g=1
-      val frozenDir = s"$indexPath/g=0" // the retained lookback generation
+      val refreshedDir = IvfIndex.resolve(spark, indexPath) // g=1
+      val frozenDir = IvfIndex.generationDir(indexPath, 0L) // the retained lookback generation
       val v = vecs.persist()
       val queries = v.where(col("vec_id") % 25 === 1)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -1445,11 +1443,8 @@ object VectorQueries {
       val truth = scored.withColumn("rn", row_number().over(wR))
         .where(col("rn") <= RrTopK).select("q_id", "vec_id")
       def armRows(arm: String, armDir: String): DataFrame = {
-        val cents = spark.read.parquet(s"$armDir/centroids")
-        val assign = spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT"))
-          .parquet(s"$armDir/postings")
+        val cents = IvfIndex.centroids(spark, armDir)
+        val assign = IvfIndex.postings(spark, armDir)
           .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id"))
         val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
         val probes = queries.crossJoin(broadcast(cents))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.Checkpoints._
+import graft.ops.{ClusterStore, DedupOps, IvfIndex, ShardedStore, SignatureIndex, TextOps}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -75,7 +76,6 @@ object StreamingOps {
   def nearDupDedupBatch(batch: DataFrame, storePath: String,
                         shingleK: Int = 3, nPerm: Int = 64,
                         nBands: Int = 16): DataFrame = {
-    import graft.ops.{DedupOps, TextOps}
     val spark = batch.sparkSession
     val banded = batch
       .withColumn("__hs", TextOps.shingleHashes(col("text"), shingleK))
@@ -88,15 +88,10 @@ object StreamingOps {
     // explicit existence probe, NOT try/catch on the read: a corrupted or
     // unreadable store must fail the batch loudly — treating it as "first
     // batch" would silently restart dedup state and re-admit duplicates
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    val storeExists = fs.exists(new org.apache.hadoop.fs.Path(storePath))
     val seen: DataFrame =
-      if (storeExists) spark.read.parquet(storePath).select(col("__band"))
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__band",
-            org.apache.spark.sql.types.StringType))))
+      if (ShardedStore.fs(spark, storePath).exists(ShardedStore.hp(storePath)))
+        spark.read.parquet(storePath).select(col("__band"))
+      else ShardedStore.empty(spark, "__band STRING")
     // within-batch: keep the lowest doc_id per band; a doc survives only if
     // it wins (or is alone in) EVERY one of its bands AND none of its bands
     // is already in the store
@@ -126,7 +121,7 @@ object StreamingOps {
     * dedup_delta_batch2 protocol, and the full-fidelity sibling of
     * [[nearDupDedupBatch]]: band collisions are candidates only, and every
     * verdict is confirmed by exact Jaccard over STORED shingle sets
-    * ([[graft.ops.DedupOps.dedupDeltaBatchPruned]]), so recall/precision
+    * ([[graft.ops.SignatureIndex.probe]]), so recall/precision
     * match the batch pipeline instead of trading refinement away.
     *
     * Per micro-batch: (1) signatures for the batch only; (2) the first
@@ -146,42 +141,38 @@ object StreamingOps {
   def deltaDedupVerifiedBatch(batch: DataFrame, indexPath: String, minJac: Double,
                               shingleK: Int = 3, nPerm: Int = 64,
                               nBands: Int = 16, nParts: Int = 8): DataFrame = {
-    import graft.ops.DedupOps
     val spark = batch.sparkSession
     val sigs = DedupOps.signatureIndex(
       batch, shingleK, nPerm, nBands, nPerm / nBands).persist()
     // explicit existence probe, NOT try/catch on the read (see
     // nearDupDedupBatch): a corrupted store must fail loudly, not be
     // mistaken for a first batch and silently re-admit duplicates
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexPath), spark.sparkContext.hadoopConfiguration)
-    val storeExists = fs.exists(new org.apache.hadoop.fs.Path(indexPath))
+    val storeExists = ShardedStore.fs(spark, indexPath).exists(ShardedStore.hp(indexPath))
     // self-heal at open: a forget/compaction that died mid-rewrite leaves
     // staging/backup dirs behind; rolling them to a rewrite boundary here
     // (no-op when clean — one listStatus per table) means at-least-once
     // batch processing never probes a half-swapped index. A missing index
     // is created empty (manifest last), so the first batch runs the same
     // probe and append as every later one
-    if (storeExists) DedupOps.recoverSignatureIndex(spark, indexPath)
-    else DedupOps.createSignatureIndex(spark, indexPath,
-      nPerm, nBands, nPerm / nBands, nParts)
+    if (storeExists) SignatureIndex.recover(spark, indexPath)
+    else SignatureIndex.create(spark, indexPath, nPerm, nBands, nPerm / nBands, nParts)
     // verdicts must be SETTLED before the index mutates below — a cache
     // entry can be recomputed later against the grown index (observed on
     // the IVF sibling: search-before-insert silently became
     // search-after-insert); the pruned probe returns an eagerly
     // checkpointed frame, whose truncated lineage cannot re-evaluate
-    val verdicts = DedupOps.dedupDeltaBatchPruned(
+    val verdicts = SignatureIndex.probe(
       batch.select("doc_id"), sigs, indexPath, minJac, nParts,
       excludeOwnIds = true) // replay-safe: a retried batch never sees
                             // its own failed attempt's index rows
     val kept = verdicts.where(col("verdict") === "keep").select("doc_id")
     val keptSigs = sigs.join(kept, Seq("doc_id"), "left_semi")
     // replay-safe append: a RETRIED batch's kept signatures are already in
-    // the index — appendNewToSignatureIndex anti-joins them away on their
+    // the index — SignatureIndex.appendNew anti-joins them away on their
     // own doc_pt shards, so at-least-once retries never duplicate index
     // rows (plain append would, unboundedly, and nothing downstream dedups
     // them — the parity battery pins index row counts across a replay)
-    DedupOps.appendNewToSignatureIndex(keptSigs, indexPath,
+    SignatureIndex.appendNew(keptSigs, indexPath,
       nPerm, nBands, nPerm / nBands, nParts = nParts)
     sigs.unpersist()
     verdicts
@@ -192,7 +183,7 @@ object StreamingOps {
     * [[deltaDedupVerifiedBatch]] (a deletion-request stream is exactly
     * how forget runs in production). Each micro-batch of `doc_id` rows is
     * removed from the persisted index
-    * ([[graft.ops.DedupOps.removeFromSignatureIndex]]: affected shards
+    * ([[graft.ops.SignatureIndex.remove]]: affected shards
     * only, crash-safe staged rewrite), so no LATER batch can match the
     * forgotten docs — a near-dup of only-forgotten content is admitted
     * again. Returns one SETTLED row per distinct batch id:
@@ -209,25 +200,18 @@ object StreamingOps {
   def forgetBatch(batch: DataFrame, indexPath: String,
                   nPerm: Int = 64, nBands: Int = 16,
                   nParts: Int = 8): DataFrame = {
-    import graft.ops.DedupOps
     // self-heal at open (see deltaDedupVerifiedBatch): a prior forget
     // that died mid-rewrite must not leave this one reading a
     // half-swapped shard set
-    DedupOps.recoverSignatureIndex(batch.sparkSession, indexPath)
+    SignatureIndex.recover(batch.sparkSession, indexPath)
     val ids = batch.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val present = DedupOps.presentInSignatureIndex(ids, indexPath, nParts)
-      .withColumn("was_indexed", lit(true))
-    val receipt = ids.join(present, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-      .cutLineage()
-    DedupOps.removeFromSignatureIndex(ids, indexPath,
-      nPerm, nBands, nPerm / nBands, nParts = nParts)
+    val receipt = forgetReceipt(ids, SignatureIndex.present(ids, indexPath, nParts), "doc_id")
+    SignatureIndex.remove(ids, indexPath, nPerm, nBands, nPerm / nBands, nParts = nParts)
     receipt
   }
 
   /** LOGICAL right-to-be-forgotten twin of [[forgetBatch]], on the
-    * tombstone path ([[graft.ops.DedupOps.tombstoneInSignatureIndex]]):
+    * tombstone path ([[graft.ops.SignatureIndex.tombstone]]):
     * the batch's ids are appended to the index's deletion vector —
     * O(|batch|) write I/O, corpus-independent — instead of rewriting the
     * hit shards immediately; every later probe and presence check
@@ -243,149 +227,28 @@ object StreamingOps {
     * purge-at-next-compaction retention is acceptable. */
   def forgetBatchLogical(batch: DataFrame, indexPath: String,
                          nParts: Int = 8): DataFrame = {
-    import graft.ops.DedupOps
-    DedupOps.recoverSignatureIndex(batch.sparkSession, indexPath)
+    SignatureIndex.recover(batch.sparkSession, indexPath)
     val ids = batch.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val present = DedupOps.presentInSignatureIndex(ids, indexPath, nParts)
-      .withColumn("was_indexed", lit(true))
-    val receipt = ids.join(present, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-      .cutLineage()
-    DedupOps.tombstoneInSignatureIndex(ids, indexPath)
+    val receipt = forgetReceipt(ids, SignatureIndex.present(ids, indexPath, nParts), "doc_id")
+    SignatureIndex.tombstone(ids, indexPath)
     receipt
   }
 
-  // ----- generation-versioned IVF index layout ----------------------------
-  //
-  // All IVF index state lives under `<index>/g=<N>/{centroids,postings}`
-  // with a single `_gen` pointer file naming the CURRENT generation.
-  // Ordinary batches and compaction mutate the current generation in
-  // place (their own crash protocols cover that); [[refreshCentroids]] —
-  // which must replace BOTH tables consistently — writes a complete NEW
-  // generation beside the live one and atomically repoints, so a reader
-  // never observes postings partitioned by one centroid set while the
-  // centroids table holds another, and a reader that resolved the old
-  // generation keeps reading it untouched (zero-downtime refresh: the
-  // previous generation survives until the NEXT refresh prunes it).
-  //
-  // Crash states and recovery ([[recoverIndex]], run at every open):
-  //  - gen dir above the pointer WITHOUT its `_GEN_OK` sentinel → an
-  //    unfinished refresh: deleted; the live generation is untouched.
-  //  - gen dir above the pointer WITH `_GEN_OK` → a refresh that died
-  //    between sentinel and repoint: rolled FORWARD (pointer advanced).
-  //  - pointer missing but complete generations exist (a crash inside
-  //    the pointer's delete+rename rewrite) → repoint the max complete.
-  //  - pointer missing, `g=0` holds a complete centroids table → a
-  //    bootstrap that died before its pointer write: finished.
-  //  - a LEGACY flat layout (top-level centroids/postings, no pointer)
-  //    is adopted into g=0, idempotently per table.
-  //  - anything else partial is deleted; the index bootstraps fresh.
-
-  // fs/pointer plumbing shared with the sharded-store family lives in
-  // graft.ops.ShardedStore (round-16 unification)
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
-    graft.ops.ShardedStore.fs(spark, path)
-
-  private def hPath(s: String) = graft.ops.ShardedStore.hp(s)
-
-  private def generationDir(indexPath: String, gen: Long) = s"$indexPath/g=$gen"
-
-  /** The current generation number, or None when the index has never
-    * completed a bootstrap (reads the `_gen` pointer only — run
-    * [[recoverIndex]] first if a prior writer may have died). */
-  def currentGeneration(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): Option[Long] = {
-    if (!fsOf(spark, indexPath).exists(hPath(s"$indexPath/_gen"))) None
-    else Some(graft.ops.ShardedStore
-      .readTextFile(spark, s"$indexPath/_gen").trim.toLong)
-  }
-
-  private def touch(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    graft.ops.ShardedStore.touch(fs, path)
-
-  /** Pointer rewrite via [[graft.ops.ShardedStore.writePointer]] (staged
-    * temp + delete+rename). The window between delete and rename leaves
-    * NO pointer — recoverable, because [[recoverIndex]] repoints the max
-    * complete generation when the pointer is missing (HDFS rename cannot
-    * overwrite, so a truly atomic in-place rewrite is not available;
-    * missing-pointer recovery makes the two-step rewrite safe). */
-  private def writeGenPointer(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, gen: Long): Unit =
-    graft.ops.ShardedStore.writePointer(spark, indexPath, "_gen", gen.toString)
-
-  /** Resolves the index to its current generation directory, running
-    * recovery first — the one call every reader makes at open. The
-    * returned directory holds `centroids/` and `postings/` and is NEVER
-    * mutated by a later [[refreshCentroids]] (refresh writes a new
-    * generation and repoints), so a probe that resolved before a
-    * concurrent refresh keeps reading exactly one consistent
-    * (centroids, postings) pair. Throws if the index was never
-    * bootstrapped. */
-  def resolveIndex(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String): String = {
-    recoverIndex(spark, indexPath)
-    val g = currentGeneration(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index at $indexPath has no generation pointer — never bootstrapped"))
-    generationDir(indexPath, g)
-  }
-
-  /** Rolls the generation layout to a consistent boundary (see the crash
-    * matrix in the section comment), adopts legacy flat layouts, and
-    * then recovers any in-generation compaction staging. Idempotent;
-    * no-op on a clean index. */
-  def recoverIndex(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String): Unit = {
-    val fs = fsOf(spark, indexPath)
-    if (!fs.exists(hPath(indexPath))) return
-    val g0 = generationDir(indexPath, 0L)
-    if (currentGeneration(spark, indexPath).isEmpty) {
-      // legacy flat layout → g=0, idempotent per table (a crash between
-      // the two renames resumes here)
-      for (t <- Seq("centroids", "postings"))
-        if (fs.exists(hPath(s"$indexPath/$t")) && !fs.exists(hPath(s"$g0/$t"))) {
-          fs.mkdirs(hPath(g0))
-          fs.rename(hPath(s"$indexPath/$t"), hPath(s"$g0/$t")): Unit
-        }
-    }
-    def gens: Seq[Long] = fs.listStatus(hPath(indexPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("g="))
-      .map(_.stripPrefix("g=").toLong)
-    def isComplete(g: Long): Boolean = {
-      val gd = generationDir(indexPath, g)
-      fs.exists(hPath(s"$gd/_GEN_OK")) ||
-        // bootstrap/adoption completeness: the centroids table finished
-        // (its parquet _SUCCESS exists) — finish the sentinel here
-        (g == 0L && fs.exists(hPath(s"$gd/centroids/_SUCCESS")) &&
-          { touch(fs, s"$gd/_GEN_OK"); true })
-    }
-    currentGeneration(spark, indexPath) match {
-      case None =>
-        val complete = gens.filter(isComplete)
-        if (complete.nonEmpty) writeGenPointer(spark, indexPath, complete.max)
-        // only incomplete gens are deleted here — pruning complete older
-        // generations (the zero-downtime lookback) stays refresh's job
-        gens.filterNot(complete.contains)
-          .foreach(g => fs.delete(hPath(generationDir(indexPath, g)), true): Unit)
-      case Some(cur) =>
-        val above = gens.filter(_ > cur)
-        val complete = above.filter(isComplete)
-        if (complete.nonEmpty) writeGenPointer(spark, indexPath, complete.max)
-        above.filterNot(complete.maxOption.contains)
-          .foreach(g => fs.delete(hPath(generationDir(indexPath, g)), true): Unit)
-    }
-    fs.delete(hPath(s"$indexPath/._gen_tmp"), false)
-    currentGeneration(spark, indexPath).foreach(g =>
-      recoverCompactions(spark, generationDir(indexPath, g)))
-  }
+  /** The settled receipt of a forget: one (`idCol`, was_indexed) row per
+    * row of `ids`, true where `present` (the ids still matchable before the
+    * forget) holds it. Checkpointed BEFORE the caller mutates the store
+    * (settle-before-mutate), so it can never observe post-forget state. */
+  private def forgetReceipt(ids: DataFrame, present: DataFrame, idCol: String): DataFrame =
+    ids.join(present.withColumn("was_indexed", lit(true)), Seq(idCol), "left")
+      .select(col(idCol), coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
+      .cutLineage()
 
   /** Streaming cluster maintenance via foreachBatch — the stateful twin
     * of dedup_clusters and the downstream consumer of
     * [[deltaDedupVerifiedBatch]]'s verdicts: each micro-batch's verdict
     * rows (doc_id, matched_id — the −1 sentinel marks keeps) fold into
     * the persisted cluster store
-    * ([[graft.ops.DedupOps.mergeClustersBatch]]): kept docs open
+    * ([[graft.ops.ClusterStore.merge]]): kept docs open
     * singleton clusters, dropped docs join their matched partner's
     * cluster, and transitive merges relabel every member of every losing
     * cluster (min-member-id labels, equal to a from-scratch
@@ -400,8 +263,7 @@ object StreamingOps {
     *   clusterMaintainBatch(v, storePath) … }`. */
   def clusterMaintainBatch(verdicts: DataFrame, storePath: String,
                            nParts: Int = 8): DataFrame = {
-    import graft.ops.DedupOps
-    DedupOps.mergeClustersBatch(
+    ClusterStore.merge(
       verdicts.select(col("doc_id").as("id")),
       verdicts.where(col("matched_id") >= 0)
         .select(col("doc_id").as("id_l"), col("matched_id").as("id_r")),
@@ -412,7 +274,7 @@ object StreamingOps {
     * [[clusterMaintainBatch]] and the downstream consumer of
     * [[forgetBatch]]/[[forgetBatchLogical]] receipts: each micro-batch of
     * deletion-request `doc_id` rows is removed from the persisted cluster
-    * store ([[graft.ops.DedupOps.forgetFromClusterStore]]), recomputing
+    * store ([[graft.ops.ClusterStore.forget]]), recomputing
     * ONLY the affected components from the stored pair evidence — a
     * forgotten bridge doc splits its component exactly as a from-scratch
     * recompute over surviving docs would (the catalog entry's oracle).
@@ -428,296 +290,28 @@ object StreamingOps {
   def clusterForgetBatch(batch: DataFrame, storePath: String,
                          nParts: Int = 8,
                          allocEpoch: Option[Long] = None): DataFrame = {
-    import graft.ops.DedupOps
-    DedupOps.forgetFromClusterStore(
+    ClusterStore.forget(
       batch.select(col("doc_id").cast("long").as("doc_id")), storePath, nParts,
       allocEpoch = allocEpoch)
   }
 
-  private val ivfPostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
-
-  /** The IVF index manifest (`_manifest.json` at the index root): the
-    * vector DIMENSION is a CORPUS property, recorded once when the first
-    * non-empty batch arrives and validated against every later batch —
-    * not an engine constant (it was a hardcoded 64 through r17). The
-    * stakes: the dot kernel folds over min(len_a, len_b), so
-    * mixed-dimension input would silently TRUNCATE the product instead
-    * of erroring — the manifest turns that into a loud refusal at the
-    * writer. Pre-manifest (legacy) indexes derive dim read-only from the
-    * stored centroids and are adopted (manifest written) by the next
-    * insert batch. */
-  private def ivfManifestFile(indexPath: String) = s"$indexPath/_manifest.json"
-
-  /** Manifest format version, stamped alongside dim: any future layout
-    * change (posting schema, generation naming, snapshot format) bumps
-    * it, and this build refuses a foreign fmt loudly instead of
-    * misreading the layout — the same gate the cluster store's fmt
-    * field provides. A manifest WITHOUT the field reads as fmt 1 (the
-    * field landed one commit after the manifest itself). */
-  private val IvfManifestFmt = 1L
-
-  private def writeIvfManifest(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String, dim: Int): Unit =
-    graft.ops.ShardedStore.writeTextFile(spark, ivfManifestFile(indexPath),
-      s"""{"fmt":$IvfManifestFmt,"dim":$dim}""")
-
-  /** The index's recorded vector dimension: the manifest when present,
-    * else derived from the current generation's centroids (legacy
-    * index — read-only, so pure readers never write). None when
-    * underivable (no manifest and an empty or never-bootstrapped
-    * index) — dimension validation is skipped then, matching the
-    * empty-input contract (every search is empty anyway). */
-  def ivfIndexDim(spark: org.apache.spark.sql.SparkSession,
-                  indexPath: String): Option[Int] = {
-    val fs = fsOf(spark, indexPath)
-    if (fs.exists(hPath(ivfManifestFile(indexPath)))) {
-      val s = graft.ops.ShardedStore
-        .readTextFile(spark, ivfManifestFile(indexPath))
-      val fmt = graft.ops.ShardedStore.jsonField(s, "fmt").getOrElse(1L)
-      require(fmt == IvfManifestFmt,
-        s"IVF index at $indexPath has manifest fmt=$fmt but this build " +
-          s"reads fmt=$IvfManifestFmt — rebuild the index or migrate it " +
-          "offline; mutating it in place would corrupt the foreign layout")
-      Some(graft.ops.ShardedStore.jsonField(s, "dim").map(_.toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"IVF index manifest at $indexPath missing 'dim'")))
-    }
-    else currentGeneration(spark, indexPath).flatMap { g =>
-      val cd = s"${generationDir(indexPath, g)}/centroids"
-      if (!fs.exists(hPath(cd))) None
-      else spark.read.parquet(cd).select(size(col("c_vec")).as("d"))
-        .head(1).headOption.map(_.getInt(0))
-    }
-  }
-
-  /** One aggregate job over `df`'s embedding column: its uniform
-    * dimension, None when empty. Loud on mixed-length rows — the dot
-    * kernel would silently truncate them. */
-  private def uniformDim(df: DataFrame, colName: String,
-                         what: String): Option[Int] = {
-    val mm = df.agg(min(size(col(colName))).as("lo"),
-      max(size(col(colName))).as("hi")).head
-    if (mm.isNullAt(0)) None
-    else {
-      require(mm.getInt(0) == mm.getInt(1),
-        s"$what: mixed embedding dimensions ${mm.getInt(0)}..${mm.getInt(1)}" +
-          " in one input — the cosine kernel folds over the shorter row," +
-          " which would silently truncate; fix the upstream schema")
-      Some(mm.getInt(0))
-    }
-  }
-
-  /** Writer for postings dirs: every file carries a parquet BLOOM FILTER
-    * on vec_id (adaptive-sized, parquet ≥1.14), so presence probes — the
-    * forget receipt audit and the re-ingest purge's touched-dir lookup —
-    * prune at ROW-GROUP granularity when the probe pushes its id set down
-    * (see [[presenceProbe]]) instead of scanning the generation's whole
-    * vec_id column. Bloom bytes amortize to well under 1% of a row-group's
-    * embedding payload; min/max stats alone cannot prune here because a
-    * file's vec_ids are scattered (cells group by SIMILARITY, not id). */
-  private def postingsWrite(df: DataFrame) = df.write
-    .option("parquet.bloom.filter.enabled#vec_id", "true")
-    .option("parquet.bloom.filter.adaptive.enabled", "true")
-    .option("parquet.bloom.filter.expected.ndv#vec_id", "200000")
-
-  /** How many probe ids the presence paths push down as per-value parquet
-    * predicates (bloom-prunable). Above this, the probe falls back to a
-    * broadcast semi-join over the (column-pruned) vec_id scan — correct at
-    * any size, corpus-column-sized instead of touched-row-group-sized.
-    * Must stay ≤ spark.sql.parquet.pushdown.inFilterThreshold
-    * ([[graft.Sessions.defaults]]), past which Spark degrades the
-    * pushdown to a min/max range that scattered ids cannot prune with. */
-  private[graft] val PresencePushdownLimit = 1000
-
-  /** Rows of `postings` whose vec_id is in the probe set — the shared
-    * presence probe: id-list pushdown (footer + bloom + matched row
-    * groups) when the caller collected the set, broadcast semi-join
-    * otherwise. */
-  private def presenceProbe(postings: DataFrame, idRows: Option[Seq[Long]],
-                            ids: DataFrame): DataFrame =
-    idRows match {
-      case Some(rows) => postings.where(col("vec_id").isin(rows: _*))
-      case None => postings.join(broadcast(ids), Seq("vec_id"), "left_semi")
-    }
-
-  /** The probe set as driver rows when it is small enough to push down —
-    * `ids` must be settled (both callers settle them first). */
-  private def probeRows(ids: DataFrame): Option[Seq[Long]] =
-    if (ids.count() <= PresencePushdownLimit)
-      Some(ids.collect().map(_.getLong(0)).toSeq)
-    else None
-
-  /** The IVF index's deletion vector — INDEX-level, not per-generation
-    * (vec_ids persist across a refresh; the refresh is also where the
-    * debt is settled physically). Same idiom as the signature index's
-    * tombstones ([[graft.ops.ShardedStore.DeletionVector]]). */
-  private def vecTombs(indexPath: String) =
-    graft.ops.ShardedStore.DeletionVector(s"$indexPath/tombstones", "vec_id")
-
-  /** The PER-GENERATION tombstone snapshot: [[refreshCentroids]] settles
-    * the index-level deletion vector physically in the NEW generation and
-    * then drops it — but the generation it supersedes survives as the
-    * in-flight readers' lookback, and a reader still pinned there must
-    * keep filtering the forgotten ids (without the snapshot, the drop
-    * re-exposed retracted vectors to exactly those readers — a
-    * right-to-be-forgotten leak). The refresh copies the vector INTO the
-    * superseded generation dir before sealing its successor, so every
-    * resolvable (centroids, postings, tombstones) triple is
-    * self-consistent; the snapshot is pruned with its generation.
-    * A snapshot in the CURRENT generation can only be litter from a
-    * refresh that died before sealing. It is TOLERATED by readers
-    * (snapshot ⊆ live vector, so the union filter equals the live
-    * filter) and cleared ONLY by the two serial-writer ops that can
-    * invalidate it — the refresh retry (rewrites it) and the re-ingest
-    * purge (whose tombstone clear is the one mutation a stale copy
-    * cannot survive). [[recoverIndex]] never touches it: readers run
-    * recovery concurrently with a live refresh, and a reader-side
-    * delete would race the writer's protocol mid-flight
-    * ([[clearSnapshotLitter]]; GenTombstoneSnapshotSpec pins this). */
-  private def genTombSnapshot(genDir: String) =
-    graft.ops.ShardedStore.DeletionVector(s"$genDir/tombstones", "vec_id")
-
-  /** Anti-join `df` against every tombstone set a reader of `genDir` must
-    * respect: the generation-local snapshot (non-current generations;
-    * frozen at supersession) plus the index-level live vector (forgets
-    * since — retraction applies to ALL readers immediately). Each side is
-    * plan-neutral when absent. */
-  private def antiVecTombs(indexPath: String, genDir: String,
-                           df: DataFrame): DataFrame = {
-    val max = graft.ops.DedupOps.DefaultTombstoneBroadcastBytes
-    genTombSnapshot(genDir).anti(vecTombs(indexPath).anti(df, max), max)
-  }
-
-  /** Deletes snapshot litter a crashed refresh left in the CURRENT
-    * generation (died after copying, before sealing its successor).
-    * Harmless while it sits there (⊆ the live vector, and anti-joins are
-    * idempotent over the union) — it diverges only once a mutation
-    * CLEARS a tombstone the stale copy still lists, so exactly the two
-    * serial-writer ops that can do that call this first: the refresh
-    * retry (rewrites the snapshot) and the re-ingest purge. NOT done in
-    * [[recoverIndex]]: readers run recovery concurrently with a live
-    * refresh and would delete the snapshot mid-protocol. */
-  private def clearSnapshotLitter(spark: org.apache.spark.sql.SparkSession,
-                                  genDir: String): Unit = {
-    val fs = fsOf(spark, genDir)
-    fs.delete(hPath(s"$genDir/.tombstones_tmp"), true)
-    fs.delete(hPath(s"$genDir/tombstones"), true): Unit
-  }
-
-  /** Streaming right-to-be-forgotten for the VECTOR index — the
-    * retraction twin of [[ivfSearchInsertBatch]] and the IVF mirror of
-    * [[forgetBatchLogical]]: each micro-batch of deletion-request
-    * `vec_id` rows is appended to the index's deletion vector (O(|batch|)
-    * write, corpus-independent); every later search anti-joins it, so the
-    * vectors are unmatchable from this batch on. Physical purge happens
-    * at the next [[refreshCentroids]] (which rewrites every posting
-    * anyway — the purge is FREE there and the table is dropped after the
-    * repoint) and incrementally at [[compactPostings]] (the merged
-    * horizon is written tombstone-free; the table survives because rows
-    * above the horizon may remain).
+  /** Streaming IVF search-then-insert via foreachBatch against the
+    * persisted, cell-partitioned vector index ([[graft.ops.IvfIndex]]) —
+    * the search-side sibling of [[deltaDedupVerifiedBatch]] and the
+    * streaming twin of ann_delta_topk's probe: each micro-batch of
+    * (vec_id, embedding) rows is (1) SEARCHED against the postings already
+    * indexed (top-k exact cosine over only its probed cells — a
+    * `centroid_id IN` partition filter from the batch's own probe
+    * assignments), then (2) INSERTED — its rn=1 assignments are appended to
+    * their cells' posting directories, so later batches can match it.
+    * Search-before-insert means a vector never matches itself and
+    * batch-internal pairs surface on the NEXT batch — the standard
+    * streaming-ANN trade, documented rather than hidden.
     *
-    * Returns one SETTLED (vec_id, was_indexed) receipt row per distinct
-    * batch id, checkpointed before the mutation — the presence audit
-    * pushes the batch's id list into the parquet scan, where per-file
-    * BLOOM FILTERS on vec_id ([[postingsWrite]]) skip every row group
-    * holding none of them: reads are footer/bloom-metadata-sized plus the
-    * matched row groups, not corpus-column-sized (the r16 shape — the
-    * path's one rows-proportional step — measured closed in
-    * vector_forget_scaling.json; batches past [[PresencePushdownLimit]]
-    * fall back to the column-pruned semi-join scan). Replay-safe:
-    * re-tombstoning is idempotent and a retried batch's receipt reports
-    * was_indexed=false for already-forgotten ids — monotone in the safe
-    * direction. */
-  def forgetVectorsBatch(batch: DataFrame, indexPath: String): DataFrame = {
-    val spark = batch.sparkSession
-    recoverIndex(spark, indexPath)
-    settled(batch.select(col("vec_id").cast("long").as("vec_id")).distinct()) { ids =>
-      val genDirOpt = currentGeneration(spark, indexPath)
-        .map(g => generationDir(indexPath, g))
-        .filter(gd => fsOf(spark, indexPath).exists(hPath(s"$gd/postings")))
-      val present = genDirOpt match {
-        case Some(gd) => antiVecTombs(indexPath, gd,
-            presenceProbe(spark.read.schema(ivfPostingsSchema)
-                .parquet(s"$gd/postings").select("vec_id"),
-              probeRows(ids), ids))
-          .distinct().withColumn("was_indexed", lit(true))
-        case None => ids.where(lit(false)).withColumn("was_indexed", lit(true))
-      }
-      val receipt = ids.join(present, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("was_indexed"), lit(false)).as("was_indexed"))
-        .cutLineage()
-      vecTombs(indexPath).append(ids)
-      receipt
-    }
-  }
-
-  /** Physically removes `ids`' posting rows from one generation — the
-    * RE-INGEST path's purge ([[ivfSearchInsertBatch]] calls it for batch
-    * ids that are tombstoned): without it, the re-inserted vector's old
-    * row would resurface beside the new one once the tombstone clears.
-    * Touched (cell, batch) dirs are found with a vec_id-column scan
-    * (re-ingest-sized output), their kept rows are SETTLED, rewritten via
-    * dynamic overwrite, and emptied dirs retired; crash anywhere leaves
-    * the ids still tombstoned (the caller removes tombstones LAST), so a
-    * retry converges. */
-  private def purgeVectors(spark: org.apache.spark.sql.SparkSession,
-                           genDir: String, ids: DataFrame): Unit = {
-    val postingsPath = s"$genDir/postings"
-    if (!fsOf(spark, genDir).exists(hPath(postingsPath))) return
-    val posts = spark.read.schema(ivfPostingsSchema).parquet(postingsPath)
-    val touched = presenceProbe(posts, probeRows(ids), ids)
-      .select("centroid_id", "batch_id").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (touched.isEmpty) return
-    // static partition pruning to the touched (cell × batch) RECTANGLE —
-    // two isin filters stay linear in distinct values — then an exact
-    // broadcast semi-join on the pair (an OR-chain of per-dir predicates
-    // grows the expression tree linearly in touched dirs and risks
-    // analyzer/codegen blowup on a large re-ingest batch)
-    import spark.implicits._
-    val touchedDf = touched.toSeq.toDF("centroid_id", "batch_id")
-    // settled BEFORE the overwrite mutates its source
-    settled(posts
-        .where(col("centroid_id").isin(touched.map(_._1).distinct.toSeq: _*) &&
-          col("batch_id").isin(touched.map(_._2).distinct.toSeq: _*))
-        .join(broadcast(touchedDf), Seq("centroid_id", "batch_id"), "left_semi")
-        .join(broadcast(ids), Seq("vec_id"), "left_anti")
-        .select("centroid_id", "vec_id", "embedding", "batch_id")) { kept =>
-      postingsWrite(kept.repartition(col("centroid_id")))
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").partitionBy("centroid_id", "batch_id")
-        .parquet(postingsPath)
-      // a touched dir whose kept content is EMPTY was not rewritten by the
-      // dynamic overwrite — retire it explicitly
-      val keptDirs = kept.select("centroid_id", "batch_id").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val fs = fsOf(spark, genDir)
-      touched.filterNot(keptDirs).foreach { case (c, b) =>
-        fs.delete(hPath(s"$postingsPath/centroid_id=$c/batch_id=$b"), true): Unit }
-    }
-  }
-
-  /** Streaming IVF search-then-insert via foreachBatch against a
-    * persisted, cell-partitioned vector index — the search-side sibling
-    * of [[deltaDedupVerifiedBatch]] and the streaming twin of
-    * ann_delta_topk's probe: each micro-batch of (vec_id, embedding)
-    * rows is (1) SEARCHED against the postings already indexed (top-k
-    * exact cosine over only its probed cells — a `centroid_id IN`
-    * partition filter from the batch's own probe assignments), then
-    * (2) INSERTED — its rn=1 assignments are appended to their cells'
-    * posting directories, so later batches can match it. Search-before-
-    * insert means a vector never matches itself and batch-internal pairs
-    * surface on the NEXT batch — the standard streaming-ANN trade,
-    * documented rather than hidden.
-    *
-    * First batch bootstraps the index: generation 0 is created with
-    * centroids from the stride rule over that batch (deterministic,
-    * mirrors the batch queries); postings start from its assignments.
-    * All mutations land in the CURRENT generation (see the generation
-    * section comment); state lives in the lake (centroids + postings
-    * parquet), never in executor memory.
+    * The first batch bootstraps the index (generation 0, centroids from
+    * the stride rule over that batch); all mutations land in the CURRENT
+    * generation. A re-ingested, tombstoned vec_id is purged and
+    * un-tombstoned first ([[graft.ops.IvfIndex.readmit]]).
     *
     * REPLAY-SAFE under foreachBatch's at-least-once contract when the
     * caller passes the micro-batch id: the search excludes the batch's
@@ -725,8 +319,8 @@ object StreamingOps {
     * its retry) and the insert dynamically overwrites exactly its own
     * (cell, batch) directories — the parity spec replays a batch and
     * pins identical hits and an unchanged postings row count. A
-    * [[refreshCentroids]] between attempts preserves `batch_id`
-    * partitions, so the contract survives a refresh.
+    * [[graft.ops.IvfIndex.refreshCentroids]] between attempts preserves
+    * `batch_id` partitions, so the contract survives a refresh.
     *
     * Returns this batch's hits: (q_id, c_id, rank, cos_e6), empty for
     * the bootstrap batch. */
@@ -734,450 +328,71 @@ object StreamingOps {
                            batchId: Long = 0L,
                            nProbe: Int = 2, topK: Int = 5,
                            centStride: Long = 41L, centCap: Long = 1312L): DataFrame = {
-    import graft.ops.VectorOps
-    import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val fs = fsOf(spark, indexPath)
-    // self-heal at open: a refresh or compaction that died mid-protocol
-    // leaves staging/generation litter; roll to a boundary before
-    // searching (no-op when clean — one listStatus)
-    recoverIndex(spark, indexPath)
-    // dimension contract ([[ivfManifestFile]]): recorded at the first
-    // non-empty batch, validated against every later one (a mismatched
-    // or mixed-dim batch fails loudly BEFORE any mutation); legacy
-    // pre-manifest indexes are adopted here, on the writer path
-    val storedDim = ivfIndexDim(spark, indexPath)
-    val batchDim = uniformDim(batch, "embedding", "ivfSearchInsertBatch")
-    batchDim.foreach { bd =>
-      storedDim.foreach(d => require(bd == d,
-        s"ivfSearchInsertBatch: batch embedding dim $bd does not match " +
-          s"the index's recorded dim=$d at $indexPath — one index holds " +
-          "one corpus dimension; use a separate index path"))
-      // record (first non-empty batch) or adopt (legacy index whose dim
-      // was derived from centroids): either way the manifest exists
-      // after the first write that can know the dimension
-      if (!fs.exists(hPath(ivfManifestFile(indexPath))))
-        writeIvfManifest(spark, indexPath, storedDim.getOrElse(bd))
-    }
-    val dim = storedDim.orElse(batchDim).getOrElse(0)
-    if (currentGeneration(spark, indexPath).isEmpty) {
-      val g0 = generationDir(indexPath, 0L)
-      settled(batch
-          .where(col("vec_id") % centStride === 0 && col("vec_id") < centCap)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))) { strided =>
-        // a NON-EMPTY bootstrap batch that misses the stride rule entirely
-        // would otherwise write an empty centroid set and permanently dead
-        // index (every later search and insert silently empty) — fall back
-        // to the batch's lowest-id vector as the single seed centroid
-        val cents0 = if (strided.isEmpty)
-          batch.orderBy("vec_id").limit(1)
-            .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-        else strided
-        cents0.write.mode("overwrite").parquet(s"$g0/centroids")
-      }
-      touch(fs, s"$g0/_GEN_OK")
-      writeGenPointer(spark, indexPath, 0L)
-    }
-    val genDir = generationDir(indexPath,
-      currentGeneration(spark, indexPath).get)
-    // RE-INGEST of a tombstoned vec_id (forgotten, purge pending): purge
-    // its stale posting rows first, then clear its tombstone — otherwise
-    // the new row would be invisible until the next refresh and the old
-    // one would resurface beside it afterwards (the mirror of the
-    // signature index's append-path fix; crash between the two steps
-    // leaves the id purged AND tombstoned — consistent, replay converges)
-    if (vecTombs(indexPath).exists(spark))
-      settled(vecTombs(indexPath).ids(spark)
-          .join(broadcast(batch.select(col("vec_id").cast("long").as("vec_id"))),
-            Seq("vec_id"), "left_semi")
-          .distinct()) { reIngest =>
-        if (!reIngest.isEmpty) {
-          // the tombstone clear below is the one mutation a stale
-          // current-generation snapshot cannot survive (it would keep
-          // filtering the re-admitted id) — clear crash litter first
-          clearSnapshotLitter(spark, genDir)
-          purgeVectors(spark, genDir, reIngest)
-          vecTombs(indexPath).remove(reIngest,
-            graft.ops.DedupOps.DefaultTombstoneBroadcastBytes)
-        }
-      }
-    val cents = spark.read.parquet(s"$genDir/centroids")
-    val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-    val ranked = batch.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), dim))
-      .withColumn("rn", row_number().over(wQ))
-      .where(col("rn") <= math.max(nProbe, 1))
-      .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"), col("rn"))
-      .persist()
-    val postingsExist = fs.exists(new org.apache.hadoop.fs.Path(s"$genDir/postings"))
-    val postingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
-    val hits = if (postingsExist) {
-      val cells = ranked.select("centroid_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val wR = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
-      // logically-forgotten vectors must not act as partners: anti-join
-      // the tombstone sets (index-level vector + any generation-local
-      // snapshot; each plan-neutral when absent)
-      antiVecTombs(indexPath, genDir,
-        spark.read.schema(postingsSchema).parquet(s"$genDir/postings")
-          // a REPLAYED batch must not see its own failed attempt's rows —
-          // without this partition filter, batch-internal pairs would leak
-          // into the replayed hits (self-pairs alone are not the issue)
-          .where(col("batch_id") =!= batchId && col("centroid_id").isin(cells: _*)))
-        .join(broadcast(ranked), Seq("centroid_id"))
-        .where(col("q_id") =!= col("vec_id")) // belt-and-braces vs own rows
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), dim))
-        .withColumn("rank", row_number().over(wR)).where(col("rank") <= topK)
-        .select(col("q_id"), col("vec_id").as("c_id"),
-          col("rank").cast("long").as("rank"),
-          round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
-        // an eager cut, not persist+count: the hits must be SETTLED
-        // before the postings append below — a cache entry can be
-        // recomputed later against the mutated directory, silently
-        // turning search-before-insert into search-after-insert; the
-        // checkpoint truncates lineage so re-evaluation is impossible
-        .cutLineage()
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "q_id BIGINT, c_id BIGINT, rank BIGINT, cos_e6 BIGINT"))
-    // exactly-once insert: postings carry a batch_id partition column and
-    // the write is a DYNAMIC overwrite, so a replayed batch replaces
-    // exactly its own (cell, batch) directories instead of appending
-    // duplicates — idempotent under foreachBatch's replay contract
-    postingsWrite(ranked.where(col("rn") === 1)
-        .select(col("centroid_id"), col("q_id").as("vec_id"),
-          col("q_vec").as("embedding"), lit(batchId).as("batch_id"))
-        .repartition(col("centroid_id")))
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("centroid_id", "batch_id")
-      .parquet(s"$genDir/postings")
+    val (genDir, dim) = IvfIndex.openForInsert(batch, indexPath, "ivfSearchInsertBatch",
+      centStride, centCap)
+    IvfIndex.readmit(batch.select(col("vec_id").cast("long").as("vec_id")), indexPath, genDir)
+    val ranked = IvfIndex.rankCells(batch, genDir, nProbe, dim).persist()
+    // the hits are settled before the insert below mutates the postings
+    val hits =
+      if (IvfIndex.hasPostings(spark, genDir))
+        IvfIndex.search(ranked, indexPath, genDir, dim, topK, exclude = Some(batchId))
+      else IvfIndex.noHits(spark)
+    IvfIndex.insert(ranked, genDir, batchId)
     ranked.unpersist()
     hits
   }
 
-  /** Read-only IVF top-k search against a RESOLVED generation dir — the
-    * pinned-reader path of the zero-downtime contract: a reader resolves
-    * once ([[resolveIndex]]) and may keep probing that generation while
-    * a [[refreshCentroids]] supersedes it. The probe respects every
-    * tombstone set the generation must honor ([[antiVecTombs]]):
-    * forgotten vectors never surface as partners, including AFTER a
-    * refresh settles the debt and drops the index-level vector — the
-    * generation-local snapshot takes over (spec-pinned; the pre-r17
-    * lookback leak). Same probe shape as the insert path's search
-    * (nProbe cells by centroid cosine, exact cosine top-k inside them)
+  /** Read-only IVF top-k search against a RESOLVED generation dir
+    * ([[graft.ops.IvfIndex.resolve]]) — the pinned-reader path of the
+    * zero-downtime contract: a reader resolves once and may keep probing
+    * that generation while a refresh supersedes it. Forgotten vectors
+    * never surface, including AFTER a refresh settles the debt and drops
+    * the index-level deletion vector — the generation-local snapshot takes
+    * over (spec-pinned). Same probe shape as the insert path's search
     * minus the own-batch exclusion — a pure reader has no batch.
     * `queries` needs (vec_id, embedding); returns settled
     * (q_id, c_id, rank, cos_e6) rows.
     *
-    * CONCURRENCY SCOPE — refresh supersession ONLY: a pin protects the
-    * reader against [[refreshCentroids]] replacing the index (the
-    * superseded generation's files are never mutated, and its tombstone
-    * snapshot keeps the forget filter). Reads concurrent with
-    * SAME-generation writer batches ([[ivfSearchInsertBatch]]'s
-    * re-ingest purge dynamically overwrites old (cell, batch) dirs) are
-    * OUTSIDE the contract — serialize readers against in-generation
-    * writers, or accept mid-scan file churn.
-    *
-    * LOOKBACK WINDOW — one refresh cycle: [[refreshCentroids]] retains
-    * only the immediate predecessor generation, so a pin is valid across
-    * AT MOST one refresh. A reader pinned across two finds its
-    * generation pruned and gets a contract error here (checked at probe
-    * start; a prune racing mid-probe still surfaces as a raw read
-    * failure) — re-resolve and re-issue. */
+    * CONCURRENCY SCOPE — refresh supersession ONLY: reads concurrent with
+    * SAME-generation writer batches (the re-ingest purge dynamically
+    * overwrites old (cell, batch) dirs) are outside the contract.
+    * LOOKBACK WINDOW — one refresh cycle: a reader pinned across two finds
+    * its generation pruned and gets a contract error here (a prune racing
+    * mid-probe still surfaces as a raw read failure) — re-resolve and
+    * re-issue. */
   def ivfSearchResolved(queries: DataFrame, indexPath: String, genDir: String,
                         nProbe: Int = 2, topK: Int = 5): DataFrame = {
-    import graft.ops.VectorOps
-    import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
-    if (!fsOf(spark, genDir).exists(hPath(genDir)))
-      throw new IllegalStateException(
-        s"IVF generation at $genDir has been pruned: a resolved generation" +
-          " is retained for ONE refreshCentroids cycle (the zero-downtime" +
-          " lookback window); this reader pinned it across at least two —" +
-          " re-resolve the index (resolveIndex) and re-issue the probe")
-    val dim = ivfIndexDim(spark, indexPath).getOrElse(0)
-    uniformDim(queries, "embedding", "ivfSearchResolved").foreach(qd =>
-      if (dim > 0) require(qd == dim,
-        s"ivfSearchResolved: query embedding dim $qd does not match the" +
-          s" index's recorded dim=$dim at $indexPath"))
-    if (!fsOf(spark, genDir).exists(hPath(s"$genDir/postings")))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "q_id BIGINT, c_id BIGINT, rank BIGINT, cos_e6 BIGINT"))
-    val cents = spark.read.parquet(s"$genDir/centroids")
-    val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-    val ranked = queries
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), dim))
-      .withColumn("rn", row_number().over(wQ))
-      .where(col("rn") <= math.max(nProbe, 1))
-      .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"))
-      .persist()
-    val cells = ranked.select("centroid_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val wR = Window.partitionBy("q_id")
-      .orderBy(col("cosine_sim").desc, col("vec_id").asc)
-    val hits = antiVecTombs(indexPath, genDir,
-        spark.read.schema(ivfPostingsSchema).parquet(s"$genDir/postings")
-          .where(col("centroid_id").isin(cells: _*)))
-      .join(broadcast(ranked), Seq("centroid_id"))
-      .where(col("q_id") =!= col("vec_id"))
-      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), dim))
-      .withColumn("rank", row_number().over(wR)).where(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        col("rank").cast("long").as("rank"),
-        round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
-      // settled: the caller may hold these hits across later maintenance
-      .cutLineage()
+    IvfIndex.requireGeneration(spark, genDir)
+    val dim = IvfIndex.queryDim(queries, indexPath, "ivfSearchResolved")
+    if (!IvfIndex.hasPostings(spark, genDir)) return IvfIndex.noHits(spark)
+    val ranked = IvfIndex.rankCells(queries, genDir, nProbe, dim).drop("rn").persist()
+    val hits = IvfIndex.search(ranked, indexPath, genDir, dim, topK, exclude = None)
     ranked.unpersist()
     hits
   }
 
-  /** Compacts the [[ivfSearchInsertBatch]] postings layout: every
-    * micro-batch adds one file per touched (cell, batch) directory, and
-    * probe cost degrades with file count. All batch partitions at or
-    * below `upToBatchId` are merged into a single `batch_id=upToBatchId`
-    * partition per cell — SAFE only for batches at or below the
-    * streaming checkpoint's replay horizon (a replay of a compacted
-    * batch would double its rows; batches above the horizon keep their
-    * own partitions precisely so replays stay idempotent).
-    *
-    * CRASH-SAFE two-phase rewrite (the DedupOps.stageShards idiom; the
-    * earlier delete-then-append lost the horizon if the process died
-    * between the two): phase 1 stages the full compacted content under a
-    * dot-prefixed dir readers ignore — reads run against untouched live
-    * dirs, so nothing depends on cache or lineage; phase 2 swaps per
-    * cell, and [[recoverPostings]] rolls a mid-swap crash forward (or
-    * discards an incomplete staging). Operates on the CURRENT
-    * generation's postings (a compaction never spans a refresh). */
-  def compactPostings(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String, upToBatchId: Long): Unit = {
-    recoverIndex(spark, indexPath)
-    currentGeneration(spark, indexPath).foreach { g =>
-      val gd = generationDir(indexPath, g)
-      if (stageCompactedPostings(spark, gd, upToBatchId))
-        swapCompactedPostings(spark, gd, upToBatchId)
+  /** Streaming right-to-be-forgotten for the VECTOR index — the
+    * retraction twin of [[ivfSearchInsertBatch]] and the IVF mirror of
+    * [[forgetBatchLogical]]: each micro-batch of deletion-request `vec_id`
+    * rows is appended to the index's deletion vector
+    * ([[graft.ops.IvfIndex.tombstone]]: O(|batch|) write,
+    * corpus-independent); every later search anti-joins it, so the vectors
+    * are unmatchable from this batch on, and the next refresh or
+    * compaction purges them physically. Returns one SETTLED
+    * (vec_id, was_indexed) receipt row per distinct batch id,
+    * checkpointed before the mutation (the presence audit is bloom-pruned:
+    * [[graft.ops.IvfIndex.present]]). Replay-safe: re-tombstoning is
+    * idempotent and a retried batch's receipt reports was_indexed=false
+    * for already-forgotten ids — monotone in the safe direction. */
+  def forgetVectorsBatch(batch: DataFrame, indexPath: String): DataFrame = {
+    IvfIndex.recover(batch.sparkSession, indexPath)
+    settled(batch.select(col("vec_id").cast("long").as("vec_id")).distinct()) { ids =>
+      val receipt = forgetReceipt(ids, IvfIndex.present(ids, indexPath), "vec_id")
+      IvfIndex.tombstone(ids, indexPath)
+      receipt
     }
-  }
-
-  /** Phase 1 of [[compactPostings]]: stage the merged horizon content
-    * under the GENERATION dir. Returns false (staging nothing) when the
-    * horizon is already one batch dir per cell. */
-  private[graft] def stageCompactedPostings(
-      spark: org.apache.spark.sql.SparkSession,
-      genDir: String, upToBatchId: Long): Boolean = {
-    val indexPath = genDir
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexPath), spark.sparkContext.hadoopConfiguration)
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$indexPath/postings")
-    if (!fs.exists(postingsPath)) return false
-    val batchDirs = fs.listStatus(postingsPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .flatMap(c => fs.listStatus(c.getPath).toSeq
-        .filter(b => b.isDirectory && b.getPath.getName.startsWith("batch_id=") &&
-          b.getPath.getName.stripPrefix("batch_id=").toLong <= upToBatchId)
-        .map(_.getPath))
-    // one batch dir per cell at the horizon is already compact
-    if (batchDirs.size <= batchDirs.map(_.getParent.getName).distinct.size) return false
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
-    // the merged horizon is written TOMBSTONE-FREE (incremental purge,
-    // free inside a rewrite that happens anyway); the deletion vector
-    // itself survives — rows ABOVE the horizon may still carry
-    // tombstoned ids, and only the refresh rewrites everything
-    val genRoot = hPath(indexPath).getParent.toString // <index> above g=N
-    postingsWrite(antiVecTombs(genRoot, indexPath,
-          spark.read.schema(schema).parquet(s"$indexPath/postings")
-            .where(col("batch_id") <= upToBatchId))
-        .select(col("centroid_id"), col("vec_id"), col("embedding"))
-        .repartition(col("centroid_id")))
-      .mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexPath/postings/.compact_upto_$upToBatchId")
-    true
-  }
-
-  /** Phase 2 / recovery arm of [[compactPostings]]: for every staged
-    * cell, drop its merged batch dirs and rename the staged content in
-    * as `batch_id=upToBatchId`. Idempotent across every crash point —
-    * a cell whose staged dir is gone was fully swapped (the rename is
-    * that cell's last step), so re-running rolls the compaction forward;
-    * an INCOMPLETE staging (no parquet `_SUCCESS`) is discarded with the
-    * live dirs untouched. Takes the GENERATION dir. */
-  private[graft] def swapCompactedPostings(
-      spark: org.apache.spark.sql.SparkSession,
-      genDir: String, upToBatchId: Long): Unit = {
-    val indexPath = genDir
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexPath), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val staging = p(s"$indexPath/postings/.compact_upto_$upToBatchId")
-    if (!fs.exists(staging)) return
-    if (!fs.exists(p(s"$staging/_SUCCESS"))) { fs.delete(staging, true); return }
-    fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.startsWith("centroid_id="))
-      .foreach { cellDir =>
-        val liveCell = p(s"$indexPath/postings/${cellDir.getPath.getName}")
-        if (fs.exists(liveCell))
-          fs.listStatus(liveCell).toSeq
-            .filter(b => b.isDirectory && b.getPath.getName.startsWith("batch_id=") &&
-              b.getPath.getName.stripPrefix("batch_id=").toLong <= upToBatchId)
-            .foreach(b => fs.delete(b.getPath, true): Unit)
-        else fs.mkdirs(liveCell): Unit
-        fs.rename(cellDir.getPath, p(s"$liveCell/batch_id=$upToBatchId")): Unit
-      }
-    fs.delete(staging, true): Unit
-  }
-
-  /** Rolls the whole index to a consistent state after a crash in ANY
-    * maintenance op — generation recovery ([[recoverIndex]]: unfinished
-    * refreshes discarded or rolled forward, pointer repaired) plus
-    * in-generation compaction recovery (completed stagings roll forward,
-    * incomplete ones are discarded). Run at index open when a prior
-    * maintenance run may have died (the sibling of
-    * [[graft.ops.DedupOps.recoverSignatureIndex]]). */
-  def recoverPostings(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String): Unit =
-    recoverIndex(spark, indexPath)
-
-  /** Compaction-staging recovery within one generation dir (the
-    * pre-generation recoverPostings body). */
-  private def recoverCompactions(spark: org.apache.spark.sql.SparkSession,
-                                 genDir: String): Unit = {
-    val fs = fsOf(spark, genDir)
-    val postingsPath = hPath(s"$genDir/postings")
-    if (!fs.exists(postingsPath)) return
-    fs.listStatus(postingsPath).toSeq
-      .filter(_.getPath.getName.startsWith(".compact_upto_"))
-      .foreach(d => swapCompactedPostings(spark, genDir,
-        d.getPath.getName.stripPrefix(".compact_upto_").toLong))
-  }
-
-  /** Re-clusters a persisted [[ivfSearchInsertBatch]] index's centroids
-    * from its CURRENT postings and rewrites every posting into its new
-    * cell — the maintenance op that closes the frozen-bootstrap gap: the
-    * bootstrap centroids are a strided draw over the FIRST batch, frozen
-    * for the index's lifetime, so as inserted batches drift, cells grow
-    * unbalanced and recall at fixed nProbe decays
-    * (q_ann_recall_evolution is the gate that measures it; this op is
-    * what an operator runs when that gate dips).
-    *
-    * Clustering is KMeansOps.fitExact — integer Lloyd's, deterministic
-    * run-to-run — with k = the current centroid count, over L2-NORMALIZED
-    * vectors, and the stored centroids are normalized too: the probe
-    * ranks cells by COSINE, and for unit vectors L2-argmin ≡
-    * cosine-argmax, so assignment and probe agree on what "nearest cell"
-    * means (clustering raw vectors measurably REGRESSED recall on the
-    * fixture — metric mismatch put true neighbors in cells the probe
-    * doesn't visit). New centroid ids are 0..k-1. `batch_id` partitions
-    * are PRESERVED so the streaming replay horizon survives a refresh (a
-    * replayed batch still dynamically overwrites exactly its own
-    * (cell, batch) dirs).
-    *
-    * ZERO-DOWNTIME via the generation layout (see the section comment):
-    * the reassigned postings and new centroids are written as a complete
-    * NEW generation, sealed with `_GEN_OK`, and the `_gen` pointer is
-    * repointed — so a reader that resolved the index before (or during)
-    * the refresh keeps reading its own generation's consistent
-    * (centroids, postings) pair, and a reader resolving after sees only
-    * the refreshed pair. A crash anywhere before the repoint leaves the
-    * live generation untouched ([[recoverIndex]] discards the unsealed
-    * new generation, or rolls a sealed one forward). Generations older
-    * than the predecessor are pruned here — the predecessor itself
-    * survives until the NEXT refresh, giving in-flight readers their
-    * lookback window. */
-  def refreshCentroids(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String, iters: Int = 3): Unit = {
-    import graft.ops.KMeansOps
-    val fs = fsOf(spark, indexPath)
-    def p(s: String) = hPath(s)
-    recoverIndex(spark, indexPath)
-    val curOpt = currentGeneration(spark, indexPath)
-    if (curOpt.isEmpty) return
-    val cur = curOpt.get
-    val genDir = generationDir(indexPath, cur)
-    if (!fs.exists(p(s"$genDir/postings"))) return
-    // a crashed predecessor's snapshot litter would be frozen into this
-    // refresh's superseded-generation state — rewrite from the live vector
-    clearSnapshotLitter(spark, genDir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
-    // persisted: every Lloyd iteration scans the postings (plus the final
-    // reassignment write) — one parquet read instead of iters + 1.
-    // Tombstoned vectors are excluded from BOTH the fit and the new
-    // generation (retracted content must not shape centroids): the
-    // refresh is the vector index's free physical purge, and the
-    // deletion vector is dropped after the repoint below.
-    val posts = antiVecTombs(indexPath, genDir,
-      spark.read.schema(schema).parquet(s"$genDir/postings")).persist()
-    val k = spark.read.parquet(s"$genDir/centroids").count().toInt
-    val unit = { // L2-normalize in-row (codegen dot; no shuffle)
-      val nrm = sqrt(graft.expressions.F.dot(col("embedding"), col("embedding")))
-      transform(col("embedding"), x => (x / nrm).cast("float"))
-    }
-    val cq = KMeansOps.fitExact(
-      posts.select(col("vec_id"), unit.as("embedding")), k, iters)
-    if (cq.isEmpty) { posts.unpersist(); return }
-    // normalize the fitted centroids too (a mean of unit vectors is not
-    // unit), then re-quantize so the assignment below is L2-argmin over
-    // unit vectors on both sides ≡ cosine-argmax
-    val cUnit = cq.map { c =>
-      val n = math.sqrt(c.map(x => (x / 1e6) * (x / 1e6)).sum).max(1e-12)
-      c.map(x => x / 1e6 / n)
-    }
-    val cqUnit = cUnit.map(_.map(x => math.round(x * 1e6)))
-    import spark.implicits._
-    val newCents = cUnit.toSeq.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.map(_.toFloat).toSeq) }
-      .toDF("c_id", "c_vec")
-    val next = generationDir(indexPath, cur + 1)
-    // recoverIndex above removed any unsealed leftover; belt-and-braces
-    fs.delete(p(next), true)
-    postingsWrite(posts
-        .withColumn("centroid_id", KMeansOps.assignmentExact(
-          KMeansOps.quantize(unit, 1000000L), cqUnit).cast("long"))
-        .select("centroid_id", "vec_id", "embedding", "batch_id")
-        .repartition(col("centroid_id")))
-      .mode("overwrite").partitionBy("centroid_id", "batch_id")
-      .parquet(s"$next/postings")
-    posts.unpersist()
-    newCents.write.mode("overwrite").parquet(s"$next/centroids")
-    // snapshot the deletion vector INTO the generation being superseded,
-    // UNDER the successor's seal (seal durable ⇒ snapshot present): a
-    // reader still pinned to `cur` keeps its forget filter after the
-    // index-level vector drops below (see [[genTombSnapshot]]). Staged
-    // via temp dir + rename so a concurrent pinned reader never sees a
-    // partial snapshot. If the refresh dies before the seal, the copy is
-    // litter in the still-current generation: harmless to readers
-    // (snapshot ⊆ live vector) and cleared only by the refresh retry
-    // (clearSnapshotLitter above) or a re-ingest purge — NEVER by
-    // recovery, which readers run concurrently with live refreshes.
-    if (vecTombs(indexPath).exists(spark)) {
-      val tmp = s"$genDir/.tombstones_tmp"
-      fs.delete(p(tmp), true)
-      vecTombs(indexPath).ids(spark).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      fs.delete(p(s"$genDir/tombstones"), true)
-      fs.rename(p(tmp), p(s"$genDir/tombstones")): Unit
-    }
-    touch(fs, s"$next/_GEN_OK") // sealed: recovery now rolls FORWARD
-    writeGenPointer(spark, indexPath, cur + 1)
-    // the new generation is tombstone-free: the debt is settled, drop the
-    // vector (a crash before this leaves purged rows + live tombstones —
-    // anti-joins no-op on them; the next refresh or forget converges it).
-    // Readers pinned to the PREVIOUS generation keep filtering via its
-    // snapshot — the pre-r17 lookback leak is closed.
-    vecTombs(indexPath).drop(spark)
-    // prune generations older than the immediate predecessor; `cur`
-    // itself stays as the in-flight readers' lookback until next refresh
-    fs.listStatus(p(indexPath)).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-      .filter(_ < cur)
-      .foreach(g => fs.delete(p(generationDir(indexPath, g)), true): Unit)
   }
 
   /** Streaming snapshot maintenance via foreachBatch: fold each micro-batch
@@ -1197,9 +412,7 @@ object StreamingOps {
     import graft.ops.{Sinks, WindowOps}
     val spark = batch.sparkSession
     val reduced = WindowOps.latestPerKey(batch, keyCols, Seq(col(versionCol)))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(snapPath), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(snapPath)))
+    if (ShardedStore.fs(spark, snapPath).exists(ShardedStore.hp(snapPath)))
       Sinks.mergeUpsert(spark, snapPath, reduced, keyCols, partitionCols, versionCol)
     else
       Sinks.writePartitioned(reduced, snapPath, partitionCols)
@@ -1269,7 +482,6 @@ object StreamingOps {
     * filtering is where a training pipeline runs this). */
   def qualityFilterStream(docs: DataFrame): DataFrame = {
     import graft.queries.TextQueries.QualityModel
-    import graft.ops.TextOps
     val toks = TextOps.tokens(col("text"))
     val score = aggregate(
       transform(toks, t => QualityModel.weight(QualityModel.bucket(t))),

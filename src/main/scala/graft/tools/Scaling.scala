@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.{Sessions, Tables}
-import graft.ops.{DedupOps, Staging, VectorOps}
+import graft.ops.{ClusterStore, DedupOps, IvfIndex, ShardedStore, SignatureIndex, Staging, VectorOps}
 import graft.ops.Checkpoints.settled
 import graft.queries.DedupQueries.{JaccardThreshold, NumBands, NumPerms, RowsPerBand, ShingleK}
 import graft.streaming.StreamingOps
@@ -227,12 +227,12 @@ object Scaling {
     def build(n: Long, leaf: String): (String, Long) = {
       val p = staged(root, leaf)
       val nodes = spark.range(n).select(col("id"))
-      DedupOps.mergeClustersBatch(nodes, Seq.empty[(Long, Long)].toDF("id_l", "id_r"),
+      ClusterStore.merge(nodes, Seq.empty[(Long, Long)].toDF("id_l", "id_r"),
         p, nParts = ClusterParts)
       val seedPairs = spark.range(200).select(col("id").as("k"))
         .withColumn("j", explode(sequence(lit(1L), lit(4L))))
         .select(seedLeft.as("id_l"), (col("k") * 1000L + col("j")).as("id_r"))
-      DedupOps.mergeClustersBatch(spark.range(0).select(col("id")), seedPairs,
+      ClusterStore.merge(spark.range(0).select(col("id")), seedPairs,
         p, nParts = ClusterParts)
       spark.catalog.clearCache()
       (p, dirBytes(p))
@@ -251,7 +251,7 @@ object Scaling {
   }
 
   /** cluster_merge_scaling.json — evidence for the cluster-store scale
-    * claim: a [[DedupOps.mergeClustersBatch]] merge reads and rewrites ONLY
+    * claim: a [[ClusterStore.merge]] merge reads and rewrites ONLY
     * the shards its affected clusters and docs hit — never the whole store
     * — so incremental cluster maintenance stays affordable as the labeled
     * corpus grows.
@@ -270,13 +270,13 @@ object Scaling {
         "store_axis_merge10", "merge_pairs") { (pairs, p) =>
       val ps = (0 until pairs).map(k => (k * 1000L, (k + 1) * 1000L)) ++
         (1L to 5L).map(i => (900000000L + i, 0L))
-      DedupOps.mergeClustersBatch(Seq.empty[Long].toDF("id"), ps.toDF("id_l", "id_r"),
+      ClusterStore.merge(Seq.empty[Long].toDF("id"), ps.toDF("id_l", "id_r"),
         p, nParts = ClusterParts).count(): Unit
     }
   }
 
   /** cluster_forget_scaling.json — evidence for the cluster-store FORGET
-    * scale claim: a [[DedupOps.forgetFromClusterStore]] retraction reads
+    * scale claim: a [[ClusterStore.forget]] retraction reads
     * and rewrites ONLY the shards its affected components hit — member
     * lookups, edge reads, and the three-table staged rewrite are all
     * pruned to the forgotten docs' clusters — so right-to-be-forgotten
@@ -293,7 +293,7 @@ object Scaling {
     import spark.implicits._
     clusterAxes(spark, "/tmp/graft_cluster_fscaling", col("k") * 1000L + col("j") - 1L,
         "store_axis_forget10", "forget_docs") { (k, p) =>
-      DedupOps.forgetFromClusterStore((0 until k).map(i => i * 1000L + 2L).toDF("doc_id"),
+      ClusterStore.forget((0 until k).map(i => i * 1000L + 2L).toDF("doc_id"),
         p, nParts = ClusterParts).count(): Unit
     }
   }
@@ -312,7 +312,7 @@ object Scaling {
     *  - FLAT: [[DedupOps.dedupDeltaBatch]] over the single-table index;
     *    every probe re-reads the full index including the wide `hs`
     *    payloads.
-    *  - PRUNED: [[DedupOps.dedupDeltaBatchPruned]] over the partitioned
+    *  - PRUNED: [[SignatureIndex.probe]] over the partitioned
     *    two-table layout; the payload fetch is pruned to collided docs.
     *
     * Measured per (corpus, mode): verdict-identical results, min-of-3
@@ -331,7 +331,7 @@ object Scaling {
     def sigsOf(docs: DataFrame): DataFrame =
       DedupOps.signatureIndex(docs, ShingleK, NumPerms, NumBands, RowsPerBand)
     def pruned(b: DataFrame, bSigs: DataFrame, root: String) =
-      DedupOps.dedupDeltaBatchPruned(b.select("doc_id"), bSigs,
+      SignatureIndex.probe(b.select("doc_id"), bSigs,
         s"$root/part", JaccardThreshold, nParts = NParts).orderBy("doc_id").collect()
 
     val batch = batchOf(10)
@@ -344,12 +344,13 @@ object Scaling {
       val nDocs = sigs.count()
       val root = staged("/tmp/graft_delta_scaling", s"x$replicas")
       sigs.write.mode("overwrite").parquet(s"$root/flat")
-      DedupOps.writeSignatureIndex(sigs, s"$root/part",
+      SignatureIndex.write(sigs, s"$root/part",
         NumPerms, NumBands, RowsPerBand, nParts = NParts)
       sigs.unpersist()
       val flatBytes = dirBytes(s"$root/flat")
       val partBytes = dirBytes(s"$root/part")
-      val bandsBytes = dirBytes(s"$root/part/bands")
+      val bandsBytes = SignatureIndex.bands(spark, s"$root/part").inputFiles
+        .map(f => new java.io.File(new java.net.URI(f)).length).sum
       val (flatRes, fB, fS) = best(spark, batchSigs.persist().count(): Unit) {
         DedupOps.dedupDeltaBatch(batch.select("doc_id"), batchSigs,
           spark.read.parquet(s"$root/flat"), JaccardThreshold).orderBy("doc_id").collect()
@@ -376,7 +377,7 @@ object Scaling {
   }
 
   /** forget_scaling.json — evidence for the forget-path scale claim: a
-    * [[DedupOps.removeFromSignatureIndex]] retraction reads and rewrites
+    * [[SignatureIndex.remove]] retraction reads and rewrites
     * ONLY the shards the forget set hits — never the whole index — so
     * right-to-be-forgotten stays affordable as the corpus grows.
     *
@@ -404,7 +405,7 @@ object Scaling {
 
     def bootstrap(replicas: Int, leaf: String): (String, Long) = {
       val path = staged("/tmp/graft_forget_scaling", leaf)
-      DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+      SignatureIndex.write(DedupOps.signatureIndex(
         replicated(replicas)(saltedReplica(base)), ShingleK, NumPerms, NumBands, RowsPerBand),
         path, NumPerms, NumBands, RowsPerBand, nParts = NParts)
       spark.catalog.clearCache()
@@ -413,7 +414,7 @@ object Scaling {
     def expectedFrac(nDocs: Int): Double =
       nDocs.toDouble / NParts + 1.0 - math.pow(1.0 - 1.0 / NParts, nDocs.toDouble * NumBands)
     def remove(k: Int, path: String): Unit =
-      DedupOps.removeFromSignatureIndex(forgetIds.take(k).toDF("doc_id"),
+      SignatureIndex.remove(forgetIds.take(k).toDF("doc_id"),
         path, NumPerms, NumBands, RowsPerBand, nParts = NParts)
 
     val rows = for (replicas <- Seq(1, 4, 16)) yield {
@@ -432,20 +433,20 @@ object Scaling {
     val logical = Seq(1, 4, 16).map { replicas =>
       val (path, idxBytes) = bootstrap(replicas, s"l$replicas")
       val (_, rB, wB, sec) = measured {
-        DedupOps.tombstoneInSignatureIndex(forgetIds.take(5).toDF("doc_id"), path)
+        SignatureIndex.tombstone(forgetIds.take(5).toDF("doc_id"), path)
       }
       (path, printed("forget")(f"""{"replicas": $replicas, "index_mb": ${idxBytes / 1e6}%.1f, "read_mb": ${rB / 1e6}%.3f, "write_mb": ${wB / 1e6}%.3f, "sec": $sec%.3f, "write_over_index": ${wB.toDouble / idxBytes}%.5f}"""))
     }
     // the purge at maintenance time settles the physical debt — its cost
     // is the physical forget's, paid once per compaction instead of per
     // retraction batch
-    val (_, rP, wP, secP) = measured(DedupOps.compactSignatureIndex(spark, logical.last._1))
+    val (_, rP, wP, secP) = measured(SignatureIndex.compact(spark, logical.last._1))
     Seq("n_parts" -> NParts, "n_bands" -> NumBands, "corpus_axis_forget5" -> arr(rows),
       "forget_size_axis_x16" -> arr(rows2), "logical_forget5" -> arr(logical.map(_._2)),
       "purge_x16" -> printed("forget")(f"""{"read_mb": ${rP / 1e6}%.2f, "write_mb": ${wP / 1e6}%.2f, "sec": $secP%.3f}"""))
   }
 
-  /** sig_probe_scaling.json — does [[DedupOps.appendNewToSignatureIndex]]'s
+  /** sig_probe_scaling.json — does [[SignatureIndex.appendNew]]'s
     * probe (doc_pt prune + broadcast semi over `sigs`) leave enough
     * intra-shard row-group I/O on the table that per-file doc_id BLOOM
     * FILTERS (the vector_forget_scaling idiom) would pay for their write
@@ -496,7 +497,7 @@ object Scaling {
       }
       val ((plainWriteSec, plainMb), (bloomWriteSec, bloomMb), (bloom4kWriteSec, bloom4kMb)) =
         settled(sigs.select(col("doc_id"), col("hs"))
-            .withColumn("doc_pt", pmod(col("doc_id"), lit(NParts.toLong)).cast("int"))
+            .withColumn("doc_pt", ShardedStore.shard(col("doc_id"), NParts))
             .repartition(NParts, col("doc_pt"))) { sigRows =>
           sigs.unpersist()
           (write(sigRows, "sigs_plain", None), write(sigRows, "sigs_bloom", Some(200000)),
@@ -510,7 +511,7 @@ object Scaling {
       val probeIds = (0 until 10).map { k =>
         baseIds((k * baseIds.length) / 10) + (k % replicas) * IdStride
       }
-      val dpts = probeIds.map(i => (((i % NParts) + NParts) % NParts).toInt).distinct
+      val dpts = probeIds.map(ShardedStore.shardOf(_, NParts)).distinct
       def probeSemi(table: String): Seq[Long] =
         spark.read.parquet(s"$root/$table")
           .where(col("doc_pt").isin(dpts: _*))
@@ -581,13 +582,11 @@ object Scaling {
       }
       printed("vforget")(f"""{"corpus_vecs": $n, "index_mb": ${idxBytes / 1e6}%.1f, "read_mb": ${rB / 1e6}%.3f, "write_mb": ${wB / 1e6}%.4f, "sec": $sec%.3f, "read_over_index": ${rB.toDouble / idxBytes}%.4f}""")
     }
-    val schema = StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
     val rows2 = for (n <- sizes) yield {
       val (path, idxBytes) = bootstrap(n, s"s$n")
-      val gd = StreamingOps.resolveIndex(spark, path)
+      val gd = IvfIndex.resolve(spark, path)
       val (_, rB, _, sec) = measured {
-        spark.read.schema(schema).parquet(s"$gd/postings").select("vec_id")
+        IvfIndex.postings(spark, gd).select("vec_id")
           .join(broadcast(forgetIds.toDF("vec_id")), Seq("vec_id"), "left_semi")
           .count()
       }

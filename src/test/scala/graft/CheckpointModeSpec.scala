@@ -55,10 +55,11 @@ class CheckpointModeSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory(s"graft_ckpt_store_$tag").toString
     spark.conf.unset(Checkpoints.ModeKey)
     val local = StoreCycle.run(spark, tmp("local"))
+    val ckptDir = tmp("dir")
     val reliable =
       try {
         spark.conf.set(Checkpoints.ModeKey, "reliable")
-        spark.conf.set(Checkpoints.DirKey, tmp("dir"))
+        spark.conf.set(Checkpoints.DirKey, ckptDir)
         StoreCycle.run(spark, tmp("reliable"))
       } finally {
         spark.conf.unset(Checkpoints.ModeKey)
@@ -70,13 +71,19 @@ class CheckpointModeSpec extends SparkSpec {
     assert(local.head.rows.nonEmpty)
     assert(local.flatMap(_.counts).filter(_._2 > 0).map(_._1).toSet ===
       Set("sigs", "bands", "tombstones", "by_doc", "by_cluster", "edges", "postings"))
-    // reliable mode settles into checkpoint files: each settled result has
-    // its own directory, and an op leaves no other one behind
+    // reliable mode settles into checkpoint files under this test's own
+    // dir (the earlier test set another one): each settled result has its
+    // own directory, and an op leaves no other one behind
     val settled = reliable.filter(_.returned.isDefined)
     assert(settled.nonEmpty)
-    for (s <- settled) assert(s.checkpoint.exists(d =>
+    val own = {
+      val p = new org.apache.hadoop.fs.Path(ckptDir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    }
+    for (s <- settled) assert(s.checkpoint.exists(d => d.startsWith(own + "/") &&
       new org.apache.hadoop.fs.Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(d))), s"${s.op} result has no checkpoint files")
+        .exists(new org.apache.hadoop.fs.Path(d))),
+      s"${s.op} result has no checkpoint files under $own: ${s.checkpoint}")
     for (s <- reliable)
       assert(s.strayCheckpoints.isEmpty, s"${s.op} left checkpoint files ${s.strayCheckpoints}")
     assert(local.forall(_.checkpoint.isEmpty))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.DedupOps
+import graft.ops.ClusterStore
 import org.apache.spark.sql.functions._
 
 /** Randomized differential fuzz of merge/forget INTERLEAVINGS on the
@@ -59,9 +59,10 @@ class ClusterInterleaveFuzzSpec extends SparkSpec {
   }
 
   /** one randomized campaign; `stable` adds alloc/ext invariants */
-  private def campaign(seed: Long, steps: Int, stable: Boolean): Unit = {
+  private def campaign(seed: Long, steps: Int, stable: Boolean,
+                       tag: String = ""): Unit = {
     val rng = new scala.util.Random(seed)
-    val p = store(s"${if (stable) "stable" else "plain"}_$seed")
+    val p = store(s"${if (stable) "stable" else "plain"}_$seed$tag")
     var docs = Set.empty[Long]        // live
     var everDocs = Set.empty[Long]    // live ∪ forgotten (re-ingest pool)
     var edges = Set.empty[(Long, Long)]
@@ -135,10 +136,10 @@ class ClusterInterleaveFuzzSpec extends SparkSpec {
             Some(byDoc(p)) else None
         try {
           if (stable)
-            DedupOps.mergeClustersStable(nodes.toDF("id"),
+            ClusterStore.mergeStable(nodes.toDF("id"),
               pairs.toDF("id_l", "id_r"), p, epoch = epoch).count()
           else
-            DedupOps.mergeClustersBatch(nodes.toDF("id"),
+            ClusterStore.merge(nodes.toDF("id"),
               pairs.toDF("id_l", "id_r"), p).count()
           val touched = nodes ++ pairs.flatMap(x => Seq(x._1, x._2))
           docs ++= touched; everDocs ++= touched
@@ -168,7 +169,7 @@ class ClusterInterleaveFuzzSpec extends SparkSpec {
         val gone = Seq.fill(rng.nextInt(3) + 1)(
           pool(rng.nextInt(pool.size))).distinct
         val absent = if (rng.nextInt(3) == 0) Seq(900000L + step) else Seq.empty
-        DedupOps.forgetFromClusterStore((gone ++ absent).toDF("doc_id"), p,
+        ClusterStore.forget((gone ++ absent).toDF("doc_id"), p,
           allocEpoch = if (stable) Some(epoch) else None).count()
         if (gone.exists(g => edges.exists(e => e._1 == g || e._2 == g)))
           sawClusteredForget = true
@@ -215,5 +216,12 @@ class ClusterInterleaveFuzzSpec extends SparkSpec {
     campaign(seed = 11L, steps = 14, stable = true)
     campaign(seed = 12L, steps = 14, stable = true)
     campaign(seed = 13L, steps = 14, stable = true)
+  }
+
+  test("reliable checkpoint mode: the plain-store campaign (seed 1) equals " +
+      "the union-find model after every step, checkpointing into its own dir") {
+    ReliableCheckpoints(spark, "cluster_fuzz") {
+      campaign(seed = 1L, steps = 10, stable = false, tag = "_reliable")
+    }
   }
 }

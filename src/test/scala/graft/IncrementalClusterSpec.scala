@@ -1,10 +1,10 @@
 package graft
 
-import graft.ops.DedupOps
+import graft.ops.{ClusterStore, DedupOps, ShardedStore, SignatureIndex}
 import org.apache.spark.sql.functions._
 
 /** Pins the incremental cluster store
-  * ([[DedupOps.mergeClustersBatch]]): folding batches of pairs into the
+  * ([[ClusterStore.merge]]): folding batches of pairs into the
   * persisted labels must reproduce [[DedupOps.connectedComponents]]'s
   * min-reachable-id labeling of the FULL edge history, merges must
   * relabel every member of every losing cluster (including chains across
@@ -38,7 +38,7 @@ class IncrementalClusterSpec extends SparkSpec {
       .select("id_l", "id_r").persist()
     val p = store("fixture")
     for (m <- 0 to 2)
-      DedupOps.mergeClustersBatch(
+      ClusterStore.merge(
         docs.where(col("doc_id") % 3 === m).select(col("doc_id").as("id")),
         pairs.where(greatest(col("id_l") % 3, col("id_r") % 3) === m), p)
     val want = DedupOps.connectedComponents(
@@ -56,13 +56,13 @@ class IncrementalClusterSpec extends SparkSpec {
   test("chain merges across batches and a smaller NEW id relabel whole clusters") {
     val p = store("chain")
     // bootstrap: clusters {10,11}=10, {20,21}=20, {30,31}=30, singleton 40
-    DedupOps.mergeClustersBatch(
+    ClusterStore.merge(
       dfNodes(Seq(10L, 11L, 20L, 21L, 30L, 31L, 40L)),
       dfPairs(Seq((10L, 11L), (20L, 21L), (30L, 31L))), p)
     assert(byDoc(p) == Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 30L, 40L -> 40L))
     // batch 1: chain 21—31 and 31—40 merges three components into root 20
-    val r1 = DedupOps.mergeClustersBatch(
+    val r1 = ClusterStore.merge(
       dfNodes(Seq.empty), dfPairs(Seq((21L, 31L), (31L, 40L))), p)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r1 == Map.empty) // receipt covers NODES only; none passed
@@ -71,7 +71,7 @@ class IncrementalClusterSpec extends SparkSpec {
       "chain merge did not relabel all members of the losing clusters")
     // batch 2: NEW id 5 pairs with 10 — the existing cluster's label is
     // LARGER, so cluster 10 itself loses and every member relabels to 5
-    val r2 = DedupOps.mergeClustersBatch(
+    val r2 = ClusterStore.merge(
       dfNodes(Seq(5L)), dfPairs(Seq((5L, 10L))), p)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 == Map(5L -> 5L))
@@ -82,9 +82,9 @@ class IncrementalClusterSpec extends SparkSpec {
 
   test("replayed merge writes nothing: store files byte-dated, receipt stable") {
     val p = store("replay")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L, 3L)),
+    ClusterStore.merge(dfNodes(Seq(1L, 2L, 3L)),
       dfPairs(Seq((1L, 2L))), p)
-    val r1 = DedupOps.mergeClustersBatch(dfNodes(Seq(4L)),
+    val r1 = ClusterStore.merge(dfNodes(Seq(4L)),
       dfPairs(Seq((2L, 4L))), p)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r1 == Map(4L -> 1L))
@@ -96,7 +96,7 @@ class IncrementalClusterSpec extends SparkSpec {
     }
     val before = stamps()
     val content = byDoc(p)
-    val r2 = DedupOps.mergeClustersBatch(dfNodes(Seq(4L)),
+    val r2 = ClusterStore.merge(dfNodes(Seq(4L)),
       dfPairs(Seq((2L, 4L))), p)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 == r1, "replay receipt diverged")
@@ -106,18 +106,18 @@ class IncrementalClusterSpec extends SparkSpec {
 
   test("manifest: mismatched nParts is rejected before any mutation") {
     val p = store("manifest")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L)), dfPairs(Seq((1L, 2L))), p)
+    ClusterStore.merge(dfNodes(Seq(1L, 2L)), dfPairs(Seq((1L, 2L))), p)
     val before = byDoc(p)
     intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersBatch(dfNodes(Seq(3L)), dfPairs(Seq((2L, 3L))), p,
-        nParts = DedupOps.IndexParts * 2)
+      ClusterStore.merge(dfNodes(Seq(3L)), dfPairs(Seq((2L, 3L))), p,
+        nParts = SignatureIndex.IndexParts * 2)
     }
     assert(byDoc(p) == before)
   }
 
   test("crash recovery: stagings roll with the store-level commit marker, never against it") {
     val p = store("crash")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L, 3L, 4L)),
+    ClusterStore.merge(dfNodes(Seq(1L, 2L, 3L, 4L)),
       dfPairs(Seq((1L, 2L), (3L, 4L))), p)
     // the r15 cross-table window (judge advice): by_cluster staged a
     // RELABELED rewrite, by_doc never staged, CRASH before the marker.
@@ -130,9 +130,9 @@ class IncrementalClusterSpec extends SparkSpec {
     val poisoned = spark.read.parquet(s"$p/by_cluster")
       .where(col("cluster_pt").isin(cpts: _*))
       .withColumn("cluster_id", col("cluster_id") + 1000L) // fake relabel
-    DedupOps.stageShards(poisoned, s"$p/by_cluster", "cluster_pt", cpts.size, cpts)
+    ShardedStore.stage(poisoned, ShardedStore.Table(s"$p/by_cluster", "cluster_pt"), cpts)
     val content = byDoc(p)
-    val r = DedupOps.mergeClustersBatch(dfNodes(Seq(5L)),
+    val r = ClusterStore.merge(dfNodes(Seq(5L)),
       dfPairs(Seq((2L, 5L))), p)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(5L -> 1L))
@@ -145,10 +145,10 @@ class IncrementalClusterSpec extends SparkSpec {
       .filter(d => d.isDirectory && d.getName.startsWith("doc_pt="))
       .map(_.getName.stripPrefix("doc_pt=").toInt).toSeq
     val rows = spark.read.parquet(s"$p/by_doc").where(col("doc_pt").isin(dpts: _*))
-    DedupOps.stageShards(rows, s"$p/by_doc", "doc_pt", dpts.size, dpts)
+    ShardedStore.stage(rows, ShardedStore.Table(s"$p/by_doc", "doc_pt"), dpts)
     graft.ops.ShardedStore.commit(spark, p)
     val after = byDoc(p)
-    val r2 = DedupOps.mergeClustersBatch(dfNodes(Seq(6L)),
+    val r2 = ClusterStore.merge(dfNodes(Seq(6L)),
       dfPairs(Seq((2L, 6L))), p)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r2 == Map(6L -> 1L))
@@ -163,14 +163,14 @@ class IncrementalClusterSpec extends SparkSpec {
 
   test("oversized batches fail loudly before any driver collect (pair and node guards)") {
     val p = store("guards")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L)), dfPairs(Seq((1L, 2L))), p)
+    ClusterStore.merge(dfNodes(Seq(1L, 2L)), dfPairs(Seq((1L, 2L))), p)
     val exP = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersBatch(dfNodes(Seq.empty),
+      ClusterStore.merge(dfNodes(Seq.empty),
         dfPairs(Seq((1L, 3L), (2L, 4L), (3L, 5L))), p, driverPairLimit = 2L)
     }
     assert(exP.getMessage.contains("driverPairLimit"))
     val exN = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersBatch(dfNodes(Seq(7L, 8L, 9L)),
+      ClusterStore.merge(dfNodes(Seq(7L, 8L, 9L)),
         dfPairs(Seq.empty), p, driverNodeLimit = 2L)
     }
     assert(exN.getMessage.contains("driverNodeLimit"))
@@ -181,13 +181,13 @@ class IncrementalClusterSpec extends SparkSpec {
     val p = store("forget_split")
     // {1,2,3} bridged ONLY through 2; {10,11} survives intact; redundant
     // edge 20-21-22 + 20-22 keeps {20,21,22} together when 21 is forgotten
-    DedupOps.mergeClustersBatch(
+    ClusterStore.merge(
       dfNodes(Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L, 22L, 30L)),
       dfPairs(Seq((1L, 2L), (2L, 3L), (10L, 11L),
         (20L, 21L), (21L, 22L), (20L, 22L))), p)
     assert(byDoc(p) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
       11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 30L -> 30L))
-    val receipt = DedupOps.forgetFromClusterStore(
+    val receipt = ClusterStore.forget(
       Seq(2L, 21L, 30L, 99L).toDF("doc_id"), p)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(receipt == Map(2L -> true, 21L -> true, 30L -> true, 99L -> false))
@@ -206,12 +206,12 @@ class IncrementalClusterSpec extends SparkSpec {
 
   test("forget of a min-member relabels survivors; replayed forget writes nothing; merge-after-forget rejoins") {
     val p = store("forget_relabel")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(5L, 7L, 9L)),
+    ClusterStore.merge(dfNodes(Seq(5L, 7L, 9L)),
       dfPairs(Seq((5L, 7L), (7L, 9L))), p)
     assert(byDoc(p) == Map(5L -> 5L, 7L -> 5L, 9L -> 5L))
     // forgetting the label-holder: survivors keep their component (edge
     // 7-9 survives) under the new min-member label
-    DedupOps.forgetFromClusterStore(Seq(5L).toDF("doc_id"), p).count()
+    ClusterStore.forget(Seq(5L).toDF("doc_id"), p).count()
     assert(byDoc(p) == Map(7L -> 7L, 9L -> 7L))
     def stamps(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[(String, Long)] =
@@ -220,26 +220,26 @@ class IncrementalClusterSpec extends SparkSpec {
       walk(new java.io.File(p)).toMap
     }
     val before = stamps()
-    val r = DedupOps.forgetFromClusterStore(Seq(5L).toDF("doc_id"), p)
+    val r = ClusterStore.forget(Seq(5L).toDF("doc_id"), p)
       .collect().map(x => x.getLong(0) -> x.getBoolean(1)).toMap
     assert(r == Map(5L -> false), "replayed forget receipt not monotone-safe")
     assert(stamps() == before, "replayed forget rewrote store files")
     // a LATER merge may rejoin the survivors with new evidence — and a
     // re-ingested id 5 starts from scratch
-    DedupOps.mergeClustersBatch(dfNodes(Seq(5L)), dfPairs(Seq((5L, 9L))), p)
+    ClusterStore.merge(dfNodes(Seq(5L)), dfPairs(Seq((5L, 9L))), p)
     assert(byDoc(p) == Map(5L -> 5L, 7L -> 5L, 9L -> 5L))
   }
 
   test("stable ids: first-allocated ext survives label churn and wins merges; replay writes nothing") {
     val p = store("stable")
     // epoch 0: two components allocate their min-member labels as ext ids
-    val r0 = DedupOps.mergeClustersStable(dfNodes(Seq(10L, 11L, 20L, 21L)),
+    val r0 = ClusterStore.mergeStable(dfNodes(Seq(10L, 11L, 20L, 21L)),
       dfPairs(Seq((10L, 11L), (20L, 21L))), p, epoch = 0L)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(r0(10L) == ((10L, 10L, 0L)) && r0(20L) == ((20L, 20L, 0L)))
     // epoch 1: smaller NEW id 5 relabels cluster 10 — the LABEL churns,
     // the ext id does not; {2,3} is brand-new and allocates (2, epoch 1)
-    val r1 = DedupOps.mergeClustersStable(dfNodes(Seq(5L, 2L, 3L)),
+    val r1 = ClusterStore.mergeStable(dfNodes(Seq(5L, 2L, 3L)),
       dfPairs(Seq((5L, 10L), (2L, 3L))), p, epoch = 1L)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(r1(5L) == ((5L, 10L, 0L)),
@@ -247,7 +247,7 @@ class IncrementalClusterSpec extends SparkSpec {
     assert(r1(2L) == ((2L, 2L, 1L)) && r1(3L) == ((2L, 2L, 1L)))
     // epoch 2: the epoch-1 component (smaller ext 2) merges with the
     // epoch-0 one (ext 10): FIRST-ALLOCATED wins, not smallest ext
-    val r2 = DedupOps.mergeClustersStable(dfNodes(Seq.empty),
+    val r2 = ClusterStore.mergeStable(dfNodes(Seq.empty),
       dfPairs(Seq((3L, 11L))), p, epoch = 2L)
       .collect()
     assert(r2.isEmpty) // receipt covers nodes only
@@ -269,7 +269,7 @@ class IncrementalClusterSpec extends SparkSpec {
       walk(new java.io.File(p)).toMap
     }
     val before = stamps()
-    DedupOps.mergeClustersStable(dfNodes(Seq.empty),
+    ClusterStore.mergeStable(dfNodes(Seq.empty),
       dfPairs(Seq((3L, 11L))), p, epoch = 2L).count()
     assert(stamps() == before, "replayed stable merge rewrote the store")
     assert(alloc() == Map(2L -> ((10L, 0L)), 20L -> ((20L, 0L))))
@@ -278,11 +278,11 @@ class IncrementalClusterSpec extends SparkSpec {
   test("stable ids ∘ forget: surviving sub-components inherit or allocate fresh, stale rows drop") {
     val p = store("stable_forget")
     // chain {10,11,12} bridged by 11 (ext 10, epoch 0); {20,21} ext 20
-    DedupOps.mergeClustersStable(dfNodes(Seq(10L, 11L, 12L, 20L, 21L)),
+    ClusterStore.mergeStable(dfNodes(Seq(10L, 11L, 12L, 20L, 21L)),
       dfPairs(Seq((10L, 11L), (11L, 12L), (20L, 21L))), p, epoch = 0L)
     // forgetting WITHOUT an epoch on a stable store must fail loudly
     intercept[IllegalArgumentException] {
-      DedupOps.forgetFromClusterStore(Seq(11L).toDF("doc_id"), p)
+      ClusterStore.forget(Seq(11L).toDF("doc_id"), p)
     }
     def alloc(): Map[Long, (Long, Long)] = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
@@ -292,13 +292,13 @@ class IncrementalClusterSpec extends SparkSpec {
     assert(alloc() == Map(10L -> ((10L, 0L)), 20L -> ((20L, 0L))))
     // forget the bridge AND all of {20,21}: {10} inherits ext 10, {12}
     // allocates fresh at the forget epoch, cluster 20's row vanishes
-    DedupOps.forgetFromClusterStore(Seq(11L, 20L, 21L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(11L, 20L, 21L).toDF("doc_id"), p,
       allocEpoch = Some(5L)).count()
     assert(byDoc(p) == Map(10L -> 10L, 12L -> 12L))
     assert(alloc() == Map(10L -> ((10L, 0L)), 12L -> ((12L, 5L))),
       s"split repair wrong: ${alloc()}")
     // re-merging the split halves: FIRST-ALLOCATED wins (epoch 0 ext 10)
-    DedupOps.mergeClustersStable(dfNodes(Seq.empty),
+    ClusterStore.mergeStable(dfNodes(Seq.empty),
       dfPairs(Seq((10L, 12L))), p, epoch = 6L).count()
     assert(byDoc(p) == Map(10L -> 10L, 12L -> 10L))
     assert(alloc() == Map(10L -> ((10L, 0L))), s"re-merge wrong: ${alloc()}")
@@ -316,16 +316,16 @@ class IncrementalClusterSpec extends SparkSpec {
     // fuses in via bridge 5-7 — FIRST-ALLOCATED wins, so the merged
     // component is labeled 3 but carries ext 7: label < ext, the state
     // min-label inheritance gets wrong
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L, 9L)),
+    ClusterStore.mergeStable(dfNodes(Seq(7L, 9L)),
       dfPairs(Seq((7L, 9L))), p, epoch = 0L)
-    DedupOps.mergeClustersStable(dfNodes(Seq(3L, 5L)),
+    ClusterStore.mergeStable(dfNodes(Seq(3L, 5L)),
       dfPairs(Seq((3L, 5L), (5L, 7L))), p, epoch = 1L)
     assert(alloc() == Map(3L -> ((7L, 0L))), s"setup wrong: ${alloc()}")
     // forget bridge 5: splits into {3} and {7,9}. The holder doc 7 is in
     // the NON-min sub-component — it must take ext 7 with it; {3} mints
     // fresh. Under the pre-r17 min-label rule, {3} inherited ext 7 AND
     // {7,9} minted ext 7 — two live rows, one ext, silently.
-    DedupOps.forgetFromClusterStore(Seq(5L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(5L).toDF("doc_id"), p,
       allocEpoch = Some(2L)).count()
     assert(byDoc(p) == Map(3L -> 3L, 7L -> 7L, 9L -> 7L))
     assert(alloc() == Map(7L -> ((7L, 0L)), 3L -> ((3L, 2L))),
@@ -339,9 +339,9 @@ class IncrementalClusterSpec extends SparkSpec {
     val p = store("ext_retired")
     // {7,9} ext 7 at epoch 0; forget holder 7 — the allocation survives
     // ({9} inherits via the min-label fallback) and ext 7 is RECORDED
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L, 9L)),
+    ClusterStore.mergeStable(dfNodes(Seq(7L, 9L)),
       dfPairs(Seq((7L, 9L))), p, epoch = 0L)
-    DedupOps.forgetFromClusterStore(Seq(7L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(7L).toDF("doc_id"), p,
       allocEpoch = Some(1L)).count()
     def alloc(): Map[Long, (Long, Long)] = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
@@ -361,14 +361,14 @@ class IncrementalClusterSpec extends SparkSpec {
     // any mutation
     val before = byDoc(p)
     val ex = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
+      ClusterStore.mergeStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
         epoch = 2L).count()
     }
     assert(ex.getMessage.contains("retired"), ex.getMessage)
     assert(byDoc(p) == before, "failed merge mutated the store")
     // joining an EXISTING component is fine (no fresh mint): doc 7 pairs
     // with 9 — the component keeps its inherited ext
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L)),
+    ClusterStore.mergeStable(dfNodes(Seq(7L)),
       dfPairs(Seq((7L, 9L))), p, epoch = 2L).count()
     assert(byDoc(p) == Map(7L -> 7L, 9L -> 7L))
     assert(alloc() == Map(7L -> ((7L, 0L))), s"re-join wrong: ${alloc()}")
@@ -376,9 +376,9 @@ class IncrementalClusterSpec extends SparkSpec {
     // splits nothing, but forgetting the pair evidence... drive a split
     // that would mint 7 fresh: add 5-7 (5 joins, ext unchanged), then
     // forget 5 — no fresh mint of 7 (holder 7 survives and inherits)
-    DedupOps.mergeClustersStable(dfNodes(Seq(5L)),
+    ClusterStore.mergeStable(dfNodes(Seq(5L)),
       dfPairs(Seq((5L, 7L))), p, epoch = 3L).count()
-    DedupOps.forgetFromClusterStore(Seq(9L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(9L).toDF("doc_id"), p,
       allocEpoch = Some(4L)).count()
     assert(alloc() == Map(5L -> ((7L, 0L))), s"post-forget: ${alloc()}")
   }
@@ -398,27 +398,27 @@ class IncrementalClusterSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     // {7,9} ext 7 at epoch 0; forget holder 7 → {9} inherits ext 7, the
     // record lands in ext_retired
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L, 9L)),
+    ClusterStore.mergeStable(dfNodes(Seq(7L, 9L)),
       dfPairs(Seq((7L, 9L))), p, epoch = 0L)
-    DedupOps.forgetFromClusterStore(Seq(7L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(7L).toDF("doc_id"), p,
       allocEpoch = Some(1L)).count()
     assert(alloc() == Map(9L -> ((7L, 0L))) && retired() == Set(7L))
     // while the inheriting allocation is LIVE, the re-ingest of doc 7 as
     // a new seed still fails loudly (the collision is real)
     val ex = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
+      ClusterStore.mergeStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
         epoch = 2L).count()
     }
     assert(ex.getMessage.contains("still live"), ex.getMessage)
     // forget 9 too: the inheriting component vanishes entirely — the
     // alloc row drops, the retired record stays (records are not
     // compacted; the guard re-checks liveness instead)
-    DedupOps.forgetFromClusterStore(Seq(9L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(9L).toDF("doc_id"), p,
       allocEpoch = Some(3L)).count()
     assert(alloc() == Map.empty && retired() == Set(7L))
     // NOW the record is stale: re-ingesting doc 7 as a new component
     // seed mints ext 7 cleanly (the r17 guard refused this forever)
-    val r = DedupOps.mergeClustersStable(dfNodes(Seq(7L)),
+    val r = ClusterStore.mergeStable(dfNodes(Seq(7L)),
         dfPairs(Seq.empty), p, epoch = 4L)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getLong(3))).toSet
@@ -429,10 +429,10 @@ class IncrementalClusterSpec extends SparkSpec {
     // the re-minted ext is live again: a second stale-path attempt (a
     // hypothetical duplicate seed, id-space collision) must refuse anew —
     // liveness is re-evaluated per hit, not cached
-    DedupOps.forgetFromClusterStore(Seq(7L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(7L).toDF("doc_id"), p,
       allocEpoch = Some(5L)).count()
     assert(alloc() == Map.empty)
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
+    ClusterStore.mergeStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
       epoch = 6L).count() // stale again → clean mint again
     assert(alloc() == Map(7L -> ((7L, 6L))))
   }
@@ -449,16 +449,16 @@ class IncrementalClusterSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
     // record 7: holder forgotten, inheriting {9} then fully forgotten →
     // STALE; record 21: holder forgotten, {23} still carries it → LIVE
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L, 9L)),
+    ClusterStore.mergeStable(dfNodes(Seq(7L, 9L)),
       dfPairs(Seq((7L, 9L))), p, epoch = 0L)
-    DedupOps.mergeClustersStable(dfNodes(Seq(21L, 23L)),
+    ClusterStore.mergeStable(dfNodes(Seq(21L, 23L)),
       dfPairs(Seq((21L, 23L))), p, epoch = 1L)
-    DedupOps.forgetFromClusterStore(Seq(7L, 21L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(7L, 21L).toDF("doc_id"), p,
       allocEpoch = Some(2L)).count()
-    DedupOps.forgetFromClusterStore(Seq(9L).toDF("doc_id"), p,
+    ClusterStore.forget(Seq(9L).toDF("doc_id"), p,
       allocEpoch = Some(3L)).count()
     assert(retired() == Set(7L, 21L))
-    val dropped = DedupOps.compactRetiredExts(spark, p)
+    val dropped = ClusterStore.compactRetiredExts(spark, p)
     assert(dropped == 1L && retired() == Set(21L),
       s"compaction wrong: dropped=$dropped retired=${retired()}")
     // idempotent: nothing stale left, nothing written
@@ -469,15 +469,15 @@ class IncrementalClusterSpec extends SparkSpec {
       walk(new java.io.File(s"$p/ext_retired")).toMap
     }
     val before = stamps()
-    assert(DedupOps.compactRetiredExts(spark, p) == 0L)
+    assert(ClusterStore.compactRetiredExts(spark, p) == 0L)
     assert(stamps() == before, "no-op compaction rewrote shards")
     // behavior unchanged either way: re-ingesting 7 mints cleanly (the
     // record is gone where the liveness check would have waved it
     // through), re-ingesting 21 still refuses (its allocation is live)
-    DedupOps.mergeClustersStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
+    ClusterStore.mergeStable(dfNodes(Seq(7L)), dfPairs(Seq.empty), p,
       epoch = 4L).count()
     val ex = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersStable(dfNodes(Seq(21L)), dfPairs(Seq.empty), p,
+      ClusterStore.mergeStable(dfNodes(Seq(21L)), dfPairs(Seq.empty), p,
         epoch = 5L).count()
     }
     assert(ex.getMessage.contains("still live"), ex.getMessage)
@@ -486,10 +486,10 @@ class IncrementalClusterSpec extends SparkSpec {
   test("an epoch-carrying merge on a store bootstrapped WITHOUT stable " +
       "ids fails loudly (no silent partial upgrade)") {
     val p = store("no_upgrade")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L)),
+    ClusterStore.merge(dfNodes(Seq(1L, 2L)),
       dfPairs(Seq((1L, 2L))), p)
     val ex = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersStable(dfNodes(Seq(3L)), dfPairs(Seq.empty), p,
+      ClusterStore.mergeStable(dfNodes(Seq(3L)), dfPairs(Seq.empty), p,
         epoch = 1L).count()
     }
     assert(ex.getMessage.contains("without stable-id"), ex.getMessage)
@@ -500,13 +500,13 @@ class IncrementalClusterSpec extends SparkSpec {
   test("a pre-fmt-2 store layout is rejected with a descriptive error, " +
       "not a path-not-found") {
     val p = store("legacy_fmt")
-    DedupOps.mergeClustersBatch(dfNodes(Seq(1L, 2L)),
+    ClusterStore.merge(dfNodes(Seq(1L, 2L)),
       dfPairs(Seq((1L, 2L))), p)
     // simulate a legacy store: rewrite the manifest without the fmt field
     graft.ops.ShardedStore.writeTextFile(spark, s"$p/_manifest.json",
       """{"nParts":8}""")
     val ex = intercept[IllegalArgumentException] {
-      DedupOps.mergeClustersBatch(dfNodes(Seq(3L)),
+      ClusterStore.merge(dfNodes(Seq(3L)),
         dfPairs(Seq((2L, 3L))), p)
     }
     assert(ex.getMessage.contains("pre-r17") && ex.getMessage.contains("fmt"),
@@ -522,12 +522,12 @@ class IncrementalClusterSpec extends SparkSpec {
     val forget = col("doc_id") % 7 === 1
     val keepPair = col("id_l") % 7 =!= 1 && col("id_r") % 7 =!= 1
     for (m <- 0 to 1)
-      DedupOps.mergeClustersBatch(
+      ClusterStore.merge(
         docs.where(col("doc_id") % 3 === m).select(col("doc_id").as("id")),
         pairs.where(greatest(col("id_l") % 3, col("id_r") % 3) === m), p)
-    DedupOps.forgetFromClusterStore(
+    ClusterStore.forget(
       docs.where(col("doc_id") % 3 < 2 && forget).select("doc_id"), p).count()
-    DedupOps.mergeClustersBatch(
+    ClusterStore.merge(
       docs.where(col("doc_id") % 3 === 2).select(col("doc_id").as("id")),
       pairs.where(greatest(col("id_l") % 3, col("id_r") % 3) === 2 && keepPair), p)
     val want = DedupOps.connectedComponents(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, ShardedStore, SignatureIndex}
 import graft.queries.DedupQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -134,12 +134,12 @@ class IncrementalDedupSpec extends SparkSpec {
     val flat = DedupOps.signatureIndex(
       docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand)
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "pruned")
-    DedupOps.writeSignatureIndex(flat, indexPath, NumPerms, NumBands, RowsPerBand)
+    SignatureIndex.write(flat, indexPath, NumPerms, NumBands, RowsPerBand)
     val bs = DedupOps.signatureIndex(
       docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand)
     val viaFlat = verdictMap(DedupOps.dedupDeltaBatch(
       docs.where(isBatch).select("doc_id"), bs, flat, JaccardThreshold))
-    val viaPruned = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val viaPruned = verdictMap(SignatureIndex.probe(
       docs.where(isBatch).select("doc_id"), bs, indexPath, JaccardThreshold))
     assert(viaPruned == viaFlat)
     assert(viaPruned.values.exists(_._1 == "drop"), "no dropped doc in fixture")
@@ -151,10 +151,10 @@ class IncrementalDedupSpec extends SparkSpec {
     val isBatch = col("doc_id") % 5 === 0
     val forgetPred = !isBatch && col("doc_id") % 7 === 1
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "forget")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
-    DedupOps.removeFromSignatureIndex(docs.where(forgetPred).select("doc_id"),
+    SignatureIndex.remove(docs.where(forgetPred).select("doc_id"),
       indexPath, NumPerms, NumBands, RowsPerBand)
     // the index must contain EXACTLY the surviving corpus: no stale
     // payloads, no stale band rows, and nothing else removed
@@ -169,7 +169,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // surviving corpus, and ≠ the unforgotten verdicts (non-vacuous)
     val bs = DedupOps.signatureIndex(
       docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand)
-    val got = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val got = verdictMap(SignatureIndex.probe(
       docs.where(isBatch).select("doc_id"), bs, indexPath, JaccardThreshold))
     val batchIds = docs.where(isBatch).collect().map(_.getLong(0)).toSeq
     val want = expectedVerdicts(batchIds, collectSigs(docs.where(isBatch)),
@@ -185,7 +185,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "pruned_forget")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     // two forget ids, two doc_pt shards — doc-side pruning must leave the
@@ -205,7 +205,7 @@ class IncrementalDedupSpec extends SparkSpec {
     }
     val before = sigStamps()
     import spark.implicits._
-    DedupOps.removeFromSignatureIndex(forgetIds.toDF("doc_id"),
+    SignatureIndex.remove(forgetIds.toDF("doc_id"),
       indexPath, NumPerms, NumBands, RowsPerBand)
     val after = sigStamps()
     def shardOf(path: String): Int =
@@ -225,10 +225,10 @@ class IncrementalDedupSpec extends SparkSpec {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     def part(m: Int) = docs.where(col("doc_id") % 3 === m)
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "compact")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       part(0), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       part(1), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand, mode = "append")
     def snapshot(table: String) = spark.read.parquet(s"$indexPath/$table")
@@ -240,13 +240,13 @@ class IncrementalDedupSpec extends SparkSpec {
     }
     val (sigsBefore, bandsBefore) = (snapshot("sigs"), snapshot("bands"))
     assert(maxFilesPerShard("sigs") >= 2, "append produced no crowded shard — vacuous")
-    DedupOps.compactSignatureIndex(spark, indexPath)
+    SignatureIndex.compact(spark, indexPath)
     assert(maxFilesPerShard("sigs") == 1 && maxFilesPerShard("bands") == 1)
     assert(snapshot("sigs") == sigsBefore && snapshot("bands") == bandsBefore)
     // probes against the compacted index are verdict-identical
     val bs = DedupOps.signatureIndex(
       part(2), ShingleK, NumPerms, NumBands, RowsPerBand)
-    val got = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val got = verdictMap(SignatureIndex.probe(
       part(2).select("doc_id"), bs, indexPath, JaccardThreshold))
     val want = expectedVerdicts(
       part(2).select("doc_id").collect().map(_.getLong(0)).toSeq,
@@ -258,44 +258,44 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "manifest")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
-    assert(DedupOps.readManifest(spark, indexPath) ==
-      DedupOps.IndexManifest(NumPerms, NumBands, RowsPerBand, DedupOps.IndexParts))
+    assert(SignatureIndex.readManifest(spark, indexPath) ==
+      SignatureIndex.IndexManifest(NumPerms, NumBands, RowsPerBand, SignatureIndex.IndexParts))
     val snapshot = spark.read.parquet(s"$indexPath/sigs")
       .collect().map(_.toString).sorted.toSeq
     // wrong nPerm: the forget's recomputed band keys would all be wrong —
     // must throw, and must not have touched the index
     intercept[IllegalArgumentException] {
-      DedupOps.removeFromSignatureIndex(docs.limit(3).select("doc_id"),
+      SignatureIndex.remove(docs.limit(3).select("doc_id"),
         indexPath, NumPerms / 2, NumBands, RowsPerBand)
     }
     // wrong nParts on the probe: partition filters would miss shards
     val bs = DedupOps.signatureIndex(
       docs.limit(5), ShingleK, NumPerms, NumBands, RowsPerBand)
     intercept[IllegalArgumentException] {
-      DedupOps.dedupDeltaBatchPruned(docs.limit(5).select("doc_id"), bs,
-        indexPath, JaccardThreshold, nParts = DedupOps.IndexParts * 2)
+      SignatureIndex.probe(docs.limit(5).select("doc_id"), bs,
+        indexPath, JaccardThreshold, nParts = SignatureIndex.IndexParts * 2)
     }
     // wrong params on append: would shard new rows inconsistently
     intercept[IllegalArgumentException] {
-      DedupOps.writeSignatureIndex(bs, indexPath,
+      SignatureIndex.write(bs, indexPath,
         NumPerms, NumBands + 1, RowsPerBand, mode = "append")
     }
     assert(spark.read.parquet(s"$indexPath/sigs")
       .collect().map(_.toString).sorted.toSeq == snapshot)
   }
 
-  test("crash-safe rewrite: staging is invisible to readers; recovery rolls a completed staging forward") {
+  private def crashRollForward(leaf: String): Unit = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     def part(m: Int) = docs.where(col("doc_id") % 3 === m)
-    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "crash_fwd")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, leaf)
+    SignatureIndex.write(DedupOps.signatureIndex(
       part(0), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       part(1), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand, mode = "append")
     def snapshot(table: String) = spark.read.parquet(s"$indexPath/$table")
@@ -316,7 +316,7 @@ class IncrementalDedupSpec extends SparkSpec {
           .filter(d => d.isDirectory && d.getName.startsWith(s"$ptCol="))
           .map(_.getName.stripPrefix(s"$ptCol=").toInt).toSeq
         val rows = spark.read.parquet(s"$indexPath/$table").where(col(ptCol).isin(pts: _*))
-        DedupOps.stageShards(rows, s"$indexPath/$table", ptCol, pts.size, pts)
+        ShardedStore.stage(rows, ShardedStore.Table(s"$indexPath/$table", ptCol), pts)
       }
     stageAll()
     assert(snapshot("sigs") == sigsBefore && snapshot("bands") == bandsBefore,
@@ -325,7 +325,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // crash BEFORE the store-level commit marker: recovery rolls BACK —
     // the staging is discarded, live dirs stay byte-identical (still
     // crowded: the compaction never happened)
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(snapshot("sigs") == sigsBefore && snapshot("bands") == bandsBefore)
     assert(maxFilesPerShard("sigs") >= 2,
       "rollback should leave the pre-compaction layout untouched")
@@ -333,7 +333,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // one file per shard, no staging/backup litter left behind
     stageAll()
     graft.ops.ShardedStore.commit(spark, indexPath)
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(snapshot("sigs") == sigsBefore && snapshot("bands") == bandsBefore)
     assert(maxFilesPerShard("sigs") == 1 && maxFilesPerShard("bands") == 1)
     for (t <- Seq("sigs", "bands")) {
@@ -344,7 +344,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // probes against the recovered index are verdict-identical
     val bs = DedupOps.signatureIndex(
       part(2), ShingleK, NumPerms, NumBands, RowsPerBand)
-    val got = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val got = verdictMap(SignatureIndex.probe(
       part(2).select("doc_id"), bs, indexPath, JaccardThreshold))
     val want = expectedVerdicts(
       part(2).select("doc_id").collect().map(_.getLong(0)).toSeq,
@@ -352,11 +352,11 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("crash-safe rewrite: mid-swap crash states recover; incomplete staging rolls back") {
+  private def crashMidSwap(leaf: String): Unit = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "crash_mid")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, leaf)
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     def snapshot() = spark.read.parquet(s"$indexPath/sigs")
@@ -374,24 +374,33 @@ class IncrementalDedupSpec extends SparkSpec {
     // missing, staged+old present) and shard B fully swapped except the
     // backup delete (live new, old present)
     val rows = spark.read.parquet(s"$indexPath/sigs")
-    DedupOps.stageShards(rows, s"$indexPath/sigs", "doc_pt", shards.size, shards)
+    ShardedStore.stage(rows, ShardedStore.Table(s"$indexPath/sigs", "doc_pt"), shards)
     graft.ops.ShardedStore.commit(spark, indexPath)
     val (a, b) = (shards.head, shards(1))
     fs.rename(p(s"$indexPath/sigs/doc_pt=$a"), p(s"$indexPath/sigs/.old.doc_pt=$a"))
     fs.rename(p(s"$indexPath/sigs/doc_pt=$b"), p(s"$indexPath/sigs/.old.doc_pt=$b"))
     fs.rename(p(s"$indexPath/sigs/.staging/doc_pt=$b"), p(s"$indexPath/sigs/doc_pt=$b"))
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(snapshot() == before, "forward recovery lost or duplicated rows")
     assert(!fs.exists(p(s"$indexPath/sigs/.staging")))
     // incomplete staging (no _SUCCESS) + one half-swapped shard → ROLLBACK
     // (fresh read: recovery replaced the files behind the earlier plan)
     val rows2 = spark.read.parquet(s"$indexPath/sigs")
-    DedupOps.stageShards(rows2.limit(1), s"$indexPath/sigs", "doc_pt", 1, Seq(a))
+    ShardedStore.stage(rows2.limit(1),
+      ShardedStore.Table(s"$indexPath/sigs", "doc_pt"), Seq(a))
     fs.delete(p(s"$indexPath/sigs/.staging/_SUCCESS"), false)
     fs.rename(p(s"$indexPath/sigs/doc_pt=$a"), p(s"$indexPath/sigs/.old.doc_pt=$a"))
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(snapshot() == before, "rollback did not restore the pre-rewrite state")
     assert(!fs.exists(p(s"$indexPath/sigs/.staging")))
+  }
+
+  test("crash-safe rewrite: staging is invisible to readers; recovery rolls a completed staging forward") {
+    crashRollForward("crash_fwd")
+  }
+
+  test("crash-safe rewrite: mid-swap crash states recover; incomplete staging rolls back") {
+    crashMidSwap("crash_mid")
   }
 
   test("logical forget (tombstones): probe verdicts equal physical removal; purge at compaction converges and clears") {
@@ -402,12 +411,12 @@ class IncrementalDedupSpec extends SparkSpec {
     val phys = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "tomb_phys")
     val logi = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "tomb_logi")
     for (p <- Seq(phys, logi))
-      DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+      SignatureIndex.write(DedupOps.signatureIndex(
         docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
         p, NumPerms, NumBands, RowsPerBand)
     val forget = docs.where(forgetPred).select("doc_id")
-    DedupOps.removeFromSignatureIndex(forget, phys, NumPerms, NumBands, RowsPerBand)
-    DedupOps.tombstoneInSignatureIndex(forget, logi)
+    SignatureIndex.remove(forget, phys, NumPerms, NumBands, RowsPerBand)
+    SignatureIndex.tombstone(forget, logi)
     // the tombstone table is tiny — O(|F|), not shards-hit-sized
     def dirBytes(p: String): Long = {
       def walk(f: java.io.File): Long =
@@ -420,7 +429,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // probe verdicts: logical == physical == driver recompute
     val bs = DedupOps.signatureIndex(
       docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-    def probe(p: String) = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    def probe(p: String) = verdictMap(SignatureIndex.probe(
       docs.where(isBatch).select("doc_id"), bs, p, JaccardThreshold))
     val vPhys = probe(phys)
     val vLogi = probe(logi)
@@ -429,10 +438,10 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(vLogi == expectedVerdicts(batchIds, collectSigs(docs.where(isBatch)),
       collectSigs(docs.where(!isBatch && !forgetPred))))
     // presence excludes tombstoned docs (the receipt semantics)
-    assert(DedupOps.presentInSignatureIndex(forget, logi).count() == 0)
+    assert(SignatureIndex.present(forget, logi).count() == 0)
     // purge: compaction physically removes tombstoned docs, clears the
     // table, and the index files converge to the physical path's content
-    DedupOps.compactSignatureIndex(spark, logi)
+    SignatureIndex.compact(spark, logi)
     assert(!new java.io.File(s"$logi/tombstones").exists(), "tombstones not cleared")
     def ids(p: String, t: String) = spark.read.parquet(s"$p/$t")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
@@ -440,8 +449,8 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(ids(logi, "bands") == ids(phys, "bands"))
     assert(probe(logi) == vPhys, "post-purge verdicts drifted")
     // idempotent purge debt: a crash between purge and clear replays safely
-    DedupOps.tombstoneInSignatureIndex(forget, logi) // already-purged ids
-    DedupOps.compactSignatureIndex(spark, logi)
+    SignatureIndex.tombstone(forget, logi) // already-purged ids
+    SignatureIndex.compact(spark, logi)
     assert(ids(logi, "sigs") == ids(phys, "sigs") && probe(logi) == vPhys)
     bs.unpersist(): Unit
   }
@@ -459,19 +468,19 @@ class IncrementalDedupSpec extends SparkSpec {
     val crashed = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "append_crash")
     val clean = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "append_clean")
     for (p <- Seq(crashed, clean))
-      DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+      SignatureIndex.write(DedupOps.signatureIndex(
         part(0), ShingleK, NumPerms, NumBands, RowsPerBand),
         p, NumPerms, NumBands, RowsPerBand)
     val b1 = DedupOps.signatureIndex(
       part(1), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-    DedupOps.appendNewToSignatureIndex(b1, clean, NumPerms, NumBands, RowsPerBand)
+    SignatureIndex.appendNew(b1, clean, NumPerms, NumBands, RowsPerBand)
     // crashed path: bands land, sigs never do (the exact window), retry
-    val nParts = DedupOps.IndexParts
+    val nParts = SignatureIndex.IndexParts
     b1.select(col("doc_id"), explode(col("bands")).as("bk"))
       .withColumn("band_pt", pmod(xxhash64(col("bk")), lit(nParts.toLong)).cast("int"))
       .repartition(nParts, col("band_pt"))
       .write.mode("append").partitionBy("band_pt").parquet(s"$crashed/bands")
-    DedupOps.appendNewToSignatureIndex(b1, crashed, NumPerms, NumBands, RowsPerBand)
+    SignatureIndex.appendNew(b1, crashed, NumPerms, NumBands, RowsPerBand)
     val b1Bands = b1.select(col("doc_id"), explode(col("bands"))).count()
     assert(b1Bands > 0, "batch produced no band rows — vacuous")
     def cnt(p: String, t: String) = spark.read.parquet(s"$p/$t").count()
@@ -482,14 +491,14 @@ class IncrementalDedupSpec extends SparkSpec {
     // verdicts are identical against the duplicated index
     val b2 = DedupOps.signatureIndex(
       part(2), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-    val viaCrashed = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val viaCrashed = verdictMap(SignatureIndex.probe(
       part(2).select("doc_id"), b2, crashed, JaccardThreshold))
-    val viaClean = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val viaClean = verdictMap(SignatureIndex.probe(
       part(2).select("doc_id"), b2, clean, JaccardThreshold))
     assert(viaCrashed == viaClean, "bands duplication changed verdicts")
     assert(viaCrashed.values.exists(_._1 == "drop"), "no drop in fixture — weak")
     // compaction settles the debt: content equals the crash-free index
-    DedupOps.compactSignatureIndex(spark, crashed)
+    SignatureIndex.compact(spark, crashed)
     def bandRows(p: String) = spark.read.parquet(s"$p/bands")
       .select("doc_id", "bk").collect().map(_.toString).sorted.toSeq
     assert(bandRows(crashed) == bandRows(clean),
@@ -507,7 +516,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "empty_shard")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -526,10 +535,10 @@ class IncrementalDedupSpec extends SparkSpec {
     // then CRASH before any swap.
     val kept = spark.read.parquet(s"$indexPath/sigs")
       .where(col("doc_pt") === shard && lit(false))
-    DedupOps.stageShards(kept, s"$indexPath/sigs", "doc_pt", 1, Seq(shard))
+    ShardedStore.stage(kept, ShardedStore.Table(s"$indexPath/sigs", "doc_pt"), Seq(shard))
     graft.ops.ShardedStore.commit(spark, indexPath)
     assert(fs.exists(p(s"$indexPath/sigs/doc_pt=$shard")), "live shard gone pre-swap")
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(!fs.exists(p(s"$indexPath/sigs/doc_pt=$shard")),
       "emptied shard not retired on roll-forward — forgotten docs stay matchable")
     assert(!fs.exists(p(s"$indexPath/sigs/.staging")))
@@ -548,7 +557,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "swapped_keep")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -562,7 +571,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .map(_.getName.stripPrefix("doc_pt=").toInt).sorted.toSeq
     assert(shards.size >= 2, "need >=2 shards")
     val rows = spark.read.parquet(s"$indexPath/sigs")
-    DedupOps.stageShards(rows, s"$indexPath/sigs", "doc_pt", shards.size, shards)
+    ShardedStore.stage(rows, ShardedStore.Table(s"$indexPath/sigs", "doc_pt"), shards)
     graft.ops.ShardedStore.commit(spark, indexPath)
     // shard A's swap runs TO COMPLETION (live→old, staged→live, old
     // dropped), then CRASH with the other shards still staged
@@ -570,7 +579,7 @@ class IncrementalDedupSpec extends SparkSpec {
     fs.rename(p(s"$indexPath/sigs/doc_pt=$a"), p(s"$indexPath/sigs/.old.doc_pt=$a"))
     fs.rename(p(s"$indexPath/sigs/.staging/doc_pt=$a"), p(s"$indexPath/sigs/doc_pt=$a"))
     fs.delete(p(s"$indexPath/sigs/.old.doc_pt=$a"), true)
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(fs.exists(p(s"$indexPath/sigs/doc_pt=$a")),
       "recovery retired a fully-swapped shard's live content")
     assert(snapshot() == before, "recovery lost or duplicated rows")
@@ -585,7 +594,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "old_sweep")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs, ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -602,7 +611,8 @@ class IncrementalDedupSpec extends SparkSpec {
       // up to (but not including) the backup delete — the exact window
       val rows = spark.read.parquet(s"$indexPath/$table")
         .where(col(ptCol) === shard)
-      DedupOps.stageShards(rows, s"$indexPath/$table", ptCol, 1, Seq(shard))
+      ShardedStore.stage(rows,
+        ShardedStore.Table(s"$indexPath/$table", ptCol), Seq(shard))
       fs.rename(p(s"$indexPath/$table/$ptCol=$shard"),
         p(s"$indexPath/$table/.old.$ptCol=$shard"))
       fs.rename(p(s"$indexPath/$table/.staging/$ptCol=$shard"),
@@ -610,7 +620,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // CRASH: .old. present, staging dir (with _SUCCESS + _pts) present
     }
     graft.ops.ShardedStore.commit(spark, indexPath) // swaps run post-marker
-    DedupOps.recoverSignatureIndex(spark, indexPath)
+    SignatureIndex.recover(spark, indexPath)
     assert(snapshot("sigs") == sigsBefore && snapshot("bands") == bandsBefore,
       "recovery changed content while sweeping backups")
     for (t <- Seq("sigs", "bands")) {
@@ -626,22 +636,22 @@ class IncrementalDedupSpec extends SparkSpec {
     val isBatch = col("doc_id") % 5 === 0
     import spark.implicits._
     val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "tomb_guard")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
       indexPath, NumPerms, NumBands, RowsPerBand)
     // the manifest records the threshold; bootstrap stamps the default
-    assert(DedupOps.tombstoneBroadcastLimit(spark, indexPath) ==
-      DedupOps.DefaultTombstoneBroadcastBytes)
+    assert(SignatureIndex.tombstoneBroadcastLimit(spark, indexPath) ==
+      SignatureIndex.DefaultTombstoneBroadcastBytes)
     // one forget call per id: each appends a file — the fold must keep
     // the table's file count bounded regardless of call count
     val forgetIds = docs.where(!isBatch && col("doc_id") % 7 === 1)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(forgetIds.size > DedupOps.TombstoneFoldMinFiles, "fixture too small")
+    assert(forgetIds.size > SignatureIndex.TombstoneFoldMinFiles, "fixture too small")
     forgetIds.foreach(id =>
-      DedupOps.tombstoneInSignatureIndex(Seq(id).toDF("doc_id"), indexPath))
+      SignatureIndex.tombstone(Seq(id).toDF("doc_id"), indexPath))
     val tombFiles = new java.io.File(s"$indexPath/tombstones").listFiles()
       .count(_.getName.endsWith(".parquet"))
-    assert(tombFiles <= DedupOps.TombstoneFoldMinFiles,
+    assert(tombFiles <= SignatureIndex.TombstoneFoldMinFiles,
       s"$tombFiles tombstone files after ${forgetIds.size} appends — fold broken")
     assert(spark.read.parquet(s"$indexPath/tombstones")
       .select("doc_id").as[Long].collect().toSet == forgetIds.toSet,
@@ -651,7 +661,7 @@ class IncrementalDedupSpec extends SparkSpec {
     def antiJoinNodes(plan: String): Seq[String] = plan.split("\n")
       .filter(_.contains("LeftAnti")).toSeq
     def probePlan(): (Map[Long, (String, Long, Long, String)], Seq[String]) = {
-      val (lazyFrame, cached) = DedupOps.dedupDeltaBatchPrunedPlan(
+      val (lazyFrame, cached) = SignatureIndex.probePlan(
         docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
         JaccardThreshold)
       val plan = lazyFrame.queryExecution.executedPlan.toString
@@ -665,8 +675,8 @@ class IncrementalDedupSpec extends SparkSpec {
       s"expected broadcast anti-join under the threshold:\n${antisDefault.mkString("\n")}")
     // drive the table PAST the (operator-lowered) threshold: the probe
     // must fall back to a non-broadcast anti-join with identical verdicts
-    DedupOps.setTombstoneBroadcastLimit(spark, indexPath, 1L)
-    assert(DedupOps.tombstoneBroadcastLimit(spark, indexPath) == 1L)
+    SignatureIndex.setTombstoneBroadcastLimit(spark, indexPath, 1L)
+    assert(SignatureIndex.tombstoneBroadcastLimit(spark, indexPath) == 1L)
     val (vShuffle, antisLow) = probePlan()
     assert(antisLow.exists(n => !n.contains("BroadcastHashJoin")),
       s"probe still broadcasts past the threshold:\n${antisLow.mkString("\n")}")
@@ -676,12 +686,12 @@ class IncrementalDedupSpec extends SparkSpec {
     // path's contract survives the fallback)
     assert(vShuffle.values.exists(_._1 == "drop"), "no drop in fixture — weak")
     val phys = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "tomb_guard_phys")
-    DedupOps.writeSignatureIndex(DedupOps.signatureIndex(
+    SignatureIndex.write(DedupOps.signatureIndex(
       docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
       phys, NumPerms, NumBands, RowsPerBand)
-    DedupOps.removeFromSignatureIndex(forgetIds.toDF("doc_id"), phys,
+    SignatureIndex.remove(forgetIds.toDF("doc_id"), phys,
       NumPerms, NumBands, RowsPerBand)
-    val vPhys = verdictMap(DedupOps.dedupDeltaBatchPruned(
+    val vPhys = verdictMap(SignatureIndex.probe(
       docs.where(isBatch).select("doc_id"), batchSigs, phys, JaccardThreshold))
     assert(vShuffle == vPhys, "fallback verdicts diverged from physical forget")
     batchSigs.unpersist(): Unit
@@ -696,12 +706,20 @@ class IncrementalDedupSpec extends SparkSpec {
     val indexPath = DedupQueries.stagedDeltaIndex(spark, dir)
     val bs = DedupOps.signatureIndex(
       docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand)
-    val (lazyVerdicts, cached) = DedupOps.dedupDeltaBatchPrunedPlan(
+    val (lazyVerdicts, cached) = SignatureIndex.probePlan(
       docs.where(isBatch).select("doc_id"), bs, indexPath, JaccardThreshold,
       nParts = DedupQueries.TestIndexParts)
     val plan = lazyVerdicts.queryExecution.executedPlan.toString
     cached.foreach(_.unpersist(): Unit)
     assert(!plan.contains("CartesianProduct"), "cartesian in delta-dedup plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "broadcast-NL in delta-dedup plan")
+  }
+
+  test("reliable checkpoint mode: the crash-safe rewrite battery recovers " +
+      "the same states, checkpointing into its own dir") {
+    ReliableCheckpoints(spark, "sig_crash") {
+      crashRollForward("crash_fwd_reliable")
+      crashMidSwap("crash_mid_reliable")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.DedupOps
+import graft.ops.ClusterStore
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -26,7 +26,7 @@ class MergeProbePlanSpec extends SparkSpec {
     val p = graft.ops.Staging.dir("/tmp/graft_probe_plan",
       "/root/testdata/sf0.001", "store")
     // a store with real content and stored evidence
-    DedupOps.mergeClustersBatch(
+    ClusterStore.merge(
       Seq(1L, 2L, 3L, 4L, 5L).toDF("id"),
       Seq((1L, 2L), (2L, 3L)).toDF("id_l", "id_r"), p)
     val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
@@ -42,7 +42,7 @@ class MergeProbePlanSpec extends SparkSpec {
     try {
       // REPLAY: every pair stored, every doc present — the hot path is
       // the lookup+probe collect and nothing else
-      DedupOps.mergeClustersBatch(
+      ClusterStore.merge(
         Seq(4L).toDF("id"), Seq((2L, 3L)).toDF("id_l", "id_r"), p).count()
       // drain the async listener bus: poll until the capture is quiet
       var last = -1

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.SignatureIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import graft.queries.{GeoPipeline, MixQueries, Relational, TextQueries}
@@ -346,7 +347,7 @@ class PlanSpec extends SparkSpec {
     val indexPath = stagedDeltaIndex(spark, sf)
     val bs = DedupOps.signatureIndex(
       docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-    val (df, cached) = DedupOps.dedupDeltaBatchPrunedPlan(
+    val (df, cached) = SignatureIndex.probePlan(
       docs.where(isBatch).select("doc_id"), bs, indexPath,
       JaccardThreshold, nParts = TestIndexParts)
     val plan = df.queryExecution.executedPlan.toString

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-import graft.ops.DedupOps
+import graft.ops.{Checkpoints, ClusterStore, SignatureIndex}
 import graft.streaming.StreamingOps
 
 /** One small pass over every mutating op of the three persisted stores
@@ -33,12 +33,15 @@ object StoreCycle {
       if (!new java.io.File(path).exists()) 0L
       else spark.read.schema(s"$idCol BIGINT").parquet(path).count()
 
-    def checkpointDirs(): Set[String] = sc.getCheckpointDir.toSeq.flatMap { d =>
-      val dir = new Path(d)
-      val fs = dir.getFileSystem(sc.hadoopConfiguration)
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath.toString)
-    }.toSet
+    // the RDD checkpoint dirs under the configured dir (Spark adds a UUID
+    // level between the two)
+    def checkpointDirs(): Set[String] =
+      spark.conf.getOption(Checkpoints.DirKey).toSeq.flatMap { d =>
+        val dir = new Path(d)
+        val fs = dir.getFileSystem(sc.hadoopConfiguration)
+        def subdirs(p: Path) = fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+        if (!fs.exists(dir)) Nil else subdirs(dir).flatMap(subdirs).map(_.toString)
+      }.toSet
 
     def step(op: String, counts: => Seq[(String, Long)])(body: => Option[DataFrame]): Step = {
       val rdds0 = sc.getPersistentRDDs.keySet.toSet
@@ -75,7 +78,7 @@ object StoreCycle {
       step("forget", indexCounts)(
         Some(StreamingOps.forgetBatch(ids1.slice(6, 12).toDF("doc_id"), index))),
       step("compact", indexCounts) {
-        DedupOps.compactSignatureIndex(spark, index); None
+        SignatureIndex.compact(spark, index); None
       })
 
     // cluster store: {1,2,3} and {4,5} bootstrap, a merge that relabels
@@ -85,13 +88,13 @@ object StoreCycle {
       "by_cluster" -> rowsIn(s"$clusters/by_cluster", "doc_id"),
       "edges" -> rowsIn(s"$clusters/edges", "id_l"))
     val clusterStore = Seq(
-      step("cluster bootstrap", clusterCounts)(Some(DedupOps.mergeClustersBatch(
+      step("cluster bootstrap", clusterCounts)(Some(ClusterStore.merge(
         Seq(1L, 2L, 3L, 4L, 5L).toDF("id"),
         Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_l", "id_r"), clusters))),
-      step("cluster merge", clusterCounts)(Some(DedupOps.mergeClustersBatch(
+      step("cluster merge", clusterCounts)(Some(ClusterStore.merge(
         Seq(6L).toDF("id"), Seq((3L, 4L), (5L, 6L)).toDF("id_l", "id_r"), clusters))),
       step("cluster forget", clusterCounts)(Some(
-        DedupOps.forgetFromClusterStore(Seq(3L).toDF("doc_id"), clusters))))
+        ClusterStore.forget(Seq(3L).toDF("doc_id"), clusters))))
 
     // IVF index: bootstrap, a searched insert, a forget, and a re-insert
     // of two forgotten vectors (purge, un-tombstone, insert)

@@ -1,10 +1,11 @@
 package graft.streaming
 
+import graft.ops.IvfIndex
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Crash matrix for the PER-GENERATION tombstone snapshot
-  * ([[StreamingOps.refreshCentroids]] copies the index-level deletion
+  * ([[IvfIndex.refreshCentroids]] copies the index-level deletion
   * vector into the generation it supersedes, under the successor's
   * `_GEN_OK` seal, so a reader pinned to that generation keeps its
   * forget filter after the vector drops — the r16 lookback leak).
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Invariant pinned here: **snapshot present iff sealed** — a refresh
   * that dies BEFORE sealing leaves snapshot litter in the still-current
   * generation, which recovery must NOT delete (readers run
-  * [[StreamingOps.recoverIndex]] concurrently with a live refresh — a
+  * [[IvfIndex.recover]] concurrently with a live refresh — a
   * reader-side delete would race the protocol); instead the two serial
   * WRITER ops that can invalidate it (refresh retry, re-ingest purge)
   * clear it first. A refresh that dies AFTER sealing rolls forward with
@@ -67,10 +68,10 @@ class GenTombstoneSnapshotSpec extends SparkSpec {
     // generation, successor dir created but never sealed
     copyDir(s"$p/tombstones", s"$g0/tombstones")
     new java.io.File(s"$p/g=1").mkdirs()
-    recoverIndex(spark, p)
+    IvfIndex.recover(spark, p)
     assert(!new java.io.File(s"$p/g=1").exists,
       "recovery kept an unsealed generation")
-    assert(currentGeneration(spark, p).contains(0L))
+    assert(IvfIndex.currentGeneration(spark, p).contains(0L))
     assert(new java.io.File(s"$g0/tombstones").exists,
       "recovery deleted the snapshot litter — racing a live refresh's " +
         "protocol is exactly what reader-side cleanup would do")
@@ -92,7 +93,7 @@ class GenTombstoneSnapshotSpec extends SparkSpec {
     // refresh RETRY: snapshot rewritten from the remaining live vector;
     // the pinned g=0 reader keeps filtering the still-forgotten ids but
     // may surface the re-admitted one
-    refreshCentroids(spark, p)
+    IvfIndex.refreshCentroids(spark, p)
     assert(new java.io.File(s"$g0/tombstones").exists,
       "refresh retry wrote no snapshot into the superseded generation")
     val pinned = partnerIds(p, g0, qs.toSeq ++ probe)
@@ -111,8 +112,8 @@ class GenTombstoneSnapshotSpec extends SparkSpec {
     copyDir(s"$g0/centroids", s"$p/g=1/centroids")
     copyDir(s"$g0/postings", s"$p/g=1/postings")
     new java.io.File(s"$p/g=1/_GEN_OK").createNewFile()
-    recoverIndex(spark, p)
-    assert(currentGeneration(spark, p).contains(1L),
+    IvfIndex.recover(spark, p)
+    assert(IvfIndex.currentGeneration(spark, p).contains(1L),
       "recovery did not roll the sealed successor forward")
     assert(new java.io.File(s"$g0/tombstones").exists,
       "roll-forward lost the superseded generation's snapshot")
@@ -178,8 +179,8 @@ class GenTombstoneSnapshotSpec extends SparkSpec {
       "absent in the new one, index-level vector dropped") {
     val (p, gone) = freshForgottenIndex("clean")
     val g0 = s"$p/g=0"
-    refreshCentroids(spark, p)
-    assert(currentGeneration(spark, p).contains(1L))
+    IvfIndex.refreshCentroids(spark, p)
+    assert(IvfIndex.currentGeneration(spark, p).contains(1L))
     assert(new java.io.File(s"$g0/tombstones").exists)
     assert(!new java.io.File(s"$p/g=1/tombstones").exists,
       "new generation is purged — it must carry no snapshot")

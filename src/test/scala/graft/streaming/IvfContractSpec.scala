@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.IvfIndex
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   *     derives its dim read-only and is adopted by the next insert.
   *
   *  2. THE PINNED-READER LOOKBACK WINDOW IS NAMED: a generation survives
-  *     exactly one [[StreamingOps.refreshCentroids]] cycle; a reader
+  *     exactly one [[IvfIndex.refreshCentroids]] cycle; a reader
   *     pinned across two gets a contract error naming the window, not a
   *     raw FileNotFoundException mid-probe. */
 class IvfContractSpec extends SparkSpec {
@@ -35,23 +36,23 @@ class IvfContractSpec extends SparkSpec {
   test("a dim-16 corpus runs end-to-end: insert, search, refresh, forget") {
     val p = freshPath("dim16")
     ivfSearchInsertBatch(dfv(0L to 29L), p, batchId = 1L)
-    assert(ivfIndexDim(spark, p).contains(Dim),
+    assert(IvfIndex.dim(spark, p).contains(Dim),
       "bootstrap did not record the corpus dim in the manifest")
     val hits = ivfSearchInsertBatch(dfv(30L to 59L), p, batchId = 2L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(hits.nonEmpty, "dim-16 second batch found no partners — vacuous")
     // exact-match probe through the pinned-reader path: an identical
     // vector must surface its twin at cosine 1.0 (cos_e6 = 1000000)
-    val g = resolveIndex(spark, p)
+    val g = IvfIndex.resolve(spark, p)
     val probe = Seq((900005L, vec(5L))).toDF("vec_id", "embedding")
     val top = ivfSearchResolved(probe, p, g).orderBy(col("rank"))
       .collect().map(r => (r.getLong(1), r.getLong(3)))
     assert(top.headOption.contains((5L, 1000000L)),
       s"exact dim-16 twin not the top hit: ${top.toSeq}")
     // refresh re-clusters at dim 16; the manifest survives
-    refreshCentroids(spark, p)
-    assert(ivfIndexDim(spark, p).contains(Dim))
-    val g1 = resolveIndex(spark, p)
+    IvfIndex.refreshCentroids(spark, p)
+    assert(IvfIndex.dim(spark, p).contains(Dim))
+    val g1 = IvfIndex.resolve(spark, p)
     assert(ivfSearchResolved(probe, p, g1).collect()
       .map(_.getLong(1)).headOption.contains(5L))
     // forget the twin: it must stop surfacing, everywhere
@@ -80,7 +81,7 @@ class IvfContractSpec extends SparkSpec {
     assert(spark.read.parquet(s"$p/g=0/postings").count() == posted,
       "a refused batch mutated the postings")
     // the reader enforces the same contract
-    val g = resolveIndex(spark, p)
+    val g = IvfIndex.resolve(spark, p)
     val exQ = intercept[IllegalArgumentException] {
       ivfSearchResolved(dfv(Seq(800L), dim = 8), p, g).count()
     }
@@ -93,13 +94,13 @@ class IvfContractSpec extends SparkSpec {
     ivfSearchInsertBatch(dfv(0L to 19L), p, batchId = 1L)
     // simulate a pre-r18 index: drop the manifest
     assert(new java.io.File(s"$p/_manifest.json").delete())
-    assert(ivfIndexDim(spark, p).contains(Dim),
+    assert(IvfIndex.dim(spark, p).contains(Dim),
       "legacy derivation from the stored centroids failed")
     assert(!new java.io.File(s"$p/_manifest.json").exists,
       "read-only derivation wrote a manifest")
     // a reader works against the legacy index; a wrong-dim query is
     // still refused (derived dim is enforced)
-    val g = resolveIndex(spark, p)
+    val g = IvfIndex.resolve(spark, p)
     intercept[IllegalArgumentException] {
       ivfSearchResolved(dfv(Seq(800L), dim = 8), p, g).count()
     }
@@ -107,7 +108,7 @@ class IvfContractSpec extends SparkSpec {
     ivfSearchInsertBatch(dfv(20L to 24L), p, batchId = 2L)
     assert(new java.io.File(s"$p/_manifest.json").exists,
       "insert did not adopt the legacy index into the manifest")
-    assert(ivfIndexDim(spark, p).contains(Dim))
+    assert(IvfIndex.dim(spark, p).contains(Dim))
     intercept[IllegalArgumentException] {
       ivfSearchInsertBatch(dfv(Seq(40L), dim = 8), p, batchId = 3L)
     }
@@ -121,7 +122,7 @@ class IvfContractSpec extends SparkSpec {
     // must keep reading (fmt defaults to 1)
     graft.ops.ShardedStore.writeTextFile(spark, s"$p/_manifest.json",
       s"""{"dim":$Dim}""")
-    assert(ivfIndexDim(spark, p).contains(Dim))
+    assert(IvfIndex.dim(spark, p).contains(Dim))
     graft.ops.ShardedStore.writeTextFile(spark, s"$p/_manifest.json",
       s"""{"fmt":99,"dim":$Dim}""")
     val ex = intercept[IllegalArgumentException] {
@@ -134,17 +135,17 @@ class IvfContractSpec extends SparkSpec {
       "lookback contract error, not a raw read failure") {
     val p = freshPath("lookback")
     ivfSearchInsertBatch(dfv(0L to 39L), p, batchId = 1L)
-    val g0 = resolveIndex(spark, p)
+    val g0 = IvfIndex.resolve(spark, p)
     val probe = Seq((900007L, vec(7L))).toDF("vec_id", "embedding")
-    refreshCentroids(spark, p)
+    IvfIndex.refreshCentroids(spark, p)
     // one refresh: the pin is inside the lookback window
     assert(new java.io.File(g0).exists, "predecessor pruned too early")
     assert(ivfSearchResolved(probe, p, g0).collect()
       .map(_.getLong(1)).headOption.contains(7L))
-    val g1 = resolveIndex(spark, p)
+    val g1 = IvfIndex.resolve(spark, p)
     // second refresh needs new content to matter, but prunes regardless
     ivfSearchInsertBatch(dfv(40L to 49L), p, batchId = 2L)
-    refreshCentroids(spark, p)
+    IvfIndex.refreshCentroids(spark, p)
     assert(!new java.io.File(g0).exists,
       "generation older than the predecessor survived the second refresh")
     val ex = intercept[IllegalStateException] {

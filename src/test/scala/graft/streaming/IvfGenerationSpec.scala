@@ -1,10 +1,11 @@
 package graft.streaming
 
+import graft.ops.IvfIndex
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins the generation-versioned IVF index layout: a probe that resolved
-  * the index before a [[StreamingOps.refreshCentroids]] keeps reading
+  * the index before a [[IvfIndex.refreshCentroids]] keeps reading
   * exactly one consistent (centroids, postings) generation — untouched by
   * the refresh — while a probe resolving after sees only the refreshed
   * pair (zero-downtime refresh); and every crash point of the
@@ -53,11 +54,11 @@ class IvfGenerationSpec extends SparkSpec {
 
   test("zero-downtime refresh: a pre-refresh reader keeps its consistent generation; a post-refresh reader sees the new one") {
     val root = freshIndex()
-    val before = resolveIndex(spark, root)
+    val before = IvfIndex.resolve(spark, root)
     val hitsBefore = probeFrom(before)
     val centsBefore = spark.read.parquet(s"$before/centroids")
       .collect().map(_.toString).sorted.toSeq
-    refreshCentroids(spark, root)
+    IvfIndex.refreshCentroids(spark, root)
     // the pre-refresh reader's generation is byte-for-byte still there:
     // same probe results, same centroids — one CONSISTENT pair
     assert(probeFrom(before) == hitsBefore,
@@ -67,7 +68,7 @@ class IvfGenerationSpec extends SparkSpec {
     // a new reader resolves the refreshed generation; postings and
     // centroids agree (every posting's cell exists) — consistency is
     // structural, not a race
-    val after = resolveIndex(spark, root)
+    val after = IvfIndex.resolve(spark, root)
     assert(after != before)
     val orphan = spark.read.parquet(s"$after/postings")
       .select("centroid_id").distinct()
@@ -84,22 +85,22 @@ class IvfGenerationSpec extends SparkSpec {
 
   test("a second refresh prunes only generations older than the predecessor") {
     val root = freshIndex()
-    refreshCentroids(spark, root) // g=0 -> g=1 (g=0 kept as lookback)
-    refreshCentroids(spark, root) // g=1 -> g=2 (g=0 pruned, g=1 kept)
+    IvfIndex.refreshCentroids(spark, root) // g=0 -> g=1 (g=0 kept as lookback)
+    IvfIndex.refreshCentroids(spark, root) // g=1 -> g=2 (g=0 pruned, g=1 kept)
     val gens = new java.io.File(root).listFiles().map(_.getName)
       .filter(_.startsWith("g=")).sorted.toSeq
     assert(gens == Seq("g=1", "g=2"), s"unexpected generations: $gens")
-    assert(resolveIndex(spark, root).endsWith("g=2"))
+    assert(IvfIndex.resolve(spark, root).endsWith("g=2"))
   }
 
   test("crash before seal: an unsealed new generation is discarded; the live one is untouched") {
     val root = freshIndex()
-    val live = resolveIndex(spark, root)
+    val live = IvfIndex.resolve(spark, root)
     val hits = probeFrom(live)
-    // simulate refreshCentroids dying mid-write: a partial g=1 with no
+    // simulate IvfIndex.refreshCentroids dying mid-write: a partial g=1 with no
     // _GEN_OK (content irrelevant — recovery must not read it)
     fsOf(root).mkdirs(p(s"$root/g=1/postings"))
-    val resolved = resolveIndex(spark, root) // runs recovery
+    val resolved = IvfIndex.resolve(spark, root) // runs recovery
     assert(resolved == live, "recovery moved the pointer to an unsealed generation")
     assert(!fsOf(root).exists(p(s"$root/g=1")), "unsealed generation not discarded")
     assert(probeFrom(live) == hits)
@@ -107,14 +108,14 @@ class IvfGenerationSpec extends SparkSpec {
 
   test("crash between seal and repoint: a sealed generation rolls FORWARD at open") {
     val root = freshIndex()
-    refreshCentroids(spark, root) // creates sealed g=1, pointer -> 1
+    IvfIndex.refreshCentroids(spark, root) // creates sealed g=1, pointer -> 1
     // rewind the pointer to 0, simulating a crash after _GEN_OK landed
     // but before the repoint
     val fs = fsOf(root)
     fs.delete(p(s"$root/_gen"), false)
     val out = fs.create(p(s"$root/_gen"), true)
     out.write("0".getBytes("UTF-8")); out.close()
-    val resolved = resolveIndex(spark, root)
+    val resolved = IvfIndex.resolve(spark, root)
     assert(resolved.endsWith("g=1"),
       s"sealed generation not rolled forward: resolved $resolved")
     // the superseded generation survives as the lookback
@@ -123,9 +124,9 @@ class IvfGenerationSpec extends SparkSpec {
 
   test("crash inside the pointer rewrite: a missing pointer repoints the max complete generation") {
     val root = freshIndex()
-    refreshCentroids(spark, root) // g=0 sealed (bootstrap), g=1 sealed
+    IvfIndex.refreshCentroids(spark, root) // g=0 sealed (bootstrap), g=1 sealed
     fsOf(root).delete(p(s"$root/_gen"), false) // the delete+rename window
-    val resolved = resolveIndex(spark, root)
+    val resolved = IvfIndex.resolve(spark, root)
     assert(resolved.endsWith("g=1"),
       s"missing pointer not repaired to the max complete generation: $resolved")
   }
@@ -140,7 +141,7 @@ class IvfGenerationSpec extends SparkSpec {
       .toDF("centroid_id", "vec_id", "embedding", "batch_id")
       .repartition(col("centroid_id"))
       .write.partitionBy("centroid_id", "batch_id").parquet(s"$root/postings")
-    val gd = resolveIndex(spark, root)
+    val gd = IvfIndex.resolve(spark, root)
     assert(gd.endsWith("g=0"), s"legacy layout not adopted: $gd")
     assert(spark.read.parquet(s"$gd/postings").count() == corpus.size)
     // the real op searches and inserts against the adopted index
@@ -152,12 +153,12 @@ class IvfGenerationSpec extends SparkSpec {
     val root = freshIndex()
     ivfSearchInsertBatch(batch.map { case (i, v) => (i + 100, v) }
       .toDF("vec_id", "embedding"), root, batchId = 2L)
-    refreshCentroids(spark, root)
-    val gd = resolveIndex(spark, root)
+    IvfIndex.refreshCentroids(spark, root)
+    val gd = IvfIndex.resolve(spark, root)
     def rows() = spark.read.parquet(s"$gd/postings")
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     val before = rows()
-    compactPostings(spark, root, upToBatchId = 1L)
+    IvfIndex.compact(spark, root, upToBatchId = 1L)
     assert(rows() == before, "compaction changed content")
     val horizonDirs = new java.io.File(s"$gd/postings").listFiles()
       .filter(_.getName.startsWith("centroid_id=")).flatMap(_.listFiles())

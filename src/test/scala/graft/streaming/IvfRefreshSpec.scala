@@ -1,11 +1,12 @@
 package graft.streaming
 
+import graft.ops.IvfIndex
 import graft.SparkSpec
 import graft.ops.VectorOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Pins [[StreamingOps.refreshCentroids]] against the frozen bootstrap
+/** Pins [[IvfIndex.refreshCentroids]] against the frozen bootstrap
   * index it replaces, on a fixture with PLANTED DRIFT — the scenario the
   * op exists for. (On structureless data, IVF recall is centroid-set-
   * agnostic up to noise — measured on the sf0.001 embeddings before this
@@ -53,7 +54,7 @@ class IvfRefreshSpec extends SparkSpec {
   private def meanRecallE4(indexPath: String,
                            queries: Seq[(Long, Seq[Float])]): Long = {
     val q = queries.toDF("q_id", "q_vec")
-    val gd = StreamingOps.resolveIndex(spark, indexPath)
+    val gd = IvfIndex.resolve(spark, indexPath)
     val cents = spark.read.parquet(s"$gd/centroids")
     val postings = spark.read.parquet(s"$gd/postings")
       .select("vec_id", "embedding", "centroid_id")
@@ -87,7 +88,7 @@ class IvfRefreshSpec extends SparkSpec {
     val gone = Seq(7L, 13L, 421L, 473L) // corpus + both drifted batches
     forgetVectorsBatch(gone.toDF("vec_id"), indexPath).count()
     def postings() = spark.read.parquet(
-      s"${StreamingOps.resolveIndex(spark, indexPath)}/postings")
+      s"${IvfIndex.resolve(spark, indexPath)}/postings")
     // still on disk (logical forget), but unmatchable: a probe AT one of
     // the forgotten vectors must not return it
     assert(postings().where(col("vec_id").isin(gone: _*)).count() == gone.size)
@@ -99,7 +100,7 @@ class IvfRefreshSpec extends SparkSpec {
       s"forgotten vector surfaced as a partner: $probeAtGone")
     // compaction purges the merged horizon (batches <= 1) but keeps the
     // deletion vector (batch-2 rows may still carry tombstoned ids)
-    compactPostings(spark, indexPath, upToBatchId = 1L)
+    IvfIndex.compact(spark, indexPath, upToBatchId = 1L)
     val afterCompact = postings().where(col("vec_id").isin(gone: _*))
       .select("vec_id").as[Long].collect().toSet
     assert(afterCompact == Set(473L),
@@ -108,7 +109,7 @@ class IvfRefreshSpec extends SparkSpec {
       "compaction must NOT drop the deletion vector")
     // refresh rewrites everything: zero forgotten rows in the new
     // generation, centroids fitted without them, vector dropped
-    refreshCentroids(spark, indexPath)
+    IvfIndex.refreshCentroids(spark, indexPath)
     assert(postings().where(col("vec_id").isin(gone: _*)).count() == 0,
       "refresh left forgotten rows in the new generation")
     assert(!new java.io.File(s"$indexPath/tombstones").exists,
@@ -130,11 +131,11 @@ class IvfRefreshSpec extends SparkSpec {
     val corpusQ = corpus.filter(_._1 % 50 == 1)   // 8 in-distribution queries
     val driftedQ = drifted.filter(_._1 % 10 == 7) // 10 drifted queries
     def postingsContent() = spark.read
-      .parquet(s"${StreamingOps.resolveIndex(spark, indexPath)}/postings")
+      .parquet(s"${IvfIndex.resolve(spark, indexPath)}/postings")
       .select(col("vec_id"), col("batch_id").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val frozenContent = postingsContent()
-    val frozenGen = StreamingOps.resolveIndex(spark, indexPath)
+    val frozenGen = IvfIndex.resolve(spark, indexPath)
     val frozenK = spark.read.parquet(s"$frozenGen/centroids").count()
     val frozenAll = meanRecallE4(indexPath, corpusQ ++ driftedQ)
     val frozenDrifted = meanRecallE4(indexPath, driftedQ)
@@ -143,7 +144,7 @@ class IvfRefreshSpec extends SparkSpec {
     assert(frozenDrifted <= 6000,
       s"drifted queries not degraded under frozen centroids ($frozenDrifted) — fixture vacuous")
 
-    refreshCentroids(spark, indexPath)
+    IvfIndex.refreshCentroids(spark, indexPath)
 
     // content: every (vec_id, batch_id) posting survives exactly once
     assert(postingsContent() == frozenContent,
@@ -151,7 +152,7 @@ class IvfRefreshSpec extends SparkSpec {
     // generation swap: pointer advanced, the PREVIOUS generation dir
     // survives untouched (the zero-downtime lookback for readers that
     // resolved before the repoint)
-    val refreshedGen = StreamingOps.resolveIndex(spark, indexPath)
+    val refreshedGen = IvfIndex.resolve(spark, indexPath)
     assert(refreshedGen != frozenGen, "refresh did not advance the generation")
     assert(new java.io.File(s"$frozenGen/centroids").exists() &&
       new java.io.File(s"$frozenGen/postings").exists(),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.IvfIndex
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -7,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the committed, seeded form of the r17 post-gate campaign (PLANS.md:
   * 60 steps over insert / re-ingest / forget / refresh / compact with a
   * pinned reader, 0 failures). The generation/snapshot machinery
-  * ([[StreamingOps.refreshCentroids]]'s per-generation tombstone
+  * ([[IvfIndex.refreshCentroids]]'s per-generation tombstone
   * snapshot, the re-ingest purge, compaction) keeps changing; chosen-case
   * specs ([[GenTombstoneSnapshotSpec]]) pin the scenarios we thought of,
   * this fuzz composes them randomly.
@@ -60,7 +61,7 @@ class IvfRetractionFuzzSpec extends SparkSpec {
       live ++= ids; ever ++= ids
     }
     insert(Seq.fill(6)({ nextId += 1; nextId }))
-    var pinned = resolveIndex(spark, p)
+    var pinned = IvfIndex.resolve(spark, p)
     for (step <- 1 to steps) {
       // tail-forcing keeps the campaign non-vacuous under ANY seed: a
       // forget, then a re-ingest, then a refresh are guaranteed if the
@@ -95,16 +96,16 @@ class IvfRetractionFuzzSpec extends SparkSpec {
             forgets += 1
           }
         case 3 => // REFRESH (re-pin after: pins last ONE cycle)
-          refreshCentroids(spark, p)
+          IvfIndex.refreshCentroids(spark, p)
           refreshes += 1
-          pinned = resolveIndex(spark, p)
+          pinned = IvfIndex.resolve(spark, p)
         case 4 => // COMPACT up to a random horizon
-          compactPostings(spark, p, upToBatchId = rng.nextLong(batchId) + 1)
+          IvfIndex.compact(spark, p, upToBatchId = rng.nextLong(batchId) + 1)
       }
-      if (rng.nextInt(4) == 0) pinned = resolveIndex(spark, p) // random re-pin
+      if (rng.nextInt(4) == 0) pinned = IvfIndex.resolve(spark, p) // random re-pin
       // ---- invariants ----
       val forgotten = (ever -- live).toSeq.sorted
-      val cur = resolveIndex(spark, p)
+      val cur = IvfIndex.resolve(spark, p)
       // query EVERY ever-seen id's exact embedding under a fresh q_id:
       // forgotten ids must never surface anywhere; live ids must be
       // exactly matchable (cos_e6 = 1e6) in the current generation
@@ -143,5 +144,10 @@ class IvfRetractionFuzzSpec extends SparkSpec {
       "matchable (seeds 21, 22)") {
     campaign(seed = 21L, steps = 12)
     campaign(seed = 22L, steps = 12)
+  }
+
+  test("reliable checkpoint mode: the seed-21 campaign never surfaces a " +
+      "forgotten vector, checkpointing into its own dir") {
+    graft.ReliableCheckpoints(spark, "ivf_fuzz")(campaign(seed = 21L, steps = 12))
   }
 }

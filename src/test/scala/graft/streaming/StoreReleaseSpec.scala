@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions.col
 
 import graft.{SparkSpec, StoreCycle}
-import graft.ops.DedupOps
+import graft.ops.SignatureIndex
 
 /** Store ops leave persisted only what they return: a steady-state ingest
   * its settled verdicts, a compaction nothing. Counted as RDD ids that
@@ -33,7 +33,7 @@ class StoreReleaseSpec extends SparkSpec {
     assert(verdicts.count() === d2.size)
     // tombstones, so that the compaction runs its purge
     StreamingOps.forgetBatchLogical(d1.take(5).map(_._1).toDF("doc_id"), index).count()
-    val (_, compactLeft) = newPersisted(DedupOps.compactSignatureIndex(spark, index))
+    val (_, compactLeft) = newPersisted(SignatureIndex.compact(spark, index))
     assert(compactLeft === 0)
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.{IvfIndex, ShardedStore}
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, pmod}
@@ -738,17 +739,17 @@ class StreamingOpsSpec extends SparkSpec {
     for (root <- Seq(rootA, rootB); (b, i) <- thirds.take(3).zipWithIndex)
       StreamingOps.ivfSearchInsertBatch(df(b.toSeq), root, batchId = i.toLong)
     def content(root: String) = spark.read
-      .parquet(s"${StreamingOps.resolveIndex(spark, root)}/postings")
+      .parquet(s"${IvfIndex.resolve(spark, root)}/postings")
       .select(col("vec_id"), col("centroid_id").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     def parquetFiles(root: String): Int = {
       def walk(f: java.io.File): Int =
         if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
         else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(s"${StreamingOps.resolveIndex(spark, root)}/postings"))
+      walk(new java.io.File(s"${IvfIndex.resolve(spark, root)}/postings"))
     }
     val filesBefore = parquetFiles(rootA)
-    StreamingOps.compactPostings(spark, rootA, upToBatchId = 2L)
+    IvfIndex.compact(spark, rootA, upToBatchId = 2L)
     assert(parquetFiles(rootA) < filesBefore, "compaction reduced nothing")
     assert(content(rootA) == content(rootB), "compaction changed postings content")
     // a later batch sees identical search results on both layouts
@@ -773,7 +774,7 @@ class StreamingOpsSpec extends SparkSpec {
       root
     }
     def content(root: String) = spark.read
-      .parquet(s"${StreamingOps.resolveIndex(spark, root)}/postings")
+      .parquet(s"${IvfIndex.resolve(spark, root)}/postings")
       .select(col("vec_id"), col("centroid_id").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fsOf = (root: String) => org.apache.hadoop.fs.FileSystem.get(
@@ -783,10 +784,10 @@ class StreamingOpsSpec extends SparkSpec {
     // crash after phase 1 (staging complete, no swap): reads see the
     // original layout byte-identically; recovery rolls FORWARD
     val a = build(); val before = content(a)
-    val ga = StreamingOps.resolveIndex(spark, a)
-    assert(StreamingOps.stageCompactedPostings(spark, ga, upToBatchId = 2L))
+    val ga = IvfIndex.resolve(spark, a)
+    assert(IvfIndex.stageCompactedPostings(spark, ga, upToBatchId = 2L))
     assert(content(a) == before, "pre-swap staging leaked into reads")
-    StreamingOps.recoverPostings(spark, a)
+    IvfIndex.recover(spark, a)
     assert(content(a) == before, "forward recovery changed postings content")
     assert(!fsOf(a).exists(pth(s"$ga/postings/.compact_upto_2")), "staging litter")
     val horizonDirs = new java.io.File(s"$ga/postings").listFiles()
@@ -798,23 +799,23 @@ class StreamingOpsSpec extends SparkSpec {
     // crash mid-swap (a cell's merged dirs deleted, staged rename pending):
     // recovery completes that cell from the staging — nothing lost
     val b = build(); val beforeB = content(b)
-    val gb = StreamingOps.resolveIndex(spark, b)
-    assert(StreamingOps.stageCompactedPostings(spark, gb, upToBatchId = 2L))
+    val gb = IvfIndex.resolve(spark, b)
+    assert(IvfIndex.stageCompactedPostings(spark, gb, upToBatchId = 2L))
     val cellB = new java.io.File(s"$gb/postings").listFiles()
       .filter(d => d.isDirectory && d.getName.startsWith("centroid_id=")).head.getName
     new java.io.File(s"$gb/postings/$cellB").listFiles()
       .filter(d => d.isDirectory && d.getName.stripPrefix("batch_id=").toLong <= 2L)
       .foreach(d => fsOf(b).delete(pth(d.getPath), true): Unit)
-    StreamingOps.recoverPostings(spark, b)
+    IvfIndex.recover(spark, b)
     assert(content(b) == beforeB, "mid-swap recovery lost the deleted cell's rows")
 
     // incomplete staging (no _SUCCESS): ROLLBACK — live dirs untouched,
     // staging discarded
     val c = build(); val beforeC = content(c)
-    val gc = StreamingOps.resolveIndex(spark, c)
-    assert(StreamingOps.stageCompactedPostings(spark, gc, upToBatchId = 2L))
+    val gc = IvfIndex.resolve(spark, c)
+    assert(IvfIndex.stageCompactedPostings(spark, gc, upToBatchId = 2L))
     fsOf(c).delete(pth(s"$gc/postings/.compact_upto_2/_SUCCESS"), false)
-    StreamingOps.recoverPostings(spark, c)
+    IvfIndex.recover(spark, c)
     assert(content(c) == beforeC)
     assert(!fsOf(c).exists(pth(s"$gc/postings/.compact_upto_2")),
       "incomplete staging not discarded")
@@ -842,8 +843,8 @@ class StreamingOpsSpec extends SparkSpec {
     val shards = new java.io.File(s"$rootA/sigs").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("doc_pt="))
       .map(_.getName.stripPrefix("doc_pt=").toInt).sorted.toSeq
-    DedupOps.stageShards(spark.read.parquet(s"$rootA/sigs"),
-      s"$rootA/sigs", "doc_pt", shards.size, shards)
+    ShardedStore.stage(spark.read.parquet(s"$rootA/sigs"),
+      ShardedStore.Table(s"$rootA/sigs", "doc_pt"), shards)
     fsOf(rootA).rename(pth(s"$rootA/sigs/doc_pt=${shards.head}"),
       pth(s"$rootA/sigs/.old.doc_pt=${shards.head}"))
     def verdicts(root: String) = StreamingOps
@@ -867,8 +868,8 @@ class StreamingOpsSpec extends SparkSpec {
     val ivfB = java.nio.file.Files.createTempDirectory("p_heal").toString + "/ib"
     for (root <- Seq(ivfA, ivfB); (b, i) <- thirds.take(3).zipWithIndex)
       StreamingOps.ivfSearchInsertBatch(dfv(b.toSeq), root, batchId = i.toLong)
-    val gia = StreamingOps.resolveIndex(spark, ivfA)
-    assert(StreamingOps.stageCompactedPostings(spark, gia, upToBatchId = 2L))
+    val gia = IvfIndex.resolve(spark, ivfA)
+    assert(IvfIndex.stageCompactedPostings(spark, gia, upToBatchId = 2L))
     val cell = new java.io.File(s"$gia/postings").listFiles()
       .filter(d => d.isDirectory && d.getName.startsWith("centroid_id=")).head
     cell.listFiles()
@@ -896,7 +897,7 @@ class StreamingOpsSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("p_seed").toString + "/idx"
     StreamingOps.ivfSearchInsertBatch(b1.toSeq.toDF("vec_id", "embedding"), root, batchId = 1L)
     assert(spark.read.parquet(
-        s"${StreamingOps.resolveIndex(spark, root)}/centroids").count() == 1,
+        s"${IvfIndex.resolve(spark, root)}/centroids").count() == 1,
       "fallback must seed exactly one centroid")
     val h2 = StreamingOps.ivfSearchInsertBatch(
       b2.toSeq.toDF("vec_id", "embedding"), root, batchId = 2L)

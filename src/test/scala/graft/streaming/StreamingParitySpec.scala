@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
-import graft.ops.{DedupOps, TextOps, WindowOps}
+import graft.ops.{DedupOps, IvfIndex, SignatureIndex, TextOps, WindowOps}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -465,8 +465,8 @@ class StreamingParitySpec extends SparkSpec {
       "post-forget ingest verdicts diverged between logical and physical")
     // purge at compaction converges the FILES to the physical state and
     // clears the tombstone table
-    DedupOps.compactSignatureIndex(spark, logi)
-    DedupOps.compactSignatureIndex(spark, phys)
+    SignatureIndex.compact(spark, logi)
+    SignatureIndex.compact(spark, phys)
     def tableIds(root: String, t: String) = spark.read.parquet(s"$root/$t")
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(tableIds(logi, "sigs") == tableIds(phys, "sigs"))
@@ -486,9 +486,9 @@ class StreamingParitySpec extends SparkSpec {
     val vReP = deltaDedupVerifiedBatch(reDocs.toSeq.toDF("doc_id", "text"), phys, 0.7)
       .collect().map(_.toSeq.toList).toSet
     assert(vReL == vReP, "re-ingest verdicts diverged between the twins")
-    val presL = DedupOps.presentInSignatureIndex(
+    val presL = SignatureIndex.present(
       reIngest.toDF("doc_id"), logi, nParts = 8).count()
-    val presP = DedupOps.presentInSignatureIndex(
+    val presP = SignatureIndex.present(
       reIngest.toDF("doc_id"), phys, nParts = 8).count()
     assert(presL == presP,
       "re-ingested id's presence diverged between logical and physical")
@@ -503,8 +503,8 @@ class StreamingParitySpec extends SparkSpec {
         "re-ingest left the id's tombstone row behind")
     }
     // and the files still converge to the physical state at compaction
-    DedupOps.compactSignatureIndex(spark, logi)
-    DedupOps.compactSignatureIndex(spark, phys)
+    SignatureIndex.compact(spark, logi)
+    SignatureIndex.compact(spark, phys)
     assert(tableIds(logi, "sigs") == tableIds(phys, "sigs"),
       "post-re-ingest compaction diverged from the physical twin")
   }
@@ -554,7 +554,7 @@ class StreamingParitySpec extends SparkSpec {
     ivfSearchInsertBatch(dfv(goneVecs.toSeq), twin, batchId = 10L)
     assert(hits(logi, 11L) == hits(twin, 11L),
       "re-ingest left the twins distinguishable")
-    val gl = StreamingOps.resolveIndex(spark, logi)
+    val gl = IvfIndex.resolve(spark, logi)
     val logiRows = spark.read.parquet(s"$gl/postings")
       .where(col("vec_id").isin(gone: _*)).count()
     assert(logiRows == gone.size,
@@ -587,7 +587,7 @@ class StreamingParitySpec extends SparkSpec {
     val gone = b2.map(_._1).filter(_ % 3 == 1).take(8).toSeq
     assert(gone.nonEmpty)
     forgetVectorsBatch(gone.toDF("vec_id"), indexPath): Unit
-    val pinned = StreamingOps.resolveIndex(spark, indexPath)
+    val pinned = IvfIndex.resolve(spark, indexPath)
     val queries = vecs.take(24).map { case (id, v) => (id + 2000000L, v) }
     def hitSet(h: org.apache.spark.sql.DataFrame) = h.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -595,8 +595,8 @@ class StreamingParitySpec extends SparkSpec {
     assert(pre.nonEmpty, "resolved search found nothing — parity vacuous")
     assert(!pre.exists(h => gone.contains(h._2)),
       "pre-refresh resolved search surfaced a forgotten vector")
-    StreamingOps.refreshCentroids(spark, indexPath)
-    val cur = StreamingOps.resolveIndex(spark, indexPath)
+    IvfIndex.refreshCentroids(spark, indexPath)
+    val cur = IvfIndex.resolve(spark, indexPath)
     assert(cur != pinned, "refresh did not advance the generation")
     assert(!new java.io.File(s"$indexPath/tombstones").exists,
       "refresh left the index-level deletion vector behind")
@@ -630,7 +630,7 @@ class StreamingParitySpec extends SparkSpec {
     // returns identical hits (its own failed-attempt rows are invisible)
     // and the dynamic overwrite leaves the postings row count unchanged
     def postingsCount() = spark.read.parquet(
-      s"${StreamingOps.resolveIndex(spark, indexPath)}/postings").count()
+      s"${IvfIndex.resolve(spark, indexPath)}/postings").count()
     val postingsN = postingsCount()
     val h2r = hitSet(ivfSearchInsertBatch(df(b2.toSeq), indexPath, batchId = 2L))
     assert(h2r == h2, "replayed batch 2 diverged")
