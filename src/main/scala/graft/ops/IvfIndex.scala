@@ -2,9 +2,10 @@ package graft.ops
 
 import graft.ops.Checkpoints._
 import graft.ops.ShardedStore.{fs, hp}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The persisted, cell-partitioned IVF vector index: one object owns its
   * layout, its manifest and every mutation of it. The streaming twins in
@@ -38,8 +39,62 @@ import org.apache.spark.sql.functions._
   *  - anything else partial is deleted; the index bootstraps fresh. */
 object IvfIndex {
 
-  private val postingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+  private val postingsSchema = StructType.fromDDL(
     "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT, batch_id BIGINT")
+
+  private val centroidsSchema = StructType.fromDDL("c_id BIGINT, c_vec ARRAY<FLOAT>")
+
+  // ----- the IVF geometry ------------------------------------------------------
+  //
+  // The one definition of the cells, shared by the persisted index and the
+  // in-memory IVF queries: the stride centroid draw, the nearest-cell rank
+  // and the cell-restricted exact-cosine top-k.
+
+  /** The stride draw's constants: vectors whose id is a multiple of
+    * `CentStride` below `CentCap` seed the cells — at most 32 centroids, a
+    * fixed index parameter rather than a corpus fraction. */
+  val CentStride = 41L
+  val CentCap = 1312L
+
+  /** Whether `vecId` is a seed of the stride draw. */
+  def isSeed(vecId: Column): Column = vecId % CentStride === 0 && vecId < CentCap
+
+  /** The stride centroid draw over `vecs` (vec_id, embedding): (c_id, c_vec). */
+  def strideDraw(vecs: DataFrame): DataFrame =
+    vecs.where(isSeed(col("vec_id")))
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+
+  /** Each query's `nProbe` nearest cells of `cents` (c_id, c_vec) by cosine,
+    * ties to the lower cell id: (q_id, q_vec, centroid_id, cs, rn) from
+    * `queries` (vec_id, embedding). rn = 1 is the query's own cell. */
+  def rankCells(queries: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
+    queries.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      .crossJoin(broadcast(cents))
+      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec")))
+      .withColumn("rn", row_number().over(wQ))
+      .where(col("rn") <= math.max(nProbe, 1))
+      .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"), col("cs"), col("rn"))
+  }
+
+  /** [[rankCells]] against a generation's centroids. */
+  def rankCells(queries: DataFrame, genDir: String, nProbe: Int): DataFrame =
+    rankCells(queries, centroids(queries.sparkSession, genDir), nProbe)
+
+  /** Exact-cosine top-k per query of `ranked` ([[rankCells]]) over the
+    * rows of `posts` (vec_id, embedding, centroid_id) in its ranked cells,
+    * ties to the lower vec_id, a query never matching itself:
+    * (q_id, c_id, rank, cos_e6). `ranked` is broadcast. */
+  def cellTopK(posts: DataFrame, ranked: DataFrame, topK: Int): DataFrame = {
+    val wR = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
+    posts.join(broadcast(ranked), Seq("centroid_id"))
+      .where(col("q_id") =!= col("vec_id"))
+      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding")))
+      .withColumn("rank", row_number().over(wR)).where(col("rank") <= topK)
+      .select(col("q_id"), col("vec_id").as("c_id"),
+        col("rank").cast("long").as("rank"),
+        round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
+  }
 
   /** The directory of generation `gen`. */
   def generationDir(indexPath: String, gen: Long): String = s"$indexPath/g=$gen"
@@ -55,7 +110,12 @@ object IvfIndex {
 
   /** A generation's centroids: (c_id, c_vec). */
   def centroids(spark: SparkSession, genDir: String): DataFrame =
-    spark.read.parquet(s"$genDir/centroids")
+    spark.read.schema(centroidsSchema).parquet(s"$genDir/centroids")
+
+  /** Writes a generation's centroids in the reader's schema. */
+  private def writeCentroids(cents: DataFrame, genDir: String): Unit =
+    cents.select(centroidsSchema.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("overwrite").parquet(s"$genDir/centroids")
 
   /** A generation's postings: (vec_id, embedding, centroid_id, batch_id). */
   def postings(spark: SparkSession, genDir: String): DataFrame =
@@ -192,20 +252,18 @@ object IvfIndex {
     }
   }
 
-  /** The dimension `queries` (vec_id, embedding) are searched with: the
-    * index's recorded dim, 0 when unknown. Throws when the queries'
-    * uniform dimension disagrees with it. */
-  def queryDim(queries: DataFrame, indexPath: String, what: String): Int = {
-    val d = dim(queries.sparkSession, indexPath).getOrElse(0)
-    uniformDim(queries, what).foreach(qd =>
-      if (d > 0) require(qd == d,
-        s"$what: query embedding dim $qd does not match the" +
-          s" index's recorded dim=$d at $indexPath"))
-    d
+  /** Throws when `queries` (vec_id, embedding) mix dimensions or their
+    * uniform dimension disagrees with the index's recorded dim (when
+    * known). */
+  def checkQueryDim(queries: DataFrame, indexPath: String, what: String): Unit = {
+    val d = dim(queries.sparkSession, indexPath)
+    uniformDim(queries, what).foreach(qd => d.foreach(d => require(qd == d,
+      s"$what: query embedding dim $qd does not match the" +
+        s" index's recorded dim=$d at $indexPath")))
   }
 
   /** Opens the index for an insert batch of (vec_id, embedding) rows and
-    * returns the current generation dir and the index dimension:
+    * returns the current generation dir:
     *  1. recovery (a refresh or compaction that died mid-protocol leaves
     *     staging/generation litter; no-op when clean — one listStatus);
     *  2. the dimension contract: the batch's uniform dim must equal the
@@ -214,10 +272,9 @@ object IvfIndex {
     *     the writer path — a mismatched or mixed-dim batch fails loudly
     *     BEFORE any mutation;
     *  3. the first batch bootstraps generation 0 with centroids from the
-    *     stride rule over that batch (deterministic, mirrors the batch
-    *     queries). */
-  def openForInsert(batch: DataFrame, indexPath: String, what: String,
-                    centStride: Long, centCap: Long): (String, Int) = {
+    *     [[strideDraw]] over that batch (deterministic, the same draw as
+    *     the in-memory IVF queries). */
+  def openForInsert(batch: DataFrame, indexPath: String, what: String): String = {
     val spark = batch.sparkSession
     recover(spark, indexPath)
     val storedDim = dim(spark, indexPath)
@@ -236,9 +293,7 @@ object IvfIndex {
     }
     if (currentGeneration(spark, indexPath).isEmpty) {
       val g0 = generationDir(indexPath, 0L)
-      settled(batch
-          .where(col("vec_id") % centStride === 0 && col("vec_id") < centCap)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))) { strided =>
+      settled(strideDraw(batch)) { strided =>
         // a NON-EMPTY bootstrap batch that misses the stride rule entirely
         // would otherwise write an empty centroid set and permanently dead
         // index (every later search and insert silently empty) — fall back
@@ -247,13 +302,12 @@ object IvfIndex {
           batch.orderBy("vec_id").limit(1)
             .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
         else strided
-        cents0.write.mode("overwrite").parquet(s"$g0/centroids")
+        writeCentroids(cents0, g0)
       }
       ShardedStore.touch(fs(spark, indexPath), s"$g0/_GEN_OK")
       ShardedStore.writePointer(spark, indexPath, Pointer, "0")
     }
-    (generationDir(indexPath, currentGeneration(spark, indexPath).get),
-      storedDim.orElse(batchDim).getOrElse(0))
+    generationDir(indexPath, currentGeneration(spark, indexPath).get)
   }
 
   // ----- postings ---------------------------------------------------------------
@@ -298,48 +352,34 @@ object IvfIndex {
       Some(ids.collect().map(_.getLong(0)).toSeq)
     else None
 
-  /** Each query's `nProbe` nearest cells by centroid cosine:
-    * (q_id, q_vec, centroid_id, rn) from `queries` (vec_id, embedding). */
-  def rankCells(queries: DataFrame, genDir: String, nProbe: Int, dim: Int): DataFrame = {
-    val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-    queries.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      .crossJoin(broadcast(centroids(queries.sparkSession, genDir)))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), dim))
-      .withColumn("rn", row_number().over(wQ))
-      .where(col("rn") <= math.max(nProbe, 1))
-      .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"), col("rn"))
-  }
-
-  /** Exact-cosine top-k over the postings of the probed cells of `ranked`
-    * ([[rankCells]], persisted by the caller): (q_id, c_id, rank, cos_e6),
-    * SETTLED. Only the probed cells' files are read (a `centroid_id IN`
-    * partition filter), forgotten vectors never surface ([[antiVecTombs]]),
-    * and `exclude` skips one `batch_id` partition — a REPLAYED batch must
-    * not see its own failed attempt's rows, or batch-internal pairs would
-    * leak into its hits (self-pairs alone are not the issue). The
-    * generation must hold postings ([[hasPostings]]). */
-  def search(ranked: DataFrame, indexPath: String, genDir: String, dim: Int,
-             topK: Int, exclude: Option[Long]): DataFrame = {
+  /** The unsettled plan of [[search]]: [[cellTopK]] of `ranked`
+    * ([[rankCells]]) over this generation's postings. Only the probed
+    * cells' files are read (a `centroid_id IN` partition filter),
+    * forgotten vectors never surface ([[antiVecTombs]]), and `exclude`
+    * skips one `batch_id` partition — a REPLAYED batch must not see its
+    * own failed attempt's rows, or batch-internal pairs would leak into its
+    * hits (self-pairs alone are not the issue). The generation must hold
+    * postings ([[hasPostings]]); the cell set is collected here, so a
+    * caller that reads `ranked` again persists it. */
+  def searchPlan(ranked: DataFrame, indexPath: String, genDir: String,
+                 topK: Int, exclude: Option[Long]): DataFrame = {
     val cells = ranked.select("centroid_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     val inCells = col("centroid_id").isin(cells: _*)
-    val wR = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
-    antiVecTombs(indexPath, genDir, postings(ranked.sparkSession, genDir)
-        .where(exclude.fold(inCells)(b => col("batch_id") =!= b && inCells)))
-      .join(broadcast(ranked), Seq("centroid_id"))
-      .where(col("q_id") =!= col("vec_id")) // belt-and-braces vs own rows
-      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), dim))
-      .withColumn("rank", row_number().over(wR)).where(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        col("rank").cast("long").as("rank"),
-        round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
-      // an eager cut, not persist+count: the hits must be SETTLED before
-      // any later mutation of the postings — a cache entry can be
-      // recomputed against the mutated directory, silently turning
-      // search-before-insert into search-after-insert; the checkpoint
-      // truncates lineage so re-evaluation is impossible
-      .cutLineage()
+    cellTopK(antiVecTombs(indexPath, genDir, postings(ranked.sparkSession, genDir)
+        .where(exclude.fold(inCells)(b => col("batch_id") =!= b && inCells))),
+      ranked, topK)
   }
+
+  /** [[searchPlan]], SETTLED: (q_id, c_id, rank, cos_e6). An eager cut,
+    * not persist+count: the hits must be settled before any later mutation
+    * of the postings — a cache entry can be recomputed against the mutated
+    * directory, silently turning search-before-insert into
+    * search-after-insert; the checkpoint truncates lineage so re-evaluation
+    * is impossible. */
+  def search(ranked: DataFrame, indexPath: String, genDir: String,
+             topK: Int, exclude: Option[Long]): DataFrame =
+    searchPlan(ranked, indexPath, genDir, topK, exclude).cutLineage()
 
   /** The empty hit frame of [[search]]. */
   def noHits(spark: SparkSession): DataFrame =
@@ -690,7 +730,7 @@ object IvfIndex {
       .mode("overwrite").partitionBy("centroid_id", "batch_id")
       .parquet(s"$next/postings")
     posts.unpersist()
-    newCents.write.mode("overwrite").parquet(s"$next/centroids")
+    writeCentroids(newCents, next)
     // snapshot the deletion vector INTO the generation being superseded,
     // UNDER the successor's seal (seal durable ⇒ snapshot present): a
     // reader still pinned to `cur` keeps its forget filter after the

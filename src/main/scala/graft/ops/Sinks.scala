@@ -163,8 +163,7 @@ object Sinks {
       val latest = merged.withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn", "__src")
       val tmp = path.stripSuffix("/") + "__merge_tmp"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
+      val fs = ShardedStore.fs(spark, tmp)
       try {
         // cluster by partition column before writing: the window above
         // leaves the data hash-partitioned by KEY, where every task holds
@@ -219,8 +218,7 @@ object Sinks {
     }.reduce(_ || _)
     val slice = snap.where(partPred).persist()
     val tmp = path.stripSuffix("/") + "__delete_tmp"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = ShardedStore.fs(spark, path)
     try {
       val deleted = slice.where(coalesce(pred, lit(false))).count()
       val surviving = slice.where(!coalesce(pred, lit(false)))
@@ -279,8 +277,7 @@ object Sinks {
     // backup-first swap: at every instant either the old or the new copy is
     // intact under a recoverable name (delete-then-rename would have a
     // window where an interruption loses the table entirely)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
+    val fs = ShardedStore.fs(spark, tmp)
     val dst = new org.apache.hadoop.fs.Path(path)
     val bak = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__compact_bak")
     fs.delete(bak, true)

@@ -19,15 +19,13 @@ object VectorOps {
     * (higher-order functions are interpreted; unrolled trees overflow JIT
     * method limits — a generated loop is the fast shape). Accumulation
     * order (0.0 + p1) + p2 + … matches the sequential fold, so results are
-    * bit-equal to the DuckDB `list_reduce` oracle. `dim` kept for API
-    * symmetry; the kernel reads the runtime array length. */
-  def dot(a: Column, b: Column, dim: Int): Column =
-    graft.expressions.F.dot(a, b)
+    * bit-equal to the DuckDB `list_reduce` oracle. The kernel reads the
+    * runtime array length. */
+  def dot(a: Column, b: Column): Column = graft.expressions.F.dot(a, b)
 
-  def norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column, dim: Int): Column =
-    dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * candidates by cosine (desc), ties broken by candidate id.
@@ -38,12 +36,12 @@ object VectorOps {
     * which AQE coalesces. At 100 TB the window input can be pre-reduced with
     * a per-partition top-k if |queries| is large.
     */
-  def bruteForceTopK(queries: DataFrame, candidates: DataFrame, dim: Int, k: Int,
+  def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                      qId: String = "q_id", cId: String = "c_id",
                      qVec: String = "q_vec", cVec: String = "c_vec"): DataFrame = {
     val joined = candidates.crossJoin(broadcast(queries))
       .where(col(qId) =!= col(cId))
-      .withColumn("cosine_sim", cosine(col(qVec), col(cVec), dim))
+      .withColumn("cosine_sim", cosine(col(qVec), col(cVec)))
     val w = Window.partitionBy(qId).orderBy(col("cosine_sim").desc, col(cId).asc)
     joined.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
@@ -52,6 +50,6 @@ object VectorOps {
     * sign bits: bucket = Σ_j [dot(plane_j, v) >= 0] · 2^j.
     * In-row, shuffle-free, codegen'd; the scale path for ANN — candidates
     * are then equi-joined on `bucket` instead of cross-joined. */
-  def lshBucket(vec: Column, dim: Int, nPlanes: Int): Column =
+  def lshBucket(vec: Column, nPlanes: Int): Column =
     graft.expressions.F.lshBucket(vec, nPlanes)
 }

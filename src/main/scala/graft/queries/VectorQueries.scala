@@ -30,7 +30,7 @@ object VectorQueries {
     * external query batch and the trained index's nlist (see
     * kmeans_clusters for centroid training). */
   val QueryCap = 1000L   // ≤20 query vectors
-  val IvfCentCap = 1312L // ≤32 IVF centroids (41-stride below 1312)
+  val IvfCentCap = IvfIndex.CentCap // ≤32 IVF centroids (the stride draw's cap)
   val NearDupCos = 0.4 // testdata has no planted vector dups; 0.4 yields pairs
   val NumPlanes = 8
   val HybridCandK = 50 // per-arm candidate depth for hybrid fusion
@@ -53,7 +53,7 @@ object VectorQueries {
       val queries = emb.where(col("vec_id") % QueryStride === 0 && col("vec_id") < QueryCap)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val cands = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      VectorOps.bruteForceTopK(queries, cands, Dim, TopK)
+      VectorOps.bruteForceTopK(queries, cands, TopK)
         .select(col("q_id"), col("c_id"), col("rank").cast("long").as("rank"),
           round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
         .orderBy("q_id", "rank")
@@ -83,7 +83,7 @@ object VectorQueries {
     def run(spark: SparkSession, dir: String): DataFrame =
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
-          VectorOps.lshBucket(col("embedding"), Dim, NumPlanes).as("bucket"))
+          VectorOps.lshBucket(col("embedding"), NumPlanes).as("bucket"))
         .orderBy("vec_id")
     val oracle = {
       val planeDot = sqlSeqSum(
@@ -108,14 +108,14 @@ object VectorQueries {
     val name = "ann_lsh_topk"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val withB = Tables.embeddings(spark, dir)
-        .withColumn("bucket", VectorOps.lshBucket(col("embedding"), Dim, NumPlanes))
+        .withColumn("bucket", VectorOps.lshBucket(col("embedding"), NumPlanes))
       val queries = withB.where(col("vec_id") % QueryStride === 0 && col("vec_id") < QueryCap)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"), col("bucket"))
       val cands = withB
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"), col("bucket"))
       val joined = cands.join(broadcast(queries), Seq("bucket"))
         .where(col("q_id") =!= col("c_id"))
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
+        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id").asc)
       joined.withColumn("rank", row_number().over(w)).where(col("rank") <= TopK)
         .select(col("q_id"), col("c_id"), col("rank").cast("long").as("rank"),
@@ -158,14 +158,14 @@ object VectorQueries {
     val name = "dedup_embedding"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val emb = Tables.embeddings(spark, dir, fanned = true)
-        .withColumn("nrm", VectorOps.norm(col("embedding"), Dim))
+        .withColumn("nrm", VectorOps.norm(col("embedding")))
       val l = emb.select(col("vec_id").as("id_l"), col("embedding").as("v_l"),
         col("nrm").as("n_l"))
       val r = emb.select(col("vec_id").as("id_r"), col("embedding").as("v_r"),
         col("nrm").as("n_r"))
       l.crossJoin(r).where(col("id_l") < col("id_r"))
         .withColumn("cosine_sim",
-          VectorOps.dot(col("v_l"), col("v_r"), Dim) / (col("n_l") * col("n_r")))
+          VectorOps.dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")))
         .where(col("cosine_sim") >= NearDupCos)
         .select(col("id_l"), col("id_r"),
           round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
@@ -221,7 +221,7 @@ object VectorQueries {
   private def lshBandedKeys(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        VectorOps.lshBucket(col("embedding"), Dim, DedupLshPlanes).as("sig"))
+        VectorOps.lshBucket(col("embedding"), DedupLshPlanes).as("sig"))
       .withColumn("band", explode(array((0 until DedupLshBands).map(lit): _*)))
       .select(col("vec_id"),
         expr(s"band * ${1 << DedupLshBandBits} + " +
@@ -246,14 +246,14 @@ object VectorQueries {
       .where(col("id_l") < col("id_r"))
       .select("id_l", "id_r").distinct()
     val emb = Tables.embeddings(spark, dir)
-      .withColumn("nrm", VectorOps.norm(col("embedding"), Dim))
+      .withColumn("nrm", VectorOps.norm(col("embedding")))
     cand
       .join(emb.select(col("vec_id").as("id_l"), col("embedding").as("v_l"),
         col("nrm").as("n_l")), Seq("id_l"))
       .join(emb.select(col("vec_id").as("id_r"), col("embedding").as("v_r"),
         col("nrm").as("n_r")), Seq("id_r"))
       .withColumn("cosine_sim",
-        VectorOps.dot(col("v_l"), col("v_r"), Dim) / (col("n_l") * col("n_r")))
+        VectorOps.dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")))
       .where(col("cosine_sim") >= NearDupCos)
   }
 
@@ -296,14 +296,14 @@ object VectorQueries {
     val name = "q_embedding_lsh_recall"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val emb = Tables.embeddings(spark, dir)
-        .withColumn("nrm", VectorOps.norm(col("embedding"), Dim))
+        .withColumn("nrm", VectorOps.norm(col("embedding")))
       val l = emb.select(col("vec_id").as("id_l"), col("embedding").as("v_l"),
         col("nrm").as("n_l"))
       val r = emb.select(col("vec_id").as("id_r"), col("embedding").as("v_r"),
         col("nrm").as("n_r"))
       val truth = l.crossJoin(r).where(col("id_l") < col("id_r"))
         .withColumn("cosine_sim",
-          VectorOps.dot(col("v_l"), col("v_r"), Dim) / (col("n_l") * col("n_r")))
+          VectorOps.dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")))
         .where(col("cosine_sim") >= NearDupCos)
         .select(col("id_l"), col("id_r"),
           round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
@@ -374,7 +374,7 @@ object VectorQueries {
   private[graft] def embeddingLshRecallSampledFor(
       spark: SparkSession, dir: String, salt: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-      .withColumn("nrm", VectorOps.norm(col("embedding"), Dim))
+      .withColumn("nrm", VectorOps.norm(col("embedding")))
       .persist()
     val nVecs = emb.agg(count(lit(1)).as("n_vecs"))
     val sample = emb
@@ -390,7 +390,7 @@ object VectorQueries {
         col("nrm").as("o_nrm"))
       .join(broadcast(sample), col("s_id") =!= col("o_id"))
       .withColumn("cosine_sim",
-        VectorOps.dot(col("s_vec"), col("o_vec"), Dim) / (col("s_nrm") * col("o_nrm")))
+        VectorOps.dot(col("s_vec"), col("o_vec")) / (col("s_nrm") * col("o_nrm")))
       .where(col("cosine_sim") >= NearDupCos)
       .select(least(col("s_id"), col("o_id")).as("id_l"),
         greatest(col("s_id"), col("o_id")).as("id_r"),
@@ -497,7 +497,7 @@ object VectorQueries {
   private[graft] def embeddingLshRecallSampledPooled(
       spark: SparkSession, dir: String, salts: Seq[String]): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-      .withColumn("nrm", VectorOps.norm(col("embedding"), Dim))
+      .withColumn("nrm", VectorOps.norm(col("embedding")))
       .persist()
     val nVecs = emb.agg(count(lit(1)).as("n_vecs"))
     val sample = emb
@@ -515,7 +515,7 @@ object VectorQueries {
         col("nrm").as("o_nrm"))
       .join(broadcast(sample), col("s_id") =!= col("o_id"))
       .withColumn("cosine_sim",
-        VectorOps.dot(col("s_vec"), col("o_vec"), Dim) / (col("s_nrm") * col("o_nrm")))
+        VectorOps.dot(col("s_vec"), col("o_vec")) / (col("s_nrm") * col("o_nrm")))
       .where(col("cosine_sim") >= NearDupCos)
       .select(col("salt"), least(col("s_id"), col("o_id")).as("id_l"),
         greatest(col("s_id"), col("o_id")).as("id_r"),
@@ -788,61 +788,50 @@ object VectorQueries {
         |FROM g ORDER BY dim""".stripMargin)
   }
 
-  val IvfStride = 41 // vec_id % stride == 0 → centroid set
+  val IvfStride = IvfIndex.CentStride // vec_id % stride == 0 → centroid set
 
-  /** IVF assignment: nearest centroid (argmax cosine) per vector, with a
-    * data-derived centroid set (strided sample — a k-means iteration would
-    * slot in identically). Broadcast centroids + window top-1. */
-  /** Shared IVF prefix: every corpus vector scored against the bounded
-    * centroid set, ranked per vector (rn=1 is the assignment; rn<=nProbe
-    * are a query's probe cells). Factored out so the three IVF queries
-    * share ONE definition and the recall query can persist it instead of
-    * recomputing the N x nlist assignment per search arm. */
-  private def ivfRanked(spark: SparkSession, dir: String): DataFrame = {
+  /** Shared IVF prefix: every corpus vector ranked against the stride-drawn
+    * centroid set ([[IvfIndex.rankCells]] to depth `nProbe`; rn = 1 is the
+    * assignment, rn <= nProbe a query's probe cells), so the in-memory IVF
+    * queries share the persisted index's geometry and the recall queries
+    * can persist it instead of recomputing the N x nlist assignment per
+    * search arm. */
+  private def ivfRanked(spark: SparkSession, dir: String, nProbe: Int): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cents = emb.where(col("vec_id") % IvfStride === 0 && col("vec_id") < IvfCentCap)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id").asc)
-    emb.crossJoin(broadcast(cents))
-      .withColumn("cs", VectorOps.cosine(col("embedding"), col("c_vec"), Dim))
-      .withColumn("rn", row_number().over(wAssign))
+    IvfIndex.rankCells(emb, IvfIndex.strideDraw(emb), nProbe)
+  }
+
+  /** The in-memory IVF split of a ranked frame: every vector's own cell
+    * (rn = 1) as postings (vec_id, embedding, centroid_id), and the query
+    * sample's `nProbe` nearest cells as probes (q_id, q_vec, centroid_id,
+    * rn). */
+  private def ivfSplit(ranked: DataFrame, nProbe: Int): (DataFrame, DataFrame) = {
+    val assigned = ranked.where(col("rn") === 1)
+      .select(col("q_id").as("vec_id"), col("q_vec").as("embedding"), col("centroid_id"))
+    val probes = ranked.where(col("rn") <= nProbe &&
+        col("q_id") % QueryStride === 0 && col("q_id") < QueryCap)
+      .select(col("q_id"), col("q_vec"), col("centroid_id"), col("rn"))
+    (assigned, probes)
   }
 
   /** IVF search over a ranked frame: candidates are each query's nProbe
     * nearest cells' inverted lists (disjoint lists, so more probes only
     * widen the candidate union). */
   private def ivfSearch(ranked: DataFrame, nProbe: Int): DataFrame = {
-    val assigned = ranked.where(col("rn") === 1)
-      .select(col("vec_id").as("c_id2"), col("embedding").as("c_vec2"),
-        col("c_id").as("centroid_id"))
-    val probes = ranked.where(col("rn") <= nProbe &&
-        col("vec_id") % QueryStride === 0 && col("vec_id") < QueryCap)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-        col("c_id").as("centroid_id"))
-    val joined = assigned.join(broadcast(probes), Seq("centroid_id"))
-      .where(col("q_id") =!= col("c_id2"))
-      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2"), Dim))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id2").asc)
-    joined.withColumn("rank", row_number().over(w)).where(col("rank") <= TopK)
-      .select(col("q_id"), col("c_id2").as("c_id"), col("rank").cast("long").as("rank"),
-        round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
-      .orderBy("q_id", "rank")
+    val (assigned, probes) = ivfSplit(ranked, nProbe)
+    IvfIndex.cellTopK(assigned, probes, TopK).orderBy("q_id", "rank")
   }
 
+  /** IVF assignment: nearest centroid (argmax cosine) per vector, with a
+    * data-derived centroid set (strided sample — a k-means iteration would
+    * slot in identically). Broadcast centroids + window top-1. */
   val ivfAssign: Q = new Q {
     val name = "ivf_assign"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val emb = Tables.embeddings(spark, dir)
-      val cents = emb.where(col("vec_id") % IvfStride === 0 && col("vec_id") < IvfCentCap)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val scored = emb.crossJoin(broadcast(cents))
-        .withColumn("cosine_sim", VectorOps.cosine(col("embedding"), col("c_vec"), Dim))
-      val w = Window.partitionBy("vec_id").orderBy(col("cosine_sim").desc, col("c_id").asc)
-      scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("vec_id"), col("c_id").as("centroid_id"),
-          round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
+    def run(spark: SparkSession, dir: String): DataFrame =
+      ivfRanked(spark, dir, nProbe = 1)
+        .select(col("q_id").as("vec_id"), col("centroid_id"),
+          round(col("cs") * 1000000).cast("long").as("cos_e6"))
         .orderBy("vec_id")
-    }
     val oracle = Some(
       s"""WITH c AS (
          |  SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings
@@ -866,7 +855,7 @@ object VectorQueries {
   val annIvfTopk: Q = new Q {
     val name = "ann_ivf_topk"
     def run(spark: SparkSession, dir: String): DataFrame =
-      ivfSearch(ivfRanked(spark, dir), nProbe = 1)
+      ivfSearch(ivfRanked(spark, dir, nProbe = 1), nProbe = 1)
     val oracle = Some(
       s"""WITH c AS (
          |  SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings
@@ -906,7 +895,7 @@ object VectorQueries {
   val annIvfMpTopk: Q = new Q {
     val name = "ann_ivf_mp_topk"
     def run(spark: SparkSession, dir: String): DataFrame =
-      ivfSearch(ivfRanked(spark, dir), NProbe)
+      ivfSearch(ivfRanked(spark, dir, NProbe), NProbe)
     val oracle = Some(
       s"""WITH c AS (
          |  SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings
@@ -946,65 +935,40 @@ object VectorQueries {
     *
     * Protocol (corpus = vec_id % 5 != 0, batch = the rest, capped):
     *  1. BOOTSTRAP (once per corpus, amortized over every future batch):
-    *     corpus vectors are assigned to their nearest centroid and the
-    *     postings are written as parquet PARTITIONED BY centroid_id —
-    *     one directory per inverted list (≤32 cells here; thousands at
-    *     100 TB, sized so a cell ≈ a row group).
-    *  2. PROBE (per batch): each query ranks the broadcast centroid set,
-    *     takes its NProbe nearest cells, and the probed cell ids — a
-    *     driver-side set bounded by |batch|·NProbe, never data-sized —
-    *     become a `centroid_id IN (...)` partition filter on the postings
-    *     scan: only probed cells' FILES are opened (PlanSpec pins the
-    *     filter). Exact cosine + per-query top-k over the probed lists.
+    *     the corpus is the first batch of an [[IvfIndex]]
+    *     ([[graft.streaming.StreamingOps.ivfSearchInsertBatch]]): each
+    *     vector goes to its nearest stride-drawn centroid, and the postings
+    *     are partitioned by cell — one directory per inverted list (≤32
+    *     cells here; thousands at 100 TB, sized so a cell ≈ a row group).
+    *  2. PROBE (per batch): each query ranks the broadcast centroid set
+    *     ([[IvfIndex.rankCells]]), takes its NProbe nearest cells, and the
+    *     probed cell ids — a driver-side set bounded by |batch|·NProbe,
+    *     never data-sized — become a `centroid_id IN (...)` partition
+    *     filter on the postings scan ([[IvfIndex.searchPlan]]): only probed
+    *     cells' FILES are opened (PlanSpec pins the filter). Exact cosine +
+    *     per-query top-k over the probed lists.
     *
     * Scale shape: per-batch I/O = (nprobe/nlist) of the corpus at file
     * granularity, queries broadcast, no corpus shuffle. Batch ids are
-    * disjoint from corpus ids, so no self-match guard is needed. */
+    * disjoint from corpus ids, so the self-match guard never fires. */
   val annDeltaTopk: Q = new Q {
     val name = "ann_delta_topk"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val emb = Tables.embeddings(spark, dir)
+      val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       val isBatch = col("vec_id") % 5 === 0
-      val corpus = emb.where(!isBatch)
-      val cents = corpus
-        .where(col("vec_id") % IvfStride === 0 && col("vec_id") < IvfCentCap)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       // bootstrap ONCE per JVM (Staging.once): production assigns and
       // writes the corpus postings once, then every batch probes them —
       // the per-invocation cost is the per-batch probe, the steady-state
-      // number. The probe never mutates the postings.
-      val postingsPath = graft.ops.Staging.once(
-          "/tmp/graft_ann_index", dir, "ivf_postings") { p =>
-        val wA = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id").asc)
-        corpus.crossJoin(broadcast(cents))
-          .withColumn("cs", VectorOps.cosine(col("embedding"), col("c_vec"), Dim))
-          .withColumn("rn", row_number().over(wA)).where(col("rn") === 1)
-          .select(col("c_id").as("centroid_id"), col("vec_id"), col("embedding"))
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(p)
+      // number. The probe never mutates the index.
+      val indexPath = graft.ops.Staging.once(
+          "/tmp/graft_ann_index", dir, "ivf_delta") { p =>
+        graft.streaming.StreamingOps.ivfSearchInsertBatch(emb.where(!isBatch), p,
+          batchId = 0L): Unit
       }
-      val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-      val probes = emb.where(isBatch && col("vec_id") < QueryCap)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        .crossJoin(broadcast(cents))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
-        .withColumn("rn", row_number().over(wQ)).where(col("rn") <= NProbe)
-        .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"))
-        .persist()
-      val cells = probes.select("centroid_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val postings = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT"))
-        .parquet(postingsPath)
-        .where(col("centroid_id").isin(cells: _*))
-      val wR = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
-      postings.join(broadcast(probes), Seq("centroid_id"))
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
-        .withColumn("rank", row_number().over(wR)).where(col("rank") <= TopK)
-        .select(col("q_id"), col("vec_id").as("c_id"),
-          col("rank").cast("long").as("rank"),
-          round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
+      val genDir = IvfIndex.resolve(spark, indexPath)
+      val ranked = IvfIndex.rankCells(emb.where(isBatch && col("vec_id") < QueryCap),
+        genDir, NProbe)
+      IvfIndex.searchPlan(ranked, indexPath, genDir, TopK, exclude = None)
         .orderBy("q_id", "rank")
     }
     val oracle = Some(
@@ -1153,7 +1117,7 @@ object VectorQueries {
       import graft.streaming.StreamingOps.{forgetVectorsBatch, ivfSearchInsertBatch}
       val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       val isForgot = col("vec_id") % 9 === 1 &&
-        !(col("vec_id") % IvfStride === 0 && col("vec_id") < IvfCentCap) &&
+        !IvfIndex.isSeed(col("vec_id")) &&
         (col("vec_id") % 5 =!= 0 || col("vec_id") < 250)
       // bootstrap + batch-1 insert + the FORGET once per JVM: production
       // pays the retraction when the deletion request arrives; the
@@ -1258,20 +1222,16 @@ object VectorQueries {
       // readers resolve the index to its CURRENT generation dir once at
       // open and read only that pair — the zero-downtime contract
       val genDir = IvfIndex.resolve(spark, indexPath)
-      val cents = IvfIndex.centroids(spark, genDir)
       val postings = IvfIndex.postings(spark, genDir)
       // fixed query sample (corpus members, never % 5 == 0; self-matches
       // excluded in both arms) — recall comparable across epochs
-      val queries = emb.where(col("vec_id") % 50 === 1)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-      val probes = queries.crossJoin(broadcast(cents))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
-        .withColumn("rn", row_number().over(wQ)).where(col("rn") <= NProbe)
-        .select(col("q_id"), col("c_id").as("centroid_id"), lit(1).as("in_probe"))
+      val sample = emb.where(col("vec_id") % 50 === 1)
+      val queries = sample.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val probes = IvfIndex.rankCells(sample, genDir, NProbe)
+        .select(col("q_id"), col("centroid_id"), lit(1).as("in_probe"))
       val scored = postings.crossJoin(broadcast(queries))
         .where(col("q_id") =!= col("vec_id"))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
+        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
         .join(broadcast(probes), Seq("q_id", "centroid_id"), "left")
         .withColumn("epoch", explode(sequence(col("batch_id"), lit(2L))))
         .select("epoch", "q_id", "vec_id", "cs", "in_probe")
@@ -1431,26 +1391,20 @@ object VectorQueries {
       val refreshedDir = IvfIndex.resolve(spark, indexPath) // g=1
       val frozenDir = IvfIndex.generationDir(indexPath, 0L) // the retained lookback generation
       val v = vecs.persist()
-      val queries = v.where(col("vec_id") % 25 === 1)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val sample = v.where(col("vec_id") % 25 === 1)
+      val queries = sample.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       // ONE scoring pass: all (query, candidate) cosines; truth and both
       // arms' hits are restrictions of it
       val scored = v.crossJoin(broadcast(queries))
         .where(col("q_id") =!= col("vec_id"))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
+        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
         .select("q_id", "vec_id", "cs").persist()
       val wR = Window.partitionBy("q_id").orderBy(col("cs").desc, col("vec_id").asc)
       val truth = scored.withColumn("rn", row_number().over(wR))
         .where(col("rn") <= RrTopK).select("q_id", "vec_id")
       def armRows(arm: String, armDir: String): DataFrame = {
-        val cents = IvfIndex.centroids(spark, armDir)
-        val assign = IvfIndex.postings(spark, armDir)
-          .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id"))
-        val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-        val probes = queries.crossJoin(broadcast(cents))
-          .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
-          .withColumn("rn", row_number().over(wQ)).where(col("rn") <= NProbe)
-          .select(col("q_id"), col("c_id").cast("long").as("centroid_id"))
+        val assign = IvfIndex.postings(spark, armDir).select("vec_id", "centroid_id")
+        val probes = IvfIndex.rankCells(sample, armDir, NProbe).select("q_id", "centroid_id")
         val hits = scored.join(assign, Seq("vec_id"))
           .join(probes, Seq("q_id", "centroid_id"), "left_semi")
           .withColumn("rn", row_number().over(wR))
@@ -1712,7 +1666,7 @@ object VectorQueries {
       val brute = annBruteTopk.run(spark, dir).select("q_id", "c_id")
       // ONE ranked-assignment computation serves both search arms (persist:
       // the N x nlist scoring is the dominant cost)
-      val ranked = ivfRanked(spark, dir).persist()
+      val ranked = ivfRanked(spark, dir, NProbe).persist()
       try {
         val ivf = ivfSearch(ranked, nProbe = 1)
           .select(col("q_id"), col("c_id")).withColumn("hit_i", lit(1L))
@@ -1782,30 +1736,22 @@ object VectorQueries {
       // arms a candidate at probe rank r participates in: sweep values ≥ r
       val armsOf = filter(
         array(ProbeSweep.map(p => lit(p.toLong)): _*), p => p >= col("rn"))
-      val ranked = ivfRanked(spark, dir).persist()
+      val ranked = ivfRanked(spark, dir, maxP).persist()
       val brute = annBruteTopk.run(spark, dir).select("q_id", "c_id").persist()
       try {
-        val sizes = ranked.where(col("rn") === 1)
-          .groupBy("c_id").agg(count(lit(1)).as("sz"))
-          .withColumnRenamed("c_id", "centroid_id")
-        val assigned = ranked.where(col("rn") === 1)
-          .select(col("vec_id").as("c_id2"), col("embedding").as("c_vec2"),
-            col("c_id").as("centroid_id"))
-        val probes = ranked.where(col("rn") <= maxP &&
-            col("vec_id") % QueryStride === 0 && col("vec_id") < QueryCap)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-            col("c_id").as("centroid_id"), col("rn"))
+        val (assigned, probes) = ivfSplit(ranked, maxP)
+        val sizes = assigned.groupBy("centroid_id").agg(count(lit(1)).as("sz"))
         // ONE cosine pass at the widest arm; visibility expands in-row
         val scored = assigned.join(broadcast(probes), Seq("centroid_id"))
-          .where(col("q_id") =!= col("c_id2"))
-          .select(col("q_id"), col("c_id2"),
-            VectorOps.cosine(col("q_vec"), col("c_vec2"), Dim).as("cosine_sim"),
+          .where(col("q_id") =!= col("vec_id"))
+          .select(col("q_id"), col("vec_id"),
+            VectorOps.cosine(col("q_vec"), col("embedding")).as("cosine_sim"),
             explode(armsOf).as("nprobe"))
         val w = Window.partitionBy("q_id", "nprobe")
-          .orderBy(col("cosine_sim").desc, col("c_id2").asc)
+          .orderBy(col("cosine_sim").desc, col("vec_id").asc)
         val top = scored.withColumn("rank", row_number().over(w))
           .where(col("rank") <= TopK)
-          .select(col("nprobe"), col("q_id"), col("c_id2").as("c_id"))
+          .select(col("nprobe"), col("q_id"), col("vec_id").as("c_id"))
         val hits = brute.join(top, Seq("q_id", "c_id"))
           .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
         val scanned = probes.join(broadcast(sizes), Seq("centroid_id"))
@@ -1891,26 +1837,20 @@ object VectorQueries {
   val annFilteredTopk: Q = new Q {
     val name = "ann_filtered_topk"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val ranked = ivfRanked(spark, dir)
       val labels = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"))
-      val assigned = ranked.where(col("rn") === 1)
-        .select(col("vec_id").as("c_id2"), col("embedding").as("c_vec2"),
-          col("c_id").as("centroid_id"))
-        .join(labels.select(col("vec_id").as("c_id2"), col("label").as("c_label")),
-          Seq("c_id2"))
-      val probes = ranked.where(col("rn") <= NProbe &&
-          col("vec_id") % QueryStride === 0 && col("vec_id") < QueryCap)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-          col("c_id").as("centroid_id"))
+      val (assigned0, probes0) = ivfSplit(ivfRanked(spark, dir, NProbe), NProbe)
+      val assigned = assigned0
+        .join(labels.select(col("vec_id"), col("label").as("c_label")), Seq("vec_id"))
+      val probes = probes0
         .join(labels.select(col("vec_id").as("q_id"), col("label").as("q_label")),
           Seq("q_id"))
       val joined = assigned.join(broadcast(probes), Seq("centroid_id"))
-        .where(col("q_id") =!= col("c_id2") && col("c_label") === col("q_label"))
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2"), Dim))
-      val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id2").asc)
+        .where(col("q_id") =!= col("vec_id") && col("c_label") === col("q_label"))
+        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding")))
+      val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
       joined.withColumn("rank", row_number().over(w)).where(col("rank") <= TopK)
-        .select(col("q_id"), col("c_id2").as("c_id"), col("rank").cast("long").as("rank"),
+        .select(col("q_id"), col("vec_id").as("c_id"), col("rank").cast("long").as("rank"),
           round(col("cosine_sim") * 1000000).cast("long").as("cos_e6"))
         .orderBy("q_id", "rank")
     }
@@ -1964,7 +1904,7 @@ object VectorQueries {
           col("label").as("c_label"))
         .join(broadcast(queries), col("q_id") =!= col("c_id2") &&
           col("c_label") === col("q_label"))
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2"), Dim))
+        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id2").asc)
       val truth = brute.withColumn("rank", row_number().over(w))
         .where(col("rank") <= TopK).select(col("q_id"), col("c_id2").as("c_id"))
@@ -2016,8 +1956,8 @@ object VectorQueries {
     def sub(v: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column) =
       slice(v, s * SubDim + 1, lit(SubDim))
     def dist2E6(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      round((VectorOps.dot(a, a, SubDim) + VectorOps.dot(b, b, SubDim) -
-        lit(2) * VectorOps.dot(a, b, SubDim)) * 1000000).cast("long")
+      round((VectorOps.dot(a, a) + VectorOps.dot(b, b) -
+        lit(2) * VectorOps.dot(a, b)) * 1000000).cast("long")
 
     /** The 8×4 codeword frame: (s, cw_id, cw_sub). */
     def codewords(spark: SparkSession, dir: String): DataFrame =
@@ -2189,7 +2129,7 @@ object VectorQueries {
       val q = emb.where(col("vec_id") === 0L)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val cands = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val vec = VectorOps.bruteForceTopK(q, cands, Dim, HybridCandK)
+      val vec = VectorOps.bruteForceTopK(q, cands, HybridCandK)
         .select(col("c_id").as("doc_id"), col("rank").cast("long").as("rank_vec"))
       val txt = TextQueries.bm25Topk.run(spark, dir)
         .withColumn("rank_txt", row_number().over(
@@ -2252,7 +2192,7 @@ object VectorQueries {
           col("label").cast("long").as("q_label"))
       val cands = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"),
         col("label").cast("long").as("c_label"))
-      VectorOps.bruteForceTopK(queries, cands, Dim, TopK)
+      VectorOps.bruteForceTopK(queries, cands, TopK)
         .groupBy(col("q_id"), col("q_label"))
         .agg(sum(when(col("c_label") === col("q_label"), 1L).otherwise(0L)).as("n_same"))
         .select(col("q_id"), col("q_label"), col("n_same"),
@@ -2358,7 +2298,7 @@ object VectorQueries {
         col("label").cast("long").as("c_label"))
       val scored = cands.crossJoin(broadcast(queries))
         .where(col("q_id") =!= col("c_id"))
-        .withColumn("cos", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
+        .withColumn("cos", VectorOps.cosine(col("q_vec"), col("c_vec")))
       def best(cond: org.apache.spark.sql.Column) =
         max(when(cond, struct(col("cos"), (-col("c_id")).as("nid"))))
       scored.groupBy("q_id", "q_label")
@@ -2428,7 +2368,7 @@ object VectorQueries {
         .mkString("CASE n_rel ", " ", " ELSE 0L END")
       val labelCounts = emb.groupBy(col("label").cast("long").as("q_label"))
         .agg(count(lit(1)).as("n_label"))
-      VectorOps.bruteForceTopK(queries, cands, Dim, K)
+      VectorOps.bruteForceTopK(queries, cands, K)
         .groupBy("q_id", "q_label")
         .agg(
           sum(when(col("c_label") === col("q_label"), expr(wCase))

@@ -309,9 +309,9 @@ object StreamingOps {
     * streaming-ANN trade, documented rather than hidden.
     *
     * The first batch bootstraps the index (generation 0, centroids from
-    * the stride rule over that batch); all mutations land in the CURRENT
-    * generation. A re-ingested, tombstoned vec_id is purged and
-    * un-tombstoned first ([[graft.ops.IvfIndex.readmit]]).
+    * [[graft.ops.IvfIndex.strideDraw]] over that batch); all mutations
+    * land in the CURRENT generation. A re-ingested, tombstoned vec_id is
+    * purged and un-tombstoned first ([[graft.ops.IvfIndex.readmit]]).
     *
     * REPLAY-SAFE under foreachBatch's at-least-once contract when the
     * caller passes the micro-batch id: the search excludes the batch's
@@ -326,17 +326,15 @@ object StreamingOps {
     * the bootstrap batch. */
   def ivfSearchInsertBatch(batch: DataFrame, indexPath: String,
                            batchId: Long = 0L,
-                           nProbe: Int = 2, topK: Int = 5,
-                           centStride: Long = 41L, centCap: Long = 1312L): DataFrame = {
+                           nProbe: Int = 2, topK: Int = 5): DataFrame = {
     val spark = batch.sparkSession
-    val (genDir, dim) = IvfIndex.openForInsert(batch, indexPath, "ivfSearchInsertBatch",
-      centStride, centCap)
+    val genDir = IvfIndex.openForInsert(batch, indexPath, "ivfSearchInsertBatch")
     IvfIndex.readmit(batch.select(col("vec_id").cast("long").as("vec_id")), indexPath, genDir)
-    val ranked = IvfIndex.rankCells(batch, genDir, nProbe, dim).persist()
+    val ranked = IvfIndex.rankCells(batch, genDir, nProbe).persist()
     // the hits are settled before the insert below mutates the postings
     val hits =
       if (IvfIndex.hasPostings(spark, genDir))
-        IvfIndex.search(ranked, indexPath, genDir, dim, topK, exclude = Some(batchId))
+        IvfIndex.search(ranked, indexPath, genDir, topK, exclude = Some(batchId))
       else IvfIndex.noHits(spark)
     IvfIndex.insert(ranked, genDir, batchId)
     ranked.unpersist()
@@ -365,10 +363,10 @@ object StreamingOps {
                         nProbe: Int = 2, topK: Int = 5): DataFrame = {
     val spark = queries.sparkSession
     IvfIndex.requireGeneration(spark, genDir)
-    val dim = IvfIndex.queryDim(queries, indexPath, "ivfSearchResolved")
+    IvfIndex.checkQueryDim(queries, indexPath, "ivfSearchResolved")
     if (!IvfIndex.hasPostings(spark, genDir)) return IvfIndex.noHits(spark)
-    val ranked = IvfIndex.rankCells(queries, genDir, nProbe, dim).drop("rn").persist()
-    val hits = IvfIndex.search(ranked, indexPath, genDir, dim, topK, exclude = None)
+    val ranked = IvfIndex.rankCells(queries, genDir, nProbe).persist()
+    val hits = IvfIndex.search(ranked, indexPath, genDir, topK, exclude = None)
     ranked.unpersist()
     hits
   }

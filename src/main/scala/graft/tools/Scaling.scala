@@ -1,11 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.{Sessions, Tables}
-import graft.ops.{ClusterStore, DedupOps, IvfIndex, ShardedStore, SignatureIndex, Staging, VectorOps}
+import graft.ops.{ClusterStore, DedupOps, IvfIndex, ShardedStore, SignatureIndex, Staging}
 import graft.ops.Checkpoints.settled
 import graft.queries.DedupQueries.{JaccardThreshold, NumBands, NumPerms, RowsPerBand, ShingleK}
 import graft.streaming.StreamingOps
@@ -123,16 +121,18 @@ object Scaling {
     * not the corpus.
     *
     * Protocol: embeddings replicated 1×/4×/16× with shifted ids (the shift
-    * keeps every replica id above [[graft.queries.VectorQueries.IvfCentCap]],
-    * so the centroid set is the base corpus's at every size — cell COUNT
+    * keeps every replica id above [[IvfIndex.CentCap]], so the stride draw
+    * picks the base corpus's centroids at every size — cell COUNT
     * constant, cell SIZE growing with the corpus, which is the axis under
-    * test). Postings written once per corpus, partitioned by centroid id.
-    * Probes of 1 and 10 fixed query vectors measured as min-of-3
-    * cache-cleared (seconds, rchar bytes), vs a FLAT baseline that ranks
-    * the same queries against a single-table copy of the postings (what a
-    * non-partitioned layout must read). */
+    * test). Each corpus is the bootstrap batch of an IVF index written by
+    * the real op ([[StreamingOps.ivfSearchInsertBatch]]). Probes of 1 and
+    * 10 fixed query vectors ([[IvfIndex.rankCells]] +
+    * [[IvfIndex.searchPlan]]) measured as min-of-3 cache-cleared (seconds,
+    * rchar bytes), vs a FLAT baseline: the same top-k
+    * ([[IvfIndex.cellTopK]]) over one unpartitioned copy of the
+    * generation's postings (what a non-partitioned layout must read). */
   private def annProbe(spark: SparkSession): Seq[(String, Any)] = {
-    import graft.queries.VectorQueries.{Dim, IvfStride, IvfCentCap, TopK}
+    import graft.queries.VectorQueries.TopK
     val base = Tables.embeddings(spark, SfDir)
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     // replicas are PERTURBED per-dimension (x + i·0.001) so the scaled
@@ -145,59 +145,27 @@ object Scaling {
         transform(col("embedding"),
           x => (x + lit(i * 0.001f)).cast("float")).as("embedding"))
     val queries = base.orderBy("vec_id").limit(10)
-      .select((col("vec_id") + lit(9000000000L)).as("q_id"), col("embedding").as("q_vec"))
+      .select((col("vec_id") + lit(9000000000L)).as("vec_id"), col("embedding"))
       .persist()
     queries.count()
 
-    def probe(postings: DataFrame, cents: DataFrame, nQ: Int,
-              pruneCells: Boolean): Long = {
-      val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
-      val probes = queries.limit(nQ)
-        .crossJoin(broadcast(cents))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
-        .withColumn("rn", row_number().over(wQ)).where(col("rn") <= 2)
-        .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"))
-        .persist()
-      val cells = probes.select("centroid_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val src = if (pruneCells) postings.where(col("centroid_id").isin(cells: _*))
-                else postings
-      val wR = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("vec_id").asc)
-      val n = src.join(broadcast(probes), Seq("centroid_id"))
-        .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
-        .withColumn("rank", row_number().over(wR)).where(col("rank") <= TopK)
-        .count()
-      probes.unpersist()
-      n
-    }
-
     val rows = for (replicas <- Seq(1, 4, 16)) yield {
-      val corpus = replicated(replicas)(replica)
-      val cents = base
-        .where(col("vec_id") % IvfStride === 0 && col("vec_id") < IvfCentCap)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-        .persist()
-      val nCells = cents.count()
       val root = staged("/tmp/graft_ann_scaling", s"x$replicas")
-      val wA = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id").asc)
-      val assigned = corpus.crossJoin(broadcast(cents))
-        .withColumn("cs", VectorOps.cosine(col("embedding"), col("c_vec"), Dim))
-        .withColumn("rn", row_number().over(wA)).where(col("rn") === 1)
-        .select(col("c_id").as("centroid_id"), col("vec_id"), col("embedding"))
-      assigned.repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$root/part")
-      assigned.write.mode("overwrite").parquet(s"$root/flat")
-      val partBytes = dirBytes(s"$root/part")
-      val schema = StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id BIGINT")
-      val flatSchema = StructType.fromDDL(
-        "centroid_id BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>")
+      val (index, flat) = (s"$root/index", s"$root/flat")
+      StreamingOps.ivfSearchInsertBatch(replicated(replicas)(replica), index, batchId = 0L)
+      val gd = IvfIndex.resolve(spark, index)
+      val nCells = IvfIndex.centroids(spark, gd).count()
+      val postings = IvfIndex.postings(spark, gd)
+      postings.write.mode("overwrite").parquet(flat)
+      val partBytes = postings.inputFiles
+        .map(f => new java.io.File(new java.net.URI(f)).length).sum
       def run(nQ: Int, pruned: Boolean): (Double, Double) = {
-        val (_, rB, sec) = best(spark, { cents.persist().count(); queries.persist().count(): Unit }) {
-          val src = if (pruned) spark.read.schema(schema).parquet(s"$root/part")
-                    else spark.read.schema(flatSchema).parquet(s"$root/flat")
-          val n = probe(src, cents, nQ, pruneCells = pruned)
-          require(n > 0, "probe found nothing")
+        val (_, rB, sec) = best(spark, queries.persist().count(): Unit) {
+          val ranked = IvfIndex.rankCells(queries.limit(nQ), gd, 2)
+          val hits =
+            if (pruned) IvfIndex.searchPlan(ranked, index, gd, TopK, exclude = None)
+            else IvfIndex.cellTopK(spark.read.schema(postings.schema).parquet(flat), ranked, TopK)
+          require(hits.count() > 0, "probe found nothing")
         }
         (sec, rB / 1e6)
       }

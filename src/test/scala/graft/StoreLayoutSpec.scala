@@ -5,11 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SourceScan.{hits, mainSources}
 
 /** Each persisted store owns its layout: a table path literal or a table
-  * schema of a store appears only in that store's object, and the
+  * schema of a store appears only in that store's object (for the IVF
+  * index also any cell-partitioned postings copy), and the
   * `_manifest.json` name only in `ShardedStore`, whose one reader and
-  * writer every store uses. Queries, streaming twins and tools read a
-  * store through its reader functions. A hit elsewhere fails the suite,
-  * named as file:line. */
+  * writer every store uses and whose `fs` is the one place a FileSystem is
+  * opened. Queries, streaming twins and tools read a store through its
+  * reader functions. A hit elsewhere fails the suite, named as
+  * file:line. */
 class StoreLayoutSpec extends AnyFunSuite {
   private val owners: Seq[(String, Seq[String])] = Seq(
     "graft/ops/SignatureIndex.scala" -> Seq(
@@ -20,7 +22,8 @@ class StoreLayoutSpec extends AnyFunSuite {
       "(?i)cluster_id\\s+BIGINT,\\s*doc_pt\\s+INT"),
     "graft/ops/IvfIndex.scala" -> Seq(
       "/(centroids|postings)\\b", "[\"/]_gen\\b",
-      "(?i)centroid_id\\s+BIGINT,\\s*batch_id\\s+BIGINT"),
+      "(?i)centroid_id\\s+BIGINT", "partitionBy\\(\"centroid_id\"",
+      "(?i)\\bc_id\\s+BIGINT,\\s*c_vec\\s+ARRAY"),
     "graft/ops/ShardedStore.scala" -> Seq("_manifest\\.json"))
 
   private def path(f: java.io.File) = f.getPath.replace('\\', '/')
@@ -38,5 +41,11 @@ class StoreLayoutSpec extends AnyFunSuite {
     } yield s"$hit   [owned by $owner]"
     if (found.nonEmpty) fail("read a store through its object's reader functions:\n" +
       found.mkString("\n"))
+  }
+
+  test("a FileSystem is opened only by ShardedStore.fs") {
+    val found = hits((f, code) =>
+      !path(f).endsWith("graft/ops/ShardedStore.scala") && code.contains("FileSystem.get("))
+    if (found.nonEmpty) fail("open a FileSystem with ShardedStore.fs:\n" + found.mkString("\n"))
   }
 }

@@ -71,9 +71,9 @@ class DedupVectorSpec extends SparkSpec {
     val v1 = Seq(1.0f, 2.0f, 3.0f)
     val v2 = Seq(4.0f, 5.0f, 6.0f)
     val df = Seq((v1, v2)).toDF("a", "b")
-    val dot = df.select(VectorOps.dot($"a", $"b", 3)).as[Double].head()
+    val dot = df.select(VectorOps.dot($"a", $"b")).as[Double].head()
     assert(dot === 32.0)
-    val cos = df.select(VectorOps.cosine($"a", $"a", 3)).as[Double].head()
+    val cos = df.select(VectorOps.cosine($"a", $"a")).as[Double].head()
     assert(math.abs(cos - 1.0) < 1e-12)
   }
 
@@ -84,7 +84,7 @@ class DedupVectorSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val q = emb.where($"vec_id" === 0).select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val c = emb.select($"vec_id".as("c_id"), $"embedding".as("c_vec"))
-    val got = VectorOps.bruteForceTopK(q, c, 2, 3)
+    val got = VectorOps.bruteForceTopK(q, c, 3)
       .orderBy("rank").select("c_id").as[Long].collect().toSeq
     assert(got === Seq(3L, 1L, 2L)) // exact match first (id 3), then near, then orthogonal
   }
@@ -93,7 +93,7 @@ class DedupVectorSpec extends SparkSpec {
     val emb = Seq((0L, (1 to 64).map(_.toFloat)), (1L, (1 to 64).map(_.toFloat)),
       (2L, (1 to 64).map(i => -i.toFloat)))
       .toDF("vec_id", "embedding")
-    val got = emb.select($"vec_id", VectorOps.lshBucket($"embedding", 64, 8).as("b"))
+    val got = emb.select($"vec_id", VectorOps.lshBucket($"embedding", 8).as("b"))
       .as[(Long, Long)].collect().toMap
     assert(got(0L) === got(1L))
     assert(got.values.forall(b => b >= 0 && b < 256))

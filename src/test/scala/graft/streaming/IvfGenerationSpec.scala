@@ -46,7 +46,7 @@ class IvfGenerationSpec extends SparkSpec {
     val q = Seq((9999L, vec(9999L, 10))).toDF("q_id", "q_vec")
     spark.read.parquet(s"$genDir/postings")
       .crossJoin(broadcast(q))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
+      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
       .orderBy(col("cs").desc, col("vec_id").asc).limit(5)
       .select(col("vec_id"), col("centroid_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -129,6 +129,25 @@ class IvfGenerationSpec extends SparkSpec {
     val resolved = IvfIndex.resolve(spark, root)
     assert(resolved.endsWith("g=1"),
       s"missing pointer not repaired to the max complete generation: $resolved")
+  }
+
+  test("a generation's centroids are read in the store's schema, with no Spark job") {
+    val gd = IvfIndex.resolve(spark, freshIndex())
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.graftshim.ListenerShim.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val types = try {
+      val t = IvfIndex.centroids(spark, gd).schema.map(_.dataType.simpleString)
+      org.apache.spark.graftshim.ListenerShim.waitUntilListenerBusEmpty(sc)
+      t
+    } finally sc.removeSparkListener(listener)
+    assert(types === Seq("bigint", "array<float>"))
+    assert(jobs.get === 0, "the centroids read inferred its schema with a Spark job")
   }
 
   test("legacy flat layout is adopted into g=0 and keeps serving") {

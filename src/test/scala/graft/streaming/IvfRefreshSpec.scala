@@ -60,12 +60,12 @@ class IvfRefreshSpec extends SparkSpec {
       .select("vec_id", "embedding", "centroid_id")
     val wQ = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
     val probes = q.crossJoin(broadcast(cents))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), Dim))
+      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec")))
       .withColumn("rn", row_number().over(wQ)).where(col("rn") <= NProbe)
       .select(col("q_id"), col("c_id").as("centroid_id"), lit(1).as("in_probe"))
     val scored = postings.crossJoin(broadcast(q))
       .where(col("q_id") =!= col("vec_id"))
-      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding"), Dim))
+      .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
       .join(broadcast(probes), Seq("q_id", "centroid_id"), "left")
     val wR = Window.partitionBy("q_id").orderBy(col("cs").desc, col("vec_id").asc)
     val truth = scored.withColumn("rn", row_number().over(wR))

@@ -37,6 +37,13 @@ class StoreReleaseSpec extends SparkSpec {
     assert(compactLeft === 0)
   }
 
+  test("ann_delta_topk leaves no persisted frame behind") {
+    val (rows, left) = newPersisted(
+      graft.queries.VectorQueries.annDeltaTopk.run(spark, "/root/testdata/sf0.001").collect())
+    assert(rows.nonEmpty)
+    assert(left === 0)
+  }
+
   test("every store op leaves persisted only the settled frame it returns") {
     val root = java.nio.file.Files.createTempDirectory("p_release_cycle").toString
     val steps = StoreCycle.run(spark, root)

@@ -645,7 +645,7 @@ class StreamingParitySpec extends SparkSpec {
       val w = Window.partitionBy("q_id").orderBy(col("cs").desc, col("c_id").asc)
       df(xs).select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         .crossJoin(broadcast(cents))
-        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec"), 64))
+        .withColumn("cs", VectorOps.cosine(col("q_vec"), col("c_vec")))
         .withColumn("rn", row_number().over(w)).where(col("rn") <= upTo)
     }
     val postings1 = ranked(b1.toSeq, 1)
@@ -655,7 +655,7 @@ class StreamingParitySpec extends SparkSpec {
     val want2 = hitSet(ranked(b2.toSeq, 2)
       .select(col("q_id"), col("q_vec"), col("c_id").as("centroid_id"))
       .join(postings1, Seq("centroid_id"))
-      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding"), 64))
+      .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding")))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
       .select(col("q_id"), col("vec_id").as("c_id"),
         col("rank").cast("long").as("rank"),
