@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graftshim.RddShim
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -54,8 +55,18 @@ object Checkpoints {
     * collect it, so the RDD itself is dropped. A reliable checkpoint's
     * files are deleted too: Spark's cleaner keeps them by default
     * (`spark.cleaner.referenceTracking.cleanCheckpoints=false`). */
-  private def release(settled: DataFrame): Unit = {
-    val rdd = settled.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+  private def release(settled: DataFrame): Unit =
+    drop(settled.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+
+  /** Releases every settled frame `df` reads, for a caller that drops an
+    * op's result unread (a store op's receipt): otherwise its checkpointed
+    * blocks stay listed until the JVM happens to collect them. */
+  def discard(df: DataFrame): Unit =
+    df.queryExecution.logical.collect {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd
+    }.foreach(drop)
+
+  private def drop(rdd: RDD[_]): Unit = {
     RddShim.drop(rdd)
     rdd.getCheckpointFile.foreach { f =>
       val p = new Path(f)

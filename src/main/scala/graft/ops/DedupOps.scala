@@ -78,14 +78,6 @@ object DedupOps {
   def intersectSizeSorted(a: Column, b: Column): Column =
     graft.expressions.F.intersectSizeSorted(a, b)
 
-  /** Exact Jaccard similarity between two shingle-hash SET columns (arrays
-    * already distinct), as e4-scaled bigint for oracle-stable comparison. */
-  def jaccardE4(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = (size(a) + size(b)).cast("double") - size(array_intersect(a, b))
-    round(inter / union * 10000).cast("long")
-  }
-
   /** Connected components over undirected pair edges: every node's label
     * converges to the minimum node id reachable from it (= deterministic
     * cluster id) — the dedup-pipeline step that turns near-dup PAIRS into

@@ -40,4 +40,13 @@ object HashOps {
   def permute(x: Column, i: Column): Column =
     ((lit(2L) * i + 1L) * x + (i * 2654435761L) % P) % P
 
+  /** The fixed-SIZE deterministic sample rule of the sampled gates: keep a
+    * row iff hash60(salt ":" id) in parts per million falls below
+    * target·10⁶ div nRows + 1 (capped at 10⁶), so about `target` rows
+    * are kept whatever the row count `nRows`. DuckDB mirror:
+    * sqlHash60(salt || ':' || id) % 1000000
+    *   < least(1000000, target * 1000000 // n + 1). */
+  def inFixedSizeSample(id: Column, salt: Column, nRows: Column, target: Long): Column =
+    hash60(concat(salt, lit(":"), id.cast("string"))) % 1000000L <
+      least(lit(1000000L), call_function("div", lit(target * 1000000L), nRows) + 1)
 }

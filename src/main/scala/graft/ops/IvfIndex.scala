@@ -319,11 +319,13 @@ object IvfIndex {
     * (see [[presenceProbe]]) instead of scanning the generation's whole
     * vec_id column. Bloom bytes amortize to well under 1% of a row-group's
     * embedding payload; min/max stats alone cannot prune here because a
-    * file's vec_ids are scattered (cells group by SIMILARITY, not id). */
+    * file's vec_ids are scattered (cells group by SIMILARITY, not id).
+    * No `expected.ndv` option: parquet sizes a filter with an explicit
+    * NDV at that fixed size and never takes the adaptive branch, so every
+    * (cell, batch) file would carry the full-size filter. */
   private def postingsWrite(df: DataFrame) = df.write
     .option("parquet.bloom.filter.enabled#vec_id", "true")
     .option("parquet.bloom.filter.adaptive.enabled", "true")
-    .option("parquet.bloom.filter.expected.ndv#vec_id", "200000")
 
   /** How many probe ids the presence paths push down as per-value parquet
     * predicates (bloom-prunable). Above this, the probe falls back to a

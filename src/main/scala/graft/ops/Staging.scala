@@ -64,57 +64,9 @@ object Staging {
     *    dynamic overwrite of its own dirs);
     *  - `dedup_delta_forget` — the forget rewrite runs inside the build,
     *    so invocations only probe (read-only).
-    * Any NEW consumer whose mutation is not idempotent must use
-    * [[onceCopied]] instead (StagingSpec proves the isolation). */
+    * A consumer whose mutation is not idempotent must not use `once`. */
   def once(root: String, inputDir: String, leaf: String)
           (build: String => Unit): String =
     built.computeIfAbsent(s"$root|${new java.io.File(inputDir).getAbsolutePath}|$leaf",
       _ => { val p = dir(root, inputDir, leaf); build(p); p })
-
-  /** [[once]] for NON-IDEMPOTENT consumers: the artifact is built (and
-    * memoized) once per JVM as a pristine master, and every invocation
-    * receives a PER-THREAD working copy RESET from the master — mutations
-    * never reach the master or any other invocation's active copy, so an
-    * entry that destructively evolves its staged index stays correct
-    * across the bench's two passes and the dual verify run. TWO slots per
-    * (thread, leaf) rotate per invocation: the slot handed out LAST
-    * invocation stays intact while the other is reset, so a still-
-    * unevaluated DataFrame lineage over the previous path keeps reading
-    * its own frozen copy (r16 advice — a single reused slot silently
-    * reset it). Only the IMMEDIATELY PREVIOUS invocation is protected;
-    * consumers that hold paths across two or more same-thread
-    * invocations must settle (collect/localCheckpoint) first. Disk stays
-    * bounded at (2 × threads + 1) × artifact size; the shutdown hook
-    * removes everything at exit. Use only when the mutation is not
-    * idempotent (see [[once]]'s contract). */
-  def onceCopied(root: String, inputDir: String, leaf: String)
-                (build: String => Unit): String = {
-    val master = once(root, inputDir, s"$leaf-master")(build)
-    val key = s"$root|$inputDir|$leaf|t${Thread.currentThread().getId}"
-    val slot = slotTurn.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicLong(0L))
-      .getAndIncrement() % 2
-    val mine = dir(root, inputDir,
-      s"$leaf-t${Thread.currentThread().getId}-s$slot")
-    deleteRecursively(new java.io.File(mine))
-    copyRecursively(new java.io.File(master), new java.io.File(mine))
-    mine
-  }
-
-  private val slotTurn =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-
-  private def copyRecursively(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      val children = src.listFiles()
-      if (children != null)
-        children.foreach(c => copyRecursively(c, new java.io.File(dst, c.getName)))
-    } else {
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
-  }
 }

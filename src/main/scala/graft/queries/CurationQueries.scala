@@ -68,9 +68,7 @@ object CurationQueries {
         .where(TextOps.tokenCount(col("text")) > 0)
         .select(col("doc_id"), qualityE4(col("text")).as("quality_e4"),
           TextOps.langId(TextOps.tokens(col("text"))).as("pred_lang"))
-      val cc = DedupOps.connectedComponents(
-        docs.select(col("doc_id").as("id")),
-        DedupQueries.minhashPairs(spark, dir).select("id_l", "id_r"))
+      val cc = DedupQueries.nearDupClusters(spark, dir)
       scored.join(cc, scored("doc_id") === cc("node"))
         .withColumn("is_canonical", (col("doc_id") === col("cluster_id")).cast("int"))
         .withColumn("keep",

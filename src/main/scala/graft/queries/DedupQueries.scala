@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{ClusterStore, DedupOps, HashOps, SignatureIndex, TextOps}
+import graft.ops.{ClusterStore, DedupOps, HashOps, SignatureIndex, Staging, TextOps}
 import graft.ops.Checkpoints._
 
 /** Deduplication extension queries over `documents`: exact, n-gram Jaccard,
@@ -28,6 +29,11 @@ object DedupQueries {
     * with the data (SignatureIndex.IndexParts default, or thousands at 100 TB)
     * so that a shard stays around a parquet row group. */
   val TestIndexParts = 8
+  // recall-stressed banding of the two banded-recall gates (4 bands × 16
+  // rows over the same 64 permutations); declared before the entries,
+  // whose oracle strings interpolate it at object-init time
+  private val EvoBands = 4
+  private val EvoRows = 16 // NumPerms / EvoBands
 
   private val SqlToks = "regexp_extract_all(lower(text), '\\S+')"
 
@@ -68,6 +74,208 @@ object DedupQueries {
        |      (len(sa.hs) + len(sb.hs) - len(list_intersect(sa.hs, sb.hs))) AS jac
        |  FROM cand JOIN shn sa ON id_l = sa.doc_id JOIN shn sb ON id_r = sb.doc_id)""".stripMargin
 
+  // ----- the near-dup steps, each written once; the entries compose them --
+
+  /** Sorted distinct 3-gram shingle-hash set per doc: (doc_id, hs). */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
+
+  /** The signature store's row per doc with a non-empty shingle set:
+    * (doc_id, hs, sig, bands), banded `nBands` × `rowsPerBand`. */
+  private def signatures(docs: DataFrame, nBands: Int = NumBands,
+                         rowsPerBand: Int = RowsPerBand): DataFrame =
+    DedupOps.signatureIndex(docs, ShingleK, NumPerms, nBands, rowsPerBand)
+
+  /** Pairs (id_l, id_r, …) with both sides' rows of `perDoc` (doc_id, …)
+    * joined in: each per-doc column c arrives as c_l / c_r. */
+  private def withSides(pairs: DataFrame, perDoc: DataFrame): DataFrame = {
+    def side(s: String) = perDoc.select(perDoc.columns.toSeq.map(c =>
+      col(c).as(if (c == "doc_id") s"id_$s" else s"${c}_$s")): _*)
+    pairs.join(side("l"), Seq("id_l")).join(side("r"), Seq("id_r"))
+  }
+
+  /** Exact verification of candidate pairs: [[withSides]] over `perDoc`
+    * (doc_id, hs, …) plus `inter` = |hs_l ∩ hs_r| (the codegen'd
+    * sorted-set intersect). Callers keep their own score formula: the
+    * double Jaccard, the integer union test and containment differ at
+    * the rounding boundary. */
+  private def verified(cand: DataFrame, perDoc: DataFrame): DataFrame =
+    withSides(cand, perDoc)
+      .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
+
+  /** Exact Jaccard of a [[verified]] pair as a double — correctly-rounded
+    * IEEE division, the oracle's `j` CTE formula. */
+  private def jaccard: Column =
+    col("inter").cast("double") / (size(col("hs_l")) + size(col("hs_r")) - col("inter"))
+
+  /** Candidate pairs (id_l < id_r) sharing at least `minCo` RARE shingles
+    * (2 ≤ df ≤ [[MaxDf]]) of `sets` (doc_id, hs): hot shingles never
+    * generate pairs, so the self-join is bounded by rare-shingle
+    * co-occurrence instead of quadratic in the hottest key. */
+  private def rareShingleCandidates(sets: DataFrame, minCo: Int): DataFrame = {
+    val ex = sets.select(col("doc_id"), explode(col("hs")).as("h"))
+    val rare = ex.groupBy("h").agg(count(lit(1)).as("df"))
+      .where(col("df").between(2, MaxDf)).select("h")
+    val exRare = ex.join(rare, Seq("h"))
+    exRare.select(col("doc_id").as("id_l"), col("h"))
+      .join(exRare.select(col("doc_id").as("id_r"), col("h")), Seq("h"))
+      .where(col("id_l") < col("id_r"))
+      .groupBy("id_l", "id_r").agg(count(lit(1)).as("co"))
+      .where(col("co") >= minCo).select("id_l", "id_r")
+  }
+
+  /** One row (doc_id, sz, h) per element of each set in `sets` (doc_id,
+    * hs); sz = the set's size. */
+  private def tokenRows(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), size(col("hs")).cast("long").as("sz"),
+      explode(col("hs")).as("h"))
+
+  /** The PPJoin prefix (Xiao et al., WWW'08) of every doc in `rows`
+    * (doc_id, sz, h) for Jaccard ≥ θ = tenths/10: its tokens ordered by
+    * document frequency in the [[tokenRows]] `corpus` ascending (ties by
+    * token), the first sz − ⌈θ·sz⌉ + 1 kept — two docs with Jaccard ≥ θ
+    * always share a prefix token. Returns (doc_id, h, sz). */
+  private def ppjoinPrefix(rows: DataFrame, corpus: DataFrame, tenths: Int): DataFrame =
+    rows.join(corpus.groupBy("h").agg(count(lit(1)).as("tok_df")), Seq("h"))
+      .withColumn("rnk", row_number().over(Window.partitionBy("doc_id")
+        .orderBy(col("tok_df").asc, col("h").asc)))
+      // integer ceil: ⌈θ·sz⌉ = (tenths·sz + 9) div 10
+      .where(col("rnk") <= col("sz") - expr(s"($tenths * sz + 9) div 10") + 1)
+      .select("doc_id", "h", "sz")
+
+  /** Candidate pairs (id_l < id_r) of a [[ppjoinPrefix]] self-join on
+    * prefix tokens, with the PPJoin LENGTH FILTER fused into the join:
+    * Jaccard ≥ θ forces 10·min(sz) ≥ tenths·max(sz), so pairs outside the
+    * size band cannot qualify and pruning them is lossless. On a hot join
+    * key this turns the C(df, 2) blow-up into per-size-band blocks. */
+  private def prefixPairs(prefix: DataFrame, tenths: Int): DataFrame =
+    prefix.select(col("doc_id").as("id_l"), col("h"), col("sz").as("sz_l"))
+      .join(prefix.select(col("doc_id").as("id_r"), col("h"), col("sz").as("sz_r")),
+        Seq("h"))
+      .where(col("id_l") < col("id_r") && col("sz_l") * 10 >= col("sz_r") * tenths &&
+        col("sz_r") * 10 >= col("sz_l") * tenths)
+      .select("id_l", "id_r").distinct()
+
+  /** Truth pairs of a recall gate: [[verified]] candidates over `sets`
+    * whose exact Jaccard ≥ θ by the same double division as
+    * [[minhashPairs]] (identical boundary behaviour on both sides):
+    * (id_l, id_r, inter, uni), persisted — the gate's tally reads it. */
+  private def jaccardTruth(cand: DataFrame, sets: DataFrame): DataFrame =
+    verified(cand, sets)
+      .withColumn("uni", (size(col("hs_l")) + size(col("hs_r"))).cast("long") - col("inter"))
+      .where(col("inter").cast("double") / col("uni") >= JaccardThreshold)
+      .select("id_l", "id_r", "inter", "uni")
+      .persist()
+
+  /** ONE pass over a gate's truth pairs tagged with membership in the
+    * verified LSH pairs `lsh` (distinct, so the left join cannot multiply
+    * rows): n_truth, n_hit, n_missed, recall_e4 (−1 with no truth) and
+    * worst_miss_jac_e4 (−1 when nothing was missed). */
+  private def recallTally(truth: DataFrame, lsh: DataFrame): DataFrame =
+    truth.join(lsh.withColumn("__hit", lit(1L)), Seq("id_l", "id_r"), "left")
+      .agg(count(lit(1)).as("n_truth"),
+        coalesce(sum(col("__hit")), lit(0L)).as("n_hit"),
+        coalesce(max(when(col("__hit").isNull,
+          expr("CAST(inter AS BIGINT) * 10000 div uni"))), lit(-1L))
+          .as("worst_miss_jac_e4"))
+      .withColumn("n_missed", col("n_truth") - col("n_hit"))
+      .withColumn("recall_e4",
+        expr("CASE WHEN n_truth = 0 THEN -1 ELSE n_hit * 10000 div n_truth END"))
+
+  /** Near-dup cluster label per document, (node, cluster_id): the min
+    * reachable doc id over the verified MinHash-LSH pair graph; a doc in
+    * no pair labels itself. */
+  private[queries] def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    DedupOps.connectedComponents(
+      Tables.documents(spark, dir).select(col("doc_id").as("id")),
+      minhashPairs(spark, dir).select("id_l", "id_r"))
+
+  /** Leakage-free split of a near-dup cluster label: portable 60-bit hash
+    * mod 10 → 8/1/1 train/val/test, so a cluster never straddles splits. */
+  private def clusterSplit(clusterId: Column): Column = {
+    val bucket = HashOps.hash60(clusterId.cast("string")) % 10
+    when(bucket <= 7, "train").when(bucket === 8, "val").otherwise("test")
+  }
+
+  /** (doc_id, cluster_id, cluster_size) over labels (doc_id, cluster_id),
+    * ordered by doc_id. */
+  private def withClusterSize(labels: DataFrame): DataFrame = {
+    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, Seq("cluster_id"))
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+      .orderBy("doc_id")
+  }
+
+  // ----- the cluster-store entries' epoch fixture --------------------------
+  // Docs arrive in three epochs by doc_id % 3, and a pair becomes
+  // observable in the epoch of its LATER endpoint. The forget entries
+  // retract the stored (epoch 0–1) docs with doc_id % 7 == 1.
+
+  private def epochNodes(docs: DataFrame, m: Int): DataFrame =
+    docs.where(col("doc_id") % 3 === m).select(col("doc_id").as("id"))
+
+  private def epochPairs(pairs: DataFrame, m: Int): DataFrame =
+    pairs.where(greatest(col("id_l") % 3, col("id_r") % 3) === m)
+
+  private def forgotten(id: Column): Column = id % 7 === 1 && id % 3 < 2
+
+  private def survivingPairs(pairs: DataFrame): DataFrame =
+    pairs.where(!forgotten(col("id_l")) && !forgotten(col("id_r")))
+
+  /** Runs `f` over the verified pair set (id_l, id_r), then releases every
+    * frame the pair pipeline persisted: the store merges consume the
+    * pairs eagerly, and the frame an entry returns reads only the store. */
+  private def withVerifiedPairs[T](spark: SparkSession, dir: String)
+                                  (f: DataFrame => T): T = {
+    val sigs = signatures(Tables.documents(spark, dir)).persist()
+    val pairs = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r").persist()
+    try f(pairs) finally { pairs.unpersist(); sigs.unpersist() }
+  }
+
+  /** A cluster-store entry's store at `leaf`: `bootstrap` (epochs 0 and 1,
+    * plus any forget) runs once per JVM (Staging.once); `epoch2` runs per
+    * invocation, and re-running it is the store ops' replay path (roots
+    * already merged, docs present: no writes), so the staged mutation is
+    * idempotent (see Staging.once's contract). Both get the verified
+    * pairs and the store path, and return the receipts of the store ops
+    * they ran, which are released unread. */
+  private def clusterStoreAt(spark: SparkSession, dir: String, leaf: String)
+                            (bootstrap: (DataFrame, String) => Seq[DataFrame])
+                            (epoch2: (DataFrame, String) => DataFrame): String = {
+    val path = Staging.once("/tmp/graft_dedup_index", dir, leaf) { p =>
+      withVerifiedPairs(spark, dir)(bootstrap(_, p)).foreach(discard)
+    }
+    discard(withVerifiedPairs(spark, dir)(epoch2(_, path)))
+    path
+  }
+
+  /** (doc_id, cluster_id, ext_id, ext_epoch) of a stable-id store, by doc_id. */
+  private def withExtIds(spark: SparkSession, storePath: String): DataFrame = {
+    val alloc = ClusterStore.allocations(spark, storePath)
+      .select(col("cluster_id"), col("ext_id"), col("ep").as("ext_epoch"))
+    ClusterStore.labels(spark, storePath).join(alloc, Seq("cluster_id"))
+      .select(col("doc_id"), col("cluster_id"), col("ext_id"), col("ext_epoch"))
+      .orderBy("doc_id")
+  }
+
+  // ----- the delta entries' pieces -----------------------------------------
+
+  /** The delta entries' documents: (doc_id BIGINT, text). */
+  private def deltaDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).select(col("doc_id").cast("long").as("doc_id"), col("text"))
+
+  /** Verdicts for `batch` (doc_id, text) against the signature index at
+    * `indexPath`, ordered by doc_id. The batch's signatures feed both
+    * candidate arms and both verification joins, so they are persisted,
+    * and released right after: the probe returns a SETTLED frame. */
+  private def probeBatch(batch: DataFrame, indexPath: String): DataFrame = {
+    val sigs = signatures(batch).persist()
+    val out = SignatureIndex.probe(batch.select("doc_id"), sigs, indexPath,
+      JaccardThreshold, nParts = TestIndexParts)
+    sigs.unpersist()
+    out.orderBy("doc_id")
+  }
+
   /** Exact duplicate ranking by content hash (keep-lowest-id canonical). */
   val dedupExact: Q = new Q {
     val name = "dedup_exact"
@@ -92,28 +300,11 @@ object DedupQueries {
       // persisted: this frame is referenced five times below (df counting,
       // both self-join sides, both full-set refinement joins) and DataFrame
       // lineage re-executes the scan + shingle kernel per reference
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .persist()
-      // Candidate generation with document-frequency pruning (prefix-filter
-      // style): only shingles with 2 ≤ df ≤ MaxDf generate pairs — hot
-      // shingles would make the self-join quadratic in the hottest key.
-      // Exact Jaccard is then computed from the FULL sets per candidate.
-      val ex = docs.select(col("doc_id"), explode(col("hs")).as("h"))
-      val dfq = ex.groupBy("h").agg(count(lit(1)).as("df"))
-        .where(col("df").between(2, MaxDf)).select("h")
-      val exPruned = ex.join(dfq, Seq("h"))
-      val cand = exPruned.select(col("doc_id").as("id_l"), col("h"))
-        .join(exPruned.select(col("doc_id").as("id_r"), col("h")), Seq("h"))
-        .where(col("id_l") < col("id_r"))
-        .groupBy("id_l", "id_r").agg(count(lit(1)).as("co"))
-        .where(col("co") >= MinCoOccur).select("id_l", "id_r")
-      cand
-        .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-        .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
-        .withColumn("jac",
-          col("inter").cast("double") / (size(col("hs_l")) + size(col("hs_r")) - col("inter")))
+      val docs = shingleSets(Tables.documents(spark, dir)).persist()
+      // df-capped rare-shingle candidates, then exact Jaccard from the
+      // FULL sets per candidate
+      verified(rareShingleCandidates(docs, MinCoOccur), docs)
+        .withColumn("jac", jaccard)
         .where(col("jac") >= JaccardThreshold)
         .select(col("id_l"), col("id_r"),
           round(col("jac") * 10000).cast("long").as("jac_e4"))
@@ -146,21 +337,18 @@ object DedupQueries {
 
   /** Same pipeline over an arbitrary (doc_id, text) frame — lets the skew
     * stress suite drive the banded path with adversarial fixtures. */
-  private[graft] def minhashPairsFor(docsRaw: DataFrame, minJac: Double): DataFrame = {
-    val docs = docsRaw
-      .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-      .where(size(col("hs")) > 0)
-      .withColumn("sig", DedupOps.minhashSignature(col("hs"), NumPerms))
-      .withColumn("bands", DedupOps.lshBandKeys(col("sig"), NumBands, RowsPerBand))
-      .persist()
-    val banded = docs.select(col("doc_id"), explode(col("bands")).as("bk"))
-    val cand = DedupOps.bucketPairs(banded, "doc_id", "bk")
-    cand
-      .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-      .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-      .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
-      .withColumn("jac", col("inter").cast("double") /
-        (size(col("hs_l")) + size(col("hs_r")) - col("inter")))
+  private[graft] def minhashPairsFor(docs: DataFrame, minJac: Double): DataFrame =
+    bandVerifiedPairs(signatures(docs).persist(), minJac)
+
+  /** Band-collision candidates over the signature rows `sigs` (doc_id, hs,
+    * sig, bands), [[verified]]: (id_l, id_r, hs_l/_r, sig_l/_r, inter,
+    * jac) with jac ≥ minJac. `sigs` is read by the band explode and both
+    * verification sides, so callers pass it persisted. */
+  private def bandVerifiedPairs(sigs: DataFrame, minJac: Double): DataFrame = {
+    val cand = DedupOps.bucketPairs(
+      sigs.select(col("doc_id"), explode(col("bands")).as("bk")), "doc_id", "bk")
+    verified(cand, sigs.select("doc_id", "hs", "sig"))
+      .withColumn("jac", jaccard)
       .where(col("jac") >= minJac)
   }
 
@@ -215,15 +403,8 @@ object DedupQueries {
     * step of a dedup pipeline. Oracle: recursive-CTE transitive closure. */
   val dedupClusters: Q = new Q {
     val name = "dedup_clusters"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      val pairs = minhashPairs(spark, dir).select("id_l", "id_r")
-      val cc = DedupOps.connectedComponents(nodes, pairs)
-      val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      cc.join(sizes, Seq("cluster_id"))
-        .select(col("node").as("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
-    }
+    def run(spark: SparkSession, dir: String): DataFrame =
+      withClusterSize(nearDupClusters(spark, dir).withColumnRenamed("node", "doc_id"))
     val oracle = Some(
       s"""WITH RECURSIVE $SqlMinhashPairCtes,
          |pairs AS (SELECT id_l, id_r FROM j WHERE jac >= $JaccardThreshold),
@@ -267,31 +448,14 @@ object DedupQueries {
     val name = "dedup_clusters_delta"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      def nodesOf(m: Int) = docs.where(col("doc_id") % 3 === m)
-        .select(col("doc_id").as("id"))
-      def pairsOf(all: DataFrame, m: Int) = all.where(
-        greatest(col("id_l") % 3, col("id_r") % 3) === m)
-      // bootstrap + epoch-1 merge ONCE per JVM (Staging.once): the
-      // per-invocation cost is epoch 2's merge — and RE-running it is the
-      // op's replay path (roots already merged, docs present, no writes),
-      // so the staged mutation is idempotent (see Staging.once's contract)
-      val storePath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "cluster_store") { p =>
-        val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        ClusterStore.merge(nodesOf(0), pairsOf(all, 0), p,
+      val store = clusterStoreAt(spark, dir, "cluster_store") { (all, p) =>
+        (0 to 1).map(m => ClusterStore.merge(epochNodes(docs, m), epochPairs(all, m), p,
+          nParts = TestIndexParts))
+      } { (all, p) =>
+        ClusterStore.merge(epochNodes(docs, 2), epochPairs(all, 2), p,
           nParts = TestIndexParts)
-        ClusterStore.merge(nodesOf(1), pairsOf(all, 1), p,
-          nParts = TestIndexParts)
-        all.unpersist(): Unit
       }
-      val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      ClusterStore.merge(nodesOf(2), pairsOf(all2, 2), storePath,
-        nParts = TestIndexParts)
-      val labels = ClusterStore.labels(spark, storePath)
-      val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      labels.join(sizes, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
+      withClusterSize(ClusterStore.labels(spark, store))
     }
     // the SAME oracle as dedup_clusters: the incrementally-maintained
     // store must be indistinguishable from the from-scratch labeling
@@ -321,39 +485,21 @@ object DedupQueries {
     val name = "dedup_clusters_forget"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      def nodesOf(m: Int) = docs.where(col("doc_id") % 3 === m)
-        .select(col("doc_id").as("id"))
-      def pairsOf(all: DataFrame, m: Int) = all.where(
-        greatest(col("id_l") % 3, col("id_r") % 3) === m)
-      def surv(c: org.apache.spark.sql.Column) = !(c % 7 === 1 && c % 3 < 2)
-      // bootstrap + epoch-1 merge + FORGET once per JVM (Staging.once):
-      // production pays the retraction when the deletion request arrives;
-      // per-invocation cost is epoch 2's merge, whose re-run is the op's
-      // replay path (idempotent — see Staging.once's contract)
-      val storePath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "cluster_store_forget") { p =>
-        val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        ClusterStore.merge(nodesOf(0), pairsOf(all, 0), p,
+      // production pays the retraction when the deletion request arrives,
+      // so the forget runs inside the once-per-JVM bootstrap
+      val store = clusterStoreAt(spark, dir, "cluster_store_forget") { (all, p) =>
+        (0 to 1).map(m => ClusterStore.merge(epochNodes(docs, m), epochPairs(all, m), p,
+          nParts = TestIndexParts)) :+
+          ClusterStore.forget(docs.where(forgotten(col("doc_id"))), p,
+            nParts = TestIndexParts)
+      } { (all, p) =>
+        // epoch 2 arrives AFTER the retraction: its pairs can only involve
+        // surviving partners (the signature-index forget guarantees no
+        // verdict against forgotten content)
+        ClusterStore.merge(epochNodes(docs, 2), survivingPairs(epochPairs(all, 2)), p,
           nParts = TestIndexParts)
-        ClusterStore.merge(nodesOf(1), pairsOf(all, 1), p,
-          nParts = TestIndexParts)
-        ClusterStore.forget(
-          docs.where(col("doc_id") % 7 === 1 && col("doc_id") % 3 < 2), p,
-          nParts = TestIndexParts)
-        all.unpersist(): Unit
       }
-      // epoch 2 arrives AFTER the retraction: its pairs can only involve
-      // surviving partners (the signature-index forget guarantees no
-      // verdict against forgotten content)
-      val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      ClusterStore.merge(nodesOf(2),
-        pairsOf(all2, 2).where(surv(col("id_l")) && surv(col("id_r"))),
-        storePath, nParts = TestIndexParts)
-      val labels = ClusterStore.labels(spark, storePath)
-      val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      labels.join(sizes, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
+      withClusterSize(ClusterStore.labels(spark, store))
     }
     // dedup_clusters' oracle restricted to SURVIVORS: docs and pairs with
     // a forgotten endpoint are excluded, and the store must be
@@ -396,29 +542,15 @@ object DedupQueries {
     val name = "dedup_clusters_stable_ids"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      def nodesOf(m: Int) = docs.where(col("doc_id") % 3 === m)
-        .select(col("doc_id").as("id"))
-      def pairsOf(all: DataFrame, m: Int) = all.where(
-        greatest(col("id_l") % 3, col("id_r") % 3) === m)
-      val storePath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "cluster_store_stable") { p =>
-        val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        for (m <- 0 to 1)
-          ClusterStore.mergeStable(nodesOf(m), pairsOf(all, m), p,
-            epoch = m.toLong, nParts = TestIndexParts)
-        all.unpersist(): Unit
+      val store = clusterStoreAt(spark, dir, "cluster_store_stable") { (all, p) =>
+        (0 to 1).map(m => ClusterStore.mergeStable(epochNodes(docs, m), epochPairs(all, m),
+          p, epoch = m.toLong, nParts = TestIndexParts))
+      } { (all, p) =>
+        // its replay recomputes identical allocations and writes nothing
+        ClusterStore.mergeStable(epochNodes(docs, 2), epochPairs(all, 2), p,
+          epoch = 2L, nParts = TestIndexParts)
       }
-      // per-invocation: epoch 2's merge — its replay recomputes identical
-      // allocations and writes nothing (the op's idempotence path)
-      val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      ClusterStore.mergeStable(nodesOf(2), pairsOf(all2, 2), storePath,
-        epoch = 2L, nParts = TestIndexParts)
-      val labels = ClusterStore.labels(spark, storePath)
-      val alloc = ClusterStore.allocations(spark, storePath)
-        .select(col("cluster_id"), col("ext_id"), col("ep").as("ext_epoch"))
-      labels.join(alloc, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"), col("ext_id"), col("ext_epoch"))
-        .orderBy("doc_id")
+      withExtIds(spark, store)
     }
     // per-epoch-prefix connected components (c0 ⊂ c1 ⊂ c2) + the
     // first-allocated-wins fold: each epoch's winner is the min
@@ -487,32 +619,16 @@ object DedupQueries {
     val name = "dedup_clusters_stable_forget"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      def nodesOf(m: Int) = docs.where(col("doc_id") % 3 === m)
-        .select(col("doc_id").as("id"))
-      def pairsOf(all: DataFrame, m: Int) = all.where(
-        greatest(col("id_l") % 3, col("id_r") % 3) === m)
-      def surv(c: org.apache.spark.sql.Column) = !(c % 7 === 1 && c % 3 < 2)
-      val storePath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "cluster_store_stable_fgt") { p =>
-        val all = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-        for (m <- 0 to 1)
-          ClusterStore.mergeStable(nodesOf(m), pairsOf(all, m), p,
-            epoch = m.toLong, nParts = TestIndexParts)
-        ClusterStore.forget(
-          docs.where(col("doc_id") % 7 === 1 && col("doc_id") % 3 < 2), p,
-          nParts = TestIndexParts, allocEpoch = Some(2L))
-        all.unpersist(): Unit
+      val store = clusterStoreAt(spark, dir, "cluster_store_stable_fgt") { (all, p) =>
+        (0 to 1).map(m => ClusterStore.mergeStable(epochNodes(docs, m), epochPairs(all, m),
+          p, epoch = m.toLong, nParts = TestIndexParts)) :+
+          ClusterStore.forget(docs.where(forgotten(col("doc_id"))), p,
+            nParts = TestIndexParts, allocEpoch = Some(2L))
+      } { (all, p) =>
+        ClusterStore.mergeStable(epochNodes(docs, 2), survivingPairs(epochPairs(all, 2)), p,
+          epoch = 3L, nParts = TestIndexParts)
       }
-      val all2 = minhashPairs(spark, dir).select("id_l", "id_r")
-      ClusterStore.mergeStable(nodesOf(2),
-        pairsOf(all2, 2).where(surv(col("id_l")) && surv(col("id_r"))),
-        storePath, epoch = 3L, nParts = TestIndexParts)
-      val labels = ClusterStore.labels(spark, storePath)
-      val alloc = ClusterStore.allocations(spark, storePath)
-        .select(col("cluster_id"), col("ext_id"), col("ep").as("ext_epoch"))
-      labels.join(alloc, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"), col("ext_id"), col("ext_epoch"))
-        .orderBy("doc_id")
+      withExtIds(spark, store)
     }
     val oracle = Some {
       def ccOver(name: String, docFilter: String, pairFilter: String) =
@@ -601,9 +717,7 @@ object DedupQueries {
     val name = "dedup_keep_canonical"
     def run(spark: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(spark, dir)
-      val nodes = docs.select(col("doc_id").as("id"))
-      val pairs = minhashPairs(spark, dir).select("id_l", "id_r")
-      val cc = DedupOps.connectedComponents(nodes, pairs)
+      val cc = nearDupClusters(spark, dir)
       val ordv = (col("n_chars") * 1000000000L) + (lit(1000000000L) - col("doc_id"))
       val labeled = cc.join(docs.select(col("doc_id"), col("n_chars")),
           cc("node") === docs("doc_id"))
@@ -759,11 +873,9 @@ object DedupQueries {
     * distances are exact integers on both sides. */
   val dedupLevVerify: Q = new Q {
     val name = "dedup_lev_verify"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      minhashPairs(spark, dir).select("id_l", "id_r")
-        .join(docs.select(col("doc_id").as("id_l"), col("text").as("text_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("text").as("text_r")), Seq("id_r"))
+    def run(spark: SparkSession, dir: String): DataFrame =
+      withSides(minhashPairs(spark, dir).select("id_l", "id_r"),
+          Tables.documents(spark, dir).select("doc_id", "text"))
         .withColumn("lev",
           when(col("text_l") === col("text_r"), lit(0L))
             .otherwise(levenshtein(col("text_l"), col("text_r")).cast("long")))
@@ -775,7 +887,6 @@ object DedupQueries {
         // pass would re-run the Levenshtein verify stage a second time
         .persist()
         .orderBy("id_l", "id_r")
-    }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
          |pairs AS (SELECT id_l, id_r FROM j WHERE jac >= $JaccardThreshold),
@@ -801,16 +912,11 @@ object DedupQueries {
     * extra shuffle beyond the label join. */
   val splitDedupAware: Q = new Q {
     val name = "split_dedup_aware"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      val pairs = minhashPairs(spark, dir).select("id_l", "id_r")
-      val cc = DedupOps.connectedComponents(nodes, pairs)
-      val bucket = graft.ops.HashOps.hash60(col("cluster_id").cast("string")) % 10
-      cc.select(col("node").as("doc_id"), col("cluster_id"),
-          when(bucket <= 7, "train").when(bucket === 8, "val")
-            .otherwise("test").as("split"))
+    def run(spark: SparkSession, dir: String): DataFrame =
+      nearDupClusters(spark, dir)
+        .select(col("node").as("doc_id"), col("cluster_id"),
+          clusterSplit(col("cluster_id")).as("split"))
         .orderBy("doc_id")
-    }
     val oracle = {
       val bucket = s"(${graft.ops.HashOps.sqlHash60("CAST(cluster_id AS VARCHAR)")} % 10)"
       Some(
@@ -865,13 +971,9 @@ object DedupQueries {
     def run(spark: SparkSession, dir: String): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val K = ContamK
-      val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      val pairs = minhashPairs(spark, dir).select("id_l", "id_r")
-      val cc = DedupOps.connectedComponents(nodes, pairs)
-      val bucket = HashOps.hash60(col("cluster_id").cast("string")) % 10
-      val split = cc.select(col("node").as("doc_id"), col("cluster_id"),
-          when(bucket <= 7, "train").when(bucket === 8, "val")
-            .otherwise("test").as("split"))
+      val split = nearDupClusters(spark, dir)
+        .select(col("node").as("doc_id"), col("cluster_id"),
+          clusterSplit(col("cluster_id")).as("split"))
         .persist() // consumed by train ids, eval side, and the leak probe
       val evalDocs = split.where(col("split") =!= "train")
       val trainClusters = split.where(col("split") === "train")
@@ -987,21 +1089,17 @@ object DedupQueries {
     * doc→source projection; output is source²-bounded. */
   val qDedupCrossSource: Q = new Q {
     val name = "q_dedup_cross_source"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val src = Tables.documents(spark, dir).select("doc_id", "source")
-      minhashPairs(spark, dir)
-        .select(col("id_l"), col("id_r"),
-          round(col("jac") * 10000).cast("long").as("jac_e4"))
-        .join(src.select(col("doc_id").as("id_l"), col("source").as("s_l")), Seq("id_l"))
-        .join(src.select(col("doc_id").as("id_r"), col("source").as("s_r")), Seq("id_r"))
-        .select(least(col("s_l"), col("s_r")).as("source_a"),
-          greatest(col("s_l"), col("s_r")).as("source_b"), col("jac_e4"))
+    def run(spark: SparkSession, dir: String): DataFrame =
+      withSides(minhashPairs(spark, dir).select(col("id_l"), col("id_r"),
+            round(col("jac") * 10000).cast("long").as("jac_e4")),
+          Tables.documents(spark, dir).select("doc_id", "source"))
+        .select(least(col("source_l"), col("source_r")).as("source_a"),
+          greatest(col("source_l"), col("source_r")).as("source_b"), col("jac_e4"))
         .groupBy("source_a", "source_b")
         .agg(count(lit(1)).as("n_pairs"),
           max("jac_e4").as("max_jac_e4"),
           expr("sum(jac_e4) div count(1)").as("mean_jac_e4"))
         .orderBy("source_a", "source_b")
-    }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
          |p AS (
@@ -1131,9 +1229,7 @@ object DedupQueries {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"),
           TextOps.tokenCount(lower(col("text"))).cast("long").as("tok_n"))
-      val nodes = docs.select(col("doc_id").as("id"))
-      val pairs = minhashPairs(spark, dir).select("id_l", "id_r")
-      val cc = DedupOps.connectedComponents(nodes, pairs)
+      val cc = nearDupClusters(spark, dir)
       docs
         .join(cc.select(col("node").as("doc_id"), col("cluster_id")), Seq("doc_id"))
         .withColumn("is_canon", (col("doc_id") === col("cluster_id")).cast("long"))
@@ -1206,10 +1302,7 @@ object DedupQueries {
       def runLen(a: String, b: String) = expr(
         s"aggregate(zip_with($a, $b, (x, y) -> if(coalesce(x = y, false), 1L, 0L)), " +
           "1L, (s, e) -> if(s % 2 = 1 and e = 1, s + 2, (s div 2) * 2)) div 2")
-      minhashPairs(spark, dir)
-        .select("id_l", "id_r")
-        .join(toks.select(col("doc_id").as("id_l"), col("tk").as("tk_l")), Seq("id_l"))
-        .join(toks.select(col("doc_id").as("id_r"), col("tk").as("tk_r")), Seq("id_r"))
+      withSides(minhashPairs(spark, dir).select("id_l", "id_r"), toks)
         .withColumn("len_l", size(col("tk_l")).cast("long"))
         .withColumn("len_r", size(col("tk_r")).cast("long"))
         .withColumn("pre", runLen("tk_l", "tk_r"))
@@ -1271,23 +1364,10 @@ object DedupQueries {
     * signatures; output is decile-bounded (≤ 11 rows). */
   val qMinhashAccuracy: Q = new Q {
     val name = "q_minhash_accuracy"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .where(size(col("hs")) > 0)
-        .withColumn("sig", DedupOps.minhashSignature(col("hs"), NumPerms))
-        .withColumn("bands", DedupOps.lshBandKeys(col("sig"), NumBands, RowsPerBand))
-        .persist()
-      val banded = docs.select(col("doc_id"), explode(col("bands")).as("bk"))
-      val cand = DedupOps.bucketPairs(banded, "doc_id", "bk")
-      cand
-        .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l"),
-          col("sig").as("sig_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r"),
-          col("sig").as("sig_r")), Seq("id_r"))
-        .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
-        .withColumn("jac_e4", expr(
-          "cast(round(cast(inter as double) / (size(hs_l) + size(hs_r) - inter) * 10000) as long)"))
+    // every candidate pair: jac ≥ 0 holds for any two non-empty sets
+    def run(spark: SparkSession, dir: String): DataFrame =
+      minhashPairs(spark, dir, minJac = 0.0)
+        .withColumn("jac_e4", round(col("jac") * 10000).cast("long"))
         .withColumn("agree", expr(
           "aggregate(zip_with(sig_l, sig_r, (a, b) -> if(a = b, 1L, 0L)), 0L, (acc, x) -> acc + x)"))
         .withColumn("est_e4", expr(s"agree * 10000 div $NumPerms"))
@@ -1297,7 +1377,6 @@ object DedupQueries {
           expr("sum(abs(est_e4 - jac_e4)) div count(1)").as("mean_abs_err_e4"),
           max(abs(col("est_e4") - col("jac_e4"))).as("max_abs_err_e4"))
         .orderBy("bucket")
-    }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
          |ag AS (
@@ -1342,7 +1421,6 @@ object DedupQueries {
   val dedupPrefixFilter: Q = new Q {
     val name = "dedup_prefix_filter"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
       // Token sets as SORTED DISTINCT hashP longs: long join keys beat
       // string keys in the hot candidate join, and verification runs the
       // codegen'd two-pointer intersect kernel instead of per-row
@@ -1354,36 +1432,13 @@ object DedupQueries {
           sort_array(array_distinct(transform(TextOps.tokens(col("text")),
             t => HashOps.hashP(t)))).as("hs"))
         .persist()
-      val ex = docs.select(col("doc_id"), explode(col("hs")).as("h"))
-      val dfq = ex.groupBy("h").agg(count(lit(1)).as("tok_df"))
-      val wDoc = Window.partitionBy("doc_id")
-      val prefix = ex.join(dfq, Seq("h"))
-        .withColumn("rnk",
-          row_number().over(wDoc.orderBy(col("tok_df").asc, col("h").asc)))
-        .withColumn("sz", count(lit(1)).over(wDoc))
-        // prefix length = s − ⌈0.9·s⌉ + 1, integer ceil via (9s+9) div 10
-        .where(col("rnk") <= col("sz") - expr("(9 * sz + 9) div 10") + 1)
-        .select("doc_id", "h", "sz")
-      // candidate equi-join on prefix tokens, with the PPJoin LENGTH
-      // FILTER fused into the join condition: J ≥ 0.9 forces
-      // |∩| ≥ 0.9·max(sl, sr) and |∩| ≤ min(sl, sr), hence
-      // 10·min ≥ 9·max — pairs outside the ±10% size band cannot
-      // qualify, so pruning them is lossless. On a hot join key this
-      // turns the C(df, 2) blow-up into per-size-band blocks.
-      val cand = prefix.select(col("doc_id").as("id_l"), col("h"), col("sz").as("sz_l"))
-        .join(prefix.select(col("doc_id").as("id_r"), col("h"), col("sz").as("sz_r")),
-          Seq("h"))
-        .where(col("id_l") < col("id_r") &&
-          col("sz_l") * 10 >= col("sz_r") * 9 && col("sz_r") * 10 >= col("sz_l") * 9)
-        .select("id_l", "id_r").distinct()
-      // persisted before the global sort: orderBy's range-partitioning
-      // SAMPLE pass re-executes its child stage, which here is the whole
+      val tokens = tokenRows(docs)
+      // θ = 0.9: prefix candidates, then exact verification. Persisted
+      // before the global sort: orderBy's range-partitioning SAMPLE pass
+      // re-executes its child stage, which here is the whole
       // intersect-verify join — materializing the (output-sized) verified
       // pairs makes the sort sort rows, not recompute the verify
-      cand
-        .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-        .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
+      verified(prefixPairs(ppjoinPrefix(tokens, tokens, 9), 9), docs)
         .withColumn("uni",
           (size(col("hs_l")) + size(col("hs_r"))).cast("long") - col("inter"))
         .where(col("inter") * 10 >= col("uni") * 9)
@@ -1426,22 +1481,8 @@ object DedupQueries {
     val name = "dedup_containment"
     val ContainE4Min = 9000L
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .persist()
-      val ex = docs.select(col("doc_id"), explode(col("hs")).as("h"))
-      val dfq = ex.groupBy("h").agg(count(lit(1)).as("df"))
-        .where(col("df").between(2, MaxDf)).select("h")
-      val exPruned = ex.join(dfq, Seq("h"))
-      val cand = exPruned.select(col("doc_id").as("id_l"), col("h"))
-        .join(exPruned.select(col("doc_id").as("id_r"), col("h")), Seq("h"))
-        .where(col("id_l") < col("id_r"))
-        .groupBy("id_l", "id_r").agg(count(lit(1)).as("co"))
-        .where(col("co") >= 3).select("id_l", "id_r")
-      val scored = cand
-        .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-        .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
+      val docs = shingleSets(Tables.documents(spark, dir)).persist()
+      val scored = verified(rareShingleCandidates(docs, 3), docs)
         .withColumn("sz_l", size(col("hs_l")).cast("long"))
         .withColumn("sz_r", size(col("hs_r")).cast("long"))
       // both containment directions IN-ROW: branching `scored` through a
@@ -1498,59 +1539,21 @@ object DedupQueries {
   val qLshRecall: Q = new Q {
     val name = "q_lsh_recall"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .where(size(col("hs")) > 0)
-        .persist()
-      val ex = docs.select(col("doc_id"), explode(col("hs")).as("h"))
-      val dfq = ex.groupBy("h").agg(count(lit(1)).as("tok_df"))
-      val wDoc = Window.partitionBy("doc_id")
-      // prefix length for θ = 0.7: s − ⌈0.7s⌉ + 1 (integer ceil)
-      val prefix = ex.join(dfq, Seq("h"))
-        .withColumn("rnk",
-          row_number().over(wDoc.orderBy(col("tok_df").asc, col("h").asc)))
-        .withColumn("sz", count(lit(1)).over(wDoc))
-        .where(col("rnk") <= col("sz") - expr("(7 * sz + 9) div 10") + 1)
-        .select("doc_id", "h", "sz")
-      val cand = prefix.select(col("doc_id").as("id_l"), col("h"), col("sz").as("sz_l"))
-        .join(prefix.select(col("doc_id").as("id_r"), col("h"), col("sz").as("sz_r")),
-          Seq("h"))
-        // PPJoin length filter, lossless for θ = 0.7: 10·min ≥ 7·max
-        .where(col("id_l") < col("id_r") &&
-          col("sz_l") * 10 >= col("sz_r") * 7 && col("sz_r") * 10 >= col("sz_l") * 7)
-        .select("id_l", "id_r").distinct()
-      // verify with the SAME double formula as minhashPairs (correctly-
-      // rounded IEEE division — identical boundary behavior both sides)
-      val truth = cand
-        .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-        .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-        .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
-        .withColumn("uni",
-          (size(col("hs_l")) + size(col("hs_r"))).cast("long") - col("inter"))
-        .where(col("inter").cast("double") / col("uni") >= JaccardThreshold)
-        .select("id_l", "id_r", "inter", "uni")
-        .persist()
+      // one persisted signature frame feeds both arms: its shingle sets
+      // the truth, its bands the LSH pairs
+      val sigs = signatures(Tables.documents(spark, dir)).persist()
+      val sets = sigs.select("doc_id", "hs")
+      val tokens = tokenRows(sets)
+      // lossless θ = 0.7 prefix candidates, exact-verified
+      val truth = jaccardTruth(
+        prefixPairs(ppjoinPrefix(tokens, tokens, 7), 7), sets)
       // persisted: feeds the tagged join and the n_lsh audit count —
-      // unpersisted, the whole banded minhashPairs pipeline ran once per
-      // consumer (verified near-dup pairs only, far smaller than the
-      // candidate set)
-      val lsh = minhashPairs(spark, dir).select("id_l", "id_r").persist()
-      val totals = truth
-        .join(lsh.withColumn("__hit", lit(1L)), Seq("id_l", "id_r"), "left")
-        .agg(
-          count(lit(1)).as("n_truth"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_hit"),
-          coalesce(max(when(col("__hit").isNull,
-            expr("CAST(inter AS BIGINT) * 10000 div uni"))), lit(-1L))
-            .as("worst_miss_jac_e4"))
-      totals
+      // unpersisted, the whole banded pair pipeline ran once per consumer
+      // (verified near-dup pairs only, far smaller than the candidate set)
+      val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r").persist()
+      recallTally(truth, lsh)
         .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
-        .select(col("n_truth"), col("n_lsh"), col("n_hit"),
-          (col("n_truth") - col("n_hit")).as("n_missed"),
-          expr("CASE WHEN n_truth = 0 THEN -1 ELSE n_hit * 10000 div n_truth END")
-            .as("recall_e4"),
-          col("worst_miss_jac_e4"))
+        .select("n_truth", "n_lsh", "n_hit", "n_missed", "recall_e4", "worst_miss_jac_e4")
     }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
@@ -1614,34 +1617,22 @@ object DedupQueries {
 
   private[graft] def lshRecallSampledFor(spark: SparkSession, dir: String,
                                          salt: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-      .where(size(col("hs")) > 0)
-      .persist()
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val sample = docs
-      .withColumn("h_ppm", HashOps.hash60(
-        concat(lit(s"$salt:"), col("doc_id").cast("string"))) % 1000000L)
-      .crossJoin(broadcast(nDocs))
-      .where(col("h_ppm") < least(lit(1000000L),
-        expr(s"$RecallSampleTarget * 1000000 div n_docs + 1")))
+    // one persisted signature frame feeds both arms (as in q_lsh_recall)
+    val sigs = signatures(Tables.documents(spark, dir)).persist()
+    val docs = sigs.select("doc_id", "hs")
+    val sample = docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
+      .where(HashOps.inFixedSizeSample(col("doc_id"), lit(salt), col("n_docs"),
+        RecallSampleTarget))
       .select(col("doc_id").as("s_id"))
       .persist()
-    // sz rides the explode (sz ≡ the full gate's count-over-doc window)
-    val ex = docs.select(col("doc_id"), size(col("hs")).cast("long").as("sz"),
-      explode(col("hs")).as("h"))
-    val dfq = ex.groupBy("h").agg(count(lit(1)).as("tok_df"))
-    // prefix length for θ = 0.7: s − ⌈0.7s⌉ + 1 — computed for the SAMPLE
-    // docs only (window over |S| docs, not the corpus)
-    val prefixS = ex.join(broadcast(sample), col("doc_id") === col("s_id"))
-      .join(dfq, Seq("h"))
-      .withColumn("rnk", row_number().over(Window.partitionBy("doc_id")
-        .orderBy(col("tok_df").asc, col("h").asc)))
-      .where(col("rnk") <= col("sz") - expr("(7 * sz + 9) div 10") + 1)
+    val tokens = tokenRows(docs)
+    // the θ = 0.7 prefix of the SAMPLE docs only (window over |S| docs,
+    // not the corpus), against the corpus-wide df
+    val prefixS = ppjoinPrefix(
+        tokens.join(broadcast(sample), col("doc_id") === col("s_id")), tokens, 7)
       .select(col("doc_id").as("id_s"), col("h"), col("sz").as("sz_s"))
     val cand = prefixS
-      .join(ex.select(col("doc_id").as("id_o"), col("h"), col("sz").as("sz_o")),
+      .join(tokens.select(col("doc_id").as("id_o"), col("h"), col("sz").as("sz_o")),
         Seq("h"))
       // PPJoin length filter, lossless for θ = 0.7: 10·min ≥ 7·max
       .where(col("id_s") =!= col("id_o") &&
@@ -1649,21 +1640,13 @@ object DedupQueries {
       .select(least(col("id_s"), col("id_o")).as("id_l"),
         greatest(col("id_s"), col("id_o")).as("id_r"))
       .distinct()
-    val truth = cand
-      .join(docs.select(col("doc_id").as("id_l"), col("hs").as("hs_l")), Seq("id_l"))
-      .join(docs.select(col("doc_id").as("id_r"), col("hs").as("hs_r")), Seq("id_r"))
-      .withColumn("inter", DedupOps.intersectSizeSorted(col("hs_l"), col("hs_r")))
-      .withColumn("uni",
-        (size(col("hs_l")) + size(col("hs_r"))).cast("long") - col("inter"))
-      .where(col("inter").cast("double") / col("uni") >= JaccardThreshold)
-      .select("id_l", "id_r", "inter", "uni")
-      .persist()
+    val truth = jaccardTruth(cand, docs)
     // sample-touching LSH pairs: two broadcast-HASH left probes against
     // the BOUNDED sample + null filter — one map-side pass, no shuffle.
     // (An OR-condition broadcast-NL semi compares every pair against all
     // |S| sample rows — measured dominant on the banded pair set; and
     // sample ids are unique, so the left joins preserve cardinality.)
-    val lsh = minhashPairs(spark, dir).select("id_l", "id_r")
+    val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r")
       .join(broadcast(sample.select(col("s_id").as("sid_l"))),
         col("id_l") === col("sid_l"), "left")
       .join(broadcast(sample.select(col("s_id").as("sid_r"))),
@@ -1675,27 +1658,11 @@ object DedupQueries {
       // consumer. Sample-restricted, so the cached set is
       // sample-proportional, never corpus-pairs-sized.
       .persist()
-    // ONE pass computes hit/missed/worst-miss: tag each truth pair with
-    // banded membership (lsh pairs are distinct, so the left join cannot
-    // multiply rows) and fold — the separate semi/anti frames plus
-    // per-column crossJoined aggregates re-walked the inputs per column
-    // (same rework as the embedding gate).
-    val totals = truth
-      .join(lsh.withColumn("__hit", lit(1L)), Seq("id_l", "id_r"), "left")
-      .agg(
-        count(lit(1)).as("n_truth"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_hit"),
-        coalesce(max(when(col("__hit").isNull,
-          expr("CAST(inter AS BIGINT) * 10000 div uni"))), lit(-1L))
-          .as("worst_miss_jac_e4"))
     sample.agg(count(lit(1)).as("n_sampled"))
       .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
-      .crossJoin(totals)
-      .select(col("n_sampled"), col("n_truth"), col("n_lsh"), col("n_hit"),
-        (col("n_truth") - col("n_hit")).as("n_missed"),
-        expr("CASE WHEN n_truth = 0 THEN -1 ELSE n_hit * 10000 div n_truth END")
-          .as("recall_e4"),
-        col("worst_miss_jac_e4"))
+      .crossJoin(recallTally(truth, lsh))
+      .select("n_sampled", "n_truth", "n_lsh", "n_hit", "n_missed", "recall_e4",
+        "worst_miss_jac_e4")
   }
 
   private[graft] def lshRecallSampledOracle(salt: String): String =
@@ -1758,7 +1725,9 @@ object DedupQueries {
     val name = "q_minhash_perm_sweep"
     def run(spark: SparkSession, dir: String): DataFrame =
       minhashPairs(spark, dir)
-        .select(col("id_l"), col("id_r"), col("hs_l"), col("hs_r"), col("inter"))
+        // the signatures are recomputed for the verified pairs only: read
+        // as sig_l/sig_r, they ride both candidate joins for every
+        // candidate pair, which measured 1.14× slower at sf0.1
         .withColumn("sig_l", DedupOps.minhashSignature(col("hs_l"), NumPerms))
         .withColumn("sig_r", DedupOps.minhashSignature(col("hs_r"), NumPerms))
         .withColumn("jac_e6",
@@ -1854,33 +1823,18 @@ object DedupQueries {
     * probe entry's per-invocation cost — batch signatures + pruned probe
     * — IS the steady-state per-batch cost. Probes never mutate it, so
     * sharing the staged copy (entry + plan pins) is safe. */
-  private[graft] def stagedDeltaIndex(spark: SparkSession, dir: String): String = {
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    graft.ops.Staging.once("/tmp/graft_dedup_index", dir, "sig_index") { p =>
-      SignatureIndex.write(DedupOps.signatureIndex(
-        docs.where(col("doc_id") % 5 =!= 0), ShingleK, NumPerms, NumBands, RowsPerBand),
+  private[graft] def stagedDeltaIndex(spark: SparkSession, dir: String): String =
+    Staging.once("/tmp/graft_dedup_index", dir, "sig_index") { p =>
+      SignatureIndex.write(
+        signatures(deltaDocs(spark, dir).where(col("doc_id") % 5 =!= 0)),
         p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
     }
-  }
 
   val dedupDeltaBatch: Q = new Q {
     val name = "dedup_delta_batch"
-    def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val isBatch = col("doc_id") % 5 === 0
-      val indexPath = stagedDeltaIndex(spark, dir)
-      // persisted: feeds both candidate arms and both verification joins;
-      // safe to release immediately — the probe returns a SETTLED frame
-      val batchSigs = DedupOps.signatureIndex(
-        docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = SignatureIndex.probe(
-        docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
-        JaccardThreshold, nParts = TestIndexParts)
-      batchSigs.unpersist()
-      out.orderBy("doc_id")
-    }
+    def run(spark: SparkSession, dir: String): DataFrame =
+      probeBatch(deltaDocs(spark, dir).where(col("doc_id") % 5 === 0),
+        stagedDeltaIndex(spark, dir))
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
          |matches AS (
@@ -1929,8 +1883,7 @@ object DedupQueries {
   val dedupDeltaBatch2: Q = new Q {
     val name = "dedup_delta_batch2"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val docs = deltaDocs(spark, dir)
       def part(m: Int) = docs.where(col("doc_id") % 3 === m)
       // bootstrap + batch-1 epoch ONCE per JVM: production pays the
       // corpus bootstrap and each already-ingested batch's probe+append
@@ -1939,13 +1892,11 @@ object DedupQueries {
       // GROWN index. The full protocol (bootstrap → probe → append kept)
       // still executes, inside the staging build, and any staleness in
       // the staged index hash-fails the oracle below.
-      val indexPath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "sig_index_evo") { p =>
-        SignatureIndex.write(DedupOps.signatureIndex(
-          part(0), ShingleK, NumPerms, NumBands, RowsPerBand), p,
+      val indexPath = Staging.once("/tmp/graft_dedup_index", dir, "sig_index_evo") { p =>
+        SignatureIndex.write(signatures(part(0)), p,
           NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
-        val b1 = DedupOps.signatureIndex(
-          part(1), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
+        // persisted by hand, not through probeBatch: the append reuses b1
+        val b1 = signatures(part(1)).persist()
         // SignatureIndex.probe returns a SETTLED frame, so kept1 cannot
         // re-evaluate mid-append against a half-mutated index
         val kept1 = SignatureIndex.probe(
@@ -1957,13 +1908,7 @@ object DedupQueries {
           NumPerms, NumBands, RowsPerBand, mode = "append", nParts = TestIndexParts)
         b1.unpersist(): Unit
       }
-      val b2 = DedupOps.signatureIndex(
-        part(2), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = SignatureIndex.probe(
-        part(2).select("doc_id"), b2, indexPath, JaccardThreshold,
-        nParts = TestIndexParts)
-      b2.unpersist()
-      out.orderBy("doc_id")
+      probeBatch(part(2), indexPath)
     }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
@@ -2013,8 +1958,7 @@ object DedupQueries {
   val dedupDeltaForget: Q = new Q {
     val name = "dedup_delta_forget"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val docs = deltaDocs(spark, dir)
       val isBatch = col("doc_id") % 5 === 0
       // bootstrap + forget rewrite ONCE per JVM (the verdict-r13 "fold
       // the forget rewrite into the bootstrap" ask): production pays a
@@ -2023,24 +1967,14 @@ object DedupQueries {
       // index. The remove op itself still executes (in the staging
       // build), and a stale sigs payload OR stale bands row hash-fails
       // the oracle below.
-      val indexPath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "sig_index_forget") { p =>
-        SignatureIndex.write(DedupOps.signatureIndex(
-          docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
+      val indexPath = Staging.once("/tmp/graft_dedup_index", dir, "sig_index_forget") { p =>
+        SignatureIndex.write(signatures(docs.where(!isBatch)),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
         SignatureIndex.remove(
           docs.where(!isBatch && col("doc_id") % 7 === 1).select("doc_id"),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
       }
-      // persisted: feeds both candidate arms and both verification joins;
-      // safe to release immediately — the probe returns a SETTLED frame
-      val batchSigs = DedupOps.signatureIndex(
-        docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = SignatureIndex.probe(
-        docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
-        JaccardThreshold, nParts = TestIndexParts)
-      batchSigs.unpersist()
-      out.orderBy("doc_id")
+      probeBatch(docs.where(isBatch), indexPath)
     }
     val oracle = Some(
       s"""WITH $SqlMinhashPairCtes,
@@ -2085,44 +2019,54 @@ object DedupQueries {
   val dedupDeltaForgetLogical: Q = new Q {
     val name = "dedup_delta_forget_logical"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val docs = deltaDocs(spark, dir)
       val isBatch = col("doc_id") % 5 === 0
       // bootstrap + tombstone ONCE per JVM (Staging.once): probes never
       // mutate the index or the tombstone table, so sharing is safe; the
       // per-invocation cost is the per-batch probe with the anti-join
-      val indexPath = graft.ops.Staging.once(
+      val indexPath = Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_forget_logical") { p =>
-        SignatureIndex.write(DedupOps.signatureIndex(
-          docs.where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
+        SignatureIndex.write(signatures(docs.where(!isBatch)),
           p, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
         SignatureIndex.tombstone(
           docs.where(!isBatch && col("doc_id") % 7 === 1).select("doc_id"), p)
       }
-      val batchSigs = DedupOps.signatureIndex(
-        docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-      val out = SignatureIndex.probe(
-        docs.where(isBatch).select("doc_id"), batchSigs, indexPath,
-        JaccardThreshold, nParts = TestIndexParts)
-      batchSigs.unpersist()
-      out.orderBy("doc_id")
+      probeBatch(docs.where(isBatch), indexPath)
     }
     // the SAME oracle as dedup_delta_forget: logical and physical forget
     // must be indistinguishable at the verdict surface
     val oracle = dedupDeltaForget.oracle
   }
 
+  /** A banded-recall gate's fixed-size query sample over `docs` (doc_id,
+    * text), salted by `salt` ([[HashOps.inFixedSizeSample]] against the
+    * count of docs with a non-empty shingle set): its [[signatures]] rows
+    * banded `EvoBands` × `EvoRows`, persisted (the caller releases it).
+    * The sample filter runs on the raw rows, so the MinHash kernel sees
+    * about [[RecallSampleTarget]] docs, never the corpus. */
+  private def recallQuerySample(docs: DataFrame, salt: String): DataFrame = {
+    val nDocs = shingleSets(docs).where(size(col("hs")) > 0).agg(count(lit(1)).as("n_docs"))
+    signatures(docs.crossJoin(broadcast(nDocs))
+        .where(HashOps.inFixedSizeSample(col("doc_id"), lit(salt), col("n_docs"),
+          RecallSampleTarget))
+        .select("doc_id", "text"), EvoBands, EvoRows)
+      .persist()
+  }
+
   /** The stored arms of a banded-recall gate over one signature index, for
-    * a query sample `qs` (q_id, q_hs) and its band keys `qBands` (q_id, bk):
-    * the stored payloads (p_id, p_hs); the TRUE near-dup partners (exact
+    * a [[recallQuerySample]] `sample`: the stored payloads (p_id, p_hs);
+    * the TRUE near-dup partners (exact
     * Jaccard ≥ θ over stored shingle sets — the lossless truth, a
     * sample × corpus broadcast join); and the partners the STORED band
     * table surfaces (persisted — the caller unpersists it). Both are
     * (q_id, p_id) with self-pairs excluded. The index reads carry explicit
     * schemas, so an empty-corpus index (shard dirs with no files) reads as
     * empty instead of failing schema inference. */
-  private def bandRecallArms(spark: SparkSession, indexPath: String, qs: DataFrame,
-                             qBands: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private def bandRecallArms(spark: SparkSession, indexPath: String,
+                             sample: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val qs = sample.select(col("doc_id").as("q_id"), col("hs").as("q_hs"))
+    val qBands = sample.select(col("doc_id").as("q_id"), explode(col("bands")).as("bk"))
+      .distinct()
     val pHs = SignatureIndex.sigs(spark, indexPath)
       .select(col("doc_id").as("p_id"), col("hs").as("p_hs"))
     val truth = pHs.crossJoin(broadcast(qs))
@@ -2179,45 +2123,22 @@ object DedupQueries {
     * index rescans. */
   val dedupRecallEvolution: Q = new Q {
     val name = "q_dedup_recall_evolution"
-    private val EvoBands = 4
-    private val EvoRows = 16 // NumPerms / EvoBands
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      def part(m: Int) = docs.where(col("doc_id") % 3 === m)
+      val docs = deltaDocs(spark, dir)
+      def part(m: Int) = signatures(docs.where(col("doc_id") % 3 === m), EvoBands, EvoRows)
       // bootstrap + both appends ONCE per JVM (Staging.once): probes are
       // read-only, so sharing the staged lifecycle output is safe
-      val indexPath = graft.ops.Staging.once(
-          "/tmp/graft_dedup_index", dir, "sig_index_recall_evo") { p =>
-        SignatureIndex.write(DedupOps.signatureIndex(
-          part(0), ShingleK, NumPerms, EvoBands, EvoRows), p,
+      val indexPath = Staging.once("/tmp/graft_dedup_index", dir, "sig_index_recall_evo") { p =>
+        SignatureIndex.write(part(0), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
         for (m <- Seq(1, 2))
-          SignatureIndex.appendNew(DedupOps.signatureIndex(
-            part(m), ShingleK, NumPerms, EvoBands, EvoRows), p,
+          SignatureIndex.appendNew(part(m), p,
             NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
-      // fixed-size query sample: hash60(salt:doc_id) threshold scaled by
-      // the corpus count — the q_lsh_recall_sampled idiom, so the truth
-      // arm is sample x corpus (linear), never a corpus fraction squared
-      val docsHs = docs.select(col("doc_id"),
-          graft.ops.TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .where(size(col("hs")) > 0)
-      val nDocs = docsHs.agg(count(lit(1)).as("n_docs"))
-      val qSigs = docsHs
-        .withColumn("h_ppm", graft.ops.HashOps.hash60(
-          concat(lit("evo:"), col("doc_id").cast("string"))) % 1000000L)
-        .crossJoin(broadcast(nDocs))
-        .where(col("h_ppm") < least(lit(1000000L),
-          expr(s"$RecallSampleTarget * 1000000 div n_docs + 1")))
-        .withColumn("sig", DedupOps.minhashSignature(col("hs"), NumPerms))
-        .withColumn("bands", DedupOps.lshBandKeys(col("sig"), EvoBands, EvoRows))
-        .persist()
-      val qs = qSigs.select(col("doc_id").as("q_id"), col("hs").as("q_hs"))
-      val qBands = qSigs
-        .select(col("doc_id").as("q_id"), explode(col("bands")).as("bk"))
-        .distinct()
-      val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qs, qBands)
+      // fixed-size query sample, so the truth arm is sample × corpus
+      // (linear), never a corpus fraction squared
+      val qSigs = recallQuerySample(docs, "evo")
+      val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qSigs)
       val epochOf = explode(sequence(pmod(col("p_id"), lit(3L)), lit(2L)))
       val perEpoch = truth
         .join(collided.withColumn("hit", lit(1L)), Seq("q_id", "p_id"), "left")
@@ -2332,17 +2253,13 @@ object DedupQueries {
     * 0–1), so the epoch-2 append lands on a post-purge index. */
   val dedupRecallForget: Q = new Q {
     val name = "q_dedup_recall_forget"
-    private val EvoBands = 4
-    private val EvoRows = 16 // NumPerms / EvoBands
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val docs = deltaDocs(spark, dir)
       def part(m: Int) = docs.where(col("doc_id") % 3 === m)
-      val isForgot = col("doc_id") % 7 === 1 && col("doc_id") % 3 < 2
-      def sigsOf(d: DataFrame) =
-        DedupOps.signatureIndex(d, ShingleK, NumPerms, EvoBands, EvoRows)
+      val isForgot = forgotten(col("doc_id"))
+      def sigsOf(d: DataFrame) = signatures(d, EvoBands, EvoRows)
       // lifecycle arm: the REAL ops, forget + purge mid-stream
-      val lifecyclePath = graft.ops.Staging.once(
+      val lifecyclePath = Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_recall_fgt_life") { p =>
         SignatureIndex.write(sigsOf(part(0)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
@@ -2355,33 +2272,16 @@ object DedupQueries {
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
       // baseline arm: the forgotten docs never existed
-      val baselinePath = graft.ops.Staging.once(
+      val baselinePath = Staging.once(
           "/tmp/graft_dedup_index", dir, "sig_index_recall_fgt_base") { p =>
         SignatureIndex.write(sigsOf(docs.where(!isForgot)), p,
           NumPerms, EvoBands, EvoRows, nParts = TestIndexParts)
       }
-      // fixed-size query sample over SURVIVORS (the sampled-gate idiom)
-      val docsHs = docs.where(!isForgot)
-        .select(col("doc_id"),
-          graft.ops.TextOps.shingleHashes(col("text"), ShingleK).as("hs"))
-        .where(size(col("hs")) > 0)
-      val nDocs = docsHs.agg(count(lit(1)).as("n_docs"))
-      val qSigs = docsHs
-        .withColumn("h_ppm", graft.ops.HashOps.hash60(
-          concat(lit("fgt:"), col("doc_id").cast("string"))) % 1000000L)
-        .crossJoin(broadcast(nDocs))
-        .where(col("h_ppm") < least(lit(1000000L),
-          expr(s"$RecallSampleTarget * 1000000 div n_docs + 1")))
-        .withColumn("sig", DedupOps.minhashSignature(col("hs"), NumPerms))
-        .withColumn("bands", DedupOps.lshBandKeys(col("sig"), EvoBands, EvoRows))
-        .persist()
-      val qs = qSigs.select(col("doc_id").as("q_id"), col("hs").as("q_hs"))
-      val qBands = qSigs
-        .select(col("doc_id").as("q_id"), explode(col("bands")).as("bk"))
-        .distinct()
+      // fixed-size query sample over SURVIVORS
+      val qSigs = recallQuerySample(docs.where(!isForgot), "fgt")
       // each arm answers from ITS OWN stored files
       def metrics(indexPath: String, arm: String): DataFrame = {
-        val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qs, qBands)
+        val (pHs, truth, collided) = bandRecallArms(spark, indexPath, qSigs)
         val per = truth
           .join(collided.withColumn("hit", lit(1L)), Seq("q_id", "p_id"), "left")
           .agg(count(lit(1)).as("n_true_pairs"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Checkpoints._
 import graft.Tables
 import graft.ops.VectorOps
+import DedupQueries.RecallSampleTarget
 
 /** Similarity-search extension queries over `embeddings` (array<float>,
   * 64-dim): brute-force cosine top-k (exact baseline), random-hyperplane
@@ -368,9 +369,6 @@ object VectorQueries {
     * audit row: sample size, truth/lsh/hit/missed counts restricted to
     * sample-touching pairs, recall_e4, worst-missed cosine. Estimator
     * spread across disjoint salts: [[graft.tools.SampledGateVariance]]. */
-  val RecallSampleTarget = 150L
-  val RecallSampleSalt = "rcl"
-
   private[graft] def embeddingLshRecallSampledFor(
       spark: SparkSession, dir: String, salt: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -378,11 +376,9 @@ object VectorQueries {
       .persist()
     val nVecs = emb.agg(count(lit(1)).as("n_vecs"))
     val sample = emb
-      .withColumn("h_ppm", graft.ops.HashOps.hash60(
-        concat(lit(s"$salt:"), col("vec_id").cast("string"))) % 1000000L)
       .crossJoin(broadcast(nVecs))
-      .where(col("h_ppm") < least(lit(1000000L),
-        expr(s"$RecallSampleTarget * 1000000 div n_vecs + 1")))
+      .where(graft.ops.HashOps.inFixedSizeSample(col("vec_id"), lit(salt), col("n_vecs"),
+        RecallSampleTarget))
       .select(col("vec_id").as("s_id"), col("embedding").as("s_vec"),
         col("nrm").as("s_nrm"))
       .persist()
@@ -504,10 +500,8 @@ object VectorQueries {
       .crossJoin(broadcast(nVecs))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("n_vecs"),
         explode(array(salts.map(lit): _*)).as("salt"))
-      .withColumn("h_ppm", graft.ops.HashOps.hash60(
-        concat(col("salt"), lit(":"), col("vec_id").cast("string"))) % 1000000L)
-      .where(col("h_ppm") < least(lit(1000000L),
-        expr(s"$RecallSampleTarget * 1000000 div n_vecs + 1")))
+      .where(graft.ops.HashOps.inFixedSizeSample(col("vec_id"), col("salt"), col("n_vecs"),
+        RecallSampleTarget))
       .select(col("salt"), col("vec_id").as("s_id"),
         col("embedding").as("s_vec"), col("nrm").as("s_nrm"))
       .persist()

@@ -3,11 +3,8 @@ package graft.ops
 import graft.SparkSpec
 
 /** Pins the [[Staging]] mutation contract: `once` memoizes a shared
-  * artifact (safe only for read-only or idempotently-mutating consumers —
-  * the documented contract), and `onceCopied` isolates a NON-idempotent
-  * consumer: the pristine master is built exactly once, every invocation
-  * gets its own copy, and one invocation's mutation can never leak into
-  * the master or a later invocation. */
+  * artifact, so it is safe only for read-only or idempotently-mutating
+  * consumers — a mutation through it is seen by every later caller. */
 class StagingSpec extends SparkSpec {
 
   private def mkInput(): java.io.File = {
@@ -38,52 +35,6 @@ class StagingSpec extends SparkSpec {
     assert(read(new java.io.File(a, "state.txt")) === "pristine")
   }
 
-  test("onceCopied isolates a non-idempotent consumer from the master and later invocations") {
-    val in = mkInput()
-    var builds = 0
-    def call() = Staging.onceCopied("/tmp/graft_staging_spec", in.getPath, "mut") { p =>
-      builds += 1
-      write(new java.io.File(p, "state.txt"), "pristine")
-      write(new java.io.File(p, "sub/nested.txt"), "deep")
-    }
-    val first = call()
-    // a NON-IDEMPOTENT mutation: destructively rewrites the artifact state
-    write(new java.io.File(first, "state.txt"), "mutated-by-invocation-1")
-    write(new java.io.File(first, "litter.txt"), "leftover from invocation 1")
-    assert(new java.io.File(first, "sub/nested.txt").exists())
-
-    val second = call()
-    assert(builds === 1, "master build must be memoized across invocations")
-    assert(read(new java.io.File(second, "state.txt")) === "pristine",
-      "a later invocation must never observe an earlier invocation's mutation")
-    assert(read(new java.io.File(second, "sub/nested.txt")) === "deep",
-      "copies must be recursive")
-    assert(!new java.io.File(second, "litter.txt").exists(),
-      "the reset must remove files an earlier invocation ADDED, not just overwrite")
-    // the master itself is never touched by any invocation's mutation
-    val master = Staging.dir("/tmp/graft_staging_spec", in.getPath, "mut-master")
-    assert(read(new java.io.File(master, "state.txt")) === "pristine")
-    // disk is BOUNDED and the PREVIOUS invocation's copy survives one
-    // more call (r16 advice: a single reused slot silently reset the
-    // path the prior invocation was still reading): two slots rotate
-    assert(second !== first,
-      "the immediately previous invocation's copy must stay intact")
-    assert(read(new java.io.File(first, "state.txt")) === "mutated-by-invocation-1",
-      "handing out slot 2 must not reset slot 1 — a lineage over `first` " +
-        "would silently read reset content")
-    val third = call()
-    assert(third === first,
-      "same-thread invocations rotate TWO slots, not grow a copy each")
-    assert(read(new java.io.File(third, "state.txt")) === "pristine",
-      "the rotated-to slot must be reset from the master")
-    // and a concurrent thread gets its OWN slot — no cross-thread sharing
-    var other: String = null
-    val t = new Thread(() => { other = call() })
-    t.start(); t.join()
-    assert(other !== first, "two threads must never share a working copy")
-    assert(read(new java.io.File(other, "state.txt")) === "pristine")
-  }
-
   test("once vs onceCopied: a mutation through `once` IS shared (why the contract exists)") {
     val in = mkInput()
     val shared = Staging.once("/tmp/graft_staging_spec", in.getPath, "shared") { p =>
@@ -92,6 +43,6 @@ class StagingSpec extends SparkSpec {
     write(new java.io.File(shared, "state.txt"), "mutated")
     val again = Staging.once("/tmp/graft_staging_spec", in.getPath, "shared")(_ => fail("rebuilt"))
     assert(read(new java.io.File(again, "state.txt")) === "mutated",
-      "`once` consumers share one artifact — exactly the hazard onceCopied removes")
+      "`once` consumers share one artifact")
   }
 }

@@ -52,6 +52,30 @@ class IvfGenerationSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
   }
 
+  test("every postings file carries a vec_id bloom filter sized to its rows") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val root = java.nio.file.Files.createTempDirectory("ivf_bloom").toString
+    graft.StoreCycle.run(spark, root)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "ivf"))
+    val files = try walk.iterator().asScala.map(_.toString)
+      .filter(f => f.contains("/postings/") && f.endsWith(".parquet")).toList
+    finally walk.close()
+    assert(files.nonEmpty)
+    for (f <- files) {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(p(f), spark.sparkContext.hadoopConfiguration))
+      val blooms = try reader.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala).filter(_.getPath.toDotString == "vec_id")
+        .map(_.getBloomFilterOffset)
+      finally reader.close()
+      assert(blooms.nonEmpty && blooms.forall(_ >= 0), s"$f: no vec_id bloom filter")
+      val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(f))
+      assert(bytes < 128 * 1024, s"$f: $bytes bytes")
+    }
+  }
+
   test("zero-downtime refresh: a pre-refresh reader keeps its consistent generation; a post-refresh reader sees the new one") {
     val root = freshIndex()
     val before = IvfIndex.resolve(spark, root)

@@ -44,6 +44,23 @@ class StoreReleaseSpec extends SparkSpec {
     assert(left === 0)
   }
 
+  test("the cluster-store entries leave no persisted frame behind") {
+    import graft.queries.DedupQueries._
+    for (q <- Seq(dedupClustersDelta, dedupClustersForget,
+        dedupClustersStableIds, dedupClustersStableForget)) {
+      def run() = q.run(spark, "/root/testdata/sf0.001").collect()
+      // the measured call is the steady-state one: the first also builds
+      // the once-per-JVM store. The cache is cleared in between, so that a
+      // pair frame left cached cannot absorb the measured call's persist
+      // and hide a leak
+      run()
+      spark.catalog.clearCache()
+      val (rows, left) = newPersisted(run())
+      assert(rows.nonEmpty, q.name)
+      assert(left === 0, s"${q.name} left $left persisted RDDs")
+    }
+  }
+
   test("every store op leaves persisted only the settled frame it returns") {
     val root = java.nio.file.Files.createTempDirectory("p_release_cycle").toString
     val steps = StoreCycle.run(spark, root)
