@@ -56,6 +56,29 @@ object Sessions {
     *    1.6 MB of metaspace), so a full cache holds about 7 MB per JVM. It
     *    is a static conf, read once per JVM at the first codegen, so it
     *    must be set here, at session build.
+    *  - write each shuffle byte once: `spark.shuffle.sort.bypassMergeThreshold=0`.
+    *    For a shuffle of at most that many reducers (default 200: every
+    *    exchange at `local[N]`, and most production ones) Spark picks the
+    *    bypass-merge writer, which writes each map output twice: once into
+    *    one temp file per reducer, then again when it concatenates them
+    *    into the map's data file. With 0 every SQL exchange (no map-side
+    *    combine, the relocatable UnsafeRow serializer) takes the serialized
+    *    sort-shuffle writer, which sorts record pointers in memory and,
+    *    when a map output fits in one spill, moves that spill into place
+    *    instead of copying it. Measured on a 4-core VM at `local[4]`
+    *    (perfbench inputs, `/proc/self/io` `wchar`, 10 pairs): catalog_floor,
+    *    whose plans this alone changes, `write_amp` 0.382 → 0.191 with
+    *    `cpu_s` and `peak_rss_mb` flat. Both keys are SparkConf (core)
+    *    keys, read when the SparkContext starts, so they must be set here,
+    *    at session build.
+    *  - `spark.buffer.pageSize=4m`: each map task of that writer takes one
+    *    Tungsten page at its first record, and the default page is sized
+    *    from the heap (up to 64 MiB), so with N concurrent map tasks the
+    *    switch would hold N large pages at once. At 4 MiB a `local[4]`
+    *    session holds 16 MiB of them, and lake_cycle `peak_rss_mb` stayed
+    *    flat (−1.5 %, 10 pairs). The page size also bounds the pages of
+    *    sorts and hash aggregates: a task can address 8192 pages, 32 GiB
+    *    at 4 MiB, and a record larger than a page gets a page of its own.
     */
   val defaults: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
@@ -64,6 +87,8 @@ object Sessions {
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "1000",
     "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.shuffle.sort.bypassMergeThreshold" -> "0",
+    "spark.buffer.pageSize" -> "4m",
     "spark.sql.extensions" -> "graft.GraftExtensions")
 
   /** The local-mode session every dev main shares (Explain, Pipeline,

@@ -38,6 +38,10 @@ object F {
   def intersectSizeSorted(a: Column, b: Column): Column =
     Shim.column(IntersectSizeSorted(Shim.expression(a), Shim.expression(b)))
 
+  /** `c` computed once per row: Catalyst does not copy it into the filters
+    * and join conditions above it (see [[EvalOnce]]). */
+  def evalOnce(c: Column): Column = Shim.column(EvalOnce(Shim.expression(c)))
+
   def aHash64(s: Column): Column =
     Shim.column(AHash64(Shim.expression(s)))
 

@@ -228,6 +228,27 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** `child`, evaluated once per row where Catalyst would copy it. The
+  * optimizer inlines a deterministic projection into every filter and join
+  * condition that reads it: `inter` = [[IntersectSizeSorted]] under a
+  * `jac >= θ` filter would run three times per candidate pair, twice in
+  * the join condition the filter is pushed into (numerator and union) and
+  * once in the projection. Reported non-deterministic, the way a UDF is
+  * marked `asNondeterministic` for the same reason, its projection stays a
+  * barrier: filters above it stay above it, and the value is computed
+  * once. The value itself is deterministic. */
+case class EvalOnce(child: Expression) extends UnaryExpression {
+  override lazy val deterministic: Boolean = false
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = c.code, isNull = c.isNull, value = c.value)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** SimHash fingerprint (nBits ≤ 63) over a long-array of token hashes:
   * bit j set when Σ (2·bit_j(h) − 1) > 0 — single pass, nBits counters. */
 case class SimHash(child: Expression, nBits: Int) extends UnaryExpression {

@@ -74,9 +74,13 @@ object DedupOps {
   }
 
   /** Intersection cardinality of two SORTED distinct long-array columns
-    * (as produced by ShingleHashSet) — codegen'd two-pointer merge. */
+    * (as produced by ShingleHashSet) — codegen'd two-pointer merge, the
+    * exact verification's kernel. Evaluated once per row
+    * ([[graft.expressions.EvalOnce]]): the `jac >= θ` filters above it read
+    * it twice, and a copy pushed down into the join would run the merge
+    * per read. */
   def intersectSizeSorted(a: Column, b: Column): Column =
-    graft.expressions.F.intersectSizeSorted(a, b)
+    graft.expressions.F.evalOnce(graft.expressions.F.intersectSizeSorted(a, b))
 
   /** Connected components over undirected pair edges: every node's label
     * converges to the minimum node id reachable from it (= deterministic

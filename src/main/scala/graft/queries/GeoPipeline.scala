@@ -147,6 +147,11 @@ object GeoPipeline {
       enrichedDf.withColumn("visit_date", col("ts").cast("date")),
       Seq("user_id", "visit_date"), Seq(col("ts"), col("event_id")))
       .select("user_id", "visit_date", "zone_id", "zone_name")
+      // clustered by user once, here: home's and travel's user windows
+      // read the visits as they lie instead of shuffling them once each.
+      // After the (user, day) window, not before it: that window's exchange
+      // follows a map-side top-1 per (user, day), which halves its bytes
+      .repartition(col("user_id"))
 
   private def visits(spark: SparkSession, dir: String): DataFrame =
     visitsFrom(enrichedCore(spark, dir))
@@ -306,20 +311,24 @@ object GeoPipeline {
   /** The stage-3 mart as the lake stores it (analytics/zone_report) over
     * `zoneEventsFrom` rows (callers persist them — the pivot and the
     * registrations both read them): week/month × zone pivoted event-type
-    * counts, month rollups, first-event "registrations". */
+    * counts, month rollups, first-event "registrations". Each input is
+    * aggregated once, to the mart's (week, month, zone) grain; the month
+    * rollups and the registration counts per (week, zone) and per
+    * (month, zone) are window sums over those rows, so neither the pivot
+    * nor the registrations run a second time for a second grain. */
   def zoneReportFrom(zoneEvents: DataFrame): DataFrame = {
-    val wk = CollectOps.pivotCounts(
-      zoneEvents.groupBy("week", "month", "zone_id"), "event_type", EventTypes, "week_")
-    val mo = wk.groupBy("month", "zone_id")
-      .agg(sum(s"week_${EventTypes.head}").as(s"month_${EventTypes.head}"),
-        EventTypes.tail.map(t => sum(s"week_$t").as(s"month_$t")): _*)
+    val grain = Seq("week", "month", "zone_id")
     val regs = WindowOps.firstPerKey(zoneEvents, Seq("user_id"), Seq(col("ts"), col("event_id")))
-    val rw = regs.groupBy("week", "zone_id").agg(count(lit(1)).as("week_user"))
-    val rm = regs.groupBy("month", "zone_id").agg(count(lit(1)).as("month_user"))
-    wk.join(mo, Seq("month", "zone_id"))
-      .join(rw, Seq("week", "zone_id"), "left")
-      .join(rm, Seq("month", "zone_id"), "left")
-      .na.fill(0L, Seq("week_user", "month_user"))
+      .groupBy(grain.map(col): _*).agg(count(lit(1)).as("regs"))
+    val cells = CollectOps.pivotCounts(zoneEvents.groupBy(grain.map(col): _*), "event_type",
+      EventTypes, "week_").join(regs, grain, "left")
+    val byWeek = org.apache.spark.sql.expressions.Window.partitionBy("week", "zone_id")
+    val byMonth = org.apache.spark.sql.expressions.Window.partitionBy("month", "zone_id")
+    cells.select(Seq(col("month"), col("zone_id"), col("week")) ++
+      EventTypes.map(t => col(s"week_$t")) ++
+      EventTypes.map(t => sum(s"week_$t").over(byMonth).as(s"month_$t")) ++
+      Seq(coalesce(sum("regs").over(byWeek), lit(0L)).as("week_user"),
+        coalesce(sum("regs").over(byMonth), lit(0L)).as("month_user")): _*)
   }
 
   /** zone_report's projection of a `zoneReportFrom` mart. */
@@ -388,10 +397,9 @@ object GeoPipeline {
     * and right sides on (channel, zone_id) at least. */
   private def recommendationPairs(events: DataFrame, enriched: DataFrame)
                                  (pairJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val subs = events.where(col("event_type") === "signup")
+    val signups = events.where(col("event_type") === "signup")
       .select(col("user_id"),
         (get_json_object(col("props"), "$.k").cast("long") % RecsChannels).as("channel"))
-      .distinct()
     // join channel AND zone jointly (reference J5 joins on [subc, city_id],
     // calculate_user_recommendations.py:37-38): attaching the actual zone
     // BEFORE the self-join keeps the pair space (channel, zone)-bounded
@@ -400,11 +408,21 @@ object GeoPipeline {
     // the 100 TB design point — a hint here is an OOM AQE can't undo);
     // the user_id equi-join co-partitions on its own, and AQE still
     // broadcast-converts at runtime when the measured size allows.
-    val subsZ = subs.join(actPositionFrom(enriched).select(col("user_id"),
-      col("zone_id"), col("ts"), col("lat_e"), col("lon_e"), col("lon_z")), Seq("user_id"))
+    // ONE exchange feeds both pair sides. The signups, with their user's
+    // zone, position and local time (stamped per user, not per pair), are
+    // clustered on the pair key and then made distinct (a user with two
+    // signups on one channel pairs once), which needs no exchange of its
+    // own. The distinct keeps every column either side reads, so column
+    // pruning leaves both sides the same plan below it and Spark reuses
+    // the exchange; both sides read one map output, and AQE no longer
+    // picks the broadcast side by which of two side stages ended first.
+    val subsZ = signups.join(actPositionFrom(enriched).select(col("user_id"),
+        col("zone_id"), col("lat_e"), col("lon_e"),
+        TimeOps.localTimeByOffset(col("ts"), col("lon_z")).as("local_time")), Seq("user_id"))
+      .repartition(col("channel"), col("zone_id"))
+      .distinct()
     val al = subsZ.select(col("user_id").as("user_left"), col("channel"),
-      col("zone_id"), col("ts").as("ts_l"),
-      col("lat_e").as("lat_l"), col("lon_e").as("lon_l"), col("lon_z").as("lon_z_l"))
+      col("zone_id"), col("lat_e").as("lat_l"), col("lon_e").as("lon_l"), col("local_time"))
     val ar = subsZ.select(col("user_id").as("user_right"), col("channel"),
       col("zone_id"), col("lat_e").as("lat_r"), col("lon_e").as("lon_r"))
     pairJoin(al, ar)
@@ -413,8 +431,7 @@ object GeoPipeline {
         GeoOps.haversineKm(col("lat_l"), col("lon_l"), col("lat_r"), col("lon_r")))
       .where(col("dist_km") <= RecsRadiusKm)
       .select(col("user_left"), col("user_right"), col("channel"), col("zone_id"),
-        col("dist_km"),
-        TimeOps.localTimeByOffset(col("ts_l"), col("lon_z_l")).as("local_time"))
+        col("dist_km"), col("local_time"))
   }
 
   /** recommendations' projection of a `recommendationsFrom` mart. */

@@ -166,7 +166,10 @@ object StreamingOps {
       excludeOwnIds = true) // replay-safe: a retried batch never sees
                             // its own failed attempt's index rows
     val kept = verdicts.where(col("verdict") === "keep").select("doc_id")
-    val keptSigs = sigs.join(kept, Seq("doc_id"), "left_semi")
+    // the kept ids are a subset of the batch's, so the batch bounds the
+    // broadcast, and the whole signature rows (hs, sig, bands) are not
+    // shuffled to join them
+    val keptSigs = sigs.join(broadcast(kept), Seq("doc_id"), "left_semi")
     // replay-safe append: a RETRIED batch's kept signatures are already in
     // the index — SignatureIndex.appendNew anti-joins them away on their
     // own doc_pt shards, so at-least-once retries never duplicate index
