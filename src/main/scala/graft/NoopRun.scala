@@ -41,10 +41,10 @@ object NoopRun {
 
   def apply(spark: SparkSession)(build: => DataFrame): Timed = {
     val c0 = compiles()
-    val t0 = System.nanoTime()
     try {
-      // timed up to the end of the write, not of the listener-bus drain
+      // timed up to the end of the write, not of the listener-bus drains
       val (seconds, plans, bytes) = traced(spark) {
+        val t0 = System.nanoTime()
         build.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
@@ -54,8 +54,9 @@ object NoopRun {
 
   /** Runs `body` and returns its result, the executed plan of every
     * Dataset action and command it ran (writes, counts, checkpoints), and
-    * the shuffle bytes its tasks wrote. Drains the listener bus, so use
-    * it in tools and specs, never on a query path. */
+    * the shuffle bytes its tasks wrote. Drains the listener bus before and
+    * after `body` (events of earlier actions would otherwise reach its
+    * listeners), so use it in tools and specs, never on a query path. */
   def traced[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan], Long) = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val bytes = new AtomicLong()
@@ -69,6 +70,7 @@ object NoopRun {
         Option(end.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     val sc = spark.sparkContext
+    ListenerShim.waitUntilListenerBusEmpty(sc)
     spark.listenerManager.register(qel)
     sc.addSparkListener(tasks)
     try {
@@ -92,16 +94,11 @@ object NoopRun {
       if (!seen.containsKey(e)) order += e
       seen.put(e, seen.getOrDefault(e, 0) + 1): Unit
     }
-    val cached = new java.util.IdentityHashMap[SparkPlan, Unit]()
-    def walk(p: SparkPlan): Unit = Walker.nodes(p).foreach {
+    nodes(plans).foreach {
       case r: ReusedExchangeExec => read(r.child)
       case e: ExchangeExec => read(e)
-      case s: InMemoryTableScanExec if !cached.containsKey(s.relation.cachedPlan) =>
-        cached.put(s.relation.cachedPlan, ())
-        walk(s.relation.cachedPlan)
       case _ =>
     }
-    plans.foreach(walk)
     order.toSeq.map { e =>
       val (kind, partitioning, bytes) = e match {
         case s: ShuffleExchangeLike =>
@@ -112,6 +109,20 @@ object NoopRun {
       }
       Exchange(kind, partitioning, e.output.map(_.name), bytes, seen.get(e))
     }
+  }
+
+  /** Every node of executed plans, AQE query stages, subqueries and the
+    * plans of cached relations they scan included; a cached relation's
+    * plan is walked once, where it is first scanned. */
+  def nodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val cached = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    def walk(p: SparkPlan): Seq[SparkPlan] = Walker.nodes(p).flatMap {
+      case s: InMemoryTableScanExec if !cached.containsKey(s.relation.cachedPlan) =>
+        cached.put(s.relation.cachedPlan, ())
+        s +: walk(s.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    plans.flatMap(walk)
   }
 
   private object Walker extends AdaptiveSparkPlanHelper {

@@ -198,6 +198,7 @@ object ClusterStore {
         "allocations — an epoch-carrying merge would create an alloc table " +
         "covering only this batch's components, silently mis-allocating " +
         "every other component; rebuild the store with a stable bootstrap")
+    if (!bootstrapping) requireParts(spark, storePath, nParts)
     // persisted: the count-guard and the collect are separate actions, and
     // the caller's pair lineage is typically the full candidate pipeline
     // (e.g. banded minhash + exact-Jaccard refinement) — without the cache
@@ -224,7 +225,6 @@ object ClusterStore {
       ps.unpersist(); ns.unpersist()
       return receipt0
     }
-    requireParts(spark, storePath, nParts)
     // batch-grain driver state: pairs + node ids, COUNT-guarded before any
     // row reaches the driver (an oversized micro-batch fails loudly
     // instead of OOMing the driver mid-collect)

@@ -202,15 +202,14 @@ object DedupOps {
     * batch size + collided-bucket membership, never corpus size; with the
     * persisted [[SignatureIndex]], [[SignatureIndex.probe]] additionally
     * prunes the index SCAN itself to collided shards.
-    * `batchSigs` is persisted here: it feeds both candidate arms and both
-    * verification joins. */
+    * `batchSigs` feeds both candidate arms and both verification joins;
+    * as for [[SignatureIndex.probe]], the caller persists it (and owns its
+    * release). */
   def dedupDeltaBatch(batchIds: DataFrame, batchSigs: DataFrame,
-                      indexSigs: DataFrame, minJac: Double): DataFrame = {
-    val bs = batchSigs.persist()
-    dedupDeltaCore(batchIds, bs,
+                      indexSigs: DataFrame, minJac: Double): DataFrame =
+    dedupDeltaCore(batchIds, batchSigs,
       indexSigs.select(col("doc_id"), explode(col("bands")).as("bk")),
       indexSigs.select("doc_id", "hs"), minJac)
-  }
 
   /** Shared delta-dedup core: `iBand` is the corpus-side candidate band
     * rows (doc_id, bk) — the full index exploded for the flat path, or

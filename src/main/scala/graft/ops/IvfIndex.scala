@@ -465,9 +465,8 @@ object IvfIndex {
     * the id list into the parquet scan, where per-file BLOOM FILTERS on
     * vec_id ([[postingsWrite]]) skip every row group holding none of them:
     * reads are footer/bloom-metadata-sized plus the matched row groups,
-    * not corpus-column-sized (measured in vector_forget_scaling.json;
-    * sets past [[PresencePushdownLimit]] fall back to the column-pruned
-    * semi-join scan). */
+    * not corpus-column-sized (sets past [[PresencePushdownLimit]] fall
+    * back to the column-pruned semi-join scan). */
   def present(ids: DataFrame, indexPath: String): DataFrame = {
     val spark = ids.sparkSession
     currentGeneration(spark, indexPath).map(g => generationDir(indexPath, g))

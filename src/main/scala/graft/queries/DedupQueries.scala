@@ -1605,9 +1605,9 @@ object DedupQueries {
     * Recall over sample-touching truth pairs estimates pair recall
     * unbiasedly (each θ-pair is sampled w.p. ≈ 2·Target/n). One audit
     * row: sample size, truth/lsh/hit/missed counts restricted to
-    * sample-touching pairs, recall_e4, worst-missed Jaccard. Estimator
-    * spread across disjoint salts is measured by
-    * [[graft.tools.SampledGateVariance]].
+    * sample-touching pairs, recall_e4, worst-missed Jaccard. At sf0.1
+    * the salts rcl, rclB and rclC all gave recall_e4 = 10000 (no spread),
+    * so the gate draws one sample, at [[RecallSampleSalt]].
     *
     * The full-truth [[qLshRecall]] stays in the catalog as the
     * gate-scale twin (exact, all-pairs-denominator truth); this is the
@@ -1615,97 +1615,90 @@ object DedupQueries {
   val RecallSampleTarget = 150L
   val RecallSampleSalt = "rcl"
 
-  private[graft] def lshRecallSampledFor(spark: SparkSession, dir: String,
-                                         salt: String): DataFrame = {
-    // one persisted signature frame feeds both arms (as in q_lsh_recall)
-    val sigs = signatures(Tables.documents(spark, dir)).persist()
-    val docs = sigs.select("doc_id", "hs")
-    val sample = docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
-      .where(HashOps.inFixedSizeSample(col("doc_id"), lit(salt), col("n_docs"),
-        RecallSampleTarget))
-      .select(col("doc_id").as("s_id"))
-      .persist()
-    val tokens = tokenRows(docs)
-    // the θ = 0.7 prefix of the SAMPLE docs only (window over |S| docs,
-    // not the corpus), against the corpus-wide df
-    val prefixS = ppjoinPrefix(
-        tokens.join(broadcast(sample), col("doc_id") === col("s_id")), tokens, 7)
-      .select(col("doc_id").as("id_s"), col("h"), col("sz").as("sz_s"))
-    val cand = prefixS
-      .join(tokens.select(col("doc_id").as("id_o"), col("h"), col("sz").as("sz_o")),
-        Seq("h"))
-      // PPJoin length filter, lossless for θ = 0.7: 10·min ≥ 7·max
-      .where(col("id_s") =!= col("id_o") &&
-        col("sz_s") * 10 >= col("sz_o") * 7 && col("sz_o") * 10 >= col("sz_s") * 7)
-      .select(least(col("id_s"), col("id_o")).as("id_l"),
-        greatest(col("id_s"), col("id_o")).as("id_r"))
-      .distinct()
-    val truth = jaccardTruth(cand, docs)
-    // sample-touching LSH pairs: two broadcast-HASH left probes against
-    // the BOUNDED sample + null filter — one map-side pass, no shuffle.
-    // (An OR-condition broadcast-NL semi compares every pair against all
-    // |S| sample rows — measured dominant on the banded pair set; and
-    // sample ids are unique, so the left joins preserve cardinality.)
-    val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r")
-      .join(broadcast(sample.select(col("s_id").as("sid_l"))),
-        col("id_l") === col("sid_l"), "left")
-      .join(broadcast(sample.select(col("s_id").as("sid_r"))),
-        col("id_r") === col("sid_r"), "left")
-      .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
-      .select("id_l", "id_r")
-      // persisted: feeds the tagged join and the n_lsh audit count —
-      // unpersisted, the whole banded minhashPairs pipeline ran once per
-      // consumer. Sample-restricted, so the cached set is
-      // sample-proportional, never corpus-pairs-sized.
-      .persist()
-    sample.agg(count(lit(1)).as("n_sampled"))
-      .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
-      .crossJoin(recallTally(truth, lsh))
-      .select("n_sampled", "n_truth", "n_lsh", "n_hit", "n_missed", "recall_e4",
-        "worst_miss_jac_e4")
-  }
-
-  private[graft] def lshRecallSampledOracle(salt: String): String =
-    s"""WITH $SqlMinhashPairCtes,
-       |n AS (SELECT count(*) AS n_docs FROM shn),
-       |smp AS (
-       |  SELECT doc_id FROM shn CROSS JOIN n
-       |  WHERE CAST('0x' || substr(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 15)
-       |          AS BIGINT) % 1000000
-       |        < least(1000000, $RecallSampleTarget * 1000000 // n_docs + 1)),
-       |lshr AS (
-       |  SELECT id_l, id_r FROM j WHERE jac >= $JaccardThreshold
-       |    AND (id_l IN (SELECT doc_id FROM smp)
-       |         OR id_r IN (SELECT doc_id FROM smp))),
-       |truth AS (
-       |  SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-       |    CAST(len(list_intersect(a.hs, b.hs)) AS BIGINT) AS inter,
-       |    CAST(len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)) AS BIGINT) AS uni
-       |  FROM shn a JOIN shn b ON a.doc_id < b.doc_id
-       |  WHERE (a.doc_id IN (SELECT doc_id FROM smp)
-       |         OR b.doc_id IN (SELECT doc_id FROM smp))
-       |    AND CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) /
-       |        (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)))
-       |        >= $JaccardThreshold),
-       |hit AS (SELECT t.* FROM truth t SEMI JOIN lshr USING (id_l, id_r)),
-       |mis AS (SELECT t.* FROM truth t ANTI JOIN lshr USING (id_l, id_r))
-       |SELECT
-       |  (SELECT count(*) FROM smp) AS n_sampled,
-       |  (SELECT count(*) FROM truth) AS n_truth,
-       |  (SELECT count(*) FROM lshr) AS n_lsh,
-       |  (SELECT count(*) FROM hit) AS n_hit,
-       |  (SELECT count(*) FROM mis) AS n_missed,
-       |  CAST(CASE WHEN (SELECT count(*) FROM truth) = 0 THEN -1
-       |       ELSE (SELECT count(*) FROM hit) * 10000 // (SELECT count(*) FROM truth)
-       |       END AS BIGINT) AS recall_e4,
-       |  CAST(coalesce((SELECT max(inter * 10000 // uni) FROM mis), -1)
-       |       AS BIGINT) AS worst_miss_jac_e4""".stripMargin
-
   val qLshRecallSampled: Q = new Q {
     val name = "q_lsh_recall_sampled"
-    def run(spark: SparkSession, dir: String): DataFrame =
-      lshRecallSampledFor(spark, dir, RecallSampleSalt)
-    val oracle = Some(lshRecallSampledOracle(RecallSampleSalt))
+    def run(spark: SparkSession, dir: String): DataFrame = {
+      // one persisted signature frame feeds both arms (as in q_lsh_recall)
+      val sigs = signatures(Tables.documents(spark, dir)).persist()
+      val docs = sigs.select("doc_id", "hs")
+      val sample = docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
+        .where(HashOps.inFixedSizeSample(col("doc_id"), lit(RecallSampleSalt), col("n_docs"),
+          RecallSampleTarget))
+        .select(col("doc_id").as("s_id"))
+        .persist()
+      val tokens = tokenRows(docs)
+      // the θ = 0.7 prefix of the SAMPLE docs only (window over |S| docs,
+      // not the corpus), against the corpus-wide df
+      val prefixS = ppjoinPrefix(
+          tokens.join(broadcast(sample), col("doc_id") === col("s_id")), tokens, 7)
+        .select(col("doc_id").as("id_s"), col("h"), col("sz").as("sz_s"))
+      val cand = prefixS
+        .join(tokens.select(col("doc_id").as("id_o"), col("h"), col("sz").as("sz_o")),
+          Seq("h"))
+        // PPJoin length filter, lossless for θ = 0.7: 10·min ≥ 7·max
+        .where(col("id_s") =!= col("id_o") &&
+          col("sz_s") * 10 >= col("sz_o") * 7 && col("sz_o") * 10 >= col("sz_s") * 7)
+        .select(least(col("id_s"), col("id_o")).as("id_l"),
+          greatest(col("id_s"), col("id_o")).as("id_r"))
+        .distinct()
+      val truth = jaccardTruth(cand, docs)
+      // sample-touching LSH pairs: two broadcast-HASH left probes against
+      // the BOUNDED sample + null filter — one map-side pass, no shuffle.
+      // (An OR-condition broadcast-NL semi compares every pair against all
+      // |S| sample rows — measured dominant on the banded pair set; and
+      // sample ids are unique, so the left joins preserve cardinality.)
+      val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r")
+        .join(broadcast(sample.select(col("s_id").as("sid_l"))),
+          col("id_l") === col("sid_l"), "left")
+        .join(broadcast(sample.select(col("s_id").as("sid_r"))),
+          col("id_r") === col("sid_r"), "left")
+        .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
+        .select("id_l", "id_r")
+        // persisted: feeds the tagged join and the n_lsh audit count —
+        // unpersisted, the whole banded minhashPairs pipeline ran once per
+        // consumer. Sample-restricted, so the cached set is
+        // sample-proportional, never corpus-pairs-sized.
+        .persist()
+      sample.agg(count(lit(1)).as("n_sampled"))
+        .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
+        .crossJoin(recallTally(truth, lsh))
+        .select("n_sampled", "n_truth", "n_lsh", "n_hit", "n_missed", "recall_e4",
+          "worst_miss_jac_e4")
+    }
+    val oracle = Some(s"""WITH $SqlMinhashPairCtes,
+         |n AS (SELECT count(*) AS n_docs FROM shn),
+         |smp AS (
+         |  SELECT doc_id FROM shn CROSS JOIN n
+         |  WHERE CAST('0x' || substr(md5('$RecallSampleSalt:' || CAST(doc_id AS VARCHAR)), 1, 15)
+         |          AS BIGINT) % 1000000
+         |        < least(1000000, $RecallSampleTarget * 1000000 // n_docs + 1)),
+         |lshr AS (
+         |  SELECT id_l, id_r FROM j WHERE jac >= $JaccardThreshold
+         |    AND (id_l IN (SELECT doc_id FROM smp)
+         |         OR id_r IN (SELECT doc_id FROM smp))),
+         |truth AS (
+         |  SELECT a.doc_id AS id_l, b.doc_id AS id_r,
+         |    CAST(len(list_intersect(a.hs, b.hs)) AS BIGINT) AS inter,
+         |    CAST(len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)) AS BIGINT) AS uni
+         |  FROM shn a JOIN shn b ON a.doc_id < b.doc_id
+         |  WHERE (a.doc_id IN (SELECT doc_id FROM smp)
+         |         OR b.doc_id IN (SELECT doc_id FROM smp))
+         |    AND CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) /
+         |        (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)))
+         |        >= $JaccardThreshold),
+         |hit AS (SELECT t.* FROM truth t SEMI JOIN lshr USING (id_l, id_r)),
+         |mis AS (SELECT t.* FROM truth t ANTI JOIN lshr USING (id_l, id_r))
+         |SELECT
+         |  (SELECT count(*) FROM smp) AS n_sampled,
+         |  (SELECT count(*) FROM truth) AS n_truth,
+         |  (SELECT count(*) FROM lshr) AS n_lsh,
+         |  (SELECT count(*) FROM hit) AS n_hit,
+         |  (SELECT count(*) FROM mis) AS n_missed,
+         |  CAST(CASE WHEN (SELECT count(*) FROM truth) = 0 THEN -1
+         |       ELSE (SELECT count(*) FROM hit) * 10000 // (SELECT count(*) FROM truth)
+         |       END AS BIGINT) AS recall_e4,
+         |  CAST(coalesce((SELECT max(inter * 10000 // uni) FROM mis), -1)
+         |       AS BIGINT) AS worst_miss_jac_e4""".stripMargin)
   }
 
   /** Signature-length sensitivity — the sketch-SIZING counterpart of
@@ -2013,7 +2006,7 @@ object DedupQueries {
     *
     * Scale shape: retraction cost stops being shards-hit-sized
     * (~1-(1-1/nParts)^(|F|·nBands) of the bands table for the physical
-    * rewrite — forget_scaling.json) and becomes a one-file append; the
+    * rewrite — StoreScalingSpec) and becomes a one-file append; the
     * probe adds one broadcast anti-join bounded by retraction volume
     * between maintenance passes. */
   val dedupDeltaForgetLogical: Q = new Q {

@@ -127,7 +127,10 @@ object MultimodalQueries {
     * all-pairs: the band join is the same LSH shape as
     * `dedup_minhash_lsh` / `dedup_embedding_lsh` — at 10⁹ images the
     * candidates are bucket-bounded. All arithmetic integer; the corpus
-    * is pure ASCII so DuckDB's ascii() sees the codec's byte values. */
+    * is pure ASCII so DuckDB's ascii() sees the codec's byte values.
+    * The oracle casts its `list_sum` back to BIGINT: DuckDB sums BIGINT
+    * into HUGEINT, whose xor of two hashes of opposite sign counts 64
+    * sign-extension bits. */
   val mmPhashDedup: Q = new Q {
     val name = "mm_phash_dedup"
     private val Tau = 6L
@@ -167,10 +170,10 @@ object MultimodalQueries {
          |  FROM d),
          |h AS (
          |  SELECT media_id,
-         |    list_sum(list_transform(list_zip(sm, range(0, 64)),
+         |    CAST(list_sum(list_transform(list_zip(sm, range(0, 64)),
          |      p -> CASE WHEN p[1] <= list_sum(sm) // 64 THEN 0
          |                WHEN p[2] = 63 THEN -9223372036854775807 - 1
-         |                ELSE (CAST(1 AS BIGINT) << CAST(p[2] AS INT)) END)) AS phash
+         |                ELSE (CAST(1 AS BIGINT) << CAST(p[2] AS INT)) END)) AS BIGINT) AS phash
          |  FROM s),
          |bands AS (
          |  SELECT media_id, phash, b, (phash >> (b * 16)) & 65535 AS band_val

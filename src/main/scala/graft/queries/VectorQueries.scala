@@ -22,7 +22,7 @@ object VectorQueries {
   val QueryStride = 50 // vec_id % stride == 0 → query set
   /** Caps that make the query batch and the IVF centroid set FIXED
     * workload/index parameters instead of corpus fractions. Without them
-    * the 100× ScaleProbe showed ann_ivf_topk at 155× (queries AND
+    * a 100× fact replication showed ann_ivf_topk at 155× (queries AND
     * centroids both grew with the facts, so assign-cost ∝ N·nlist ∝ N²);
     * with id-bounded sets the broadcast sides stay constant as facts
     * accrete and every ANN stage is linear in corpus size. Both caps are
@@ -367,8 +367,10 @@ object VectorQueries {
     * this truth size. Recall over sample-touching θ-pairs estimates pair
     * recall unbiasedly (each θ-pair sampled w.p. ≈ 2·Target/n). One
     * audit row: sample size, truth/lsh/hit/missed counts restricted to
-    * sample-touching pairs, recall_e4, worst-missed cosine. Estimator
-    * spread across disjoint salts: [[graft.tools.SampledGateVariance]]. */
+    * sample-touching pairs, recall_e4, worst-missed cosine. The catalog
+    * runs the pooled form ([[embeddingLshRecallSampledPooled]]), which
+    * reports the spread across salts in-query; this single-salt form is
+    * SampledGateSpec's reference for it. */
   private[graft] def embeddingLshRecallSampledFor(
       spark: SparkSession, dir: String, salt: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -432,43 +434,8 @@ object VectorQueries {
         col("worst_miss_cos_e6"))
   }
 
-  private[graft] def embeddingLshRecallSampledOracle(salt: String): String =
-    s"""WITH $SqlLshBandCtes,
-       |n AS (SELECT count(*) AS n_vecs FROM embeddings),
-       |smp AS (
-       |  SELECT vec_id FROM embeddings CROSS JOIN n
-       |  WHERE CAST('0x' || substr(md5('$salt:' || CAST(vec_id AS VARCHAR)), 1, 15)
-       |          AS BIGINT) % 1000000
-       |        < least(1000000, $RecallSampleTarget * 1000000 // n_vecs + 1)),
-       |lshr AS (
-       |  SELECT id_l, id_r FROM lsh_cand
-       |  WHERE id_l IN (SELECT vec_id FROM smp)
-       |     OR id_r IN (SELECT vec_id FROM smp)),
-       |e AS (SELECT vec_id, embedding, ${sqlNorm("embedding")} AS nrm FROM embeddings),
-       |truth AS (
-       |  SELECT a.vec_id AS id_l, b.vec_id AS id_r,
-       |    CAST(round(${sqlDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) * 1000000)
-       |      AS BIGINT) AS cos_e6
-       |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-       |  WHERE (a.vec_id IN (SELECT vec_id FROM smp)
-       |         OR b.vec_id IN (SELECT vec_id FROM smp))
-       |    AND ${sqlDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $NearDupCos),
-       |hit AS (SELECT t.* FROM truth t SEMI JOIN lshr USING (id_l, id_r)),
-       |mis AS (SELECT t.* FROM truth t ANTI JOIN lshr USING (id_l, id_r))
-       |SELECT
-       |  (SELECT count(*) FROM smp) AS n_sampled,
-       |  (SELECT count(*) FROM truth) AS n_truth,
-       |  (SELECT count(*) FROM lshr) AS n_lsh,
-       |  (SELECT count(*) FROM hit) AS n_hit,
-       |  (SELECT count(*) FROM mis) AS n_missed,
-       |  CAST(CASE WHEN (SELECT count(*) FROM truth) = 0 THEN -1
-       |       ELSE (SELECT count(*) FROM hit) * 10000 // (SELECT count(*) FROM truth)
-       |       END AS BIGINT) AS recall_e4,
-       |  CAST(coalesce((SELECT max(cos_e6) FROM mis), -1) AS BIGINT) AS worst_miss_cos_e6""".stripMargin
-
-  /** Salts pooled by [[qEmbeddingLshRecallSampled]] — the same three
-    * disjoint draws [[graft.tools.SampledGateVariance]] measured
-    * (single-salt recall_e4 spread was [5271, 6083] at sf0.1: ±4 pp from
+  /** Salts pooled by [[qEmbeddingLshRecallSampled]] — three disjoint
+    * draws (single-salt recall_e4 spread was [5271, 6083] at sf0.1: ±4 pp from
     * ~40-pair truth sets). Pooling triples the truth set at the SAME scan
     * cost — the corpus-side pass is one broadcast join against the union
     * sample — and surfaces the per-salt spread in-query instead of in a

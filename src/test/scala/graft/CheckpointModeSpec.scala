@@ -25,7 +25,8 @@ class CheckpointModeSpec extends SparkSpec {
     "q_kcore", "dedup_clusters", "doc_salient_term")
 
   private def rows(name: String): Seq[String] =
-    SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq
+    try SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq
+    finally spark.catalog.clearCache()
 
   test("iterative queries produce identical results in local and reliable checkpoint modes") {
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString

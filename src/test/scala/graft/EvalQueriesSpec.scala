@@ -53,9 +53,11 @@ class EvalQueriesSpec extends SparkSpec {
       "near-duplicate pair assigned to different splits (eval contamination)")
   }
 
-  private def EvalQueries_split(d: String): Array[(Long, Long, String)] =
-    DedupQueries.splitDedupAware.run(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+  private def EvalQueries_split(d: String): Array[(Long, Long, String)] = {
+    val rows = DedupQueries.splitDedupAware.run(spark, d).collect()
+    spark.catalog.clearCache()
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+  }
 
   test("ann_label_consistency: bounds, arithmetic, and query-set size") {
     val rows = VectorQueries.annLabelConsistency.run(spark, dir).collect()

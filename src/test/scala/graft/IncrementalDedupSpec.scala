@@ -182,42 +182,45 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("forget is shard-pruned: a small forget set leaves unaffected sigs shards byte-dated") {
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "pruned_forget")
-    SignatureIndex.write(DedupOps.signatureIndex(
-      docs, ShingleK, NumPerms, NumBands, RowsPerBand),
-      indexPath, NumPerms, NumBands, RowsPerBand)
-    // two forget ids, two doc_pt shards — doc-side pruning must leave the
-    // other 30 sigs shards byte-dated (same files, same mtimes). The
-    // bands side prunes by band-KEY hash and fans out nBands× per doc, so
-    // only the sigs table carries a tight physical pin at this nParts.
-    val forgetIds = spark.read.parquet(s"$indexPath/sigs")
-      .select("doc_id").orderBy("doc_id").limit(2)
-      .collect().map(_.getLong(0)).toSeq
-    val affected = forgetIds.map(id => (((id % 32) + 32) % 32).toInt).toSet
-    def sigStamps() = {
-      def walk(f: java.io.File): Seq[(String, Long)] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else if (f.getName.endsWith(".parquet")) Seq(f.getPath -> f.lastModified)
-        else Nil
-      walk(new java.io.File(s"$indexPath/sigs")).toMap
+    // at x1 and x4 (StoreScalingSpec's replicated corpus): the same two ids
+    // touch the same two shards whatever the index size
+    for (replicas <- StoreScalingSpec.Sizes) {
+      val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir,
+        s"pruned_forget_x$replicas")
+      SignatureIndex.write(DedupOps.signatureIndex(
+        StoreScalingSpec.documents(spark, replicas), ShingleK, NumPerms, NumBands, RowsPerBand),
+        indexPath, NumPerms, NumBands, RowsPerBand)
+      // two forget ids, two doc_pt shards — doc-side pruning must leave the
+      // other 30 sigs shards byte-dated (same files, same mtimes). The
+      // bands side prunes by band-KEY hash and fans out nBands× per doc, so
+      // only the sigs table carries a tight physical pin at this nParts.
+      val forgetIds = spark.read.parquet(s"$indexPath/sigs")
+        .select("doc_id").orderBy("doc_id").limit(2)
+        .collect().map(_.getLong(0)).toSeq
+      val affected = forgetIds.map(id => (((id % 32) + 32) % 32).toInt).toSet
+      def sigStamps() = {
+        def walk(f: java.io.File): Seq[(String, Long)] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+          else if (f.getName.endsWith(".parquet")) Seq(f.getPath -> f.lastModified)
+          else Nil
+        walk(new java.io.File(s"$indexPath/sigs")).toMap
+      }
+      val before = sigStamps()
+      import spark.implicits._
+      SignatureIndex.remove(forgetIds.toDF("doc_id"),
+        indexPath, NumPerms, NumBands, RowsPerBand)
+      val after = sigStamps()
+      def shardOf(path: String): Int =
+        "doc_pt=(\\d+)".r.findFirstMatchIn(path).get.group(1).toInt
+      val touched = (before.keySet -- after.keySet) ++
+        after.collect { case (p, m) if !before.get(p).contains(m) => p }
+      assert(touched.nonEmpty, s"x$replicas: forget rewrote nothing — vacuous")
+      assert(touched.map(shardOf).subsetOf(affected),
+        s"x$replicas: forget touched shards ${touched.map(shardOf)} outside the ids' own $affected")
+      val untouched = after.count { case (p, m) => before.get(p).contains(m) }
+      assert(untouched >= before.size - affected.size,
+        s"x$replicas: unaffected shards were rewritten: $untouched of ${before.size} files survived")
     }
-    val before = sigStamps()
-    import spark.implicits._
-    SignatureIndex.remove(forgetIds.toDF("doc_id"),
-      indexPath, NumPerms, NumBands, RowsPerBand)
-    val after = sigStamps()
-    def shardOf(path: String): Int =
-      "doc_pt=(\\d+)".r.findFirstMatchIn(path).get.group(1).toInt
-    val touched = (before.keySet -- after.keySet) ++
-      after.collect { case (p, m) if !before.get(p).contains(m) => p }
-    assert(touched.nonEmpty, "forget rewrote nothing — vacuous")
-    assert(touched.map(shardOf).subsetOf(affected),
-      s"forget touched shards ${touched.map(shardOf)} outside the ids' own $affected")
-    val untouched = after.count { case (p, m) => before.get(p).contains(m) }
-    assert(untouched >= before.size - affected.size,
-      s"unaffected shards were rewritten: $untouched of ${before.size} files survived")
   }
 
   test("compact: crowded shards collapse to one file each; content and verdicts unchanged") {

@@ -280,6 +280,7 @@ class PlanSpec extends SparkSpec {
         graft.queries.DedupQueries.qJaccardThresholdSweep,
         graft.queries.DedupQueries.qDupInflation)) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
+      spark.catalog.clearCache()
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),
         s"${q.name}: pairwise shape leaked into the plan:\n$plan")
@@ -337,49 +338,69 @@ class PlanSpec extends SparkSpec {
   test("dedup_delta_batch: index probe prunes band shards and broadcast-semi-joins the batch's band keys") {
     // the catalog entry returns a SETTLED frame (its executed plan is an
     // RDD scan), so the pin inspects the LAZY probe plan the settled path
-    // materializes — same inputs, same staged index
+    // materializes — same inputs, same staged index at x1, and an index over
+    // StoreScalingSpec's x4 corpus
     import graft.queries.DedupQueries._
-    import graft.ops.DedupOps
+    import graft.ops.{DedupOps, Staging}
+    import org.apache.spark.sql.functions.col
     val docs = graft.Tables.documents(spark, sf)
-      .select(org.apache.spark.sql.functions.col("doc_id").cast("long").as("doc_id"),
-        org.apache.spark.sql.functions.col("text"))
-    val isBatch = org.apache.spark.sql.functions.col("doc_id") % 5 === 0
-    val indexPath = stagedDeltaIndex(spark, sf)
-    val bs = DedupOps.signatureIndex(
-      docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
-    val (df, cached) = SignatureIndex.probePlan(
-      docs.where(isBatch).select("doc_id"), bs, indexPath,
-      JaccardThreshold, nParts = TestIndexParts)
-    val plan = df.queryExecution.executedPlan.toString
-    (cached :+ bs).foreach(_.unpersist(): Unit)
-    // the bands/ scan must carry a band_pt partition filter (shard pruning
-    // from the batch's own band keys) — never an unfiltered index scan
-    val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
-    val bandPf = pf.filter(_.contains("band_pt"))
-    assert(bandPf.nonEmpty && !bandPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
-      s"bands scan lost its band_pt partition filter:\n${pf.mkString("\n")}\n$plan")
-    // the sigs/ verification fetch prunes by doc_pt the same way
-    val sigPf = pf.filter(_.contains("doc_pt"))
-    assert(sigPf.nonEmpty && !sigPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
-      s"sigs scan lost its doc_pt partition filter:\n${pf.mkString("\n")}\n$plan")
-    // collided-row selection is a broadcast left-semi — the index is never
-    // shuffled to meet the batch
-    assert(plan.contains("LeftSemi"), s"no left-semi prune against the index:\n$plan")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"non-equi join in delta-dedup plan:\n$plan")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val isBatch = col("doc_id") % 5 === 0
+    val x4 = Staging.dir("/tmp/graft_plan_spec", sf, "sig_index_x4")
+    SignatureIndex.write(DedupOps.signatureIndex(StoreScalingSpec.documents(spark, 4)
+        .where(!isBatch), ShingleK, NumPerms, NumBands, RowsPerBand),
+      x4, NumPerms, NumBands, RowsPerBand, nParts = TestIndexParts)
+    for ((size, indexPath) <- Seq("x1" -> stagedDeltaIndex(spark, sf), "x4" -> x4)) {
+      val bs = DedupOps.signatureIndex(
+        docs.where(isBatch), ShingleK, NumPerms, NumBands, RowsPerBand).persist()
+      val (df, cached) = SignatureIndex.probePlan(
+        docs.where(isBatch).select("doc_id"), bs, indexPath,
+        JaccardThreshold, nParts = TestIndexParts)
+      val plan = df.queryExecution.executedPlan.toString
+      (cached :+ bs).foreach(_.unpersist(): Unit)
+      // the bands/ scan must carry a band_pt partition filter (shard pruning
+      // from the batch's own band keys) — never an unfiltered index scan
+      val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
+      val bandPf = pf.filter(_.contains("band_pt"))
+      assert(bandPf.nonEmpty && !bandPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
+        s"$size: bands scan lost its band_pt partition filter:\n${pf.mkString("\n")}\n$plan")
+      // the sigs/ verification fetch prunes by doc_pt the same way
+      val sigPf = pf.filter(_.contains("doc_pt"))
+      assert(sigPf.nonEmpty && !sigPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
+        s"$size: sigs scan lost its doc_pt partition filter:\n${pf.mkString("\n")}\n$plan")
+      // collided-row selection is a broadcast left-semi — the index is never
+      // shuffled to meet the batch
+      assert(plan.contains("LeftSemi"), s"$size: no left-semi prune against the index:\n$plan")
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"$size: non-equi join in delta-dedup plan:\n$plan")
+    }
   }
 
   test("ann_delta_topk: postings probe prunes to the batch's probed cells; queries broadcast") {
-    val df = graft.queries.VectorQueries.annDeltaTopk.run(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
-    val cellPf = pf.filter(_.contains("centroid_id"))
-    assert(cellPf.nonEmpty && !cellPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
-      s"postings scan lost its centroid_id partition filter:\n${pf.mkString("\n")}\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"probe side not broadcast against the postings scan:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"cartesian in the probe path:\n$plan")
+    // the catalog entry at x1, and the same search over an index of
+    // StoreScalingSpec's x4 corpus
+    import graft.queries.VectorQueries.{NProbe, QueryCap, TopK}
+    import graft.ops.{IvfIndex, Staging}
+    import org.apache.spark.sql.functions.col
+    val isBatch = col("vec_id") % 5 === 0
+    val x4 = Staging.dir("/tmp/graft_plan_spec", sf, "ivf_x4")
+    graft.streaming.StreamingOps.ivfSearchInsertBatch(
+      StoreScalingSpec.embeddings(spark, 4).where(!isBatch), x4, batchId = 0L).collect()
+    val gd = IvfIndex.resolve(spark, x4)
+    val ranked = IvfIndex.rankCells(graft.Tables.embeddings(spark, sf)
+      .where(isBatch && col("vec_id") < QueryCap).select("vec_id", "embedding"), gd, NProbe)
+    for ((size, df) <- Seq("x1" -> graft.queries.VectorQueries.annDeltaTopk.run(spark, sf),
+        "x4" -> IvfIndex.searchPlan(ranked, x4, gd, TopK, exclude = None))) {
+      val plan = df.queryExecution.executedPlan.toString
+      val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
+      val cellPf = pf.filter(_.contains("centroid_id"))
+      assert(cellPf.nonEmpty && !cellPf.exists(_.replaceAll("\\s", "").contains("PartitionFilters:[]")),
+        s"$size: postings scan lost its centroid_id partition filter:\n${pf.mkString("\n")}\n$plan")
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$size: probe side not broadcast against the postings scan:\n$plan")
+      assert(!plan.contains("CartesianProduct"),
+        s"$size: cartesian in the probe path:\n$plan")
+    }
   }
 
   test("q_item_cf: per-item top-5 keeps WindowGroupLimit; pair space never goes cartesian") {

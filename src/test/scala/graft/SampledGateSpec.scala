@@ -2,9 +2,9 @@ package graft
 
 import graft.queries.VectorQueries
 
-/** Pins the single-salt sampled recall gate (the SampledGateVariance tool
-  * path, tidied to the tagged single-pass shape in round 14) against the
-  * pooled catalog gate — which is DuckDB-hash-checked every round — run
+/** Pins the single-salt sampled recall gate
+  * ([[VectorQueries.embeddingLshRecallSampledFor]], the tagged single-pass
+  * shape) against the pooled catalog gate — which is DuckDB-hash-checked every round — run
   * with the same one salt: the shared audit columns must agree exactly,
   * so a refactor of either path cannot silently change the estimator. */
 class SampledGateSpec extends SparkSpec {
@@ -15,6 +15,7 @@ class SampledGateSpec extends SparkSpec {
     for (salt <- Seq("rcl", "rclB")) {
       val single = VectorQueries.embeddingLshRecallSampledFor(spark, dir, salt)
         .collect()(0)
+      spark.catalog.clearCache()
       val pooled = VectorQueries.embeddingLshRecallSampledPooled(spark, dir, Seq(salt))
         .collect()(0)
       for (c <- Seq("n_sampled", "n_truth", "n_lsh", "n_hit", "n_missed",

@@ -96,6 +96,7 @@ class Wave20QueriesSpec extends SparkSpec {
     val split = SparkEntry.queries("split_dedup_aware")(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[String]("split")))
+    spark.catalog.clearCache()
     val docs = Tables.documents(spark, dir).select("doc_id", "text").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toMap
     def grams(text: String): IndexedSeq[String] = {

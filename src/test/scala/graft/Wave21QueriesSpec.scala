@@ -19,9 +19,11 @@ class Wave21QueriesSpec extends SparkSpec {
     Tables.documents(spark, dir).select("doc_id", "source").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
 
-  private def lshPairs(): Array[(Long, Long, Long)] =
-    SparkEntry.queries("dedup_minhash_lsh")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  private def lshPairs(): Array[(Long, Long, Long)] = {
+    val rows = SparkEntry.queries("dedup_minhash_lsh")(spark, dir).collect()
+    spark.catalog.clearCache()
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  }
 
   test("q_dedup_cross_source matches the matrix rebuilt from the pair query and sources") {
     val src = docsSource()
@@ -62,6 +64,7 @@ class Wave21QueriesSpec extends SparkSpec {
   test("q_jaccard_threshold_sweep is monotone and consistent with the pair query above the boundary") {
     val rows = DedupQueries.qJaccardThresholdSweep.run(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    spark.catalog.clearCache()
     assert(rows.map(_._1).toSeq == rows.map(_._1).sorted.toSeq)
     // pairs and docs shrink (weakly) as the threshold rises
     rows.sliding(2).foreach { case Array((_, p1, d1), (_, p2, d2)) =>
@@ -80,6 +83,7 @@ class Wave21QueriesSpec extends SparkSpec {
     val src = docsSource()
     val clusters = SparkEntry.queries("split_dedup_aware")(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id")))
+    spark.catalog.clearCache()
     def tokN(id: Long): Long =
       texts(id).toLowerCase.split("\\s+").count(_.nonEmpty).toLong
     val want = clusters.groupBy(c => src(c._1)).map { case (s, ds) =>

@@ -31,6 +31,7 @@ class Wave25QueriesSpec extends SparkSpec {
       .map(r => (r.getLong(0), toks(r.getString(1)))).toMap
     val pairs = SparkEntry.queries("dedup_minhash_lsh")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
+    spark.catalog.clearCache()
     val want = pairs.map { case (l, r) =>
       val (a, b) = (texts(l), texts(r))
       val pre = runLen(a, b)

@@ -67,6 +67,7 @@ class Wave27QueriesSpec extends SparkSpec {
       val row = (i, acc); acc += i % 7 + 1; row
     }
     assert(got.toSeq == want)
+    spark.catalog.clearCache()
     // the layout actually split the source: >1 partition contributed
     val nParts = PrefixOps.cumBefore(docs, 16).rdd
       .mapPartitions(it => Iterator.single(if (it.hasNext) 1 else 0))

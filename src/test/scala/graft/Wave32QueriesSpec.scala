@@ -44,6 +44,22 @@ class Wave32QueriesSpec extends SparkSpec {
     assert(got == want && want.nonEmpty)
   }
 
+  test("mm_phash_dedup emits a near pair whose hashes differ in sign") {
+    import spark.implicits._
+    // 64-byte payloads sample every byte: bits 32..63 set in one hash
+    // (negative), bits 32..62 in the other (positive) — Hamming 1, with
+    // bands 0-2 equal
+    val texts = Seq("a" * 32 + "b" * 32, "a" * 32 + "b" * 31 + "a")
+    val hs = texts.map(t => phash(t.getBytes("UTF-8")))
+    assert(hs(0) < 0L && hs(1) > 0L && java.lang.Long.bitCount(hs(0) ^ hs(1)) == 1)
+    val fixture = graft.ops.Staging.dir("/tmp/graft_phash_spec", dir, "mixed_sign")
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$fixture/documents.parquet")
+    val got = MultimodalQueries.mmPhashDedup.run(spark, fixture).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((0L, 1L, 1L)))
+  }
+
   test("the codegen aHash64 kernel equals a byte-level reference on crafted payloads") {
     import spark.implicits._
     // flat payload (all bits 0: nothing exceeds the mean), single byte,

@@ -24,6 +24,7 @@ class Wave35QueriesSpec extends SparkSpec {
   test("q_minhash_perm_sweep matches a driver recompute from raw shingle sets") {
     val shn = SparkEntry.queries("dedup_minhash_lsh")(spark, dir)
       .select("id_l", "id_r").collect().map(r => (r.getLong(0), r.getLong(1)))
+    spark.catalog.clearCache()
     val hs = Tables.documents(spark, dir)
       .select(org.apache.spark.sql.functions.col("doc_id"),
         graft.ops.TextOps.shingleHashes(
