@@ -17,9 +17,9 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange 
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One timed run of a query the way graft.Bench times it: build the frame,
-  * write every row to the noop sink, then clear the cache outside the
-  * timed region. Shared by Explain and the dev tools; Bench keeps its own
-  * copy, because it is the driver contract. */
+  * write every row to the noop sink, then release the settled frames it
+  * read and clear the cache outside the timed region. Shared by Explain
+  * and the dev tools; Bench keeps its own copy (the driver contract). */
 object NoopRun {
   /** Wall seconds of the build and write, the Janino compilations (misses
     * of Spark's compiled-class cache) they caused, every exchange of the
@@ -45,8 +45,11 @@ object NoopRun {
       // timed up to the end of the write, not of the listener-bus drains
       val (seconds, plans, bytes) = traced(spark) {
         val t0 = System.nanoTime()
-        build.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val df = build
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } finally graft.ops.Checkpoints.discard(df)
       }
       Timed(seconds, compiles() - c0, exchanges(plans), bytes)
     } finally spark.catalog.clearCache()

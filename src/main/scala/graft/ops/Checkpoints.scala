@@ -2,20 +2,19 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graftshim.RddShim
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one place that cuts lineage. Every frame the engine settles — an
-  * iterative round (Pregel-via-joins graph queries, union-find doubling,
-  * greedy sketch loops), a receipt or verdict handed to a caller, or a
-  * store read settled before the store mutates — goes through one of two
-  * forms:
+/** The one place that cuts lineage. Every frame the engine settles goes
+  * through one of three forms:
   *
-  *  - [[LineageCut.cutLineage]] (hand-off): the settled frame outlives the
-  *    call that made it — it is returned, or replaced round by round.
-  *  - [[settled]] (scoped): the settled frame lives for one lexical block
-  *    and is released when the block exits.
+  *  - [[LineageCut.cutLineage]] (hand-off): a receipt, verdict or result
+  *    that outlives the call that made it.
+  *  - [[settled]] (scoped): lives for one lexical block (a store read
+  *    settled before the store mutates, a frame every round reads).
+  *  - [[iterate]] (rounds): each round of a loop (Pregel-via-joins graph
+  *    queries, union-find doubling) is settled and the one before it
+  *    released; the last round is handed off.
   *
   * Mode is a session switch so the SAME code runs in both deployment
   * shapes:
@@ -45,34 +44,41 @@ object Checkpoints {
     * not return the settled frame or a lazy frame that reads it. */
   def settled[A](df: DataFrame)(body: DataFrame => A): A = {
     val s = df.cutLineage()
-    try body(s) finally release(s)
+    try body(s) finally discard(s)
   }
 
-  /** Drops a frame settled by [[LineageCut.cutLineage]], whose plan is a
-    * `LogicalRDD` over the checkpointed RDD. `Dataset.unpersist` only drops
-    * CacheManager entries; a locally checkpointed RDD stays in
-    * `getPersistentRDDs`, holding its blocks until the JVM happens to
-    * collect it, so the RDD itself is dropped. A reliable checkpoint's
-    * files are deleted too: Spark's cleaner keeps them by default
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints=false`). */
-  private def release(settled: DataFrame): Unit =
-    drop(settled.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+  /** Runs up to `rounds` steps from `init` (never released here), settling
+    * each round and releasing the one before, so a loop holds at most two
+    * settled rounds; stops after the first round for which `until` holds.
+    * Returns the last round as a hand-off (`init` when `rounds` is 0). */
+  def iterate(init: DataFrame, rounds: Int, until: DataFrame => Boolean = _ => false)
+             (step: DataFrame => DataFrame): DataFrame = {
+    @annotation.tailrec def go(cur: DataFrame, k: Int): DataFrame =
+      if (k == rounds) cur
+      else {
+        val next = try step(cur).cutLineage() finally if (k > 0) discard(cur)
+        if (until(next)) next else go(next, k + 1)
+      }
+    go(init, 0)
+  }
 
-  /** Releases every settled frame `df` reads, for a caller that drops an
-    * op's result unread (a store op's receipt): otherwise its checkpointed
-    * blocks stay listed until the JVM happens to collect them. */
+  /** Releases every settled frame `df` reads: a frame settled here, or the
+    * result of an op that a caller drops (a store op's receipt) or is done
+    * with. `Dataset.unpersist` only drops CacheManager entries; a locally
+    * checkpointed RDD stays in `getPersistentRDDs`, holding its blocks
+    * until the JVM happens to collect it, so the RDD itself is dropped. A
+    * reliable checkpoint's files are deleted too: Spark's cleaner keeps
+    * them by default (`spark.cleaner.referenceTracking.cleanCheckpoints`). */
   def discard(df: DataFrame): Unit =
     df.queryExecution.logical.collect {
       case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd
-    }.foreach(drop)
-
-  private def drop(rdd: RDD[_]): Unit = {
-    RddShim.drop(rdd)
-    rdd.getCheckpointFile.foreach { f =>
-      val p = new Path(f)
-      p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+    }.foreach { rdd =>
+      RddShim.drop(rdd)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
-  }
 
   implicit class LineageCut(private val df: DataFrame) extends AnyVal {
     /** Eagerly materialize `df` and truncate its lineage, honoring the

@@ -123,40 +123,42 @@ object DedupOps {
 
   /** [[connectedComponents]]' distributed path over settled `p` (src, dst). */
   private def ccByDoubling(nodes: DataFrame, p: DataFrame, maxIter: Int): DataFrame = {
-    val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .cutLineage()
-    // cut (not persist): the doubling self-join would otherwise
+    // settled, not persisted: the doubling self-join would otherwise
     // triple the logical plan every round — lineage must be cut, not cached.
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).cutLineage()
     var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      // pointer doubling: every label is itself a node id in `labels`.
-      // Round 1 skips it — labels are still the identity map, so
-      // label(label) = label and the self-join would be a pure-overhead
-      // shuffle.
-      val doubled =
-        if (i == 0) labels.select(col("node").as("dnode"), col("label").as("dlabel"))
-        else labels.alias("x")
-          .join(labels.alias("y"), col("x.label") === col("y.node"))
-          .select(col("x.node").as("dnode"), col("y.label").as("dlabel"))
-      val stepped = labels.alias("l")
-        .join(doubled.alias("d"), col("l.node") === col("d.dnode"))
-        .join(nbrMin.alias("n"), col("l.node") === col("n.src"), "left")
-        .select(col("l.node").as("node"), col("l.label").as("old_label"),
-          least(col("l.label"), col("d.dlabel"),
-            coalesce(col("n.nbr_label"), col("l.label"))).as("label"))
-        .cutLineage()
-      changed = stepped.where(col("label") =!= col("old_label")).count()
-      labels = stepped.select("node", "label")
-      i += 1
+    val labels = settled(p.union(p.select(col("dst").as("src"), col("src").as("dst")))) { edges =>
+      settled(edges.select(col("src").as("node")).distinct()
+          .select(col("node"), col("node").as("label"))) { l0 =>
+        iterate(l0, maxIter, until = { stepped =>
+          changed = stepped.where(col("label") =!= col("old_label")).count()
+          changed == 0
+        }) { prev =>
+          val labels = prev.select("node", "label")
+          val nbrMin = edges.join(labels, edges("dst") === labels("node"))
+            .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
+          // pointer doubling: every label is itself a node id in `labels`.
+          // Round 1 skips it — labels are still the identity map, so
+          // label(label) = label and the self-join would be a pure-overhead
+          // shuffle.
+          val doubled =
+            if (prev eq l0) labels.select(col("node").as("dnode"), col("label").as("dlabel"))
+            else labels.alias("x")
+              .join(labels.alias("y"), col("x.label") === col("y.node"))
+              .select(col("x.node").as("dnode"), col("y.label").as("dlabel"))
+          labels.alias("l")
+            .join(doubled.alias("d"), col("l.node") === col("d.dnode"))
+            .join(nbrMin.alias("n"), col("l.node") === col("n.src"), "left")
+            .select(col("l.node").as("node"), col("l.label").as("old_label"),
+              least(col("l.label"), col("d.dlabel"),
+                coalesce(col("n.nbr_label"), col("l.label"))).as("label"))
+        }
+      }
     }
-    if (changed > 0)
+    if (changed > 0) {
+      discard(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds ($changed labels still moving)")
+    }
     val singletons = nodes.select(col("id").as("node"))
       .join(labels.select("node"), Seq("node"), "left_anti")
       .select(col("node"), col("node").as("cluster_id"))

@@ -55,10 +55,8 @@ object GraphQueries {
     * edge list with the rank frame on src (rank frame is |V|-sized and
     * broadcastable for any dimension-sized graph; partitioned equi-join
     * for web-scale V) and ONE groupBy dst with map-side partial sums.
-    * 8 iterations = 8 bounded shuffles, nothing driver-side; for deep
-    * iteration counts at web scale you would checkpoint lineage every few
-    * steps — at 8 the plan stays compact. The oracle unrolls the same 8
-    * iterations as chained CTEs. */
+    * 8 iterations = 8 bounded shuffles, nothing driver-side, lineage cut
+    * every other one. The oracle unrolls the same 8 as chained CTEs. */
   val pagerank: Q = new Q {
     val name = "q_pagerank"
     private val Iters = 8
@@ -69,8 +67,7 @@ object GraphQueries {
       // The fact-table pass that derives the edge list is by far the
       // expensive part; materialize it ONCE so the 8 iterations iterate
       // over the |E|-sized frame, not 8 re-reads of lineitem∘orders.
-      val edgesOut = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src")).cutLineage()
+      val edgesOut = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
       // |V| is a 1-row scalar consumed by every iteration: collect it ONCE
       // and inline the two integer constants (OPTIMIZATION_r18 — the
       // former crossJoin(broadcast(stats)) re-ran the nation scan + agg +
@@ -84,24 +81,22 @@ object GraphQueries {
       val base = if (nNodes == 0) 0L else 15L * E9 / (100L * nNodes)
       val r0 = nodes.select(col("node"),
         lit(if (nNodes == 0) 0L else E9 / nNodes).as("r"))
-      val rFinal = (1 to Iters).foldLeft(r0) { (ranks, k) =>
-        val inflow = edgesOut
-          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst"), expr("r div outdeg").as("contrib"))
-          .groupBy("dst").agg(sum("contrib").as("inflow"))
-        val next = ranks
-          .join(inflow, col("node") === col("dst"), "left")
-          .select(col("node"),
-            (lit(base) + expr("(85 * coalesce(inflow, 0)) div 100")).as("r"))
-        // Truncate lineage EVERY OTHER step: without any cut the plan
-        // nests k levels deep and analysis cost grows superlinearly in k
-        // (the GraphX-documented iterative-algorithm pattern; measured
-        // 3.5 s → 2.0 s at sf0.1 for per-round cuts) — but each cut is
-        // itself an eager job, and at a 2-round cadence the uncut plan is
-        // only ever 2 joins deep, halving the materialization jobs
-        // (OPTIMIZATION_r18). At cluster scale you'd use a reliable
-        // checkpoint dir for executor-loss recovery instead.
-        if (k % 2 == 0 && k < Iters) next.cutLineage() else next
+      val rFinal = settled(edgesOut) { eo =>
+        def power(ranks: DataFrame): DataFrame = {
+          val inflow = eo
+            .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst"), expr("r div outdeg").as("contrib"))
+            .groupBy("dst").agg(sum("contrib").as("inflow"))
+          ranks
+            .join(inflow, col("node") === col("dst"), "left")
+            .select(col("node"),
+              (lit(base) + expr("(85 * coalesce(inflow, 0)) div 100")).as("r"))
+        }
+        // a round is TWO iterations: uncut, analysis cost grows
+        // superlinearly in depth (3.5 s → 2.0 s at sf0.1 for per-iteration
+        // cuts), but each cut is an eager job and 2 joins deep is compact
+        // (OPTIMIZATION_r18)
+        iterate(r0, Iters / 2)(r => power(power(r)))
       }
       rFinal
         .join(broadcast(nation), col("node") === col("n_nationkey"))
@@ -220,7 +215,7 @@ object GraphQueries {
     * Scale shape: per iteration one equi-join of the (bidirectional) edge
     * list with the |V|-sized distance frame and one min-groupBy with
     * map-side partials — the Pregel-via-joins pattern again; lineage is
-    * cut per step (localCheckpoint) so the plan stays O(1) deep. */
+    * cut per step so the plan stays O(1) deep. */
   val bfsHops: Q = new Q {
     val name = "q_bfs_hops"
     private val Iters = 6
@@ -237,16 +232,15 @@ object GraphQueries {
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .cutLineage()
       val d0 = nodes.select(col("node"),
         when(col("node") === 0, lit(0L)).otherwise(lit(Sentinel)).as("d"))
-      val dFinal = (1 to Iters).foldLeft(d0) { (dists, _) =>
-        val relaxed = both
-          .join(dists.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst").as("node"), (col("d") + 1L).as("d"))
-        dists.union(relaxed)
-          .groupBy("node").agg(min("d").as("d"))
-          .cutLineage()
+      val dFinal = settled(both) { b =>
+        iterate(d0, Iters) { dists =>
+          val relaxed = b
+            .join(dists.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst").as("node"), (col("d") + 1L).as("d"))
+          dists.union(relaxed).groupBy("node").agg(min("d").as("d"))
+        }
       }
       dFinal.join(broadcast(nation), col("node") === col("n_nationkey"))
         .select(col("node").as("nation_key"), col("n_name").as("nation_name"),
@@ -471,15 +465,15 @@ object GraphQueries {
         .where(col("src") =!= col("dst"))
         .select(col("src"), col("dst"),
           (lit(1000L) - least(col("strength"), lit(999L))).as("w"))
-        .cutLineage()
-      val d0 = weighted.select(col("src").as("u"), col("dst").as("v"), col("w").as("d"))
-        .union(nodes.select(col("node").as("u"), col("node").as("v"), lit(0L).as("d")))
-      val closure = (1 to 5).foldLeft(d0) { (dmat, _) =>
-        val through = dmat.alias("a").join(dmat.alias("b"), col("a.v") === col("b.u"))
-          .select(col("a.u").as("u"), col("b.v").as("v"),
-            (col("a.d") + col("b.d")).as("d"))
-        dmat.union(through).groupBy("u", "v").agg(min("d").as("d"))
-          .cutLineage()
+      val closure = settled(weighted) { w =>
+        val d0 = w.select(col("src").as("u"), col("dst").as("v"), col("w").as("d"))
+          .union(nodes.select(col("node").as("u"), col("node").as("v"), lit(0L).as("d")))
+        iterate(d0, 5) { dmat =>
+          val through = dmat.alias("a").join(dmat.alias("b"), col("a.v") === col("b.u"))
+            .select(col("a.u").as("u"), col("b.v").as("v"),
+              (col("a.d") + col("b.d")).as("d"))
+          dmat.union(through).groupBy("u", "v").agg(min("d").as("d"))
+        }
       }
       nodes
         .join(closure.where(col("u") === 0)
@@ -540,45 +534,40 @@ object GraphQueries {
     * Scale shape (Pregel-via-joins, same as pagerank): per iteration ONE
     * equi-join of the undirected edge list with the |V|-sized label frame
     * and ONE (node, label) groupBy with map-side partial sums, then a
-    * struct-max argmax — no window over the corpus, no driver state. At
-    * web scale the label frame partitions by node id and the loop would
-    * localCheckpoint every few rounds; at 3 rounds lineage stays compact. */
+    * struct-max argmax — no window over the corpus, no driver state.
+    * Lineage is cut every round. */
   val LpaRounds = 3
 
-  /** The weighted undirected co-purchase edge list (both directions,
-    * lineage-cut once) — shared by LPA and the modularity gate. */
+  /** The weighted undirected co-purchase edge list (both directions) —
+    * shared by LPA and the modularity gate. */
   private def lpaEdges(spark: SparkSession, dir: String): DataFrame =
     copurchase(spark, dir).select(explode(array(
         struct(col("pa").as("src"), col("pb").as("dst"), col("n_orders").as("w")),
         struct(col("pb").as("src"), col("pa").as("dst"), col("n_orders").as("w"))))
         .as("t"))
       .select(col("t.src").as("src"), col("t.dst").as("dst"), col("t.w").as("w"))
-      .cutLineage()
 
   /** Three synchronous LPA rounds over `e` → (id, lbl). Shared by
     * q_label_propagation and q_graph_modularity so the partition the
     * quality gate scores is EXACTLY the partition the LPA query emits. */
   private def lpaLabels(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val nodes = Tables.part(spark, dir).select(col("p_partkey").cast("long").as("id"))
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-    for (_ <- 1 to LpaRounds) {
+    iterate(nodes.select(col("id"), col("id").as("lbl")), LpaRounds) { labels =>
       val best = e.join(labels.select(col("id").as("dst"), col("lbl")), Seq("dst"))
         .groupBy(col("src"), col("lbl"))
         .agg(sum("w").as("s"))
         .groupBy(col("src").as("id"))
         .agg(max(struct(col("s"), (-col("lbl")).as("nl"))).as("b"))
         .select(col("id"), (-col("b.nl")).as("new_lbl"))
-      labels = labels.join(best, Seq("id"), "left")
+      labels.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .cutLineage()
     }
-    labels
   }
 
   val labelPropagation: Q = new Q {
     val name = "q_label_propagation"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val labels = lpaLabels(spark, dir, lpaEdges(spark, dir))
+      val labels = settled(lpaEdges(spark, dir))(lpaLabels(spark, dir, _))
       val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
       labels.join(sizes, Seq("lbl"))
         .select(col("id").as("part_key"), col("lbl").as("community"), col("community_size"))
@@ -638,14 +627,14 @@ object GraphQueries {
   val qGraphModularity: Q = new Q {
     val name = "q_graph_modularity"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val e = lpaEdges(spark, dir)
-      // labels consumed by three aggregates below — cut once (DIM-grain)
-      val labels = lpaLabels(spark, dir, e).cutLineage()
-      val lsrc = labels.select(col("id").as("src"), col("lbl"))
-      val ldst = labels.select(col("id").as("dst"), col("lbl").as("lbl_d"))
       // withL feeds THREE aggregates (intra / deg / w2): cut once so the
       // double label join runs once, not per consumer (OPTIMIZATION_r18)
-      val withL = e.join(lsrc, Seq("src")).join(ldst, Seq("dst")).cutLineage()
+      val (labels, withL) = settled(lpaEdges(spark, dir)) { e =>
+        val labels = lpaLabels(spark, dir, e)
+        val lsrc = labels.select(col("id").as("src"), col("lbl"))
+        val ldst = labels.select(col("id").as("dst"), col("lbl").as("lbl_d"))
+        (labels, e.join(lsrc, Seq("src")).join(ldst, Seq("dst")).cutLineage())
+      }
       val intra = withL.where(col("lbl") === col("lbl_d"))
         .groupBy("lbl").agg(sum("w").as("intra_w2"))
       val deg = withL.groupBy("lbl").agg(sum("w").as("deg_w"))
@@ -721,18 +710,15 @@ object GraphQueries {
         .where(col("p_partkey") % StartStride === 0)
         .select(col("p_partkey").cast("long").as("start_key"),
           col("p_partkey").cast("long").as("node_key"), lit(0).as("step"))
-      var frontier = starts
-      var out = starts
-      for (s <- 1 to Steps) {
+      val frontiers = (1 to Steps).scanLeft(starts) { (frontier, s) =>
         val pick = graft.ops.HashOps.hashP(concat(col("start_key").cast("string"), lit(s":$s")))
-        frontier = frontier
+        frontier
           .join(adj, col("node_key") === col("src") &&
             col("rn") === pick % col("outdeg") + 1)
           .select(col("start_key"), col("dst").cast("long").as("node_key"),
             lit(s).as("step"))
-        out = out.union(frontier)
       }
-      out.orderBy("start_key", "step")
+      frontiers.reduce(_ union _).orderBy("start_key", "step")
     }
     val oracle = {
       def step(i: Int) = {
@@ -773,25 +759,25 @@ object GraphQueries {
     *
     * Scale shape per round: one degree groupBy + two semi-joins, all
     * partial-aggregated equi-joins on the node key; the edge list shrinks
-    * monotonically and is localCheckpointed between rounds so lineage
-    * stays flat. No driver-side state. */
+    * monotonically and is settled every round so lineage stays flat. No
+    * driver-side state. */
   val kcore: Q = new Q {
     val name = "q_kcore"
     val K = 3
     val Rounds = 4
     def run(spark: SparkSession, dir: String): DataFrame = {
       val cop = copurchase(spark, dir, fanned = true)
-      var e = cop.select(explode(array(
+      val e0 = cop.select(explode(array(
           struct(col("pa").as("src"), col("pb").as("dst")),
           struct(col("pb").as("src"), col("pa").as("dst")))).as("t"))
         .select(col("t.src").as("src"), col("t.dst").as("dst"))
-        .cutLineage()
-      for (_ <- 1 to Rounds) {
-        val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= K).select("src")
-        e = e.join(keep, Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-          .cutLineage()
+      val e = settled(e0) { s =>
+        iterate(s, Rounds) { e =>
+          val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
+            .where(col("deg") >= K).select("src")
+          e.join(keep, Seq("src"), "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
+        }
       }
       e.groupBy("src").agg(count(lit(1)).as("degree"))
         .select(col("src").as("part_key"), col("degree"))
@@ -823,7 +809,7 @@ object GraphQueries {
     * top-100 authority parts.
     *
     * Scale shape (Pregel-via-joins): the distinct (cust, part) edge list
-    * is derived once from the fact pass and localCheckpointed; each
+    * is derived once from the fact pass and settled; each
     * half-step is ONE equi-join of edges with the |part|- or |cust|-sized
     * score frame plus ONE partial-aggregated groupBy; the L∞ normalizer
     * is a 1-row broadcast. The final top-100 is a rank-filtered window
@@ -834,29 +820,30 @@ object GraphQueries {
     val name = "q_hits_bipartite"
     private val E6 = 1000000L
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val e = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
+      val edges = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
         .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
         .distinct()
-        .cutLineage() // reused by all three half-steps
       // hub₀ ≡ e6 ⇒ auth₁(p) = e6 · indeg(p)
       // Each normalized half-step frame is consumed TWICE (the L∞ max-agg
       // broadcast branch + the next half-step's join), and the plan
       // re-derived the whole prefix chain per consumer (a2n's tree held
       // h1n's twice, each holding a1n's twice — no static ReusedExchange;
       // OPTIMIZATION_r18, guide §2.4). The frames are DIM-grain
-      // (|parts| / |custs|), so cutting lineage after each half-step
-      // materializes each one exactly once.
-      val a1 = e.groupBy("part").agg((count(lit(1)) * E6).as("a1")).cutLineage()
-      val a1n = a1.crossJoin(broadcast(a1.agg(max("a1").as("mx"))))
-        .select(col("part"), expr(s"a1 * $E6 div mx").as("a1n"))
-      val h1 = e.join(a1n, Seq("part")).groupBy("cust").agg(sum("a1n").as("h1"))
-        .cutLineage()
-      val h1n = h1.crossJoin(broadcast(h1.agg(max("h1").as("mx"))))
-        .select(col("cust"), expr(s"h1 * $E6 div mx").as("h1n"))
-      val a2 = e.join(h1n, Seq("cust")).groupBy("part").agg(sum("h1n").as("a2"))
-        .cutLineage()
+      // (|parts| / |custs|), so settling each half-step materializes it
+      // exactly once.
+      val a2 = settled(edges) { e =>
+        settled(e.groupBy("part").agg((count(lit(1)) * E6).as("a1"))) { a1 =>
+          val a1n = a1.crossJoin(broadcast(a1.agg(max("a1").as("mx"))))
+            .select(col("part"), expr(s"a1 * $E6 div mx").as("a1n"))
+          settled(e.join(a1n, Seq("part")).groupBy("cust").agg(sum("a1n").as("h1"))) { h1 =>
+            val h1n = h1.crossJoin(broadcast(h1.agg(max("h1").as("mx"))))
+              .select(col("cust"), expr(s"h1 * $E6 div mx").as("h1n"))
+            e.join(h1n, Seq("cust")).groupBy("part").agg(sum("h1n").as("a2")).cutLineage()
+          }
+        }
+      }
       val a2n = a2.crossJoin(broadcast(a2.agg(max("a2").as("mx"))))
         .select(col("part"), expr(s"a2 * $E6 div mx").as("auth_e6"))
       a2n

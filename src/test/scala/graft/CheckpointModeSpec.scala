@@ -1,6 +1,13 @@
 package graft
 
-import graft.ops.Checkpoints
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+
+import graft.ReliableCheckpoints.rddDirs
+import graft.ops.{Checkpoints, DedupOps}
 
 /** Pins that the iterative graph/dedup family is CHECKPOINT-MODE-AGNOSTIC
   * (r9 verdict item 5): every `cutLineage()` site produces identical
@@ -12,43 +19,71 @@ import graft.ops.Checkpoints
   * live — and this spec proves it empirically on the queries with the
   * deepest iterative lineage, and on every mutating op of the three
   * persisted stores ([[StoreCycle]]), whose settle-before-mutate steps
-  * must survive an executor loss in the cluster mode too.
+  * must survive an executor loss in the cluster mode too. Spark keeps
+  * reliable checkpoint files, so both tests also check that nothing is
+  * left under the checkpoint dir once a result is released.
   */
 class CheckpointModeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  // Deepest cutLineage users: Pregel-via-joins rounds (LPA, HITS,
-  // k-core), union-find doubling (dedup_clusters), and a greedy sketch
-  // loop (doc_salient_term).
-  private val names = Seq("q_label_propagation", "q_hits_bipartite",
-    "q_kcore", "dedup_clusters", "doc_salient_term")
+  // Deepest cutLineage users: every Pregel-via-joins round loop and HITS,
+  // union-find (dedup_clusters, which takes the driver path at this size,
+  // and the forced doubling path), and doc_salient_term, which settles
+  // nothing (a control).
+  private val cases: Seq[(String, () => DataFrame)] =
+    Seq("q_pagerank", "q_bfs_hops", "q_weighted_sssp", "q_label_propagation",
+      "q_graph_modularity", "q_hits_bipartite", "q_kcore", "dedup_clusters",
+      "doc_salient_term").map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) :+
+      "connectedComponents doubling" -> { () =>
+        DedupOps.connectedComponents(
+          Tables.part(spark, dir).select(col("p_partkey").cast("long").as("id")),
+          SparkEntry.queries("q_copurchase_edges")(spark, dir)
+            .select(col("part_a").as("id_l"), col("part_b").as("id_r")),
+          driverEdgeLimit = 0).orderBy("node")
+      }
 
-  private def rows(name: String): Seq[String] =
-    try SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq
-    finally spark.catalog.clearCache()
+  /** The result's rows, and for each settled frame it reads, its reliable
+    * checkpoint file if that exists once the result is consumed; the
+    * result is then discarded. */
+  private def consume(df: DataFrame): (Seq[String], Seq[Option[String]]) =
+    try {
+      val rows = df.collect().map(_.toString).toSeq
+      val files = df.queryExecution.logical.collect {
+        case r: LogicalRDD if r.rdd.isCheckpointed =>
+          r.rdd.getCheckpointFile.filter(f => Files.exists(Path.of(new java.net.URI(f))))
+      }
+      (rows, files)
+    } finally {
+      Checkpoints.discard(df)
+      spark.catalog.clearCache()
+    }
 
   test("iterative queries produce identical results in local and reliable checkpoint modes") {
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString
-    for (name <- names) {
+    val ckptDir = Files.createTempDirectory("graft_ckpt_spec")
+    val written = for ((name, build) <- cases) yield {
       spark.conf.unset(Checkpoints.ModeKey)
-      val local = rows(name)
+      val (local, _) = consume(build())
       try {
         spark.conf.set(Checkpoints.ModeKey, "reliable")
-        spark.conf.set(Checkpoints.DirKey, ckptDir)
-        val reliable = rows(name)
+        spark.conf.set(Checkpoints.DirKey, ckptDir.toString)
+        val (reliable, files) = consume(build())
         assert(reliable == local,
           s"$name diverged between checkpoint modes")
         assert(local.nonEmpty, s"$name returned no rows — vacuous parity")
+        // every settled frame the result reads was written under this dir
+        assert(files.forall(_.exists(_.contains(ckptDir.toString + "/"))),
+          s"$name read settled frames without checkpoint files here: $files")
+        // and no round or scoped frame outlived the discarded result
+        assert(rddDirs(ckptDir).isEmpty, s"$name left checkpoint dirs ${rddDirs(ckptDir)}")
+        files.size
       } finally {
         spark.conf.unset(Checkpoints.ModeKey)
         spark.conf.unset(Checkpoints.DirKey)
       }
     }
     // reliable mode actually wrote checkpoint data (the switch engaged)
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-      .count() > 1
-    assert(wrote, "reliable mode never wrote to the checkpoint dir")
+    assert(written.sum > 0, "reliable mode never wrote to the checkpoint dir")
   }
 
   test("store ops give identical results in local and reliable checkpoint modes") {

@@ -31,4 +31,10 @@ object ReliableCheckpoints {
       spark.conf.unset(Checkpoints.DirKey)
     }
   }
+
+  /** Spark's per-RDD reliable checkpoint directories (`rdd-<id>`) under
+    * `root` (Spark adds a UUID level between the two). */
+  def rddDirs(root: Path): Seq[Path] =
+    Files.walk(root).toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
 }

@@ -1,0 +1,74 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+
+import graft.ReliableCheckpoints.rddDirs
+import graft.ops.{Checkpoints, DedupOps}
+
+/** The iterative family leaves only the settled frames its result reads:
+  * a round loop (`Checkpoints.iterate`) releases each round once the next
+  * is settled, and the frames every round reads are released with their
+  * `settled` scope. Counted explicitly in both checkpoint modes: the RDDs
+  * a run leaves must be exactly the checkpointed RDDs in the result's
+  * logical plan, and none may be left after `Checkpoints.discard(result)`.
+  * Local mode counts the RDD ids a run adds to `getPersistentRDDs`, which
+  * holds its RDDs weakly (a round that only GC dropped can vanish before
+  * it is counted); reliable mode counts `rdd-<id>` checkpoint dirs, which
+  * nothing but a release deletes. */
+class RoundReleaseSpec extends SparkSpec {
+
+  private val dir = "/root/testdata/sf0.001"
+
+  private def leavesOnly(name: String, settledFrames: Int, left: => Set[Int])
+                        (build: => DataFrame): Unit = {
+    val df = build
+    df.write.format("noop").mode("overwrite").save()
+    val read = df.queryExecution.logical.collect {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.id
+    }.toSet
+    assert(read.size === settledFrames, s"$name's result reads ${read.size} settled frames")
+    assert(left === read, s"$name left settled frames its result does not read")
+    Checkpoints.discard(df)
+    assert(left.isEmpty, s"$name left settled frames after discard")
+  }
+
+  private def inBothModes(name: String, settledFrames: Int)(build: => DataFrame): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    leavesOnly(name, settledFrames, sc.getPersistentRDDs.keySet.toSet -- before)(build)
+    val ckpt = Files.createTempDirectory("graft_round_release")
+    try {
+      spark.conf.set(Checkpoints.ModeKey, "reliable")
+      spark.conf.set(Checkpoints.DirKey, ckpt.toString)
+      leavesOnly(name, settledFrames,
+        rddDirs(ckpt).map(_.getFileName.toString.stripPrefix("rdd-").toInt).toSet)(build)
+    } finally {
+      spark.conf.unset(Checkpoints.ModeKey)
+      spark.conf.unset(Checkpoints.DirKey)
+    }
+  }
+
+  // q_graph_modularity's result reads two settled frames: the last LPA
+  // round (community sizes) and the label-joined edges (three aggregates)
+  private val queries = Seq("q_pagerank" -> 1, "q_bfs_hops" -> 1, "q_weighted_sssp" -> 1,
+    "q_kcore" -> 1, "q_hits_bipartite" -> 1, "q_label_propagation" -> 1,
+    "q_graph_modularity" -> 2)
+
+  for ((name, n) <- queries)
+    test(s"$name leaves only the settled frames its result reads") {
+      inBothModes(name, n)(SparkEntry.queries(name)(spark, dir))
+    }
+
+  test("connectedComponents' doubling path leaves only its last round") {
+    inBothModes("doubling", 1) {
+      val parts = Tables.part(spark, dir).select(col("p_partkey").cast("long").as("id"))
+      val pairs = SparkEntry.queries("q_copurchase_edges")(spark, dir)
+        .select(col("part_a").as("id_l"), col("part_b").as("id_r"))
+      DedupOps.connectedComponents(parts, pairs, driverEdgeLimit = 0)
+    }
+  }
+}

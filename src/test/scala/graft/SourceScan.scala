@@ -22,7 +22,7 @@ object SourceScan {
   }
 
   /** (file, 1-based line, code) with comments blanked out, line numbers kept. */
-  private def codeLines(f: File): Seq[(File, Int, String)] = {
+  def codeLines(f: File): Seq[(File, Int, String)] = {
     val noBlocks = "(?s)/\\*.*?\\*/".r.replaceAllIn(Files.readString(f.toPath),
       m => java.util.regex.Matcher.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
     noBlocks.split("\n", -1).toSeq.zipWithIndex.map { case (l, i) =>
