@@ -2,9 +2,9 @@ package graft
 
 /** Dev utility: print the formatted physical plan and cold/warm timings for
   * one cataloged query, timed with graft.Bench's recipe ([[NoopRun]]), with
-  * each rep's Janino compilations, shuffle bytes and exchanges (one line
-  * each: kind, shuffle bytes written, plan sites reading it, partitioning,
-  * columns). Usage: runMain graft.Explain <query> [sfDir] [reps]. */
+  * each rep's Janino compilations, shuffle bytes, Spark jobs and exchanges
+  * (one line each: kind, shuffle bytes written, plan sites reading it,
+  * partitioning, columns). Usage: runMain graft.Explain <query> [sfDir] [reps]. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -19,7 +19,7 @@ object Explain {
     (1 to reps).foreach { r =>
       val t = NoopRun(spark)(q.run(spark, sfDir))
       println(f"[explain] rep=$r time=${t.seconds}%.3fs compiles=${t.compiles} " +
-        s"shuffle_bytes=${t.shuffleBytes} exchanges=${t.exchanges.size}")
+        s"shuffle_bytes=${t.shuffleBytes} jobs=${t.jobs} exchanges=${t.exchanges.size}")
       t.exchanges.foreach(e => println(s"[explain]   $e"))
     }
     spark.stop()

@@ -34,6 +34,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinPushdown)
 
+    // a global sort over small materialized shuffle stages ranges into one
+    // partition, so RangePartitioner starts no sampling job
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallRangeSort)
+
     // SQL surface for the same operator: `GRAFT ASOF JOIN l, r ON k MATCH
     // lts TO rts VALUES v…` — a delegating parser (non-GRAFT statements
     // pass through untouched) plus the resolution rule that lowers the

@@ -1,13 +1,13 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftshim.ListenerShim
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -23,10 +23,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object NoopRun {
   /** Wall seconds of the build and write, the Janino compilations (misses
     * of Spark's compiled-class cache) they caused, every exchange of the
-    * plans the run executed, and the shuffle bytes its tasks wrote (every
-    * job of the run, the builder's eager ones included). */
+    * plans the run executed, and the shuffle bytes its tasks wrote and the
+    * Spark jobs it started (every job of the run, the builder's eager ones
+    * included). */
   final case class Timed(seconds: Double, compiles: Long, exchanges: Seq[Exchange],
-                         shuffleBytes: Long)
+                         shuffleBytes: Long, jobs: Int)
+
+  /** What [[traced]] saw a body do: its result, the executed plan of every
+    * Dataset action and command it ran (writes, counts, checkpoints), the
+    * shuffle bytes its tasks wrote and the Spark jobs it started. */
+  final case class Trace[T](result: T, plans: Seq[SparkPlan], shuffleBytes: Long, jobs: Int)
 
   /** One exchange of an executed plan: `shuffle` or `broadcast`, a
     * shuffle's partitioning with expression ids stripped
@@ -43,7 +49,7 @@ object NoopRun {
     val c0 = compiles()
     try {
       // timed up to the end of the write, not of the listener-bus drains
-      val (seconds, plans, bytes) = traced(spark) {
+      val t = traced(spark) {
         val t0 = System.nanoTime()
         val df = build
         try {
@@ -51,24 +57,24 @@ object NoopRun {
           (System.nanoTime() - t0) / 1e9
         } finally graft.ops.Checkpoints.discard(df)
       }
-      Timed(seconds, compiles() - c0, exchanges(plans), bytes)
+      Timed(t.result, compiles() - c0, exchanges(t.plans), t.shuffleBytes, t.jobs)
     } finally spark.catalog.clearCache()
   }
 
-  /** Runs `body` and returns its result, the executed plan of every
-    * Dataset action and command it ran (writes, counts, checkpoints), and
-    * the shuffle bytes its tasks wrote. Drains the listener bus before and
-    * after `body` (events of earlier actions would otherwise reach its
+  /** Runs `body` and returns its [[Trace]]. Drains the listener bus before
+    * and after `body` (events of earlier actions would otherwise reach its
     * listeners), so use it in tools and specs, never on a query path. */
-  def traced[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan], Long) = {
+  def traced[T](spark: SparkSession)(body: => T): Trace[T] = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val bytes = new AtomicLong()
+    val jobs = new AtomicInteger()
     val qel = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan): Unit
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val tasks = new SparkListener {
+      override def onJobStart(start: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
       override def onTaskEnd(end: SparkListenerTaskEnd): Unit =
         Option(end.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
@@ -79,7 +85,7 @@ object NoopRun {
     try {
       val out = body
       ListenerShim.waitUntilListenerBusEmpty(sc)
-      (out, plans.asScala.toSeq, bytes.get)
+      Trace(out, plans.asScala.toSeq, bytes.get, jobs.get)
     } finally {
       spark.listenerManager.unregister(qel)
       sc.removeSparkListener(tasks)

@@ -30,8 +30,10 @@ object Pipeline {
   def runStage1GeoEnrich(spark: SparkSession, sfDir: String, lake: String): Unit =
     Sinks.writeMart(GeoPipeline.enriched(spark, sfDir), s"$lake/$InterimPath")
 
+  /** The materialized interim; stages 2–4 read it through the table
+    * schema registry, so a refresh infers its schema once. */
   def interim(spark: SparkSession, lake: String): DataFrame =
-    spark.read.parquet(s"$lake/$InterimPath")
+    Tables.parquet(spark, s"$lake/$InterimPath")
 
   /** Incremental stage 1 — the 100 TB upgrade over the reference's full
     * refresh: enrich ONLY the `depthDays`-day window of a date-partitioned

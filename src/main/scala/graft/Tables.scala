@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,8 +88,60 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String,
             fanned: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val df = parquet(spark, path)
     if (fanned) fanOut(spark, df, path, FanoutKeys.get(name)) else df
+  }
+
+  /** Schemas Spark inferred, per session (held weakly): qualified path ->
+    * (the files listed under it as (name, length, mtime), the schema
+    * inferred from them). Metadata only, as a metastore holds a table's
+    * schema: no data, plan or result is kept. */
+  private val inferred =
+    new java.util.WeakHashMap[SparkSession,
+      mutable.Map[String, (Seq[(String, Long, Long)], StructType)]]()
+
+  /** `spark.read.parquet(path)` that infers each table's schema once per
+    * session. Inference runs a Spark job that reads footers (about 55 ms
+    * at sf0.1, the only job a cheap query's builder starts); a read whose
+    * path lists the same files as an earlier read in the session passes
+    * the schema inferred then and starts no job. A file added, removed or
+    * rewritten changes the listing, so the table is inferred again and
+    * fixture drift is seen as before. Inference depends on session conf
+    * (`spark.sql.legacy.parquet.nanosAsLong`), which `Sessions.defaults`
+    * sets at session build. A path that cannot be listed is read as is,
+    * so Spark reports it. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      try {
+        val it = fs.listFiles(p, true)
+        val b = Vector.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.result().sorted)
+      } catch { case _: java.io.FileNotFoundException => None }
+    files match {
+      case None => spark.read.parquet(path)
+      case Some(listed) =>
+        val key = fs.makeQualified(p).toString
+        val known = inferred.synchronized {
+          Option(inferred.get(spark)).flatMap(_.get(key)).collect {
+            case (seen, schema) if seen == listed => schema
+          }
+        }
+        known match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            inferred.synchronized {
+              inferred.computeIfAbsent(spark, _ => mutable.Map.empty)(key) = (listed, df.schema)
+            }
+            df
+        }
+    }
   }
 
   def lineitem(spark: SparkSession, dir: String, fanned: Boolean = false): DataFrame =

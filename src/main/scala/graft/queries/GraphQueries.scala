@@ -146,24 +146,27 @@ object GraphQueries {
     def run(spark: SparkSession, dir: String): DataFrame = {
       // und feeds degree counting AND the orientation join; oriented feeds
       // all three corner roles of the wedge join — materialize each once
-      // so the lineitem∘orders edge derivation runs a single time.
-      val und = edges(spark, dir)
+      // so the lineitem∘orders edge derivation runs a single time. und is
+      // settled for the orientation only; the result reads oriented.
+      val undirected = edges(spark, dir)
         .where(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct().cutLineage()
-      val deg = und.select(col("a").as("node")).union(und.select(col("b")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val withDeg = und
-        .join(deg.select(col("node").as("a"), col("deg").as("dega")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("deg").as("degb")), Seq("b"))
-      val oriented = withDeg.select(
-        when(col("dega") < col("degb") ||
-            (col("dega") === col("degb") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(col("dega") < col("degb") ||
-            (col("dega") === col("degb") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v")).cutLineage()
+        .distinct()
+      val oriented = settled(undirected) { und =>
+        val deg = und.select(col("a").as("node")).union(und.select(col("b")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+        val withDeg = und
+          .join(deg.select(col("node").as("a"), col("deg").as("dega")), Seq("a"))
+          .join(deg.select(col("node").as("b"), col("deg").as("degb")), Seq("b"))
+        withDeg.select(
+          when(col("dega") < col("degb") ||
+              (col("dega") === col("degb") && col("a") < col("b")), col("a"))
+            .otherwise(col("b")).as("u"),
+          when(col("dega") < col("degb") ||
+              (col("dega") === col("degb") && col("a") < col("b")), col("b"))
+            .otherwise(col("a")).as("v")).cutLineage()
+      }
       val e1 = oriented.select(col("u").as("x"), col("v").as("y"))
       val e2 = oriented.select(col("u").as("x"), col("v").as("z"))
       val e3 = oriented.select(col("u").as("y"), col("v").as("z"))

@@ -579,8 +579,19 @@ object TextQueries {
     // is spelled as a literal alternation usable by BOTH engines
     val TripleRe: String = ('a' to 'z').map(c => s"$c$c$c").mkString("|")
 
-    /** Train: the evolving (word, wc, segmentation) vocabulary after every
-      * round, plus each round's chosen (pair, cnt) — shared by the
+    /** The (word, wc, segmentation) vocabulary before any merge. Every
+      * round of [[train]] reads it, so callers pass it in settled. */
+    def words(spark: SparkSession, dir: String): DataFrame =
+      Tables.documents(spark, dir)
+        .select(explode(TextOps.tokens(col("text"))).as("word"))
+        .where(col("word").rlike("^[a-z]+$") && !col("word").rlike(TripleRe))
+        .groupBy("word").agg(count(lit(1)).as("wc"))
+        .select(col("word"), col("wc"),
+          concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("s"))
+
+    /** Train from the settled vocabulary `w0`: the evolving (word, wc,
+      * segmentation) vocabulary after every round (it reads `w0`), plus
+      * each round's chosen (pair, cnt) — shared by the
       * train-side query (q_bpe_merges) and the apply-side encoder
       * (q_bpe_encode). Each round's winner is ONE row by construction
       * (orderBy+limit 1); collecting it and inlining the pair as a
@@ -589,14 +600,7 @@ object TextQueries {
       * (OPTIMIZATION_r18 — driver state: one (string, long) per round,
       * bounded). Arithmetic unchanged, so segmentations are
       * bit-identical. */
-    def train(spark: SparkSession, dir: String): (DataFrame, Seq[(String, Long)]) = {
-      val w0 = Tables.documents(spark, dir)
-        .select(explode(TextOps.tokens(col("text"))).as("word"))
-        .where(col("word").rlike("^[a-z]+$") && !col("word").rlike(TripleRe))
-        .groupBy("word").agg(count(lit(1)).as("wc"))
-        .select(col("word"), col("wc"),
-          concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("s"))
-        .cutLineage()
+    def train(w0: DataFrame): (DataFrame, Seq[(String, Long)]) = {
       def bestPair(words: DataFrame): Option[(String, Long)] = words
         .select(col("wc"),
           explode(TextOps.shingles(split(trim(col("s")), " "), 2)).as("pair"))
@@ -652,7 +656,8 @@ object TextQueries {
   val bpeMerges: Q = new Q {
     val name = "q_bpe_merges"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val (_, bests) = Bpe.train(spark, dir)
+      // only the merges are kept, so the vocabulary lives for the training
+      val bests = settled(Bpe.words(spark, dir))(w0 => Bpe.train(w0)._2)
       import spark.implicits._
       bests.zipWithIndex.map { case ((pair, cnt), i) =>
         (i + 1L, pair.replace(" ", ""), cnt)
@@ -788,7 +793,7 @@ object TextQueries {
   val bpeEncode: Q = new Q {
     val name = "q_bpe_encode"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val (vocab, _) = Bpe.train(spark, dir)
+      val (vocab, _) = Bpe.train(Bpe.words(spark, dir).cutLineage())
       val dict = vocab.select(col("word"),
         size(split(trim(col("s")), " ")).cast("long").as("n_syms"))
       val dw = Tables.documents(spark, dir)

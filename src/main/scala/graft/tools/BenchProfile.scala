@@ -23,14 +23,11 @@ object BenchProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.Sessions.local()
 
-    val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val taskTimeMs = new AtomicLong
-    val shuffleWrite = new AtomicLong
     val inputBytes = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(): Unit }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet(): Unit
       }
@@ -39,7 +36,6 @@ object BenchProfile {
         val m = t.taskMetrics
         if (m != null) {
           taskTimeMs.addAndGet(m.executorRunTime)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           inputBytes.addAndGet(m.inputMetrics.bytesRead): Unit
         }
       }
@@ -52,8 +48,7 @@ object BenchProfile {
     try { graft.SparkEntry.entry(spark).count() } catch { case _: Throwable => }
     println("[profile]\tquery\twall_s\tcompiles\tjobs\tstages\ttasks\ttask_time_s\tshuffle_mb\tinput_mb")
     for (name <- names) {
-      jobs.set(0); stages.set(0); tasks.set(0)
-      taskTimeMs.set(0); shuffleWrite.set(0); inputBytes.set(0)
+      stages.set(0); tasks.set(0); taskTimeMs.set(0); inputBytes.set(0)
       try {
         val t = graft.NoopRun(spark)(qs(name)(spark, dir))
         // listener bus is async; drain it deterministically so no event
@@ -61,7 +56,7 @@ object BenchProfile {
         // (a fixed sleep raced the bus under load)
         org.apache.spark.graftshim.ListenerShim
           .waitUntilListenerBusEmpty(spark.sparkContext)
-        println(f"[profile]\t$name\t${t.seconds}%.3f\t${t.compiles}\t${jobs.get}\t${stages.get}\t${tasks.get}\t${taskTimeMs.get / 1000.0}%.2f\t${shuffleWrite.get / 1e6}%.2f\t${inputBytes.get / 1e6}%.2f")
+        println(f"[profile]\t$name\t${t.seconds}%.3f\t${t.compiles}\t${t.jobs}\t${stages.get}\t${tasks.get}\t${taskTimeMs.get / 1000.0}%.2f\t${t.shuffleBytes / 1e6}%.2f\t${inputBytes.get / 1e6}%.2f")
       } catch { case e: Throwable =>
         System.err.println(s"[profile] $name FAILED: ${String.valueOf(e.getMessage).take(160)}")
       }

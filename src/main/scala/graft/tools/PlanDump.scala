@@ -2,7 +2,9 @@ package graft.tools
 
 /** Dump `.explain("formatted")` for named catalog queries to files —
   * the committed per-round plan artifacts (plans/rNN/query_before.txt,
-  * query_after.txt).
+  * query_after.txt). Each query runs first (its rows are dropped), so the
+  * dump shows the final adaptive plan, with the stages and partition
+  * counts AQE picked at run time, above the initial one.
   *
   * Usage: runMain graft.tools.PlanDump sfDir outDir suffix query...
   * Writes outDir/query_suffix.txt. Session shape mirrors graft.Bench
@@ -16,8 +18,9 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
-      val plan = qs(n)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val qe = qs(n)(spark, dir).queryExecution
+      qe.toRdd.foreach(_ => ())
+      val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
       spark.catalog.clearCache()

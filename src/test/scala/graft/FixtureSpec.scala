@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     TimestampType — to IDENTICAL normalized values;
   *  2. `Tables.validate` turns an incompatible regeneration into ONE
   *     actionable diagnostic naming the table/column/found type, instead of
-  *     N opaque per-query analysis errors.
+  *     N opaque per-query analysis errors;
+  *  3. `Tables.table` infers a table's schema once per session, and again
+  *     when its files change.
   */
 class FixtureSpec extends SparkSpec {
 
@@ -117,6 +119,21 @@ class FixtureSpec extends SparkSpec {
     writeTwin(dir, (col("us") / 1000.0).as("ts")) // double — no valid reading
     val e = intercept[IllegalArgumentException](Tables.events(spark, dir))
     assert(e.getMessage.contains("events.ts") && e.getMessage.contains("double"))
+  }
+
+  test("Tables.table infers a table's schema once per session, again after a rewrite") {
+    val dir = Files.createTempDirectory("graft-schema-registry").toString
+    spark.range(3).toDF("id").write.parquet(s"$dir/t.parquet")
+    val first = NoopRun.traced(spark)(Tables.table(spark, dir, "t").schema)
+    assert(first.jobs > 0, "schema inference started no job")
+    val again = NoopRun.traced(spark)(Tables.table(spark, dir, "t").schema)
+    assert(again.jobs === 0, "a second read of an unchanged table started a job")
+    assert(again.result === first.result)
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS name")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val rewritten = Tables.table(spark, dir, "t")
+    assert(rewritten.schema.fieldNames.toSeq === Seq("id", "name"))
+    assert(rewritten.where("name = '2'").count() === 1)
   }
 
   test("Tables.validate passes on real testdata at every scale factor") {

@@ -23,7 +23,7 @@ class LakeExchangeSpec extends SparkSpec {
   }
 
   private def exchangesOf(body: => Unit): Seq[NoopRun.Exchange] = {
-    val (_, plans, _) = NoopRun.traced(spark)(body)
+    val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark)(body)
     NoopRun.exchanges(plans)
   }
 

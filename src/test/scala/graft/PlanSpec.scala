@@ -72,6 +72,38 @@ class PlanSpec extends SparkSpec {
       s"global single-partition stage in packing plan:\n$plan")
   }
 
+  /** One [[NoopRun]] of a catalog query after a read of every table, so no
+    * schema inference job counts; and its range exchanges. */
+  private def sortRun(name: String): (NoopRun.Timed, Seq[NoopRun.Exchange]) = {
+    Tables.validate(spark, sf)
+    val t = NoopRun(spark)(SparkEntry.queries(name)(spark, sf))
+    (t, t.exchanges.filter(_.partitioning.startsWith("rangepartitioning")))
+  }
+
+  private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  test("a global sort over small shuffled input ranges into one partition, with no sampling job") {
+    for (name <- Seq("q_price_histogram", "q_fuzzw_00")) {
+      val (t, ranges) = sortRun(name)
+      assert(ranges.nonEmpty && ranges.forall(_.partitioning.endsWith(", 1)")),
+        s"$name:\n${t.exchanges.mkString("\n")}")
+      // one job per exchange and the write's: RangePartitioner sampled nothing
+      assert(t.jobs === t.exchanges.size + 1, s"$name:\n${t.exchanges.mkString("\n")}")
+    }
+  }
+
+  test("a sort over a scan, or over shuffled input above the bound, keeps N range partitions") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions")
+    def keepsN(name: String): Unit = {
+      val (t, ranges) = sortRun(name)
+      assert(ranges.nonEmpty && ranges.forall(_.partitioning.endsWith(s", $n)")),
+        s"$name:\n${t.exchanges.mkString("\n")}")
+    }
+    keepsN("q_zorder_layout")
+    spark.conf.set(MinPartitionSize, "1")
+    try keepsN("q_price_histogram") finally spark.conf.unset(MinPartitionSize)
+  }
+
   test("mix_sample is a pure narrow filter — no exchange before the sort") {
     val df = MixQueries.mixSample.run(spark, sf)
     val exchanges = df.queryExecution.executedPlan.toString

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.col
 import graft.ReliableCheckpoints.rddDirs
 import graft.ops.{Checkpoints, DedupOps}
 
-/** The iterative family leaves only the settled frames its result reads:
+/** The iterative family (and the queries that settle one frame for a
+  * later one: triangle orientation, BPE training) leaves only the settled
+  * frames its result reads:
   * a round loop (`Checkpoints.iterate`) releases each round once the next
   * is settled, and the frames every round reads are released with their
   * `settled` scope. Counted explicitly in both checkpoint modes: the RDDs
@@ -53,10 +55,13 @@ class RoundReleaseSpec extends SparkSpec {
   }
 
   // q_graph_modularity's result reads two settled frames: the last LPA
-  // round (community sizes) and the label-joined edges (three aggregates)
+  // round (community sizes) and the label-joined edges (three aggregates);
+  // q_graph_triangles' result reads its oriented edges, not the undirected
+  // edges they came from; q_bpe_merges' result is the collected merges, so
+  // it reads none
   private val queries = Seq("q_pagerank" -> 1, "q_bfs_hops" -> 1, "q_weighted_sssp" -> 1,
     "q_kcore" -> 1, "q_hits_bipartite" -> 1, "q_label_propagation" -> 1,
-    "q_graph_modularity" -> 2)
+    "q_graph_modularity" -> 2, "q_graph_triangles" -> 1, "q_bpe_merges" -> 0)
 
   for ((name, n) <- queries)
     test(s"$name leaves only the settled frames its result reads") {

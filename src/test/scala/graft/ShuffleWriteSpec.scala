@@ -33,7 +33,7 @@ class ShuffleWriteSpec extends SparkSpec {
       .select(col("id"), sha1(col("id").cast("string")).as("h"))
       .repartition(4, col("id"))
     val w0 = wchar()
-    val (_, plans, taskBytes) = NoopRun.traced(spark)(
+    val NoopRun.Trace(_, plans, taskBytes, _) = NoopRun.traced(spark)(
       frame.write.format("noop").mode("overwrite").save())
     val written = wchar() - w0
     val shuffles = NoopRun.exchanges(plans).filter(_.kind == "shuffle")

@@ -105,7 +105,7 @@ class StoreScalingSpec extends SparkSpec {
       val bands = shardFiles(s"$path/bands", "band_pt")
       val bandPts = spark.read.parquet(s"$path/bands").where(col("doc_id").isin(forgetIds: _*))
         .select("band_pt").distinct().collect().map(_.getInt(0)).toSet
-      val (_, plans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark) {
         SignatureIndex.remove(forgetIds.toDF("doc_id"), path,
           NumPerms, NumBands, RowsPerBand, nParts = NParts)
       }
@@ -121,7 +121,7 @@ class StoreScalingSpec extends SparkSpec {
       val path = copyOf(indexes(r), s"logical_x$r")
       def listings = (shardFiles(s"$path/sigs", "doc_pt"), shardFiles(s"$path/bands", "band_pt"))
       val before = listings
-      val (_, plans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark) {
         StreamingOps.forgetBatchLogical(forgetIds.toDF("doc_id"), path, nParts = NParts).collect()
       }
       assert(listings == before, s"x$r: a logical forget rewrote store shards")
@@ -152,7 +152,7 @@ class StoreScalingSpec extends SparkSpec {
       val collided = spark.read.parquet(s"$path/bands").where(col("bk").isin(keyList: _*))
       val docPts = collided.select("doc_id").distinct().collect()
         .map(row => ShardedStore.shardOf(row.getLong(0), NParts)).toSet
-      val (verdicts, plans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(verdicts, plans, _, _) = NoopRun.traced(spark) {
         SignatureIndex.probe(batch.select("doc_id"), batchSigs, path, JaccardThreshold,
           nParts = NParts).collect()
       }
@@ -186,7 +186,7 @@ class StoreScalingSpec extends SparkSpec {
       val want = Map("doc_pt" -> docPts, "edge_pt" -> docPts,
         "cluster_pt" -> (docPts ++ clusters.map(ShardedStore.shardOf(_, NParts))))
       val before = tables.map { case (t, pt) => t -> shardFiles(s"$path/$t", pt) }.toMap
-      val (_, plans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark) {
         if (op == "merge")
           ClusterStore.merge(Seq.empty[Long].toDF("id"), merges.toDF("id_l", "id_r"), path,
             nParts = NParts).collect()
@@ -215,7 +215,7 @@ class StoreScalingSpec extends SparkSpec {
       val listing = shardFiles(postings, "centroid_id")
       val ranked = IvfIndex.rankCells(queries, gd, 2).persist()
       val cells = ranked.select("centroid_id").distinct().collect().map(_.getLong(0).toInt).toSet
-      val (hits, plans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(hits, plans, _, _) = NoopRun.traced(spark) {
         IvfIndex.searchPlan(ranked, path, gd, TopK, exclude = None).collect()
       }
       assert(hits.length == 2 * TopK, s"x$r: ${hits.length} hits")
@@ -225,7 +225,7 @@ class StoreScalingSpec extends SparkSpec {
       // pruned/flat byte ratio (stated, not asserted)
       val flat = staged(s"ivf_flat_x$r")
       IvfIndex.postings(spark, gd).coalesce(1).write.mode("overwrite").parquet(flat)
-      val (_, flatPlans, _) = NoopRun.traced(spark) {
+      val NoopRun.Trace(_, flatPlans, _, _) = NoopRun.traced(spark) {
         IvfIndex.cellTopK(spark.read.parquet(flat), ranked, TopK).collect()
       }
       val flatBytes = scans(flatPlans).filter(_.root == flat).map(_.filesSize).sum
