@@ -84,7 +84,7 @@ object Tables {
     * every cheap query by ~0.2–0.5 s, while only kernel-heavy consumers
     * (per-token scoring, frame explodes, window argmin over a wide
     * cross join) amortize it. The queries that measurably win pass
-    * `fanned = true` (re-measured at 4 cores: ROADMAP item 6). */
+    * `fanned = true` (re-measured at 4 cores: ROADMAP item 5). */
   def table(spark: SparkSession, dir: String, name: String,
             fanned: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"

@@ -69,7 +69,7 @@ object GeoOps {
     */
   def nearestZoneViaWindow(df: DataFrame, zones: DataFrame, keyCol: String,
                            latCol: String, lonCol: String): DataFrame = {
-    val joined = df.crossJoin(broadcast(zones))
+    val joined = df.crossJoin(zones)
       .withColumn("dist_km", haversineKm(col(latCol), col(lonCol), col("lat_z"), col("lon_z")))
     val w = Window.partitionBy(keyCol).orderBy(col("dist_km"), col("zone_id"))
     joined.withColumn("__rn", row_number().over(w))

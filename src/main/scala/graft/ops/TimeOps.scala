@@ -53,6 +53,7 @@ object TimeOps {
     val lut = IanaByOffset.toSeq.toDF("__off", "iana_tz")
     zones
       .withColumn("__off", offsetHours(col("lon_z")))
+      // hint kept: no catalog query runs this lookup, so no plan dump shows the planner's pick
       .join(broadcast(lut), Seq("__off"))
       .drop("__off")
   }

@@ -39,7 +39,7 @@ object AdvancedQueries {
         .select(col("l_orderkey"),
           round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
             .cast("long").as("rev"))
-      val co = ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      val co = ord.join(cust, col("o_custkey") === col("c_custkey"))
         .select("o_orderkey", "o_orderdate")
       li.join(co, col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderkey", "o_orderdate")

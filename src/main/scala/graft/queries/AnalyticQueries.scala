@@ -94,6 +94,7 @@ object AnalyticQueries {
         .agg(sum(cents(col("o_totalprice"))).as("rev"), count(lit(1)).as("n"))
       val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
         .select(explode(sequence(col("d0"), col("d1"), expr("interval 1 day"))).as("day"))
+      // hint kept: without it the nested-loop join builds the day grid and range-shuffles it
       val grid = days.crossJoin(broadcast(orders.select("o_orderstatus").distinct()))
       val locf = Window.partitionBy("o_orderstatus").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -268,10 +269,10 @@ object AnalyticQueries {
       userDays
         .withColumn("window_day",
           explode(sequence(col("day"), date_add(col("day"), 6))))
-        .join(broadcast(presentDays), Seq("window_day"), "left_semi")
+        .join(presentDays, Seq("window_day"), "left_semi")
         .groupBy("window_day")
         .agg(countDistinct("user_id").as("active_7d"))
-        .join(broadcast(bounds),
+        .join(bounds,
           col("window_day") >= date_add(col("lo"), 6) && col("window_day") <= col("hi"))
         .select(col("window_day"), col("active_7d"))
         .orderBy("window_day")
@@ -503,7 +504,7 @@ object AnalyticQueries {
         .withColumn("n", sum("bn").over(Window.partitionBy("l_returnflag")))
         .select("l_returnflag", "bkt", "off", "n")
       v.withColumn("wcum", sum("n_rows").over(wIn))
-        .join(broadcast(bands), Seq("l_returnflag", "bkt"))
+        .join(bands, Seq("l_returnflag", "bkt"))
         .select(col("l_returnflag"), col("cents"), col("n_rows"),
           (col("off") + col("wcum")).as("cum"),
           expr("(off + wcum) * 10000 div n").as("ecdf_e4"))
@@ -737,10 +738,11 @@ object AnalyticQueries {
       val tot = wt.agg(sum("n_wt").as("n_tot"))
       // a type VANISHING from a week is the loudest drift — zero-fill the
       // full week×type grid (calendar×type-bounded) so it contributes n_t·N_w
+      // hint kept: without it the nested-loop join builds the week totals and hash-shuffles them
       weekTot.crossJoin(broadcast(typeTot))
         .join(wt, Seq("week", "event_type"), "left")
         .withColumn("n_wt", coalesce(col("n_wt"), lit(0L)))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .groupBy("week", "n_w", "n_tot")
         .agg(sum(abs(expr("n_wt * n_tot - n_t * n_w"))).as("absdiff"))
         .select(col("week"), col("n_w"),

@@ -117,7 +117,7 @@ object BehaviorQueries {
           Seq("antecedent"))
         .join(supp.select(col("part").as("consequent"), col("supp").as("supp_b")),
           Seq("consequent"))
-        .crossJoin(broadcast(totals))
+        .crossJoin(totals)
         .withColumn("conf_e4", expr("supp_ab * 10000 div supp_a"))
         .withColumn("lift_e6", expr("supp_ab * n_tot * 1000000 div (supp_a * supp_b)"))
         .select("antecedent", "consequent", "supp_ab", "supp_a", "supp_b",
@@ -395,7 +395,7 @@ object BehaviorQueries {
         .select(col("user_id"), to_date(col("ts")).as("day"),
           Q.cents(col("value")).as("cents"))
       val hi = p.agg(max("day").as("hi"))
-      p.join(broadcast(hi))
+      p.join(hi)
         .withColumn("age", datediff(col("hi"), col("day")))
         .withColumn("weight", when(col("age") <= Horizon,
           expr(s"shiftleft(CAST(1 AS BIGINT), CAST($Horizon - age AS INT))"))
@@ -552,7 +552,7 @@ object BehaviorQueries {
       val rfm = o.groupBy("o_custkey")
         .agg(max("day").as("last_day"), count(lit(1)).as("f"),
           sum("cents").as("m_cents"))
-        .crossJoin(broadcast(anchor))
+        .crossJoin(anchor)
         .select(col("o_custkey"),
           datediff(col("anchor"), col("last_day")).cast("long").as("r_days"),
           col("f"), col("m_cents"),
@@ -571,9 +571,9 @@ object BehaviorQueries {
             expr("(cum * 5 + n_total - 1) div n_total").as(s"${valueCol}_q"))
       }
       rfm
-        .join(broadcast(quintiles(rfm, "r_days", desc0 = true)), Seq("r_days"))
-        .join(broadcast(quintiles(rfm, "f", desc0 = false)), Seq("f"))
-        .join(broadcast(quintiles(rfm, "m_band", desc0 = false)), Seq("m_band"))
+        .join(quintiles(rfm, "r_days", desc0 = true), Seq("r_days"))
+        .join(quintiles(rfm, "f", desc0 = false), Seq("f"))
+        .join(quintiles(rfm, "m_band", desc0 = false), Seq("m_band"))
         .select(col("o_custkey"), col("r_days"), col("f"), col("m_cents"),
           col("r_days_q").as("r_q"), col("f_q"), col("m_band_q").as("m_q"),
           expr("r_days_q * 100 + f_q * 10 + m_band_q").as("rfm_code"))
@@ -1027,7 +1027,7 @@ object BehaviorQueries {
         .where(col("c_custkey") % 100 === 0).select(col("c_custkey"))
       val boughtA = bought
         .select(col("cust").as("b_cust"), col("part").as("b_part"))
-      subjects.crossJoin(broadcast(popular))
+      subjects.crossJoin(popular)
         .join(boughtA,
           col("c_custkey") === col("b_cust") && col("part") === col("b_part"),
           "left_anti")
@@ -1119,10 +1119,10 @@ object BehaviorQueries {
       l.join(r, Seq("user_id"))
         .where(col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_both"))
-        .join(broadcast(sizes.select(col("event_type").as("type_a"),
-          col("n").as("n_a"))), Seq("type_a"))
-        .join(broadcast(sizes.select(col("event_type").as("type_b"),
-          col("n").as("n_b"))), Seq("type_b"))
+        .join(sizes.select(col("event_type").as("type_a"),
+          col("n").as("n_a")), Seq("type_a"))
+        .join(sizes.select(col("event_type").as("type_b"),
+          col("n").as("n_b")), Seq("type_b"))
         .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
           col("n_both"),
           expr("n_both * 1000000 div (n_a + n_b - n_both)").as("jaccard_e6"))
@@ -1198,7 +1198,7 @@ object BehaviorQueries {
       val cand = first
         .withColumn("k", explode(array(lit(1), lit(7), lit(14), lit(28))))
         .withColumn("target", expr("date_add(first_day, k)"))
-        .crossJoin(broadcast(bounds))
+        .crossJoin(bounds)
         .where(col("target") <= col("hi"))
       cand
         .join(ud.select(col("user_id"), col("day").as("target"))
@@ -1248,7 +1248,7 @@ object BehaviorQueries {
       val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, -1)
       byDay
         .withColumn("prior_conv", coalesce(sum("n_conv").over(w), lit(0L)))
-        .crossJoin(broadcast(nView))
+        .crossJoin(nView)
         .select(col("day"), (col("n_view") - col("prior_conv")).as("n_at_risk"),
           col("n_conv"),
           expr("n_conv * 1000000 div (n_view - prior_conv)").as("hazard_e6"))
@@ -1317,7 +1317,7 @@ object BehaviorQueries {
       l.join(r, Seq("user_id", "session_idx"))
         .where(col("type_a") =!= col("type_b") && col("at_a") < col("at_b"))
         .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_sess"))
-        .crossJoin(broadcast(nSess))
+        .crossJoin(nSess)
         .select(col("type_a"), col("type_b"), col("n_sess"),
           expr("n_sess * 10000 div n_sessions").as("support_e4"))
         .orderBy("type_a", "type_b")
@@ -1428,7 +1428,7 @@ object BehaviorQueries {
         .persist() // feeds the bound scalar, the grid span, the active join
       val hi = uw.agg(max("week").as("hi"))
       val grid = uw.groupBy("user_id").agg(min("week").as("first_week"))
-        .crossJoin(broadcast(hi))
+        .crossJoin(hi)
         .select(col("user_id"),
           explode(expr("sequence(first_week, hi, interval 7 days)")).as("week"))
       val w = Window.partitionBy("user_id").orderBy("week")

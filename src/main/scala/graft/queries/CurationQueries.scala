@@ -173,7 +173,7 @@ object CurationQueries {
       // shingleHashes is distinct-per-doc, so count(*) per (source, h) = df
       val ex = docs.select(col("doc_id"), col("source"), explode(col("hs")).as("h"))
       val bp = ex.groupBy("source", "h").agg(count(lit(1)).as("h_df"))
-        .join(broadcast(nDocs), Seq("source"))
+        .join(nDocs, Seq("source"))
         .where(col("h_df") * 100 >= col("n_docs") * DfPct)
         .select("source", "h")
       val perDoc = ex.join(bp, Seq("source", "h"), "left_semi")
@@ -443,8 +443,8 @@ object CurationQueries {
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
       val minDocs = counts.agg(min("n_docs").as("min_docs"))
       docs
-        .join(broadcast(counts), Seq("source"))
-        .crossJoin(broadcast(minDocs))
+        .join(counts, Seq("source"))
+        .crossJoin(minDocs)
         .withColumn("rate_ppm",
           least(lit(1000000L), expr("min_docs * 1000000 div n_docs")))
         .groupBy("source")
@@ -607,7 +607,7 @@ object CurationQueries {
         .withColumn("isqrt_tokens", isqrt(col("n_tokens")))
       val totals = bySrc.agg(sum("n_tokens").as("tot_tokens"),
         sum("isqrt_tokens").as("tot_isqrt"))
-      bySrc.crossJoin(broadcast(totals))
+      bySrc.crossJoin(totals)
         .select(col("source"), col("n_tokens"),
           expr("n_tokens * 1000000 div tot_tokens").as("share_ppm"),
           col("isqrt_tokens"),
@@ -663,8 +663,8 @@ object CurationQueries {
             concat(lit("mix:"), col("doc_id").cast("string"))) % 1000000L).as("h_ppm"))
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
       val minDocs = counts.agg(min("n_docs").as("min_docs"))
-      docs.join(broadcast(counts), Seq("source"))
-        .crossJoin(broadcast(minDocs))
+      docs.join(counts, Seq("source"))
+        .crossJoin(minDocs)
         .withColumn("rate_ppm",
           least(lit(1000000L), expr("min_docs * 500000 div n_docs")))
         .withColumn("kept", (col("h_ppm") < col("rate_ppm")).cast("long"))

@@ -1621,7 +1621,7 @@ object DedupQueries {
       // one persisted signature frame feeds both arms (as in q_lsh_recall)
       val sigs = signatures(Tables.documents(spark, dir)).persist()
       val docs = sigs.select("doc_id", "hs")
-      val sample = docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
+      val sample = docs.crossJoin(docs.agg(count(lit(1)).as("n_docs")))
         .where(HashOps.inFixedSizeSample(col("doc_id"), lit(RecallSampleSalt), col("n_docs"),
           RecallSampleTarget))
         .select(col("doc_id").as("s_id"))
@@ -1630,6 +1630,7 @@ object DedupQueries {
       // the θ = 0.7 prefix of the SAMPLE docs only (window over |S| docs,
       // not the corpus), against the corpus-wide df
       val prefixS = ppjoinPrefix(
+          // hint kept: without it the hash join builds the corpus tokens, not the sample
           tokens.join(broadcast(sample), col("doc_id") === col("s_id")), tokens, 7)
         .select(col("doc_id").as("id_s"), col("h"), col("sz").as("sz_s"))
       val cand = prefixS
@@ -1648,9 +1649,9 @@ object DedupQueries {
       // |S| sample rows — measured dominant on the banded pair set; and
       // sample ids are unique, so the left joins preserve cardinality.)
       val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r")
-        .join(broadcast(sample.select(col("s_id").as("sid_l"))),
+        .join(sample.select(col("s_id").as("sid_l")),
           col("id_l") === col("sid_l"), "left")
-        .join(broadcast(sample.select(col("s_id").as("sid_r"))),
+        .join(sample.select(col("s_id").as("sid_r")),
           col("id_r") === col("sid_r"), "left")
         .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
         .select("id_l", "id_r")
@@ -1899,7 +1900,8 @@ object DedupQueries {
         SignatureIndex.write(
           b1.join(kept1, Seq("doc_id"), "left_semi"), p,
           NumPerms, NumBands, RowsPerBand, mode = "append", nParts = TestIndexParts)
-        b1.unpersist(): Unit
+        b1.unpersist()
+        discard(kept1)
       }
       probeBatch(part(2), indexPath)
     }
@@ -2039,7 +2041,7 @@ object DedupQueries {
     * about [[RecallSampleTarget]] docs, never the corpus. */
   private def recallQuerySample(docs: DataFrame, salt: String): DataFrame = {
     val nDocs = shingleSets(docs).where(size(col("hs")) > 0).agg(count(lit(1)).as("n_docs"))
-    signatures(docs.crossJoin(broadcast(nDocs))
+    signatures(docs.crossJoin(nDocs)
         .where(HashOps.inFixedSizeSample(col("doc_id"), lit(salt), col("n_docs"),
           RecallSampleTarget))
         .select("doc_id", "text"), EvoBands, EvoRows)
@@ -2062,6 +2064,7 @@ object DedupQueries {
       .distinct()
     val pHs = SignatureIndex.sigs(spark, indexPath)
       .select(col("doc_id").as("p_id"), col("hs").as("p_hs"))
+    // hint kept: without it both nested-loop joins build the stored corpus, not the sample
     val truth = pHs.crossJoin(broadcast(qs))
       .where(col("q_id") =!= col("p_id"))
       .withColumn("inter",
@@ -2072,6 +2075,7 @@ object DedupQueries {
       .select("q_id", "p_id")
     val collided = SignatureIndex.bands(spark, indexPath)
       .select(col("doc_id").as("p_id"), col("bk"))
+      // hint kept: without it the hash join builds the stored bands, not the sample's
       .join(broadcast(qBands), Seq("bk"))
       .where(col("q_id") =!= col("p_id"))
       .select("q_id", "p_id").distinct()
@@ -2299,10 +2303,12 @@ object DedupQueries {
         collided.unpersist()
         out
       }
-      val out = metrics(baselinePath, "baseline")
-        .unionByName(metrics(lifecyclePath, "lifecycle"))
+      val arms = Seq(metrics(baselinePath, "baseline"), metrics(lifecyclePath, "lifecycle"))
+      val out = arms.reduce(_.unionByName(_))
         .where(col("n_indexed") > 0) // empty corpus → no gate rows
         .orderBy("arm").cutLineage()
+      // the result reads its own cut, not the arms'
+      arms.foreach(discard)
       qSigs.unpersist()
       out
     }

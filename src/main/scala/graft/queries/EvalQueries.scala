@@ -376,8 +376,8 @@ object EvalQueries {
       val cust = Tables.customer(spark, dir)
         .select(col("c_nationkey").cast("long").as("nation_key"),
           col("c_mktsegment").as("segment"))
-        .join(broadcast(natRegion.select(col("nation_key").cast("long"),
-          col("region_key").cast("long"))), Seq("nation_key"))
+        .join(natRegion.select(col("nation_key").cast("long"),
+          col("region_key").cast("long")), Seq("nation_key"))
       val fine = cust.groupBy("nation_key", "segment", "region_key")
         .agg(count(lit(1)).as("n"))
       val coarse = cust.groupBy("region_key", "segment")
@@ -574,7 +574,7 @@ object EvalQueries {
       Tables.customer(spark, dir)
         .select(col("c_nationkey").cast("long").as("nation_key"),
           col("c_mktsegment").as("segment"))
-        .join(broadcast(natRegion), Seq("nation_key"))
+        .join(natRegion, Seq("nation_key"))
         .groupBy("region_key", "segment")
         .agg(count(lit(1)).as("n"),
           countDistinct("nation_key").as("n_sensitive"))
@@ -652,7 +652,7 @@ object EvalQueries {
         .where(graft.ops.TextOps.tokenCount(col("text")) > 0)
         .select(CurationQueries.qualityE4(col("text")).as("score"),
           (col("lang") === "en").cast("long").as("pos"))
-        .crossJoin(broadcast(Thresholds.toDF("thr")))
+        .crossJoin(Thresholds.toDF("thr"))
         .groupBy("thr")
         .agg(sum(when(col("score") >= col("thr") && col("pos") === 1L, 1L)
             .otherwise(0L)).as("tp"),
@@ -747,7 +747,7 @@ object EvalQueries {
       val subjects = Tables.customer(spark, dir)
         .where(col("c_custkey") % 100 === 0).select("c_custkey")
       val ord = Tables.orders(spark, dir)
-        .join(broadcast(subjects), col("o_custkey") === col("c_custkey"))
+        .join(subjects, col("o_custkey") === col("c_custkey"))
         .select(col("o_custkey"), col("o_orderkey"),
           to_date(col("o_orderdate")).as("day"),
           Q.cents(col("o_totalprice")).as("cents"))
@@ -755,6 +755,7 @@ object EvalQueries {
         .agg(count(lit(1)).as("n_orders"), sum("cents").as("spend_cents"),
           min("day").as("first_day"), max("day").as("last_day"))
       val liAgg = Tables.lineitem(spark, dir).select(col("l_orderkey"))
+        // hint kept: without it the hash join builds the lineitem side
         .join(broadcast(ord.select("o_orderkey", "o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_custkey").agg(count(lit(1)).as("n_items"))
@@ -885,7 +886,7 @@ object EvalQueries {
       val g = o.agg(sum("cents").as("g_sum"), count(lit(1)).as("g_n"))
       o.groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-        .crossJoin(broadcast(g))
+        .crossJoin(g)
         .select(col("c_mktsegment"), col("n_orders"), col("sum_cents"),
           expr("sum_cents div n_orders").as("raw_mean_cents"),
           expr(s"(sum_cents + $TargetEncodeK * (g_sum div g_n)) " +
@@ -1003,6 +1004,7 @@ object EvalQueries {
       val counts = o.groupBy("c_nationkey", "band").agg(count(lit(1)).as("n"))
       val bands = counts.select("band").distinct()
       val nations = counts.select("c_nationkey").distinct()
+      // hint kept: without it the grid is a CartesianProduct
       val grid = nations.crossJoin(broadcast(bands))
         .join(counts, Seq("c_nationkey", "band"), "left")
         .select(col("c_nationkey"), col("band"), coalesce(col("n"), lit(0L)).as("n"))
@@ -1016,8 +1018,9 @@ object EvalQueries {
       grid
         .withColumn("cum_g", sum("n").over(gCum))
         .withColumn("n_g", sum("n").over(Window.partitionBy("c_nationkey")))
+        // hint kept: without it a SortMergeJoin shuffles both sides
         .join(broadcast(global.select("band", "cum_all")), Seq("band"))
-        .crossJoin(broadcast(totals))
+        .crossJoin(totals)
         .groupBy(col("c_nationkey"), col("n_g"), col("big_n"), col("m"))
         .agg(sum(abs(col("cum_g") * col("big_n") - col("cum_all") * col("n_g")))
           .as("emd_num"))

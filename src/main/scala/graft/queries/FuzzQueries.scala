@@ -164,7 +164,7 @@ object FuzzQueries {
           (d, p) => d.where(expr(p)))
         val dim = dimPreds.foldLeft(Tables.table(spark, dir, arm.dim))(
           (d, p) => d.where(expr(p)))
-        fact.join(broadcast(dim), col(arm.factKey) === col(arm.dimKey))
+        fact.join(dim, col(arm.factKey) === col(arm.dimKey))
           .groupBy(keys.map(col): _*)
           .agg(aggs.head._2.as(aggs.head._1),
             aggs.tail.map(a => a._2.as(a._1)): _*)
@@ -344,7 +344,7 @@ object FuzzQueries {
           (d, p) => d.where(expr(p)))
         val dim = Tables.table(spark, dir, arm.dim).where(expr(dimPred))
           .select(col(arm.dimKey))
-        fact.join(broadcast(dim), col(arm.factKey) === col(arm.dimKey),
+        fact.join(dim, col(arm.factKey) === col(arm.dimKey),
             if (negated) "left_anti" else "left_semi")
           .groupBy(col(key))
           .agg(count(lit(1)).as("n"), sum(Q.cents(col(moneyCol))).as("sum_cents"))

@@ -45,8 +45,8 @@ object GeoPipeline {
     withZoneLon(spark, dir, enrichedCore(spark, dir))
 
   private def withZoneLon(spark: SparkSession, dir: String, core: DataFrame): DataFrame =
-    core.join(broadcast(Tables.zones(spark, dir)
-      .select(col("zone_id").cast("long").as("zone_id"), col("lon_z"))), Seq("zone_id"))
+    core.join(Tables.zones(spark, dir)
+      .select(col("zone_id").cast("long").as("zone_id"), col("lon_z")), Seq("zone_id"))
 
   /** Shared oracle-SQL prefix deriving the identical enriched events. */
   private val hav = Tables.Sql.haversine("lat_e", "lon_e", "z.lat_z", "z.lon_z")

@@ -29,9 +29,9 @@ object GraphQueries {
     val sup = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
     val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
     val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-    li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+    li.join(sup, col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .join(cust, col("o_custkey") === col("c_custkey"))
       .select(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
       .distinct()
   }
@@ -99,7 +99,7 @@ object GraphQueries {
         iterate(r0, Iters / 2)(r => power(power(r)))
       }
       rFinal
-        .join(broadcast(nation), col("node") === col("n_nationkey"))
+        .join(nation, col("node") === col("n_nationkey"))
         .select(col("node").as("nation_key"), col("n_name").as("nation_name"),
           col("r").as("pr_e9"))
         .orderBy(col("pr_e9").desc, col("nation_key"))
@@ -245,7 +245,7 @@ object GraphQueries {
           dists.union(relaxed).groupBy("node").agg(min("d").as("d"))
         }
       }
-      dFinal.join(broadcast(nation), col("node") === col("n_nationkey"))
+      dFinal.join(nation, col("node") === col("n_nationkey"))
         .select(col("node").as("nation_key"), col("n_name").as("nation_name"),
           col("d").as("hop_dist"))
         .orderBy("nation_key")
@@ -460,9 +460,9 @@ object GraphQueries {
       val sup = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
       val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-      val weighted = li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      val weighted = li.join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .join(cust, col("o_custkey") === col("c_custkey"))
         .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
         .agg(count(lit(1)).as("strength"))
         .where(col("src") =!= col("dst"))
@@ -481,7 +481,7 @@ object GraphQueries {
       nodes
         .join(closure.where(col("u") === 0)
           .select(col("v").as("node"), col("d")), Seq("node"), "left")
-        .join(broadcast(nation), col("node") === col("n_nationkey"))
+        .join(nation, col("node") === col("n_nationkey"))
         .select(col("node").as("nation_key"), col("n_name").as("nation_name"),
           coalesce(col("d"), lit(Sentinel)).as("dist_w"))
         .orderBy("nation_key")
@@ -645,7 +645,7 @@ object GraphQueries {
       labels.groupBy("lbl").agg(count(lit(1)).as("n_nodes"))
         .join(intra, Seq("lbl"), "left")
         .join(deg, Seq("lbl"), "left")
-        .crossJoin(broadcast(w2))
+        .crossJoin(w2)
         .select(col("lbl").as("community"), col("n_nodes"),
           coalesce(col("intra_w2"), lit(0L)).as("intra_w2"),
           coalesce(col("deg_w"), lit(0L)).as("deg_w"), col("w2_total"))
@@ -838,16 +838,16 @@ object GraphQueries {
       // exactly once.
       val a2 = settled(edges) { e =>
         settled(e.groupBy("part").agg((count(lit(1)) * E6).as("a1"))) { a1 =>
-          val a1n = a1.crossJoin(broadcast(a1.agg(max("a1").as("mx"))))
+          val a1n = a1.crossJoin(a1.agg(max("a1").as("mx")))
             .select(col("part"), expr(s"a1 * $E6 div mx").as("a1n"))
           settled(e.join(a1n, Seq("part")).groupBy("cust").agg(sum("a1n").as("h1"))) { h1 =>
-            val h1n = h1.crossJoin(broadcast(h1.agg(max("h1").as("mx"))))
+            val h1n = h1.crossJoin(h1.agg(max("h1").as("mx")))
               .select(col("cust"), expr(s"h1 * $E6 div mx").as("h1n"))
             e.join(h1n, Seq("cust")).groupBy("part").agg(sum("h1n").as("a2")).cutLineage()
           }
         }
       }
-      val a2n = a2.crossJoin(broadcast(a2.agg(max("a2").as("mx"))))
+      val a2n = a2.crossJoin(a2.agg(max("a2").as("mx")))
         .select(col("part"), expr(s"a2 * $E6 div mx").as("auth_e6"))
       a2n
         .withColumn("rank", row_number().over(

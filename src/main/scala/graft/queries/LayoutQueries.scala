@@ -48,7 +48,7 @@ object LayoutQueries {
           .cast("long").as("eday"))
     val stats = ev.agg(min("user_id").as("u_lo"), max("user_id").as("u_hi"),
       min("eday").as("d_lo"), max("eday").as("d_hi"))
-    ev.crossJoin(broadcast(stats))
+    ev.crossJoin(stats)
       .withColumn("u16", expr("(user_id - u_lo) * 65536 div (u_hi - u_lo + 1)"))
       .withColumn("d16", expr("(eday - d_lo) * 65536 div (d_hi - d_lo + 1)"))
       .withColumn("z", expr(zExpr("u16", "d16")))
@@ -127,6 +127,7 @@ object LayoutQueries {
       val probes = (0L until 16L).map(q => (q, q * 4096L, q * 4096L + 4095L))
         .toDF("probe_id", "u_from", "u_to")
       probes
+        // hint kept: without it the nested-loop join builds the probes side
         .join(broadcast(fileStats(spark, dir)),
           col("u_max") >= col("u_from") && col("u_min") <= col("u_to"), "left")
         .groupBy("probe_id", "u_from", "u_to")

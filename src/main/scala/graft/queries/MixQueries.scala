@@ -42,7 +42,7 @@ object MixQueries {
         .select(explode(col("hs")).as("h")).distinct()
       val corpus = docs.where(col("source") =!= BenchSource)
       val hits = corpus.select(col("doc_id"), explode(col("hs")).as("h"))
-        .join(broadcast(bench), Seq("h"))
+        .join(bench, Seq("h"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
       corpus.select(col("doc_id"))
         .join(hits, Seq("doc_id"), "left")
@@ -338,7 +338,7 @@ object MixQueries {
       val matched = docs.where(col("source") =!= BenchSource)
         .select(col("doc_id"), posexplode(col("gs")).as(Seq("pos0", "h")))
         .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("h"))
-        .join(broadcast(bench), Seq("h"))
+        .join(bench, Seq("h"))
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val runs = matched
         .withColumn("island", col("pos") - row_number().over(w))
@@ -406,7 +406,7 @@ object MixQueries {
         .withColumn("w", col("n_docs") * col("n_docs"))
       val totals = counts.agg(
         sum("w").as("sum_w"), sum("n_docs").as("n_total"))
-      counts.crossJoin(broadcast(totals))
+      counts.crossJoin(totals)
         .withColumn("rate_e6", expr("w * 1000000 div sum_w"))
         .withColumn("target_n", expr("n_total * rate_e6 div 1000000"))
         .select("source", "n_docs", "rate_e6", "target_n")

@@ -73,10 +73,12 @@ object PartsuppQueries {
   val qTpchQ2: Q = new Q {
     val name = "q_tpch_q2"
     def run(spark: SparkSession, dir: String): DataFrame = {
+      // hint kept: without it both partsupp joins build the partsupp side
       val euroSupp = broadcast(
         Tables.supplier(spark, dir)
+          // hint kept: without it both supplier joins build the supplier side
           .join(broadcast(Tables.nation(spark, dir)
-            .join(broadcast(Tables.region(spark, dir).where(col("r_name") === "EUROPE")),
+            .join(Tables.region(spark, dir).where(col("r_name") === "EUROPE"),
               col("n_regionkey") === col("r_regionkey"))
             .select("n_nationkey", "n_name")),
             col("s_nationkey") === col("n_nationkey"))
@@ -85,10 +87,10 @@ object PartsuppQueries {
         .join(euroSupp, col("ps_suppkey") === col("s_suppkey"))
       val minCost = euroPs.groupBy(col("ps_partkey").as("mc_partkey"))
         .agg(min("ps_supplycost_cents").as("min_cost_cents"))
-      val parts = broadcast(
+      val parts =
         Tables.part(spark, dir)
           .where(col("p_size") <= 10 && col("p_type") === "ECONOMY")
-          .select("p_partkey", "p_brand"))
+          .select("p_partkey", "p_brand")
       euroPs
         .join(minCost, col("ps_partkey") === col("mc_partkey") &&
           col("ps_supplycost_cents") === col("min_cost_cents"))
@@ -128,11 +130,11 @@ object PartsuppQueries {
   val qTpchQ9: Q = new Q {
     val name = "q_tpch_q9"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val redParts = broadcast(
+      val redParts =
         Tables.part(spark, dir).where(col("p_name").like("%red%"))
-          .select("p_partkey"))
-      val sup = broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey"))
-      val nat = broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name"))
+          .select("p_partkey")
+      val sup = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
+      val nat = Tables.nation(spark, dir).select("n_nationkey", "n_name")
       val ord = Tables.orders(spark, dir)
         .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year"))
       val ps = partsupp(spark, dir)
@@ -175,17 +177,17 @@ object PartsuppQueries {
   val qTpchQ11: Q = new Q {
     val name = "q_tpch_q11"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val natSupp = broadcast(
+      val natSupp =
         Tables.supplier(spark, dir)
-          .join(broadcast(Tables.nation(spark, dir).where(col("n_name") === "NATION_7")),
+          .join(Tables.nation(spark, dir).where(col("n_name") === "NATION_7"),
             col("s_nationkey") === col("n_nationkey"))
-          .select("s_suppkey"))
+          .select("s_suppkey")
       val byPart = partsupp(spark, dir)
         .join(natSupp, col("ps_suppkey") === col("s_suppkey"))
         .groupBy("ps_partkey")
         .agg(sum(col("ps_supplycost_cents") * col("ps_availqty")).as("value_cents"))
       val total = byPart.agg(sum("value_cents").as("total_cents"))
-      byPart.join(broadcast(total))
+      byPart.join(total)
         .where(col("value_cents") * 10000 > col("total_cents"))
         .select("ps_partkey", "value_cents")
         .orderBy(col("value_cents").desc, col("ps_partkey"))
@@ -215,13 +217,13 @@ object PartsuppQueries {
   val qTpchQ16: Q = new Q {
     val name = "q_tpch_q16"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val parts = broadcast(
+      val parts =
         Tables.part(spark, dir)
           .where(col("p_brand") =!= "Brand#5" && !col("p_type").like("MEDIUM%") &&
             col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45))
-          .select("p_partkey", "p_brand", "p_type", "p_size"))
-      val badSupp = broadcast(
-        Tables.supplier(spark, dir).where(col("s_acctbal") < 0).select("s_suppkey"))
+          .select("p_partkey", "p_brand", "p_type", "p_size")
+      val badSupp =
+        Tables.supplier(spark, dir).where(col("s_acctbal") < 0).select("s_suppkey")
       partsupp(spark, dir)
         .join(parts, col("ps_partkey") === col("p_partkey"))
         .join(badSupp, col("ps_suppkey") === col("s_suppkey"), "left_anti")
@@ -261,9 +263,9 @@ object PartsuppQueries {
         .where(col("l_shipdate") >= lo && col("l_shipdate") < hi)
         .groupBy("l_partkey", "l_suppkey")
         .agg(round(sum("l_quantity")).cast("long").as("qty"))
-      val redParts = broadcast(
+      val redParts =
         Tables.part(spark, dir).where(col("p_name").like("red%"))
-          .select("p_partkey"))
+          .select("p_partkey")
       val candidates = partsupp(spark, dir)
         .join(redParts, col("ps_partkey") === col("p_partkey"))
         .join(shipped, col("ps_partkey") === col("l_partkey") &&
@@ -271,7 +273,7 @@ object PartsuppQueries {
         .where(col("ps_availqty") * 2 > col("qty"))
         .select("ps_suppkey")
       Tables.supplier(spark, dir)
-        .join(broadcast(Tables.nation(spark, dir).where(col("n_name") === "NATION_3")),
+        .join(Tables.nation(spark, dir).where(col("n_name") === "NATION_3"),
           col("s_nationkey") === col("n_nationkey"))
         .join(candidates, col("s_suppkey") === col("ps_suppkey"), "left_semi")
         .select("s_suppkey", "s_name")

@@ -54,8 +54,8 @@ object Relational {
       Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
+        .join(Tables.nation(spark, dir), col("c_nationkey") === col("n_nationkey"))
+        .join(Tables.region(spark, dir), col("n_regionkey") === col("r_regionkey"))
         .groupBy("n_name", "r_name")
         .agg(
           sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).cast("long"))

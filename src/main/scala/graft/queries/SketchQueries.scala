@@ -97,7 +97,7 @@ object SketchQueries {
         .where(col("rn") === K).select(col("hv").as("hk"))
       val exact = ev.agg(countDistinct("user_id").as("n_exact"),
         countDistinct("event_type").as("n_groups"))
-      exact.crossJoin(broadcast(stats)).join(kth, lit(true), "left")
+      exact.crossJoin(stats).join(kth, lit(true), "left")
         .select(col("n_groups"), col("n_exact"),
           when(col("n_hashes") < K, col("n_hashes"))
             .otherwise(expr(s"${(K - 1) * HashOps.P}L div hk"))
@@ -147,7 +147,7 @@ object SketchQueries {
         .select(explode(TextOps.tokens(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("cnt")).cutLineage()
       val rows = spark.range(D).select(col("id").as("j"))
-      val counters = tf.crossJoin(broadcast(rows))
+      val counters = tf.crossJoin(rows)
         .select(col("j"),
           pmod(HashOps.hashP(concat(col("term"), lit(":cms"), col("j").cast("string"))),
             lit(W.toLong)).as("bucket"),
@@ -156,7 +156,7 @@ object SketchQueries {
       val probe = Probe.toDF("term")
       val exact = probe.join(tf, Seq("term"), "left")
         .select(col("term"), coalesce(col("cnt"), lit(0L)).as("n_exact"))
-      val est = probe.crossJoin(broadcast(rows))
+      val est = probe.crossJoin(rows)
         .select(col("term"), col("j"),
           pmod(HashOps.hashP(concat(col("term"), lit(":cms"), col("j").cast("string"))),
             lit(W.toLong)).as("bucket"))
@@ -415,7 +415,7 @@ object SketchQueries {
       val bits = hashed(ins).select("m", "p").distinct()
       val setBits = bits.groupBy("m").agg(count(lit(1)).as("n_set_bits"))
       def allKHit(df: DataFrame): DataFrame = df
-        .join(broadcast(bits), Seq("m", "p"))
+        .join(bits, Seq("m", "p"))
         .groupBy("m", "key").agg(count(lit(1)).as("nhit"))
         .where(col("nhit") === Kh)
         .groupBy("m").agg(count(lit(1)).as("n_hit_keys"))
@@ -427,7 +427,7 @@ object SketchQueries {
         .join(setBits, Seq("m"), "left")
         .join(fp, Seq("m"), "left")
         .join(insHit, Seq("m"), "left")
-        .crossJoin(broadcast(counts))
+        .crossJoin(counts)
         .select(col("m"), lit(Kh.toLong).as("k"), col("n_inserted"),
           coalesce(col("n_set_bits"), lit(0L)).as("n_set_bits"),
           col("n_probes"),

@@ -160,7 +160,7 @@ object SourceQueries {
           add_months(lit("1995-01-01").cast("date"), col("id").cast("int")),
           "yyyy-MM").as("month"))
         .where(col("month").between("1997-01", "1997-06"))
-      fact.join(broadcast(monthDim), col("o_month") === col("month"))
+      fact.join(monthDim, col("o_month") === col("month"))
         .groupBy("o_month")
         .agg(count(lit(1)).as("n_orders"),
           sum(cents(col("o_totalprice"))).as("rev_cents"))

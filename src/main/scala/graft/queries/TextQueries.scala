@@ -353,8 +353,8 @@ object TextQueries {
         .where(col("term").isin(Terms: _*))
         .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      tf.join(broadcast(dfreq), Seq("term"))
-        .join(broadcast(stats))
+      tf.join(dfreq, Seq("term"))
+        .join(stats)
         .withColumn("idf_e4",
           expr("((2 * (n_docs - df) + 1) * 10000) div (2 * df + 1)"))
         .withColumn("tf_e4", expr(
@@ -524,7 +524,7 @@ object TextQueries {
         .distinct().cutLineage()
       val top = td.groupBy("term").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("term")).limit(TopTerms)
-      td.join(broadcast(top), Seq("term"))
+      td.join(top, Seq("term"))
         .groupBy("term", "df")
         .agg(array_join(sort_array(collect_list(col("doc_id"))), ",")
           .as("postings"))
@@ -696,45 +696,49 @@ object TextQueries {
       // run the greedy argmax on the driver instead. BM25 scoring and the
       // pairwise-Jaccard computation stay distributed; identical integer
       // arithmetic and tie-breaks, so the output is bit-identical.
-      val cand = bm25Topk.run(spark, dir)
+      // the pool is settled only for the two collects: the result is built
+      // on the driver and reads none of it
+      val chosen = settled(bm25Topk.run(spark, dir)
         .orderBy(col("score_e4").desc, col("doc_id")).limit(Pool)
-        .select(col("doc_id"), col("score_e4").as("rel")).cutLineage()
-      val ct = cand.join(Tables.documents(spark, dir), Seq("doc_id"))
-        .select(col("doc_id"),
-          sort_array(array_distinct(TextOps.tokens(col("text")))).as("tk"))
-      val simRows = ct.alias("x").join(ct.alias("y"),
-          col("x.doc_id") =!= col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-          size(array_intersect(col("x.tk"), col("y.tk"))).as("inter"),
-          (size(col("x.tk")) + size(col("y.tk"))).as("sz"))
-        .select(col("a"), col("b"),
-          expr("CAST(inter AS BIGINT) * 10000 div CAST(sz - inter AS BIGINT)")
-            .as("sim_e4"))
-        // sim_e4 is NULL when both token sets are empty (0 div 0 under
-        // non-ANSI SQL); the oracle's COALESCE(max(sim),0) ignores such
-        // rows, and the greedy loop's getOrElse(0) does the same once they
-        // are dropped here — keeping them would NPE on .longValue
-        // (ADVICE r18 low).
-        .collect().filter(_.get(2) != null).map(r => (r.getAs[Number](0).longValue,
-          r.getAs[Number](1).longValue) -> r.getAs[Number](2).longValue).toMap
-      val candRows = cand.collect()
-        .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
-        .sortBy { case (id, rel) => (-rel, id) }.toVector
-      // empty/short pool (EmptyInputSpec): select as many as exist, like
-      // the former per-step limit(1)-of-empty frames did
-      val picks = scala.collection.mutable.ArrayBuffer(candRows.take(1): _*)
-      for (_ <- 2 to Select if picks.size < candRows.size) {
-        val selIds = picks.map(_._1).toSet
-        val next = candRows.filterNot(c => selIds(c._1))
-          .map { case (id, rel) =>
-            val maxsim = selIds.map(s => simRows.getOrElse((id, s), 0L)).max
-            (id, rel - maxsim)
-          }
-          .minBy { case (id, mmr) => (-mmr, id) }
-        picks += next
+        .select(col("doc_id"), col("score_e4").as("rel"))) { cand =>
+        val ct = cand.join(Tables.documents(spark, dir), Seq("doc_id"))
+          .select(col("doc_id"),
+            sort_array(array_distinct(TextOps.tokens(col("text")))).as("tk"))
+        val simRows = ct.alias("x").join(ct.alias("y"),
+            col("x.doc_id") =!= col("y.doc_id"))
+          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+            size(array_intersect(col("x.tk"), col("y.tk"))).as("inter"),
+            (size(col("x.tk")) + size(col("y.tk"))).as("sz"))
+          .select(col("a"), col("b"),
+            expr("CAST(inter AS BIGINT) * 10000 div CAST(sz - inter AS BIGINT)")
+              .as("sim_e4"))
+          // sim_e4 is NULL when both token sets are empty (0 div 0 under
+          // non-ANSI SQL); the oracle's COALESCE(max(sim),0) ignores such
+          // rows, and the greedy loop's getOrElse(0) does the same once they
+          // are dropped here — keeping them would NPE on .longValue
+          // (ADVICE r18 low).
+          .collect().filter(_.get(2) != null).map(r => (r.getAs[Number](0).longValue,
+            r.getAs[Number](1).longValue) -> r.getAs[Number](2).longValue).toMap
+        val candRows = cand.collect()
+          .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+          .sortBy { case (id, rel) => (-rel, id) }.toVector
+        // empty/short pool (EmptyInputSpec): select as many as exist, like
+        // the former per-step limit(1)-of-empty frames did
+        val picks = scala.collection.mutable.ArrayBuffer(candRows.take(1): _*)
+        for (_ <- 2 to Select if picks.size < candRows.size) {
+          val selIds = picks.map(_._1).toSet
+          val next = candRows.filterNot(c => selIds(c._1))
+            .map { case (id, rel) =>
+              val maxsim = selIds.map(s => simRows.getOrElse((id, s), 0L)).max
+              (id, rel - maxsim)
+            }
+            .minBy { case (id, mmr) => (-mmr, id) }
+          picks += next
+        }
+        picks.toSeq
       }
       import spark.implicits._
-      picks.toSeq.zipWithIndex
+      chosen.zipWithIndex
         .map { case ((id, mmr), i) => (i + 1L, id, mmr) }
         .toDF("sel_rank", "doc_id", "mmr_e4")
         .orderBy("sel_rank")
@@ -799,7 +803,7 @@ object TextQueries {
       val dw = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("word"))
         .where(col("word").rlike("^[a-z]+$") && !col("word").rlike(Bpe.TripleRe))
-      dw.join(broadcast(dict), Seq("word"))
+      dw.join(dict, Seq("word"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_words"),
           sum("n_syms").as("n_bpe_tokens"),
@@ -1225,7 +1229,7 @@ object TextQueries {
         .withColumn("rank", row_number().over(
           Window.orderBy(col("df").desc, col("term"))).cast("long"))
         .where(col("rank") <= 20)
-      top.crossJoin(broadcast(totals))
+      top.crossJoin(totals)
         .withColumn("b", col("df") - col("a"))
         .withColumn("c", col("n_en") - col("a"))
         .withColumn("d", col("n_docs") - col("n_en") - col("b"))
@@ -1307,7 +1311,7 @@ object TextQueries {
         .map { case (d, c) => (d.doc_id, c) }.toDF("token_id", "cum_before")
       val total = counts.agg(sum("n_occ").as("total"))
       withId.join(cum, Seq("token_id"))
-        .crossJoin(broadcast(total))
+        .crossJoin(total)
         .select(col("token_id"), col("token"), col("n_occ"), col("cum_before"),
           expr("(cum_before + n_occ) * 1000000 div total").as("coverage_ppm"))
         .orderBy("token_id")

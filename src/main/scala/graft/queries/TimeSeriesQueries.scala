@@ -90,7 +90,7 @@ object TimeSeriesQueries {
         .groupBy(to_date(col("o_orderdate")).as("day"), col("o_orderstatus"))
         .agg(sum(cents(col("o_totalprice"))).as("rev_cents"))
       val hi = daily.agg(max("day").as("hi"))
-      daily.join(broadcast(hi))
+      daily.join(hi)
         .withColumn("age", datediff(col("hi"), col("day")))
         .where(col("age") <= Horizon)
         .withColumn("weight",
@@ -180,7 +180,7 @@ object TimeSeriesQueries {
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(Q.cents(col("o_totalprice"))).as("rev"))
       val withAnchor = daily
-        .crossJoin(broadcast(daily.agg(min("day").as("d0"))))
+        .crossJoin(daily.agg(min("day").as("d0")))
         .withColumn("is_anchor",
           when(datediff(col("day"), col("d0")) % 7 === 0, 1L).otherwise(0L))
         .withColumn("a_v", when(col("is_anchor") === 1L, col("rev")))
@@ -259,11 +259,11 @@ object TimeSeriesQueries {
         .agg(sum(cents(col("o_totalprice"))).as("rev_cents"))
       val med = daily.groupBy("o_orderstatus")
         .agg((expr("percentile(rev_cents, 0.5)") * 2).cast("long").as("med2"))
-      val dev = daily.join(broadcast(med), Seq("o_orderstatus"))
+      val dev = daily.join(med, Seq("o_orderstatus"))
         .withColumn("dev4", abs(col("rev_cents") * 4 - col("med2") * 2))
       val mad = dev.groupBy("o_orderstatus")
         .agg((expr("percentile(dev4, 0.5)") * 2).cast("long").as("mad8"))
-      dev.join(broadcast(mad), Seq("o_orderstatus"))
+      dev.join(mad, Seq("o_orderstatus"))
         .withColumn("is_anom",
           when(col("dev4") * 20000 > col("mad8") * 44478, 1L).otherwise(0L))
         .select("day", "o_orderstatus", "rev_cents", "med2", "dev4", "mad8", "is_anom")
@@ -319,6 +319,7 @@ object TimeSeriesQueries {
       val bounds = ranked.groupBy("o_orderstatus")
         .agg(max(when(col("r") === col("k") + 1, col("rev_cents"))).as("v_lo"),
           max(when(col("r") === col("n") - col("k"), col("rev_cents"))).as("v_hi"))
+      // hint kept: without it the hash join builds the ranked days (one shuffle fewer)
       ranked.join(broadcast(bounds), Seq("o_orderstatus"))
         .withColumn("wins", greatest(least(col("rev_cents"), col("v_hi")), col("v_lo")))
         .groupBy("o_orderstatus")
@@ -536,7 +537,7 @@ object TimeSeriesQueries {
       daily
         .groupBy(dayofweek(col("day")).cast("long").as("dow"))
         .agg(count(lit(1)).as("n_days"), sum("x").as("sum_x"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("dow"), col("n_days"), col("sum_x"),
           expr("sum_x * n_tot * 10000 div (n_days * sum_tot)").as("index_e4"))
         .orderBy("dow")
@@ -622,6 +623,7 @@ object TimeSeriesQueries {
           min(when(col("cum") >= expr("(n * 75 + 99) div 100"), col("v")))
             .as("q3"))
         .withColumn("iqr", col("q3") - col("q1"))
+      // hint kept: without it the hash join builds the value counts (one shuffle fewer)
       byV.join(broadcast(fences), Seq("event_type"))
         .groupBy("event_type", "n", "q1", "q3")
         .agg(sum(when(expr("2 * v < 2 * q1 - 3 * iqr"), col("n_v"))
@@ -682,7 +684,7 @@ object TimeSeriesQueries {
       // week ∈ {w0, w1} slice — same rows, same values, and pw's
       // scan+aggregation runs twice (latest scalar + this pass) instead
       // of three times
-      val both = pw.join(broadcast(latest),
+      val both = pw.join(latest,
           col("week") === col("w1") || col("week") === col("w0"))
         .groupBy("l_partkey")
         .agg(sum(when(col("week") === col("w1"), col("rev")).otherwise(0L))
@@ -741,6 +743,7 @@ object TimeSeriesQueries {
         .agg(count(lit(1)).as("n_days"), sum("x").as("sum_x"))
       daily
         .withColumn("dow", dayofweek(col("day")).cast("long"))
+        // hint kept: without it the hash join builds the daily side
         .join(broadcast(model), Seq("dow"))
         .withColumn("dev_e4",
           expr("x * n_days * 10000 div sum_x - 10000"))

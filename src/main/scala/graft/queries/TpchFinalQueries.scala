@@ -155,7 +155,7 @@ object TpchFinalQueries {
           "left_anti")
       waited.groupBy("l_suppkey")
         .agg(count(lit(1)).as("numwait"))
-        .join(broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_name")),
+        .join(Tables.supplier(spark, dir).select("s_suppkey", "s_name"),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_name"), col("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
@@ -205,7 +205,7 @@ object TpchFinalQueries {
           cents(col("c_acctbal")).as("bal_cents"))
       val posStats = cust.where(col("bal_cents") > 0)
         .agg(count(lit(1)).as("pos_cnt"), sum("bal_cents").as("pos_sum"))
-      cust.join(broadcast(posStats))
+      cust.join(posStats)
         .where(col("bal_cents") * col("pos_cnt") > col("pos_sum"))
         .join(Tables.orders(spark, dir)
             .where(col("o_orderdate") >= lit(Cutoff).cast("timestamp"))

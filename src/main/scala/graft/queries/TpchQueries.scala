@@ -44,16 +44,16 @@ object TpchQueries {
     def run(spark: SparkSession, dir: String): DataFrame = {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1997-01-01").cast("timestamp")
-      val nationsInRegion = broadcast(
+      val nationsInRegion =
         Tables.nation(spark, dir)
-          .join(broadcast(Tables.region(spark, dir).where(col("r_name") === "ASIA")),
+          .join(Tables.region(spark, dir).where(col("r_name") === "ASIA"),
             col("n_regionkey") === col("r_regionkey"))
-          .select("n_nationkey", "n_name"))
+          .select("n_nationkey", "n_name")
       val cust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
       val ord = Tables.orders(spark, dir)
         .where(col("o_orderdate") >= lo && col("o_orderdate") < hi)
         .select("o_orderkey", "o_custkey")
-      val sup = broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey"))
+      val sup = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_suppkey"), revCents.as("rev"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -90,11 +90,11 @@ object TpchQueries {
     def run(spark: SparkSession, dir: String): DataFrame = {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
-      val n1 = broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation")))
-      val sup = broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey"))
+      val n1 = Tables.nation(spark, dir)
+        .select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
+      val n2 = Tables.nation(spark, dir)
+        .select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
+      val sup = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
       val cust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
       val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
       Tables.lineitem(spark, dir)
@@ -149,7 +149,7 @@ object TpchQueries {
         .join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_custkey")
         .agg(sum("rev").as("revenue_cents"))
-      val nat = broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name"))
+      val nat = Tables.nation(spark, dir).select("n_nationkey", "n_name")
       perCust
         .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
         .join(nat, col("c_nationkey") === col("n_nationkey"))
@@ -183,7 +183,7 @@ object TpchQueries {
     def run(spark: SparkSession, dir: String): DataFrame = {
       val lo = lit("1997-03-01").cast("timestamp")
       val hi = lit("1997-04-01").cast("timestamp")
-      val prt = broadcast(Tables.part(spark, dir).select("p_partkey", "p_type"))
+      val prt = Tables.part(spark, dir).select("p_partkey", "p_type")
       Tables.lineitem(spark, dir)
         .where(col("l_shipdate") >= lo && col("l_shipdate") < hi)
         .select(col("l_partkey"), revCents.as("rev"))
@@ -259,9 +259,9 @@ object TpchQueries {
   val qTpchQ19: Q = new Q {
     val name = "q_tpch_q19"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val prt = broadcast(Tables.part(spark, dir)
+      val prt = Tables.part(spark, dir)
         .where(col("p_brand").isin("Brand#1", "Brand#13", "Brand#20"))
-        .select("p_partkey", "p_brand", "p_size"))
+        .select("p_partkey", "p_brand", "p_size")
       Tables.lineitem(spark, dir)
         .select(col("l_partkey"), col("l_quantity"), revCents.as("rev"))
         .join(prt, col("l_partkey") === col("p_partkey"))
@@ -333,15 +333,15 @@ object TpchQueries {
   val qTpchQ8: Q = new Q {
     val name = "q_tpch_q8"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val custNations = broadcast(
+      val custNations =
         Tables.nation(spark, dir)
-          .join(broadcast(Tables.region(spark, dir).where(col("r_name") === "ASIA")),
+          .join(Tables.region(spark, dir).where(col("r_name") === "ASIA"),
             col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey").as("cn_key")))
-      val sup = broadcast(Tables.supplier(spark, dir)
-        .select(col("s_suppkey"), col("s_nationkey")))
-      val promoParts = broadcast(Tables.part(spark, dir)
-        .where(col("p_type") === "PROMO").select("p_partkey"))
+          .select(col("n_nationkey").as("cn_key"))
+      val sup = Tables.supplier(spark, dir)
+        .select(col("s_suppkey"), col("s_nationkey"))
+      val promoParts = Tables.part(spark, dir)
+        .where(col("p_type") === "PROMO").select("p_partkey")
       val ord = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           year(col("o_orderdate")).as("o_year"))
@@ -430,8 +430,8 @@ object TpchQueries {
         .groupBy("l_suppkey")
         .agg(sum(revCents).as("total_cents"))
       val maxRev = revenue.agg(max("total_cents").as("max_cents"))
-      revenue.join(broadcast(maxRev), col("total_cents") === col("max_cents"))
-        .join(broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_name")),
+      revenue.join(maxRev, col("total_cents") === col("max_cents"))
+        .join(Tables.supplier(spark, dir).select("s_suppkey", "s_name"),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_cents"))
         .orderBy("s_suppkey")

@@ -114,7 +114,7 @@ object VectorQueries {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"), col("bucket"))
       val cands = withB
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"), col("bucket"))
-      val joined = cands.join(broadcast(queries), Seq("bucket"))
+      val joined = cands.join(queries, Seq("bucket"))
         .where(col("q_id") =!= col("c_id"))
         .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id").asc)
@@ -378,7 +378,7 @@ object VectorQueries {
       .persist()
     val nVecs = emb.agg(count(lit(1)).as("n_vecs"))
     val sample = emb
-      .crossJoin(broadcast(nVecs))
+      .crossJoin(nVecs)
       .where(graft.ops.HashOps.inFixedSizeSample(col("vec_id"), lit(salt), col("n_vecs"),
         RecallSampleTarget))
       .select(col("vec_id").as("s_id"), col("embedding").as("s_vec"),
@@ -386,6 +386,7 @@ object VectorQueries {
       .persist()
     val truth = emb.select(col("vec_id").as("o_id"), col("embedding").as("o_vec"),
         col("nrm").as("o_nrm"))
+      // hint kept: without it the nested-loop join builds the corpus, not the sample
       .join(broadcast(sample), col("s_id") =!= col("o_id"))
       .withColumn("cosine_sim",
         VectorOps.dot(col("s_vec"), col("o_vec")) / (col("s_nrm") * col("o_nrm")))
@@ -405,9 +406,9 @@ object VectorQueries {
       // broadcast-NL semi compares every candidate pair against all |S|
       // sample rows — measured dominant on the multi-million-pair banded
       // candidate set; sample ids are unique, so cardinality holds.)
-      .join(broadcast(sample.select(col("s_id").as("sid_l"))),
+      .join(sample.select(col("s_id").as("sid_l")),
         col("id_l") === col("sid_l"), "left")
-      .join(broadcast(sample.select(col("s_id").as("sid_r"))),
+      .join(sample.select(col("s_id").as("sid_r")),
         col("id_r") === col("sid_r"), "left")
       .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
       .select("id_l", "id_r")
@@ -464,7 +465,7 @@ object VectorQueries {
       .persist()
     val nVecs = emb.agg(count(lit(1)).as("n_vecs"))
     val sample = emb
-      .crossJoin(broadcast(nVecs))
+      .crossJoin(nVecs)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("n_vecs"),
         explode(array(salts.map(lit): _*)).as("salt"))
       .where(graft.ops.HashOps.inFixedSizeSample(col("vec_id"), col("salt"), col("n_vecs"),
@@ -474,6 +475,7 @@ object VectorQueries {
       .persist()
     val truth = emb.select(col("vec_id").as("o_id"), col("embedding").as("o_vec"),
         col("nrm").as("o_nrm"))
+      // hint kept: without it the nested-loop join builds the corpus, not the sample
       .join(broadcast(sample), col("s_id") =!= col("o_id"))
       .withColumn("cosine_sim",
         VectorOps.dot(col("s_vec"), col("o_vec")) / (col("s_nrm") * col("o_nrm")))
@@ -491,9 +493,9 @@ object VectorQueries {
       // two broadcast-HASH left probes against the BOUNDED union sample +
       // null filter — one map-side pass, no shuffle (see the single-salt
       // twin for the measured rationale)
-      .join(broadcast(sids.select(col("s_id").as("sid_l"))),
+      .join(sids.select(col("s_id").as("sid_l")),
         col("id_l") === col("sid_l"), "left")
-      .join(broadcast(sids.select(col("s_id").as("sid_r"))),
+      .join(sids.select(col("s_id").as("sid_r")),
         col("id_r") === col("sid_r"), "left")
       .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
       .select("id_l", "id_r")
@@ -998,9 +1000,10 @@ object VectorQueries {
       // exercises the replay contract the parity battery pins.
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_ann_index", dir, "ivf_evolve") { p =>
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L)
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
-          p, batchId = 1L): Unit
+        // each batch's hits are settled and unread here
+        Seq(ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L),
+          ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
+            p, batchId = 1L)).foreach(discard)
       }
       ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 &&
           col("vec_id") >= 250 && col("vec_id") < 500),
@@ -1087,10 +1090,11 @@ object VectorQueries {
       // overwrite of its own dirs)
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_ann_index", dir, "ivf_forget") { p =>
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L)
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
-          p, batchId = 1L)
-        forgetVectorsBatch(emb.where(isForgot).select("vec_id"), p): Unit
+        // the batches' hits and the forget receipt are settled and unread here
+        Seq(ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L),
+          ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
+            p, batchId = 1L),
+          forgetVectorsBatch(emb.where(isForgot).select("vec_id"), p)).foreach(discard)
       }
       ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 &&
           col("vec_id") >= 250 && col("vec_id") < 500),
@@ -1173,12 +1177,13 @@ object VectorQueries {
       // leaf — ann_delta_evolve's index has a different batch split)
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_ann_index", dir, "ivf_recall_evo") { p =>
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L)
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
-          p, batchId = 1L)
-        ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 &&
-            col("vec_id") >= 250 && col("vec_id") < 500),
-          p, batchId = 2L): Unit
+        // each batch's hits are settled and unread here
+        Seq(ivfSearchInsertBatch(emb.where(col("vec_id") % 5 =!= 0), p, batchId = 0L),
+          ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 250),
+            p, batchId = 1L),
+          ivfSearchInsertBatch(emb.where(col("vec_id") % 5 === 0 &&
+              col("vec_id") >= 250 && col("vec_id") < 500),
+            p, batchId = 2L)).foreach(discard)
       }
       // readers resolve the index to its CURRENT generation dir once at
       // open and read only that pair — the zero-downtime contract
@@ -1190,9 +1195,10 @@ object VectorQueries {
       val queries = sample.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val probes = IvfIndex.rankCells(sample, genDir, NProbe)
         .select(col("q_id"), col("centroid_id"), lit(1).as("in_probe"))
-      val scored = postings.crossJoin(broadcast(queries))
+      val scored = postings.crossJoin(queries)
         .where(col("q_id") =!= col("vec_id"))
         .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
+        // hint kept: without it a SortMergeJoin shuffles the scored pairs
         .join(broadcast(probes), Seq("q_id", "centroid_id"), "left")
         .withColumn("epoch", explode(sequence(col("batch_id"), lit(2L))))
         .select("epoch", "q_id", "vec_id", "cs", "in_probe")
@@ -1341,12 +1347,13 @@ object VectorQueries {
       // is safe (the refresh already ran inside the build)
       val indexPath = graft.ops.Staging.once(
           "/tmp/graft_ann_index", dir, "ivf_refresh_recall") { p =>
-        StreamingOps.ivfSearchInsertBatch(
-          vecs.where(col("vec_id") < NCorpus), p, batchId = 0L)
-        StreamingOps.ivfSearchInsertBatch(
-          vecs.where(col("vec_id") >= NCorpus && col("vec_id") < 450), p, batchId = 1L)
-        StreamingOps.ivfSearchInsertBatch(
-          vecs.where(col("vec_id") >= 450), p, batchId = 2L)
+        // each batch's hits are settled and unread here
+        Seq(StreamingOps.ivfSearchInsertBatch(
+            vecs.where(col("vec_id") < NCorpus), p, batchId = 0L),
+          StreamingOps.ivfSearchInsertBatch(
+            vecs.where(col("vec_id") >= NCorpus && col("vec_id") < 450), p, batchId = 1L),
+          StreamingOps.ivfSearchInsertBatch(
+            vecs.where(col("vec_id") >= 450), p, batchId = 2L)).foreach(discard)
         IvfIndex.refreshCentroids(spark, p)
       }
       val refreshedDir = IvfIndex.resolve(spark, indexPath) // g=1
@@ -1356,7 +1363,7 @@ object VectorQueries {
       val queries = sample.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       // ONE scoring pass: all (query, candidate) cosines; truth and both
       // arms' hits are restrictions of it
-      val scored = v.crossJoin(broadcast(queries))
+      val scored = v.crossJoin(queries)
         .where(col("q_id") =!= col("vec_id"))
         .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
         .select("q_id", "vec_id", "cs").persist()
@@ -1703,6 +1710,7 @@ object VectorQueries {
         val (assigned, probes) = ivfSplit(ranked, maxP)
         val sizes = assigned.groupBy("centroid_id").agg(count(lit(1)).as("sz"))
         // ONE cosine pass at the widest arm; visibility expands in-row
+        // hint kept: without it a SortMergeJoin shuffles the postings
         val scored = assigned.join(broadcast(probes), Seq("centroid_id"))
           .where(col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id"),
@@ -1715,6 +1723,7 @@ object VectorQueries {
           .select(col("nprobe"), col("q_id"), col("vec_id").as("c_id"))
         val hits = brute.join(top, Seq("q_id", "c_id"))
           .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
+        // hint kept: without it a SortMergeJoin shuffles the probes
         val scanned = probes.join(broadcast(sizes), Seq("centroid_id"))
           .select(col("q_id"), col("sz"), explode(armsOf).as("nprobe"))
           .groupBy("nprobe")
@@ -1722,7 +1731,7 @@ object VectorQueries {
         ProbeSweep.map(_.toLong).toDF("nprobe")
           .join(hits, Seq("nprobe"), "left")
           .join(scanned, Seq("nprobe"), "left")
-          .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_truth"))))
+          .crossJoin(brute.agg(count(lit(1)).as("n_truth")))
           .select(col("nprobe"), col("n_truth"),
             coalesce(col("n_hits"), lit(0L)).as("n_hits"),
             expr("CASE WHEN n_truth = 0 THEN -1 " +
@@ -1806,6 +1815,7 @@ object VectorQueries {
       val probes = probes0
         .join(labels.select(col("vec_id").as("q_id"), col("label").as("q_label")),
           Seq("q_id"))
+      // hint kept: without it a SortMergeJoin shuffles the postings
       val joined = assigned.join(broadcast(probes), Seq("centroid_id"))
         .where(col("q_id") =!= col("vec_id") && col("c_label") === col("q_label"))
         .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("embedding")))
@@ -1863,7 +1873,7 @@ object VectorQueries {
           col("label").as("q_label"))
       val brute = emb.select(col("vec_id").as("c_id2"), col("embedding").as("c_vec2"),
           col("label").as("c_label"))
-        .join(broadcast(queries), col("q_id") =!= col("c_id2") &&
+        .join(queries, col("q_id") =!= col("c_id2") &&
           col("c_label") === col("q_label"))
         .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id2").asc)
@@ -1936,7 +1946,7 @@ object VectorQueries {
         .select(col("vec_id"), col("s"), sub(col("embedding"), col("s")).as("v_sub"))
       val w = Window.partitionBy("vec_id", "s")
         .orderBy(col("dist2_e6").asc, col("cw_id").asc)
-      vs.join(broadcast(codewords(spark, dir)), Seq("s"))
+      vs.join(codewords(spark, dir), Seq("s"))
         .withColumn("dist2_e6", dist2E6(col("v_sub"), col("cw_sub")))
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select("vec_id", "s", "cw_id", "dist2_e6")
@@ -2032,11 +2042,12 @@ object VectorQueries {
         .withColumn("s", explode(sequence(lit(0), lit(Pq.NSub - 1))))
         .select(col("vec_id").as("q_id"), col("s"),
           Pq.sub(col("embedding"), col("s")).as("q_sub"))
-        .join(broadcast(Pq.codewords(spark, dir)), Seq("s"))
+        .join(Pq.codewords(spark, dir), Seq("s"))
         .select(col("q_id"), col("s"), col("cw_id"),
           Pq.dist2E6(col("q_sub"), col("cw_sub")).as("qd_e6"))
       val wRank = Window.partitionBy("q_id")
         .orderBy(col("adc_e6").asc, col("c_id").asc)
+      // hint kept: without it a SortMergeJoin shuffles the codes
       codes.join(broadcast(qd), Seq("s", "cw_id"))
         .where(col("vec_id") =!= col("q_id"))
         .groupBy(col("q_id"), col("vec_id").as("c_id"))
@@ -2257,7 +2268,7 @@ object VectorQueries {
           col("label").cast("long").as("q_label"))
       val cands = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"),
         col("label").cast("long").as("c_label"))
-      val scored = cands.crossJoin(broadcast(queries))
+      val scored = cands.crossJoin(queries)
         .where(col("q_id") =!= col("c_id"))
         .withColumn("cos", VectorOps.cosine(col("q_vec"), col("c_vec")))
       def best(cond: org.apache.spark.sql.Column) =
@@ -2336,7 +2347,7 @@ object VectorQueries {
             .otherwise(0L)).as("dcg_e9"),
           min(when(col("c_label") === col("q_label"), col("rank").cast("long")))
             .as("min_rel_rank"))
-        .join(broadcast(labelCounts), Seq("q_label"))
+        .join(labelCounts, Seq("q_label"))
         .withColumn("n_rel", least(col("n_label") - 1, lit(K.toLong)))
         .withColumn("idcg_e9", expr(idcgCase))
         .select(col("q_id"), col("q_label"), col("n_rel"), col("dcg_e9"),

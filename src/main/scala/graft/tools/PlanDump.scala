@@ -1,15 +1,30 @@
 package graft.tools
 
-/** Dump `.explain("formatted")` for named catalog queries to files —
-  * the committed per-round plan artifacts (plans/rNN/query_before.txt,
-  * query_after.txt). Each query runs first (its rows are dropped), so the
-  * dump shows the final adaptive plan, with the stages and partition
-  * counts AQE picked at run time, above the initial one.
+import graft.NoopRun
+
+/** Plan dumps of catalog queries, in two forms.
   *
-  * Usage: runMain graft.tools.PlanDump sfDir outDir suffix query...
-  * Writes outDir/query_suffix.txt. Session shape mirrors graft.Bench
-  * ([[graft.Sessions.local]]: one shuffle partition per core) so the plans
-  * are the ones the bench actually runs.
+  * With query names: `.explain("formatted")` of each named query to
+  * outDir/query_suffix.txt. Each query runs first (its rows are dropped),
+  * so the dump shows the final adaptive plan, with the stages and
+  * partition counts AQE picked at run time, above the initial one.
+  *
+  * With none: the whole catalog, each query built and written to the noop
+  * sink under [[NoopRun.traced]], to outDir/joins_suffix.tsv. One line per
+  * query: its name, the join operators of every plan it executed (the
+  * builder's eager actions included; [[NoopRun.joins]]) and their
+  * exchanges (kind and partitioning, a hash partitioning's keys sorted;
+  * [[NoopRun.exchangesOf]]), each list `; `-separated. The plans are the
+  * ones AQE started from ([[NoopRun.initialNodes]]): they are what a
+  * change to a query's code changes, and unlike final adaptive plans
+  * (whose build sides and exchange order follow which concurrent stage
+  * finished first) they are the same on every run, so two such files
+  * diff a change's plans query by query.
+  *
+  * Usage: runMain graft.tools.PlanDump sfDir outDir suffix [query...]
+  * Session shape mirrors graft.Bench ([[graft.Sessions.local]]: one
+  * shuffle partition per core) so the plans are the ones the bench
+  * actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,7 +32,22 @@ object PlanDump {
     val spark = graft.Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.SparkEntry.queries
-    names.foreach { n =>
+    if (names.isEmpty) {
+      val out = new java.io.PrintWriter(s"$outDir/joins_$suffix.tsv", "UTF-8")
+      try graft.SparkEntry.catalog.map(_.name).foreach { n =>
+        val t = NoopRun.traced(spark) {
+          val df = qs(n)(spark, dir)
+          try df.write.format("noop").mode("overwrite").save()
+          finally graft.ops.Checkpoints.discard(df)
+        }
+        spark.catalog.clearCache()
+        val ns = NoopRun.initialNodes(t.plans)
+        val exchanges = NoopRun.exchangesOf(ns).map(e => s"${e.kind} ${sortedKeys(e.partitioning)}".trim)
+        out.println(Seq(n, NoopRun.joins(ns).mkString("; "), exchanges.mkString("; "))
+          .mkString("\t"))
+        out.flush()
+      } finally out.close()
+    } else names.foreach { n =>
       val qe = qs(n)(spark, dir).queryExecution
       qe.toRdd.foreach(_ => ())
       val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
@@ -26,5 +56,15 @@ object PlanDump {
       spark.catalog.clearCache()
     }
     spark.stop()
+  }
+
+  private val HashKeys = """^hashpartitioning\((.*), (\d+)\)$""".r
+
+  /** `hashpartitioning(b, a, 4)` as `hashpartitioning(a, b, 4)`: the key
+    * order of a distinct-aggregate rewrite follows expression ids, which
+    * differ from run to run. */
+  private def sortedKeys(partitioning: String): String = partitioning match {
+    case HashKeys(keys, n) => s"hashpartitioning(${keys.split(", ").sorted.mkString(", ")}, $n)"
+    case other => other
   }
 }

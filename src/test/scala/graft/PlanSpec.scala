@@ -2,7 +2,10 @@ package graft
 
 import graft.ops.SignatureIndex
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.queries.{GeoPipeline, MixQueries, Relational, TextQueries}
 
 /** Physical-plan regression tests: the properties that matter at scale —
@@ -521,6 +524,30 @@ class PlanSpec extends SparkSpec {
     assert(nBroadcast >= 2, s"counts/min must broadcast, not shuffle the facts:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"fact side must not sort-merge against the tiny source counts:\n$plan")
+  }
+
+  test("the planner broadcasts the small TPC-H dims by size, with no hint (sf0.1, plans only)") {
+    val dims = Seq("q_revenue_nation" -> Set("nation", "region"),
+      "q_tpch_q5" -> Set("nation", "region", "supplier"), "q_tpch_q14" -> Set("part"))
+    for ((name, tables) <- dims) {
+      val qe = SparkEntry.queries(name)(spark, new java.io.File(sf).getParent + "/sf0.1")
+        .queryExecution
+      val hints = qe.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+      }
+      assert(hints.isEmpty, s"$name carries a broadcast hint:\n${qe.analyzed}")
+      // the tables each broadcast hash join builds from, in the plan AQE starts from
+      val built = NoopRun.initialNodes(Seq(qe.executedPlan)).collect {
+        case j: BroadcastHashJoinExec =>
+          val side = if (j.buildSide == BuildRight) j.right else j.left
+          NoopRun.initialNodes(Seq(side)).collect {
+            case s: FileSourceScanExec =>
+              s.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
+          }.flatten
+      }.flatten.toSet
+      assert(tables.subsetOf(built),
+        s"$name does not build a broadcast hash join from ${tables -- built}:\n${qe.executedPlan}")
+    }
   }
 }
 

@@ -10,17 +10,21 @@ import graft.ReliableCheckpoints.rddDirs
 import graft.ops.{Checkpoints, DedupOps}
 
 /** The iterative family (and the queries that settle one frame for a
-  * later one: triangle orientation, BPE training) leaves only the settled
-  * frames its result reads:
+  * later one: triangle orientation, BPE training, the MMR pool, the
+  * recall arms, the staged store builds) leaves only the settled frames
+  * its result reads:
   * a round loop (`Checkpoints.iterate`) releases each round once the next
-  * is settled, and the frames every round reads are released with their
-  * `settled` scope. Counted explicitly in both checkpoint modes: the RDDs
+  * is settled, the frames every round reads are released with their
+  * `settled` scope, and a staged build discards the op results it does
+  * not read. Counted explicitly in both checkpoint modes: the RDDs
   * a run leaves must be exactly the checkpointed RDDs in the result's
   * logical plan, and none may be left after `Checkpoints.discard(result)`.
-  * Local mode counts the RDD ids a run adds to `getPersistentRDDs`, which
-  * holds its RDDs weakly (a round that only GC dropped can vanish before
-  * it is counted); reliable mode counts `rdd-<id>` checkpoint dirs, which
-  * nothing but a release deletes. */
+  * Reliable mode runs first and counts `rdd-<id>` checkpoint dirs, which
+  * nothing but a release deletes, so it also sees what a once-per-JVM
+  * `Staging.once` build leaves (when no earlier suite in the JVM ran that
+  * build); local mode then counts the RDD ids a run adds to
+  * `getPersistentRDDs`, which holds its RDDs weakly (a round that only GC
+  * dropped can vanish before it is counted). */
 class RoundReleaseSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -39,9 +43,6 @@ class RoundReleaseSpec extends SparkSpec {
   }
 
   private def inBothModes(name: String, settledFrames: Int)(build: => DataFrame): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    leavesOnly(name, settledFrames, sc.getPersistentRDDs.keySet.toSet -- before)(build)
     val ckpt = Files.createTempDirectory("graft_round_release")
     try {
       spark.conf.set(Checkpoints.ModeKey, "reliable")
@@ -52,16 +53,25 @@ class RoundReleaseSpec extends SparkSpec {
       spark.conf.unset(Checkpoints.ModeKey)
       spark.conf.unset(Checkpoints.DirKey)
     }
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    leavesOnly(name, settledFrames, sc.getPersistentRDDs.keySet.toSet -- before)(build)
   }
 
   // q_graph_modularity's result reads two settled frames: the last LPA
   // round (community sizes) and the label-joined edges (three aggregates);
   // q_graph_triangles' result reads its oriented edges, not the undirected
-  // edges they came from; q_bpe_merges' result is the collected merges, so
-  // it reads none
+  // edges they came from; q_bpe_merges' and q_mmr_diversify's results are
+  // built on the driver, so they read none. The ANN entries' results read
+  // their last search (ann_delta_*) or none; the staged builds' earlier
+  // hits and receipts are discarded. q_dedup_recall_forget reads its own
+  // cut of the two arms, dedup_delta_batch2 its batch-2 verdicts.
   private val queries = Seq("q_pagerank" -> 1, "q_bfs_hops" -> 1, "q_weighted_sssp" -> 1,
     "q_kcore" -> 1, "q_hits_bipartite" -> 1, "q_label_propagation" -> 1,
-    "q_graph_modularity" -> 2, "q_graph_triangles" -> 1, "q_bpe_merges" -> 0)
+    "q_graph_modularity" -> 2, "q_graph_triangles" -> 1, "q_bpe_merges" -> 0,
+    "q_mmr_diversify" -> 0, "ann_delta_evolve" -> 1, "ann_delta_forget" -> 1,
+    "q_ann_recall_evolution" -> 0, "q_ann_refresh_recall" -> 1,
+    "q_dedup_recall_forget" -> 1, "dedup_delta_batch2" -> 1)
 
   for ((name, n) <- queries)
     test(s"$name leaves only the settled frames its result reads") {
