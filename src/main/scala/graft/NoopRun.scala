@@ -10,11 +10,10 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange => ExchangeExec,
   ReusedExchangeExec, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, HashJoin}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One timed run of a query the way graft.Bench times it: build the frame,
@@ -99,8 +98,8 @@ object NoopRun {
     * relation scanned by several plans, once). */
   def exchanges(plans: Seq[SparkPlan]): Seq[Exchange] = exchangesOf(nodes(plans))
 
-  /** The exchanges among plan nodes (as [[nodes]] or [[initialNodes]]
-    * list them), each counted once. */
+  /** The exchanges among plan nodes (as [[nodes]] lists them), each
+    * counted once. */
   def exchangesOf(ns: Seq[SparkPlan]): Seq[Exchange] = {
     val seen = new java.util.IdentityHashMap[ExchangeExec, Int]()
     val order = scala.collection.mutable.ArrayBuffer.empty[ExchangeExec]
@@ -137,32 +136,6 @@ object NoopRun {
       case n => Seq(n)
     }
     plans.flatMap(walk)
-  }
-
-  /** Every node of the plans executed plans started from: each adaptive
-    * plan (subqueries and the plans of cached relations included) as AQE
-    * first planned it, from static size estimates, before any query stage
-    * ran and re-planned the rest. Unlike the final plans [[nodes]] walks,
-    * these do not depend on the order in which concurrent stages finish. */
-  def initialNodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
-    val cached = new java.util.IdentityHashMap[SparkPlan, Unit]()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
-      case s: InMemoryTableScanExec if !cached.containsKey(s.relation.cachedPlan) =>
-        cached.put(s.relation.cachedPlan, ())
-        s +: walk(s.relation.cachedPlan)
-      case n => n +: (n.children ++ n.subqueries).flatMap(walk)
-    }
-    plans.flatMap(walk)
-  }
-
-  /** Every join operator among plan nodes, in order, as its node name,
-    * join type and build side: `BroadcastHashJoin(Inner,BuildRight)`,
-    * `SortMergeJoin(LeftSemi)`, `CartesianProduct(Inner)`. */
-  def joins(ns: Seq[SparkPlan]): Seq[String] = ns.collect {
-    case j: HashJoin => s"${j.nodeName}(${j.joinType},${j.buildSide})"
-    case j: BroadcastNestedLoopJoinExec => s"${j.nodeName}(${j.joinType},${j.buildSide})"
-    case j: BaseJoinExec => s"${j.nodeName}(${j.joinType})"
   }
 
   private object Walker extends AdaptiveSparkPlanHelper {

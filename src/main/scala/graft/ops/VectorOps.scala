@@ -39,7 +39,9 @@ object VectorOps {
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                      qId: String = "q_id", cId: String = "c_id",
                      qVec: String = "q_vec", cVec: String = "c_vec"): DataFrame = {
-    val joined = candidates.crossJoin(queries)
+    // hint kept: the query batch's estimate is its corpus's; without it a
+    // CartesianProduct once that estimate passes the broadcast threshold
+    val joined = candidates.crossJoin(broadcast(queries))
       .where(col(qId) =!= col(cId))
       .withColumn("cosine_sim", cosine(col(qVec), col(cVec)))
     val w = Window.partitionBy(qId).orderBy(col("cosine_sim").desc, col(cId).asc)

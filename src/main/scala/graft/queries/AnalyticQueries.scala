@@ -269,7 +269,8 @@ object AnalyticQueries {
       userDays
         .withColumn("window_day",
           explode(sequence(col("day"), date_add(col("day"), 6))))
-        .join(presentDays, Seq("window_day"), "left_semi")
+        // hint kept: one row per day, estimated at the events' size
+        .join(broadcast(presentDays), Seq("window_day"), "left_semi")
         .groupBy("window_day")
         .agg(countDistinct("user_id").as("active_7d"))
         .join(bounds,
@@ -504,7 +505,8 @@ object AnalyticQueries {
         .withColumn("n", sum("bn").over(Window.partitionBy("l_returnflag")))
         .select("l_returnflag", "bkt", "off", "n")
       v.withColumn("wcum", sum("n_rows").over(wIn))
-        .join(bands, Seq("l_returnflag", "bkt"))
+        // hint kept: (flag, bucket) bands are estimated at lineitem's size
+        .join(broadcast(bands), Seq("l_returnflag", "bkt"))
         .select(col("l_returnflag"), col("cents"), col("n_rows"),
           (col("off") + col("wcum")).as("cum"),
           expr("(off + wcum) * 10000 div n").as("ecdf_e4"))

@@ -571,9 +571,10 @@ object BehaviorQueries {
             expr("(cum * 5 + n_total - 1) div n_total").as(s"${valueCol}_q"))
       }
       rfm
-        .join(quintiles(rfm, "r_days", desc0 = true), Seq("r_days"))
-        .join(quintiles(rfm, "f", desc0 = false), Seq("f"))
-        .join(quintiles(rfm, "m_band", desc0 = false), Seq("m_band"))
+        // hint kept (all three): one row per value, estimated at the orders' size
+        .join(broadcast(quintiles(rfm, "r_days", desc0 = true)), Seq("r_days"))
+        .join(broadcast(quintiles(rfm, "f", desc0 = false)), Seq("f"))
+        .join(broadcast(quintiles(rfm, "m_band", desc0 = false)), Seq("m_band"))
         .select(col("o_custkey"), col("r_days"), col("f"), col("m_cents"),
           col("r_days_q").as("r_q"), col("f_q"), col("m_band_q").as("m_q"),
           expr("r_days_q * 100 + f_q * 10 + m_band_q").as("rfm_code"))
@@ -1119,10 +1120,11 @@ object BehaviorQueries {
       l.join(r, Seq("user_id"))
         .where(col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_both"))
-        .join(sizes.select(col("event_type").as("type_a"),
-          col("n").as("n_a")), Seq("type_a"))
-        .join(sizes.select(col("event_type").as("type_b"),
-          col("n").as("n_b")), Seq("type_b"))
+        // hint kept (both): one row per event type, estimated at the events' size
+        .join(broadcast(sizes.select(col("event_type").as("type_a"),
+          col("n").as("n_a"))), Seq("type_a"))
+        .join(broadcast(sizes.select(col("event_type").as("type_b"),
+          col("n").as("n_b"))), Seq("type_b"))
         .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
           col("n_both"),
           expr("n_both * 1000000 div (n_a + n_b - n_both)").as("jaccard_e6"))

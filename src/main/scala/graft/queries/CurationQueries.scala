@@ -173,7 +173,8 @@ object CurationQueries {
       // shingleHashes is distinct-per-doc, so count(*) per (source, h) = df
       val ex = docs.select(col("doc_id"), col("source"), explode(col("hs")).as("h"))
       val bp = ex.groupBy("source", "h").agg(count(lit(1)).as("h_df"))
-        .join(nDocs, Seq("source"))
+        // hint kept: one row per source, estimated at the documents' size
+        .join(broadcast(nDocs), Seq("source"))
         .where(col("h_df") * 100 >= col("n_docs") * DfPct)
         .select("source", "h")
       val perDoc = ex.join(bp, Seq("source", "h"), "left_semi")
@@ -443,7 +444,8 @@ object CurationQueries {
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
       val minDocs = counts.agg(min("n_docs").as("min_docs"))
       docs
-        .join(counts, Seq("source"))
+        // hint kept: one row per source, estimated at the documents' size
+        .join(broadcast(counts), Seq("source"))
         .crossJoin(minDocs)
         .withColumn("rate_ppm",
           least(lit(1000000L), expr("min_docs * 1000000 div n_docs")))
@@ -663,7 +665,8 @@ object CurationQueries {
             concat(lit("mix:"), col("doc_id").cast("string"))) % 1000000L).as("h_ppm"))
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
       val minDocs = counts.agg(min("n_docs").as("min_docs"))
-      docs.join(counts, Seq("source"))
+      // hint kept: one row per source, estimated at the documents' size
+      docs.join(broadcast(counts), Seq("source"))
         .crossJoin(minDocs)
         .withColumn("rate_ppm",
           least(lit(1000000L), expr("min_docs * 500000 div n_docs")))

@@ -1649,9 +1649,11 @@ object DedupQueries {
       // |S| sample rows — measured dominant on the banded pair set; and
       // sample ids are unique, so the left joins preserve cardinality.)
       val lsh = bandVerifiedPairs(sigs, JaccardThreshold).select("id_l", "id_r")
-        .join(sample.select(col("s_id").as("sid_l")),
+        // hint kept (both): the sample is estimated at the corpus's size;
+        // without it SortMergeJoins once that passes the threshold
+        .join(broadcast(sample.select(col("s_id").as("sid_l"))),
           col("id_l") === col("sid_l"), "left")
-        .join(sample.select(col("s_id").as("sid_r")),
+        .join(broadcast(sample.select(col("s_id").as("sid_r"))),
           col("id_r") === col("sid_r"), "left")
         .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
         .select("id_l", "id_r")

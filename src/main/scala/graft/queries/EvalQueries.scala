@@ -747,7 +747,8 @@ object EvalQueries {
       val subjects = Tables.customer(spark, dir)
         .where(col("c_custkey") % 100 === 0).select("c_custkey")
       val ord = Tables.orders(spark, dir)
-        .join(subjects, col("o_custkey") === col("c_custkey"))
+        // hint kept: a 1-in-100 key sample, estimated at customer's size
+        .join(broadcast(subjects), col("o_custkey") === col("c_custkey"))
         .select(col("o_custkey"), col("o_orderkey"),
           to_date(col("o_orderdate")).as("day"),
           Q.cents(col("o_totalprice")).as("cents"))

@@ -42,7 +42,8 @@ object MixQueries {
         .select(explode(col("hs")).as("h")).distinct()
       val corpus = docs.where(col("source") =!= BenchSource)
       val hits = corpus.select(col("doc_id"), explode(col("hs")).as("h"))
-        .join(bench, Seq("h"))
+        // hint kept: the benchmark's n-grams, estimated at the documents' size
+        .join(broadcast(bench), Seq("h"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
       corpus.select(col("doc_id"))
         .join(hits, Seq("doc_id"), "left")
@@ -338,7 +339,8 @@ object MixQueries {
       val matched = docs.where(col("source") =!= BenchSource)
         .select(col("doc_id"), posexplode(col("gs")).as(Seq("pos0", "h")))
         .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("h"))
-        .join(bench, Seq("h"))
+        // hint kept: the benchmark's n-grams, estimated at the documents' size
+        .join(broadcast(bench), Seq("h"))
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val runs = matched
         .withColumn("island", col("pos") - row_number().over(w))

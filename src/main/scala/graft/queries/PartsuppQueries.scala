@@ -177,11 +177,12 @@ object PartsuppQueries {
   val qTpchQ11: Q = new Q {
     val name = "q_tpch_q11"
     def run(spark: SparkSession, dir: String): DataFrame = {
-      val natSupp =
+      // hint kept: one nation's suppliers, estimated as supplier × nation
+      val natSupp = broadcast(
         Tables.supplier(spark, dir)
           .join(Tables.nation(spark, dir).where(col("n_name") === "NATION_7"),
             col("s_nationkey") === col("n_nationkey"))
-          .select("s_suppkey")
+          .select("s_suppkey"))
       val byPart = partsupp(spark, dir)
         .join(natSupp, col("ps_suppkey") === col("s_suppkey"))
         .groupBy("ps_partkey")

@@ -353,7 +353,8 @@ object TextQueries {
         .where(col("term").isin(Terms: _*))
         .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      tf.join(dfreq, Seq("term"))
+      // hint kept: one row per query term, estimated at the documents' size
+      tf.join(broadcast(dfreq), Seq("term"))
         .join(stats)
         .withColumn("idf_e4",
           expr("((2 * (n_docs - df) + 1) * 10000) div (2 * df + 1)"))
@@ -803,7 +804,8 @@ object TextQueries {
       val dw = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("word"))
         .where(col("word").rlike("^[a-z]+$") && !col("word").rlike(Bpe.TripleRe))
-      dw.join(dict, Seq("word"))
+      // hint kept: the vocabulary is estimated at the documents' size
+      dw.join(broadcast(dict), Seq("word"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_words"),
           sum("n_syms").as("n_bpe_tokens"),

@@ -259,11 +259,12 @@ object TimeSeriesQueries {
         .agg(sum(cents(col("o_totalprice"))).as("rev_cents"))
       val med = daily.groupBy("o_orderstatus")
         .agg((expr("percentile(rev_cents, 0.5)") * 2).cast("long").as("med2"))
-      val dev = daily.join(med, Seq("o_orderstatus"))
+      // hint kept (both): one row per status, estimated at the orders' size
+      val dev = daily.join(broadcast(med), Seq("o_orderstatus"))
         .withColumn("dev4", abs(col("rev_cents") * 4 - col("med2") * 2))
       val mad = dev.groupBy("o_orderstatus")
         .agg((expr("percentile(dev4, 0.5)") * 2).cast("long").as("mad8"))
-      dev.join(mad, Seq("o_orderstatus"))
+      dev.join(broadcast(mad), Seq("o_orderstatus"))
         .withColumn("is_anom",
           when(col("dev4") * 20000 > col("mad8") * 44478, 1L).otherwise(0L))
         .select("day", "o_orderstatus", "rev_cents", "med2", "dev4", "mad8", "is_anom")

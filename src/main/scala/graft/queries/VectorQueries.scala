@@ -114,7 +114,9 @@ object VectorQueries {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"), col("bucket"))
       val cands = withB
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"), col("bucket"))
-      val joined = cands.join(queries, Seq("bucket"))
+      // hint kept: the capped queries are estimated at the corpus's size;
+      // without it a SortMergeJoin once that passes the threshold
+      val joined = cands.join(broadcast(queries), Seq("bucket"))
         .where(col("q_id") =!= col("c_id"))
         .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id").asc)
@@ -406,9 +408,11 @@ object VectorQueries {
       // broadcast-NL semi compares every candidate pair against all |S|
       // sample rows — measured dominant on the multi-million-pair banded
       // candidate set; sample ids are unique, so cardinality holds.)
-      .join(sample.select(col("s_id").as("sid_l")),
+      // hint kept (both): the sample is estimated at the corpus's size;
+      // without it SortMergeJoins once that passes the threshold
+      .join(broadcast(sample.select(col("s_id").as("sid_l"))),
         col("id_l") === col("sid_l"), "left")
-      .join(sample.select(col("s_id").as("sid_r")),
+      .join(broadcast(sample.select(col("s_id").as("sid_r"))),
         col("id_r") === col("sid_r"), "left")
       .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
       .select("id_l", "id_r")
@@ -493,9 +497,10 @@ object VectorQueries {
       // two broadcast-HASH left probes against the BOUNDED union sample +
       // null filter — one map-side pass, no shuffle (see the single-salt
       // twin for the measured rationale)
-      .join(sids.select(col("s_id").as("sid_l")),
+      // hint kept (both): as in the single-salt twin
+      .join(broadcast(sids.select(col("s_id").as("sid_l"))),
         col("id_l") === col("sid_l"), "left")
-      .join(sids.select(col("s_id").as("sid_r")),
+      .join(broadcast(sids.select(col("s_id").as("sid_r"))),
         col("id_r") === col("sid_r"), "left")
       .where(col("sid_l").isNotNull || col("sid_r").isNotNull)
       .select("id_l", "id_r")
@@ -1195,7 +1200,9 @@ object VectorQueries {
       val queries = sample.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val probes = IvfIndex.rankCells(sample, genDir, NProbe)
         .select(col("q_id"), col("centroid_id"), lit(1).as("in_probe"))
-      val scored = postings.crossJoin(queries)
+      // hint kept: the 2% query sample is estimated at the corpus's size;
+      // without it a CartesianProduct once that passes the threshold
+      val scored = postings.crossJoin(broadcast(queries))
         .where(col("q_id") =!= col("vec_id"))
         .withColumn("cs", VectorOps.cosine(col("q_vec"), col("embedding")))
         // hint kept: without it a SortMergeJoin shuffles the scored pairs
@@ -1873,7 +1880,8 @@ object VectorQueries {
           col("label").as("q_label"))
       val brute = emb.select(col("vec_id").as("c_id2"), col("embedding").as("c_vec2"),
           col("label").as("c_label"))
-        .join(queries, col("q_id") =!= col("c_id2") &&
+        // hint kept: the capped queries are estimated at the corpus's size
+        .join(broadcast(queries), col("q_id") =!= col("c_id2") &&
           col("c_label") === col("q_label"))
         .withColumn("cosine_sim", VectorOps.cosine(col("q_vec"), col("c_vec2")))
       val w = Window.partitionBy("q_id").orderBy(col("cosine_sim").desc, col("c_id2").asc)
@@ -1946,7 +1954,8 @@ object VectorQueries {
         .select(col("vec_id"), col("s"), sub(col("embedding"), col("s")).as("v_sub"))
       val w = Window.partitionBy("vec_id", "s")
         .orderBy(col("dist2_e6").asc, col("cw_id").asc)
-      vs.join(codewords(spark, dir), Seq("s"))
+      // hint kept: the capped codebook is estimated at the corpus's size
+      vs.join(broadcast(codewords(spark, dir)), Seq("s"))
         .withColumn("dist2_e6", dist2E6(col("v_sub"), col("cw_sub")))
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select("vec_id", "s", "cw_id", "dist2_e6")
@@ -2042,7 +2051,8 @@ object VectorQueries {
         .withColumn("s", explode(sequence(lit(0), lit(Pq.NSub - 1))))
         .select(col("vec_id").as("q_id"), col("s"),
           Pq.sub(col("embedding"), col("s")).as("q_sub"))
-        .join(Pq.codewords(spark, dir), Seq("s"))
+        // hint kept: the capped codebook is estimated at the corpus's size
+        .join(broadcast(Pq.codewords(spark, dir)), Seq("s"))
         .select(col("q_id"), col("s"), col("cw_id"),
           Pq.dist2E6(col("q_sub"), col("cw_sub")).as("qd_e6"))
       val wRank = Window.partitionBy("q_id")
@@ -2268,7 +2278,9 @@ object VectorQueries {
           col("label").cast("long").as("q_label"))
       val cands = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"),
         col("label").cast("long").as("c_label"))
-      val scored = cands.crossJoin(queries)
+      // hint kept: the capped queries are estimated at the corpus's size;
+      // without it a CartesianProduct once that passes the threshold
+      val scored = cands.crossJoin(broadcast(queries))
         .where(col("q_id") =!= col("c_id"))
         .withColumn("cos", VectorOps.cosine(col("q_vec"), col("c_vec")))
       def best(cond: org.apache.spark.sql.Column) =
@@ -2347,7 +2359,8 @@ object VectorQueries {
             .otherwise(0L)).as("dcg_e9"),
           min(when(col("c_label") === col("q_label"), col("rank").cast("long")))
             .as("min_rel_rank"))
-        .join(labelCounts, Seq("q_label"))
+        // hint kept: one row per label, estimated at the corpus's size
+        .join(broadcast(labelCounts), Seq("q_label"))
         .withColumn("n_rel", least(col("n_label") - 1, lit(K.toLong)))
         .withColumn("idcg_e9", expr(idcgCase))
         .select(col("q_id"), col("q_label"), col("n_rel"), col("dcg_e9"),

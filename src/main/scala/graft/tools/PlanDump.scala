@@ -1,5 +1,10 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, HashJoin}
+
 import graft.NoopRun
 
 /** Plan dumps of catalog queries, in two forms.
@@ -12,14 +17,17 @@ import graft.NoopRun
   * With none: the whole catalog, each query built and written to the noop
   * sink under [[NoopRun.traced]], to outDir/joins_suffix.tsv. One line per
   * query: its name, the join operators of every plan it executed (the
-  * builder's eager actions included; [[NoopRun.joins]]) and their
-  * exchanges (kind and partitioning, a hash partitioning's keys sorted;
+  * builder's eager actions included; [[joins]]) and their exchanges (kind
+  * and partitioning, a hash partitioning's keys sorted;
   * [[NoopRun.exchangesOf]]), each list `; `-separated. The plans are the
-  * ones AQE started from ([[NoopRun.initialNodes]]): they are what a
-  * change to a query's code changes, and unlike final adaptive plans
-  * (whose build sides and exchange order follow which concurrent stage
-  * finished first) they are the same on every run, so two such files
-  * diff a change's plans query by query.
+  * ones AQE started from ([[initialNodes]]): they are what a change to a
+  * query's code changes, and they are the same on every run, so two such
+  * files diff a change's plans query by query. outDir/final_suffix.tsv
+  * holds the same lines for the final adaptive plans ([[NoopRun.nodes]]).
+  * Those are what ran, but AQE re-plans a build side, or demotes a
+  * broadcast, from the sizes of the stages that finished first, so they
+  * can differ from run to run: compare a change's final plans with the
+  * set a few runs of its parent produced.
   *
   * Usage: runMain graft.tools.PlanDump sfDir outDir suffix [query...]
   * Session shape mirrors graft.Bench ([[graft.Sessions.local]]: one
@@ -34,6 +42,7 @@ object PlanDump {
     val qs = graft.SparkEntry.queries
     if (names.isEmpty) {
       val out = new java.io.PrintWriter(s"$outDir/joins_$suffix.tsv", "UTF-8")
+      val fin = new java.io.PrintWriter(s"$outDir/final_$suffix.tsv", "UTF-8")
       try graft.SparkEntry.catalog.map(_.name).foreach { n =>
         val t = NoopRun.traced(spark) {
           val df = qs(n)(spark, dir)
@@ -41,12 +50,13 @@ object PlanDump {
           finally graft.ops.Checkpoints.discard(df)
         }
         spark.catalog.clearCache()
-        val ns = NoopRun.initialNodes(t.plans)
-        val exchanges = NoopRun.exchangesOf(ns).map(e => s"${e.kind} ${sortedKeys(e.partitioning)}".trim)
-        out.println(Seq(n, NoopRun.joins(ns).mkString("; "), exchanges.mkString("; "))
-          .mkString("\t"))
+        def line(ns: Seq[SparkPlan]) = Seq(n, joins(ns).mkString("; "), NoopRun.exchangesOf(ns)
+          .map(e => s"${e.kind} ${sortedKeys(e.partitioning)}".trim).mkString("; ")).mkString("\t")
+        out.println(line(initialNodes(t.plans)))
+        fin.println(line(NoopRun.nodes(t.plans)))
         out.flush()
-      } finally out.close()
+        fin.flush()
+      } finally { out.close(); fin.close() }
     } else names.foreach { n =>
       val qe = qs(n)(spark, dir).queryExecution
       qe.toRdd.foreach(_ => ())
@@ -56,6 +66,32 @@ object PlanDump {
       spark.catalog.clearCache()
     }
     spark.stop()
+  }
+
+  /** Every node of the plans executed plans started from: each adaptive
+    * plan (subqueries and the plans of cached relations included) as AQE
+    * first planned it, from static size estimates, before any query stage
+    * ran and re-planned the rest. A cached relation's plan is walked once,
+    * where it is first scanned, as [[NoopRun.nodes]] walks final plans. */
+  def initialNodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val cached = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case s: InMemoryTableScanExec if !cached.containsKey(s.relation.cachedPlan) =>
+        cached.put(s.relation.cachedPlan, ())
+        s +: walk(s.relation.cachedPlan)
+      case n => n +: (n.children ++ n.subqueries).flatMap(walk)
+    }
+    plans.flatMap(walk)
+  }
+
+  /** Every join operator among plan nodes, in order, as its node name,
+    * join type and build side: `BroadcastHashJoin(Inner,BuildRight)`,
+    * `SortMergeJoin(LeftSemi)`, `CartesianProduct(Inner)`. */
+  def joins(ns: Seq[SparkPlan]): Seq[String] = ns.collect {
+    case j: HashJoin => s"${j.nodeName}(${j.joinType},${j.buildSide})"
+    case j: BroadcastNestedLoopJoinExec => s"${j.nodeName}(${j.joinType},${j.buildSide})"
+    case j: BaseJoinExec => s"${j.nodeName}(${j.joinType})"
   }
 
   private val HashKeys = """^hashpartitioning\((.*), (\d+)\)$""".r

@@ -537,10 +537,10 @@ class PlanSpec extends SparkSpec {
       }
       assert(hints.isEmpty, s"$name carries a broadcast hint:\n${qe.analyzed}")
       // the tables each broadcast hash join builds from, in the plan AQE starts from
-      val built = NoopRun.initialNodes(Seq(qe.executedPlan)).collect {
+      val built = graft.tools.PlanDump.initialNodes(Seq(qe.executedPlan)).collect {
         case j: BroadcastHashJoinExec =>
           val side = if (j.buildSide == BuildRight) j.right else j.left
-          NoopRun.initialNodes(Seq(side)).collect {
+          graft.tools.PlanDump.initialNodes(Seq(side)).collect {
             case s: FileSourceScanExec =>
               s.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
           }.flatten
