@@ -435,7 +435,9 @@ object ClusterStore {
     *     disjoint);
     *  4. affected shards are rewritten: forgotten docs' rows dropped,
     *     survivors relabeled; surviving evidence stays PUT (label-free
-    *     edges) — only rows incident to a forgotten id drop.
+    *     edges) — only rows incident to a forgotten id drop, so the edges
+    *     shards are rewritten in place ([[ShardedStore.stageInPlace]], no
+    *     shuffle).
     *
     * Returns one settled (doc_id, was_clustered) receipt row per distinct
     * input id. Replay-safe: a retried forget finds the ids absent and
@@ -520,14 +522,10 @@ object ClusterStore {
               // fmt 2 edges never re-key: the rewrite only REMOVES rows incident to
               // a forgotten id — both removal classes live in the member shards
               // (id_l forgotten ⇒ a member's shard; id_r forgotten ⇒ id_l is a
-              // surviving member of the same component), so memberPts is exact
-              val edgesKept = edges(spark, storePath)
-                .where(col("edge_pt").isin(memberPts: _*))
-                .join(broadcast(ids.select(col("doc_id").as("id_l"))), Seq("id_l"), "left_anti")
-                .join(broadcast(ids.select(col("doc_id").as("id_r"))), Seq("id_r"), "left_anti")
-                .select("id_l", "id_r")
-                .withColumn("edge_pt", shard(col("id_l"), nParts))
-              val edgesStaged = ShardedStore.stage(edgesKept, edgesT, memberPts)
+              // surviving member of the same component), so memberPts is exact,
+              // and each shard is rewritten in place from its own files
+              val edgesStaged = ShardedStore.stageInPlace(edges(spark, storePath), edgesT,
+                memberPts, Seq("id_l" -> ids, "id_r" -> ids))
               // alloc repair (stable stores only), staged under the SAME commit
               // boundary: every affected old label's row is dropped; each surviving
               // sub-component either INHERITS the old component's (ext_id, ep) or
@@ -765,9 +763,9 @@ object ClusterStore {
                   driverNodeLimit: Long = 1000000L): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
+    // merge's receipt is settled (or driver-built) already
     val receipt = merge(nodes, pairs, storePath, nParts,
       driverPairLimit, driverNodeLimit, allocEpoch = Some(epoch))
-      .cutLineage()
     // batch-grain: the receipt covers the batch's nodes only
     val labels = receipt.select(col("cluster_id")).distinct()
       .collect().map(_.getLong(0)).toSeq

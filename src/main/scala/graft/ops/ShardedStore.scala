@@ -16,12 +16,17 @@ import org.apache.spark.sql.functions._
   * A mutation that must replace whole shard directories — possibly across
   * SEVERAL tables of one store — runs as:
   *
-  *   1. [[stage]] each table's complete replacement content under
-  *      `<table>/.staging/<ptCol>=K` (dot-prefixed: parquet partition
-  *      discovery ignores it). All reads feeding a staging run against the
-  *      UNTOUCHED live dirs and materialize fully to disk, so no lineage
-  *      into live data survives into the swap. A shard whose replacement
-  *      is EMPTY gets an empty marker dir — see below.
+  *   1. [[stage]] or [[stageInPlace]] each table's complete replacement
+  *      content under `<table>/.staging/<ptCol>=K` (dot-prefixed: parquet
+  *      partition discovery ignores it), one file per shard. A rewrite
+  *      that adds or re-keys rows goes through [[stage]], which routes
+  *      the rows to their shards with an exchange on the shard key; one
+  *      that only drops rows goes through [[stageInPlace]], which reads
+  *      each shard in one task and writes it back with no exchange. All
+  *      reads feeding a staging run against the UNTOUCHED live dirs and
+  *      materialize fully to disk, so no lineage into live data survives
+  *      into the swap. A shard whose replacement is EMPTY gets an empty
+  *      marker dir — see below.
   *   2. [[commit]] writes the store-level `_commit` marker — the single
   *      point of no return, AFTER every table's staging is complete.
   *   3. [[swap]] each table: per shard, live → `.old.<ptCol>=K`,
@@ -176,16 +181,53 @@ object ShardedStore {
   /** Phase 1: write `kept` (the full replacement content for the shards
     * being rewritten) under the table's staging dir, repartitioned BY THE
     * SHARD KEY into one task per affected shard, so each shard dir
-    * receives one file. `pts` is the FULL affected-shard list: shards in it
-    * with no rows in `kept` get an EMPTY marker dir (they are being RETIRED
-    * — see the object comment), and the `_pts` manifest is written LAST, so
-    * its presence implies a complete staging. Returns the table and its
+    * receives one file. This is the path for a rewrite that ADDS or
+    * RE-KEYS rows (an append, a relabel, a `distinct()`): their rows come
+    * from elsewhere than the shard's own files, so an exchange routes
+    * them. A rewrite that only DROPS rows takes [[stageInPlace]] instead.
+    * `pts` is the FULL affected-shard list: shards in it with no rows in
+    * `kept` get an EMPTY marker dir (they are being RETIRED — see the
+    * object comment), and the `_pts` manifest is written LAST, so its
+    * presence implies a complete staging. Returns the table and its
     * shards for [[install]]. */
   def stage(kept: DataFrame, table: Table, pts: Seq[Int]): (Table, Seq[Int]) = {
     kept.repartition(math.max(pts.size, 1), col(table.ptCol))
       .write.mode("overwrite").partitionBy(table.ptCol)
       .parquet(s"${table.dir}/.staging")
-    val spark = kept.sparkSession
+    sealStaging(kept.sparkSession, table, pts)
+  }
+
+  /** Phase 1 for a rewrite whose surviving rows stay in their own shard:
+    * each shard of `pts` is read from `live` (the table's reader frame) by
+    * ONE task (one `coalesce(1)` scan per shard, unioned), rows whose
+    * column `c` holds an id of the one-column frame `ids` are dropped, for
+    * every `(c, ids)` of `drop` (broadcast anti joins: each `ids` is a
+    * batch — forget ids, tombstones — never a table), and the rest is
+    * written back with no exchange, one file per shard. With `drop` empty
+    * it folds each shard's files into one. Then the same markers and
+    * `_pts` manifest as [[stage]], so [[install]] and [[recover]] see the
+    * same staging. */
+  def stageInPlace(live: DataFrame, table: Table, pts: Seq[Int],
+                   drop: Seq[(String, DataFrame)] = Nil): (Table, Seq[Int]) = {
+    // the observed row count is a plan barrier: without it Catalyst pushes
+    // each anti join into every shard's union branch, and adaptive
+    // execution then broadcasts `ids` once per shard (one job each); above
+    // it one broadcast serves every shard
+    val shards = pts.map(pt => live.where(col(table.ptCol) === pt).coalesce(1))
+      .reduceOption(_ union _).getOrElse(live.where(lit(false)))
+      .observe("stageInPlace", count(lit(1)).as("rows"))
+    drop.foldLeft(shards) { case (df, (c, ids)) =>
+      df.join(broadcast(ids.select(col(ids.columns.head).as(c))), Seq(c), "left_anti")
+    }.select(live.columns.map(col).toSeq: _*) // a using join puts its key first
+      .write.mode("overwrite").partitionBy(table.ptCol)
+      .parquet(s"${table.dir}/.staging")
+    sealStaging(live.sparkSession, table, pts)
+  }
+
+  /** The end of phase 1: an EMPTY marker dir for every shard of `pts`
+    * that got no rows, then the `_pts` manifest, LAST. */
+  private def sealStaging(spark: org.apache.spark.sql.SparkSession, table: Table,
+                          pts: Seq[Int]): (Table, Seq[Int]) = {
     val f = fs(spark, table.dir)
     pts.foreach { pt =>
       val staged = hp(s"${table.dir}/.staging/${table.ptCol}=$pt")

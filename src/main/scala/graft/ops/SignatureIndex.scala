@@ -219,14 +219,17 @@ object SignatureIndex {
     *
     * Only AFFECTED SHARDS are touched, in both tables:
     *  1. the forgotten ids' `doc_pt` shards are known from the ids alone
-    *     (pure pmod — no scan); those sigs shards are read, the forgotten
-    *     payloads are captured, and their band keys are RECOMPUTED from
-    *     the stored `hs` (the reason the payload table can stay slim);
+    *     (pure pmod — no scan); the forgotten payloads are read from those
+    *     sigs shards and their band keys RECOMPUTED from the stored `hs`
+    *     (the reason the payload table can stay slim);
     *  2. those band keys' `band_pt` shards are the only bands shards
-    *     containing forgotten rows; both shard sets are rewritten as
-    *     filtered anti-joins.
-    * Cost ∝ shards hit by the forget set, never index size, for forget
-    * sets small against nParts.
+    *     containing forgotten rows.
+    * Both shard sets are rewritten in place
+    * ([[ShardedStore.stageInPlace]]): each shard is read by one task, its
+    * forgotten rows dropped by a broadcast anti join on the ids, and the
+    * rest written back as one file — no row changes shard, so nothing is
+    * shuffled. Cost ∝ shards hit by the forget set, never index size, for
+    * forget sets small against nParts.
     *
     * Both tables stage first (live dirs untouched), then
     * [[ShardedStore.install]] commits and swaps sigs BEFORE bands: in the
@@ -237,35 +240,44 @@ object SignatureIndex {
   def remove(removeIds: DataFrame, indexPath: String,
              nPerm: Int, nBands: Int, rowsPerBand: Int,
              nParts: Int = IndexParts): Unit = {
-    val spark = removeIds.sparkSession
+    val ids = removeIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
+    remove(ids, shardsOf(ids, col("doc_id"), nParts), indexPath,
+      nPerm, nBands, rowsPerBand, nParts)
+  }
+
+  /** [[remove]] of the distinct long `doc_id`s `ids`, whose `doc_pt`
+    * shards `dpts` the caller already knows (a forget that also checks
+    * [[present]] computes them once for both). */
+  private[graft] def remove(ids: DataFrame, dpts: Seq[Int], indexPath: String,
+                            nPerm: Int, nBands: Int, rowsPerBand: Int,
+                            nParts: Int): Unit = {
+    val spark = ids.sparkSession
     validateManifest(spark, indexPath,
       IndexManifest(nPerm, nBands, rowsPerBand, nParts))
-    val ids = removeIds.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().persist()
-    val dpts = shardsOf(ids, col("doc_id"), nParts)
-    if (dpts.isEmpty) { ids.unpersist(); return }
-    // persisted across its two consumers (band-key recompute + staged
-    // write) for CPU only — the live dirs stay untouched until both
-    // staging writes complete, so crash safety never depends on the cache
-    val sigShards = sigs(spark, indexPath)
-      .where(col("doc_pt").isin(dpts: _*)).persist()
-    val removedBandPts = shardsOf(
-      sigShards.join(ids, Seq("doc_id"), "left_semi")
-        .select(explode(lshBandKeys(
-          minhashSignature(col("hs"), nPerm), nBands, rowsPerBand)).as("bk")),
-      xxhash64(col("bk")), nParts)
-    val bandShards = bands(spark, indexPath)
-      .where(col("band_pt").isin(removedBandPts: _*))
-    val Seq(sigsT, bandsT) = tables(indexPath)
-    val staged = Seq(ShardedStore.stage(sigShards.join(ids, Seq("doc_id"), "left_anti"),
-        sigsT, dpts)) ++
-      (if (removedBandPts.isEmpty) Nil
-       else Seq(ShardedStore.stage(bandShards.join(ids, Seq("doc_id"), "left_anti"),
-         bandsT, removedBandPts)))
-    sigShards.unpersist(); ids.unpersist()
-    // both tables staged: a crash anywhere from the commit on rolls BOTH
-    // tables forward at the next open
-    ShardedStore.install(spark, indexPath, staged)
+    if (dpts.isEmpty) return
+    // persisted across its three readers (the payload lookup and the two
+    // stagings' anti joins) for CPU only — the live dirs stay untouched
+    // until both staging writes complete, so crash safety never depends
+    // on the cache
+    val forgotten = ids.persist()
+    try {
+      val liveSigs = sigs(spark, indexPath)
+      val removedBandPts = shardsOf(
+        liveSigs.where(col("doc_pt").isin(dpts: _*))
+          .join(forgotten, Seq("doc_id"), "left_semi")
+          .select(explode(lshBandKeys(
+            minhashSignature(col("hs"), nPerm), nBands, rowsPerBand)).as("bk")),
+        xxhash64(col("bk")), nParts)
+      val Seq(sigsT, bandsT) = tables(indexPath)
+      val drop = Seq("doc_id" -> forgotten)
+      val staged = ShardedStore.stageInPlace(liveSigs, sigsT, dpts, drop) +:
+        (if (removedBandPts.isEmpty) Nil
+         else Seq(ShardedStore.stageInPlace(bands(spark, indexPath), bandsT,
+           removedBandPts, drop)))
+      // both tables staged: a crash anywhere from the commit on rolls BOTH
+      // tables forward at the next open
+      ShardedStore.install(spark, indexPath, staged)
+    } finally forgotten.unpersist(): Unit
   }
 
   /** Doc ids from `ids` currently MATCHABLE in the index: present in the
@@ -274,15 +286,18 @@ object SignatureIndex {
     * index-sized) and not logically forgotten ([[tombstone]]). */
   def present(ids: DataFrame, indexPath: String,
               nParts: Int = IndexParts): DataFrame = {
-    val spark = ids.sparkSession
     val d = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val dpts = shardsOf(d, col("doc_id"), nParts)
-    if (dpts.isEmpty) d.where(lit(false))
-    else antiTombstoned(sigs(spark, indexPath)
-      .where(col("doc_pt").isin(dpts: _*))
-      .join(broadcast(d), Seq("doc_id"), "left_semi")
-      .select("doc_id"), indexPath)
+    present(d, shardsOf(d, col("doc_id"), nParts), indexPath)
   }
+
+  /** [[present]] of the distinct long `doc_id`s `ids`, whose `doc_pt`
+    * shards are `dpts`. */
+  private[graft] def present(ids: DataFrame, dpts: Seq[Int], indexPath: String): DataFrame =
+    if (dpts.isEmpty) ids.where(lit(false))
+    else antiTombstoned(sigs(ids.sparkSession, indexPath)
+      .where(col("doc_pt").isin(dpts: _*))
+      .join(broadcast(ids), Seq("doc_id"), "left_semi")
+      .select("doc_id"), indexPath)
 
   // ----- logical forget: tombstones (the deletion-vector idiom) ------------
   //
@@ -382,9 +397,12 @@ object SignatureIndex {
     * collapse is semantics-preserving; sigs rows are never duplicated by
     * that window and are preserved verbatim.
     *
-    * Tombstoned docs are purged first (a physical [[remove]]), then the
-    * tombstone table is dropped. Shard rewrite is the same crash-safe
-    * stage-then-install as [[remove]]. */
+    * Tombstoned docs are purged first (a physical [[remove]], in place),
+    * then the tombstone table is dropped. Crowded sigs shards fold in
+    * place ([[ShardedStore.stageInPlace]], no shuffle); crowded bands
+    * shards go through [[ShardedStore.stage]], whose exchange the
+    * `distinct()` needs. Both are the same crash-safe stage-then-install
+    * as [[remove]]. */
   def compact(spark: SparkSession, indexPath: String, minFiles: Int = 2): Unit = {
     val fs = ShardedStore.fs(spark, indexPath)
     recover(spark, indexPath)
@@ -404,24 +422,25 @@ object SignatureIndex {
       }
       tombVector(indexPath).drop(spark)
     }
-    // stage every crowded shard of BOTH tables first, then one commit
-    // boundary covers all the swaps
-    val Seq(sigsT, bandsT) = tables(indexPath)
-    val staged = for {
-      (t, scan) <- Seq((bandsT, bands(_, _)), (sigsT, sigs(_, _)))
-      if fs.exists(ShardedStore.hp(t.dir))
-      crowded = fs.listStatus(ShardedStore.hp(t.dir)).toSeq
+    def crowded(t: ShardedStore.Table): Seq[Int] =
+      if (!fs.exists(ShardedStore.hp(t.dir))) Nil
+      else fs.listStatus(ShardedStore.hp(t.dir)).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"${t.ptCol}="))
         .filter(d => fs.listStatus(d.getPath)
           .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) >= minFiles)
         .map(_.getPath.getName.stripPrefix(s"${t.ptCol}=").toInt)
-      if crowded.nonEmpty
-    } yield {
-      val raw = scan(spark, indexPath).where(col(t.ptCol).isin(crowded: _*))
-      // bands: collapse the exact duplicates a mid-append crash can leave
-      // behind (see the doc comment above)
-      ShardedStore.stage(if (t == bandsT) raw.distinct() else raw, t, crowded)
-    }
+    // stage every crowded shard of BOTH tables first, then one commit
+    // boundary covers all the swaps
+    val Seq(sigsT, bandsT) = tables(indexPath)
+    val (bandPts, sigPts) = (crowded(bandsT), crowded(sigsT))
+    val staged =
+      (if (bandPts.isEmpty) Nil
+       // bands: collapse the exact duplicates a mid-append crash can leave
+       // behind (see the doc comment above)
+       else Seq(ShardedStore.stage(bands(spark, indexPath)
+         .where(col("band_pt").isin(bandPts: _*)).distinct(), bandsT, bandPts))) ++
+      (if (sigPts.isEmpty) Nil
+       else Seq(ShardedStore.stageInPlace(sigs(spark, indexPath), sigsT, sigPts)))
     ShardedStore.install(spark, indexPath, staged)
   }
 

@@ -208,8 +208,10 @@ object StreamingOps {
     // half-swapped shard set
     SignatureIndex.recover(batch.sparkSession, indexPath)
     val ids = batch.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val receipt = forgetReceipt(ids, SignatureIndex.present(ids, indexPath, nParts), "doc_id")
-    SignatureIndex.remove(ids, indexPath, nPerm, nBands, nPerm / nBands, nParts = nParts)
+    // the ids' doc_pt shards, once for the presence check and the removal
+    val dpts = ShardedStore.shardsOf(ids, col("doc_id"), nParts)
+    val receipt = forgetReceipt(ids, SignatureIndex.present(ids, dpts, indexPath), "doc_id")
+    SignatureIndex.remove(ids, dpts, indexPath, nPerm, nBands, nPerm / nBands, nParts)
     receipt
   }
 

@@ -21,10 +21,10 @@ import graft.SourceScan.{codeLines, mainSources}
 class BroadcastHintSpec extends AnyFunSuite {
   private val Budget: Map[String, Int] = Map(
     // the lake stores: batch-, sample- or tombstone-bounded frames
-    "ops/ClusterStore.scala" -> 22,
+    "ops/ClusterStore.scala" -> 20,
     "ops/IvfIndex.scala" -> 6,
     "ops/SignatureIndex.scala" -> 5,
-    "ops/ShardedStore.scala" -> 2,
+    "ops/ShardedStore.scala" -> 3,
     "ops/DedupOps.scala" -> 1,
     "streaming/StreamingOps.scala" -> 2,
     // query-side hints whose removal changes a plan: at sf0.1, or at a

@@ -1,9 +1,11 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
+import graft.ops.SignatureIndex
 import graft.streaming.StreamingOps
 
 /** Exchange budgets of the lake ops: no exchange a lake op computes twice,
@@ -66,5 +68,49 @@ class LakeExchangeSpec extends SparkSpec {
       val full = ex.filter(e => Seq("hs", "sig", "bands").forall(e.columns.contains))
       assert(full.isEmpty, listing(op, ex))
     }
+  }
+
+  /** Parquet file names per shard dir of one index table. */
+  private def shardFiles(table: String): Map[String, Set[String]] =
+    Option(new File(table).listFiles()).toSeq.flatten.filter(_.isDirectory)
+      .filterNot(_.getName.startsWith(".")).map { d =>
+        d.getName -> Option(d.listFiles()).toSeq.flatten.map(_.getName)
+          .filter(_.endsWith(".parquet")).toSet
+      }.toMap
+
+  test("a physical forget and a tombstone purge rewrite their shards in place") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .orderBy("doc_id").limit(120).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val index = Files.createTempDirectory("graft-forget-ex").toString + "/index"
+    // two ingests: every shard of both tables holds two files
+    docs.grouped(60).foreach(b =>
+      StreamingOps.deltaDedupVerifiedBatch(b.toDF("doc_id", "text"), index, 0.7).count(): Unit)
+    val ids = SignatureIndex.sigs(spark, index).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    def listings = Seq("sigs", "bands").map(t => t -> shardFiles(s"$index/$t")).toMap
+    def inPlace(op: String)(body: => Unit): Unit = {
+      val before = listings
+      val ex = exchangesOf(body)
+      val carried = ex.filter(e => e.columns.contains("hs") || e.columns.contains("bk"))
+      assert(carried.isEmpty, listing(op, ex))
+      val after = listings
+      val rewritten = for {
+        t <- Seq("sigs", "bands")
+        (pt, files) <- after(t) if !before(t).get(pt).contains(files)
+      } yield (s"$t/$pt", files.size)
+      assert(rewritten.exists(_._1.startsWith("sigs/")) &&
+        rewritten.exists(_._1.startsWith("bands/")), s"$op rewrote no shard of a table")
+      assert(rewritten.forall(_._2 == 1), s"$op left shards of several files: $rewritten")
+    }
+    inPlace("forgetBatch") {
+      StreamingOps.forgetBatch(ids.take(3).toDF("doc_id"), index).count(): Unit
+    }
+    StreamingOps.forgetBatchLogical(ids.slice(3, 6).toDF("doc_id"), index).count()
+    inPlace("compact (tombstone purge)")(SignatureIndex.compact(spark, index))
+    assert(SignatureIndex.sigs(spark, index).where(col("doc_id").isin(ids.take(6): _*))
+      .isEmpty, "a forgotten doc survived")
   }
 }

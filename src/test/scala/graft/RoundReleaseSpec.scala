@@ -65,13 +65,16 @@ class RoundReleaseSpec extends SparkSpec {
   // built on the driver, so they read none. The ANN entries' results read
   // their last search (ann_delta_*) or none; the staged builds' earlier
   // hits and receipts are discarded. q_dedup_recall_forget reads its own
-  // cut of the two arms, dedup_delta_batch2 its batch-2 verdicts.
+  // cut of the two arms, dedup_delta_batch2 its batch-2 verdicts. The
+  // stable cluster-store entries read the store's files only; their
+  // stable merges' receipts are discarded.
   private val queries = Seq("q_pagerank" -> 1, "q_bfs_hops" -> 1, "q_weighted_sssp" -> 1,
     "q_kcore" -> 1, "q_hits_bipartite" -> 1, "q_label_propagation" -> 1,
     "q_graph_modularity" -> 2, "q_graph_triangles" -> 1, "q_bpe_merges" -> 0,
     "q_mmr_diversify" -> 0, "ann_delta_evolve" -> 1, "ann_delta_forget" -> 1,
     "q_ann_recall_evolution" -> 0, "q_ann_refresh_recall" -> 1,
-    "q_dedup_recall_forget" -> 1, "dedup_delta_batch2" -> 1)
+    "q_dedup_recall_forget" -> 1, "dedup_delta_batch2" -> 1,
+    "dedup_clusters_stable_ids" -> 0, "dedup_clusters_stable_forget" -> 0)
 
   for ((name, n) <- queries)
     test(s"$name leaves only the settled frames its result reads") {
