@@ -93,7 +93,11 @@ object Sessions {
     *    lake_cycle, 3 seeds): `peak_rss_mb` 1852–1869 → 1494–1500 MB on the
     *    code before the in-place shard rewrite, `write_amp` unchanged. A
     *    large broadcast is cut into more pieces; in local mode its readers
-    *    normally take the driver's own copy instead of the pieces.
+    *    normally take the driver's own copy instead of the pieces. The
+    *    value follows the heap: G1 sizes a region at heap/2048, so on
+    *    executors of 16 GB or more (8 MiB regions) the 4 MiB default is no
+    *    longer humongous, and 256k only multiplies the blocks a cluster
+    *    fetches; only the 3 GB local heap was measured.
     */
   val defaults: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",

@@ -201,12 +201,18 @@ object ShardedStore {
     * each shard of `pts` is read from `live` (the table's reader frame) by
     * ONE task (one `coalesce(1)` scan per shard, unioned), rows whose
     * column `c` holds an id of the one-column frame `ids` are dropped, for
-    * every `(c, ids)` of `drop` (broadcast anti joins: each `ids` is a
-    * batch — forget ids, tombstones — never a table), and the rest is
-    * written back with no exchange, one file per shard. With `drop` empty
-    * it folds each shard's files into one. Then the same markers and
-    * `_pts` manifest as [[stage]], so [[install]] and [[recover]] see the
-    * same staging. */
+    * every `(c, ids)` of `drop`, and the rest is written back with no
+    * exchange, one file per shard. With `drop` empty it folds each shard's
+    * files into one. Then the same markers and `_pts` manifest as
+    * [[stage]], so [[install]] and [[recover]] see the same staging.
+    *
+    * Every `ids` is BROADCAST into its anti join, unguarded: the caller
+    * must know it is small (a forget batch, or tombstones within the
+    * store's broadcast limit) and stage a larger id set through [[stage]]
+    * with a shuffle anti join instead. The plan holds one scan per shard
+    * of `pts`, and each scan broadcasts its Hadoop configuration, so the
+    * driver's plan and those broadcasts grow with the shards hit, where
+    * [[stage]] reads them with one scan (measured up to 32 shards). */
   def stageInPlace(live: DataFrame, table: Table, pts: Seq[Int],
                    drop: Seq[(String, DataFrame)] = Nil): (Table, Seq[Int]) = {
     // the observed row count is a plan barrier: without it Catalyst pushes

@@ -228,8 +228,13 @@ object SignatureIndex {
     * ([[ShardedStore.stageInPlace]]): each shard is read by one task, its
     * forgotten rows dropped by a broadcast anti join on the ids, and the
     * rest written back as one file — no row changes shard, so nothing is
-    * shuffled. Cost ∝ shards hit by the forget set, never index size, for
-    * forget sets small against nParts.
+    * shuffled. The ids are broadcast only below the manifest's
+    * [[tombstoneBroadcastLimit]] (at ~24 bytes per hash-table row, the
+    * estimate of [[ShardedStore.DeletionVector.remove]]); a larger id set
+    * is dropped by shuffle-hash joins and staged through
+    * [[ShardedStore.stage]], whose exchange routes the survivors back to
+    * their shards. Cost ∝ shards hit by the forget set, never index size,
+    * for forget sets small against nParts.
     *
     * Both tables stage first (live dirs untouched), then
     * [[ShardedStore.install]] commits and swaps sigs BEFORE bands: in the
@@ -241,16 +246,20 @@ object SignatureIndex {
              nPerm: Int, nBands: Int, rowsPerBand: Int,
              nParts: Int = IndexParts): Unit = {
     val ids = removeIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
+    val broadcastIds =
+      ids.count() * 24L <= tombstoneBroadcastLimit(ids.sparkSession, indexPath)
     remove(ids, shardsOf(ids, col("doc_id"), nParts), indexPath,
-      nPerm, nBands, rowsPerBand, nParts)
+      nPerm, nBands, rowsPerBand, nParts, broadcastIds)
   }
 
   /** [[remove]] of the distinct long `doc_id`s `ids`, whose `doc_pt`
     * shards `dpts` the caller already knows (a forget that also checks
-    * [[present]] computes them once for both). */
+    * [[present]] computes them once for both). `broadcastIds` says whether
+    * the ids are small enough to broadcast (see [[remove]]): the caller
+    * decides, from what it knows of their size. */
   private[graft] def remove(ids: DataFrame, dpts: Seq[Int], indexPath: String,
                             nPerm: Int, nBands: Int, rowsPerBand: Int,
-                            nParts: Int): Unit = {
+                            nParts: Int, broadcastIds: Boolean): Unit = {
     val spark = ids.sparkSession
     validateManifest(spark, indexPath,
       IndexManifest(nPerm, nBands, rowsPerBand, nParts))
@@ -261,19 +270,23 @@ object SignatureIndex {
     // on the cache
     val forgotten = ids.persist()
     try {
+      // too large to broadcast: no join on the ids may plan a broadcast
+      val build = if (broadcastIds) forgotten else forgotten.hint("shuffle_hash")
       val liveSigs = sigs(spark, indexPath)
       val removedBandPts = shardsOf(
         liveSigs.where(col("doc_pt").isin(dpts: _*))
-          .join(forgotten, Seq("doc_id"), "left_semi")
+          .join(build, Seq("doc_id"), "left_semi")
           .select(explode(lshBandKeys(
             minhashSignature(col("hs"), nPerm), nBands, rowsPerBand)).as("bk")),
         xxhash64(col("bk")), nParts)
+      def rewrite(live: DataFrame, t: ShardedStore.Table, pts: Seq[Int]) =
+        if (broadcastIds) ShardedStore.stageInPlace(live, t, pts, Seq("doc_id" -> forgotten))
+        else ShardedStore.stage(live.where(col(t.ptCol).isin(pts: _*))
+          .join(build, Seq("doc_id"), "left_anti"), t, pts)
       val Seq(sigsT, bandsT) = tables(indexPath)
-      val drop = Seq("doc_id" -> forgotten)
-      val staged = ShardedStore.stageInPlace(liveSigs, sigsT, dpts, drop) +:
+      val staged = rewrite(liveSigs, sigsT, dpts) +:
         (if (removedBandPts.isEmpty) Nil
-         else Seq(ShardedStore.stageInPlace(bands(spark, indexPath), bandsT,
-           removedBandPts, drop)))
+         else Seq(rewrite(bands(spark, indexPath), bandsT, removedBandPts)))
       // both tables staged: a crash anywhere from the commit on rolls BOTH
       // tables forward at the next open
       ShardedStore.install(spark, indexPath, staged)
@@ -397,8 +410,10 @@ object SignatureIndex {
     * collapse is semantics-preserving; sigs rows are never duplicated by
     * that window and are preserved verbatim.
     *
-    * Tombstoned docs are purged first (a physical [[remove]], in place),
-    * then the tombstone table is dropped. Crowded sigs shards fold in
+    * Tombstoned docs are purged first (a physical [[remove]]: in place
+    * when the tombstone table's on-disk bytes are within
+    * [[tombstoneBroadcastLimit]], the probes' broadcast guard, else
+    * through shuffle-hash joins), then the tombstone table is dropped. Crowded sigs shards fold in
     * place ([[ShardedStore.stageInPlace]], no shuffle); crowded bands
     * shards go through [[ShardedStore.stage]], whose exchange the
     * `distinct()` needs. Both are the same crash-safe stage-then-install
@@ -412,15 +427,20 @@ object SignatureIndex {
     // tombstoned — anti-joins no-op, and the next compaction finishes the
     // drop (idempotent). Single maintenance writer assumed, as for every
     // index-mutating op here (the foreachBatch serial contract).
-    if (tombVector(indexPath).exists(spark)) {
+    val tombs = tombVector(indexPath)
+    if (tombs.exists(spark)) {
+      // the probes' guard: an overdue compaction's tombstones may be too
+      // large to broadcast, and the purge then shuffles them
+      val broadcastIds = tombs.bytes(spark) <= tombstoneBroadcastLimit(spark, indexPath)
       // settled: the purge outlives the table
-      settled(tombVector(indexPath).ids(spark).distinct()) { ids =>
+      settled(tombs.ids(spark).distinct()) { ids =>
         if (!ids.isEmpty) {
           val m = readManifest(spark, indexPath)
-          remove(ids, indexPath, m.nPerm, m.nBands, m.rowsPerBand, m.nParts)
+          remove(ids, shardsOf(ids, col("doc_id"), m.nParts), indexPath,
+            m.nPerm, m.nBands, m.rowsPerBand, m.nParts, broadcastIds)
         }
       }
-      tombVector(indexPath).drop(spark)
+      tombs.drop(spark)
     }
     def crowded(t: ShardedStore.Table): Seq[Int] =
       if (!fs.exists(ShardedStore.hp(t.dir))) Nil

@@ -211,7 +211,9 @@ object StreamingOps {
     // the ids' doc_pt shards, once for the presence check and the removal
     val dpts = ShardedStore.shardsOf(ids, col("doc_id"), nParts)
     val receipt = forgetReceipt(ids, SignatureIndex.present(ids, dpts, indexPath), "doc_id")
-    SignatureIndex.remove(ids, dpts, indexPath, nPerm, nBands, nPerm / nBands, nParts)
+    // the batch is broadcast already by the presence check
+    SignatureIndex.remove(ids, dpts, indexPath, nPerm, nBands, nPerm / nBands, nParts,
+      broadcastIds = true)
     receipt
   }
 

@@ -700,6 +700,39 @@ class IncrementalDedupSpec extends SparkSpec {
     batchSigs.unpersist(): Unit
   }
 
+  test("tombstone guard: past the broadcast threshold the compaction purge broadcasts no tombstones and purges exactly them") {
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    import spark.implicits._
+    val indexPath = graft.ops.Staging.dir("/tmp/graft_dedup_index_spec", dir, "tomb_guard_purge")
+    SignatureIndex.write(DedupOps.signatureIndex(
+      docs, ShingleK, NumPerms, NumBands, RowsPerBand),
+      indexPath, NumPerms, NumBands, RowsPerBand)
+    val forgetIds = docs.where(col("doc_id") % 7 === 1)
+      .select("doc_id").as[Long].collect().toSet
+    assert(forgetIds.size > 1, "fixture too small")
+    SignatureIndex.tombstone(forgetIds.toSeq.toDF("doc_id"), indexPath)
+    SignatureIndex.setTombstoneBroadcastLimit(spark, indexPath, 1L)
+    def sigIds = SignatureIndex.sigs(spark, indexPath).select("doc_id").as[Long]
+      .collect().toSet
+    def bandRows = SignatureIndex.bands(spark, indexPath).select("doc_id", "bk")
+      .as[(Long, String)].collect().toSet
+    val (sigsBefore, bandsBefore) = (sigIds, bandRows)
+    assert(forgetIds.subsetOf(sigsBefore), "tombstoned docs not indexed")
+    val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark)(
+      SignatureIndex.compact(spark, indexPath))
+    val ex = NoopRun.exchanges(plans)
+    assert(!ex.exists(e => e.kind == "broadcast" && e.columns == Seq("doc_id")),
+      s"the purge broadcast the tombstones past the threshold:\n  ${ex.mkString("\n  ")}")
+    // the purge took the shuffle path: the survivors were routed back
+    // to their shards by an exchange
+    assert(ex.exists(e => e.kind == "shuffle" && e.columns.contains("hs")),
+      s"no shuffle staging of the sigs shards:\n  ${ex.mkString("\n  ")}")
+    assert(!new java.io.File(s"$indexPath/tombstones").exists(), "tombstones not cleared")
+    assert(sigIds == sigsBefore -- forgetIds)
+    assert(bandRows == bandsBefore.filterNot(r => forgetIds(r._1)))
+  }
+
   test("delta pass plans are equi-joins — no cartesian/broadcast-NL against the index") {
     // the catalog entry settles its frame (plan becomes an RDD scan), so
     // the shape pin inspects the lazy probe plan it materializes

@@ -3,6 +3,8 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions.col
 
 import graft.ops.SignatureIndex
@@ -93,9 +95,23 @@ class LakeExchangeSpec extends SparkSpec {
     def listings = Seq("sigs", "bands").map(t => t -> shardFiles(s"$index/$t")).toMap
     def inPlace(op: String)(body: => Unit): Unit = {
       val before = listings
-      val ex = exchangesOf(body)
+      val NoopRun.Trace(_, plans, _, _) = NoopRun.traced(spark)(body)
+      val ex = NoopRun.exchanges(plans)
       val carried = ex.filter(e => e.columns.contains("hs") || e.columns.contains("bk"))
       assert(carried.isEmpty, listing(op, ex))
+      // one broadcast of the ids serves every shard of a table's rewrite,
+      // not one per shard
+      val stagings = plans.filter(p => NoopRun.nodes(Seq(p)).exists {
+        case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) =>
+          w.outputPath.getName == ".staging"
+        case _ => false
+      })
+      assert(stagings.size >= 2, s"$op staged ${stagings.size} tables")
+      stagings.foreach { p =>
+        val sx = NoopRun.exchanges(Seq(p))
+        assert(sx.count(e => e.kind == "broadcast" && e.columns == Seq("doc_id")) <= 1,
+          listing(s"$op staging", sx))
+      }
       val after = listings
       val rewritten = for {
         t <- Seq("sigs", "bands")

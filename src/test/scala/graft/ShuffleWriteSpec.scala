@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.functions.{col, sha1}
 
 /** Each shuffle byte is written once: [[Sessions.defaults]] turns the
@@ -21,9 +22,14 @@ class ShuffleWriteSpec extends SparkSpec {
 
   test("Sessions.defaults sets the one shuffle writer and its page size in the session") {
     val conf = spark.sparkContext.getConf
-    for (key <- Seq("spark.shuffle.sort.bypassMergeThreshold", "spark.buffer.pageSize"))
+    val block = "spark.broadcast.blockSize"
+    for (key <- Seq("spark.shuffle.sort.bypassMergeThreshold", "spark.buffer.pageSize", block))
       assert(conf.getOption(key) === Sessions.defaults.get(key), key)
     assert(Sessions.defaults("spark.shuffle.sort.bypassMergeThreshold") === "0")
+    // each broadcast allocates one whole chunk first: below half of G1's
+    // smallest region (1 MiB) it is not a humongous allocation
+    val bytes = JavaUtils.byteStringAsBytes(Sessions.defaults(block))
+    assert(bytes < 512L * 1024, s"$block = $bytes B is humongous at 1 MiB regions")
   }
 
   test("a repartition writes at most 1.25x its exchange's shuffle bytes") {
